@@ -2,7 +2,8 @@
 
 Re-expresses the reference's ``Main.main`` command surface
 (``Main.java:61-94``): ``execute <script> [args…]`` runs a user script with
-the engine verbs bound, ``import <file> <dest>`` replays an operation log.
+the engine verbs bound, ``import <file> <dest>`` replays an operation log
+atomically (the reference imports in one transaction, ``Main.java:53``).
 Connection aliases come from a Java-properties-style file (the
 ``~/.oracle-schema-copy`` analog, ``Main.java:96-104``): lines
 ``<alias>.url= <alias>.username= <alias>.password=``.
@@ -122,7 +123,7 @@ def main(argv: list[str] | None = None) -> int:
             glb["__name__"] = "__oscs_script__"
             exec(compile(src, ns.script, "exec"), glb)  # noqa: S102 — the verb IS running user scripts
         elif ns.cmd == "import":
-            engine.import_schema(ns.log_path, ns.warehouse_root)
+            engine.import_schema(ns.log_path, ns.warehouse_root, atomic=True)
     finally:
         if not preexisting:  # in-process callers (tests) keep their session
             spark.stop()

@@ -4,7 +4,9 @@ The reference exposes nine Groovy-binding verbs (``Main.java:106-211``):
 ``args, createConnection, createDbTarget, createFileTarget, executeSql,
 copyTree, deleteTree, copy, update``. Here scripts are plain Python and
 the verbs are methods on ``Engine``; targets are strategy objects
-(operation-log file target vs warehouse target vs JDBC target).
+(operation-log file target vs warehouse target vs JDBC target); the
+warehouse target lives in ``plans/oplog.py`` beside the warehouse it
+writes, because every warehouse replay runs through it.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from oracle_schema_copy_spark.catalog import Catalog
 from oracle_schema_copy_spark.operators import mutate, walk
 from oracle_schema_copy_spark.plans import oplog
+from oracle_schema_copy_spark.plans.oplog import WarehouseTarget
 from oracle_schema_copy_spark.sources import jdbc as jdbc_mod
 from oracle_schema_copy_spark.sources import jdbc_mutations
 from oracle_schema_copy_spark.sources.tables import load_table
@@ -38,37 +41,11 @@ class FileTarget:
         self.log.delete(table, key_columns, keys)
 
     def execute_sql(self, statements: list[str]) -> None:
-        self.log.ddl(statements)
+        # opaque: live targets execute it on replay, warehouses skip it
+        self.log.ddl(statements, opaque=True)
 
     def close(self) -> None:
         self.log.close()
-
-
-@dataclass
-class WarehouseTarget:
-    """Applies operations directly to a parquet warehouse (ExecuteTarget
-    analog for file-backed tables)."""
-
-    wh: oplog.Warehouse
-
-    def insert(self, table: str, df: DataFrame) -> None:
-        if self.wh.exists(table):
-            self.wh.append(table, df)
-        else:
-            self.wh.write(table, df)
-
-    def upsert(self, table: str, df: DataFrame, key) -> None:
-        self.wh.rewrite(table, mutate.merge_upsert(self.wh.read(table), df, key))
-
-    def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
-        self.wh.rewrite(table, mutate.delete_by_keys(self.wh.read(table), key_columns, keys))
-
-    def execute_sql(self, statements: list[str]) -> None:
-        for s in statements:
-            self.wh.spark.sql(s)
-
-    def close(self) -> None:
-        pass
 
 
 @dataclass

@@ -15,13 +15,23 @@ splittable/columnar (a 100 TB export is N parquet files per op, written
 in parallel by executors; the Java-serialization format was a
 single-threaded byte stream).
 
-Transactionality (SURVEY §3.2): the reference replays an entire import
-inside one JDBC transaction. Two replay modes cover that contract here:
-``replay`` is per-table staged-write + atomic rename, idempotent to
-re-run after failure; ``replay_atomic`` stages the WHOLE replay into a
-shadow warehouse and commits via one marker rename + roll-forward — a
-crashed import is never observable as a partially-applied warehouse,
-matching the reference's single-commit semantics (CopyUtils.java:367).
+Replay (``Operation.execute(Connection)``, ``Operation.java:9-11``):
+``replay_into_target`` is the one loop that reads a manifest and applies
+each record through a target's verbs. Targets differ by one rule and
+hooks, not options: a table's first insert in a run calls the target's
+``create_table`` (a live database creates it, a warehouse drops it so the
+run replaces it); opaque SQL follows the target's ``on_opaque`` (a
+warehouse skips it, a live database executes it); views go to
+``create_view`` where a target has one. Logged table DDL is skipped.
+
+Transactionality (SURVEY §3.2): the reference imports inside one JDBC
+transaction. ``replay`` (the warehouse entry point) is per-table staged
+writes + atomic renames, idempotent to re-run after failure;
+``replay_atomic`` stages the WHOLE replay into a shadow warehouse and
+commits via one marker rename + roll-forward, so a crashed import is never
+observable as a partially-applied warehouse (CopyUtils.java:367). Both
+roll a pending commit forward first and create views last, over the final
+tables.
 
 Data operations are chunked at ``rows_per_op`` (reference flushes every
 10k rows, ``AbstractLoadRowsCallback.java:28``) — kept as a knob for
@@ -36,9 +46,12 @@ import os
 import shutil
 import tempfile
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from oracle_schema_copy_spark.operators import mutate
 
 MANIFEST = "manifest.jsonl"
 
@@ -229,88 +242,150 @@ class Warehouse:
         shutil.rmtree(trash, ignore_errors=True)
         self.tables_written.add(table)
 
+    def drop(self, table: str) -> None:
+        shutil.rmtree(self._dir(table), ignore_errors=True)
+
+    def create_views(self, views: dict[str, str]) -> None:
+        """Create logged views (S9) as session temp views: every table
+        written so far is exposed under its bare name first, because view
+        text references tables that way (no persistent-catalog writes).
+
+        The views deliberately OUTLIVE the replay in the session catalog:
+        a view dropped the moment the import ends would be useless to the
+        reader the import exists for. On a shared session, replay N's views
+        shadow same-named earlier ones (latest import wins); callers
+        needing isolation should replay in their own SparkSession or
+        ``spark.catalog.dropTempView`` afterwards."""
+        if not views:
+            return
+        for t in self.tables_written:
+            self.read(t).createOrReplaceTempView(t)
+        for name, query in views.items():
+            self.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {query}")
+
+
+@dataclass
+class WarehouseTarget:
+    """Applies operations directly to a parquet warehouse (ExecuteTarget
+    analog for file-backed tables); every warehouse replay runs through it."""
+
+    wh: Warehouse
+    views: dict[str, str] = field(default_factory=dict, init=False)
+    on_opaque = "skip"  # parquet cannot run source-dialect triggers/sequences
+
+    def create_table(self, table: str, schema: StructType) -> None:
+        """A replay's first insert of ``table`` replaces it: drop what is
+        there (a prior partial replay's leftovers), so re-running a failed
+        replay from seq 0 reproduces the same state instead of duplicating
+        rows."""
+        self.wh.drop(table)
+
+    def create_view(self, name: str, query: str) -> None:
+        """Deferred: :func:`replay` creates views after the last operation,
+        over the final tables."""
+        self.views[name] = query
+
+    def insert(self, table: str, df: DataFrame) -> None:
+        if self.wh.exists(table):
+            self.wh.append(table, df)
+        else:
+            self.wh.write(table, df)
+
+    def upsert(self, table: str, df: DataFrame, key) -> None:
+        self.wh.rewrite(table, mutate.merge_upsert(self.wh.read(table), df, key))
+
+    def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
+        self.wh.rewrite(table, mutate.delete_by_keys(self.wh.read(table), key_columns, keys))
+
+    def execute_sql(self, statements: list[str]) -> None:
+        for s in statements:
+            self.wh.spark.sql(s)
+
+    def close(self) -> None:
+        pass
+
+
+def replay_into_target(
+    spark: SparkSession,
+    log_path: str,
+    target,
+    *,
+    on_opaque: str | None = None,
+) -> list[OpRecord]:
+    """Replay an operation log in seq order into an execute-target (S10):
+    the reference's ``import`` flow (``Main.java:46-58``, §3.2). The target
+    is anything with the ExecuteTarget verb surface
+    (insert/upsert/delete/execute_sql — :class:`WarehouseTarget`,
+    ``engine.JdbcTarget``, ``sources.derby.DerbyTarget``,
+    ``engine.FileTarget``); the module docstring lists how each record
+    kind applies. ``on_opaque`` is ``"execute"``, ``"skip"`` or
+    ``"error"``; the default is the target's ``on_opaque`` attribute, else
+    ``"execute"`` (the reference carries source-dialect SQL to live
+    targets).
+
+    Returns the records that reached the target; skipped records are
+    excluded, so callers can audit exactly what was applied. Nothing passes
+    through the driver but the manifest: payloads stream through the
+    target's set-oriented verbs.
+    """
+    on_opaque = on_opaque or getattr(target, "on_opaque", "execute")
+    create_table = getattr(target, "create_table", None)
+    create_view = getattr(target, "create_view", None)
+    applied: list[OpRecord] = []
+    created: set[str] = set()
+    for rec in read_manifest(log_path):
+        df = spark.read.parquet(os.path.join(log_path, rec.payload)) if rec.payload else None
+        if rec.kind == "ddl":
+            continue  # tables come from payload schemas at their first insert
+        elif rec.kind == "opaque_sql":
+            if on_opaque == "error":
+                raise ValueError(f"opaque SQL operation {rec.seq} refused")
+            if on_opaque != "execute":
+                continue
+            target.execute_sql(list(rec.params["statements"]))
+        elif rec.kind == "view":
+            if create_view is None:
+                continue
+            create_view(rec.params["name"], rec.params["query"])
+        elif rec.kind == "insert":
+            if create_table is not None and rec.table not in created:
+                create_table(rec.table, df.schema)
+                created.add(rec.table)
+            target.insert(rec.table, df)
+        elif rec.kind == "upsert":
+            target.upsert(rec.table, df, rec.params["key_columns"])
+        elif rec.kind == "delete":
+            # key_columns is the current form; key_column the pre-composite one
+            cols = rec.params.get("key_columns") or [rec.params["key_column"]]
+            if set(cols) <= set(df.columns):
+                # project by name: tolerates a payload carrying extra
+                # columns (e.g. a legacy single-key record over a wider
+                # key frame) — keyed deletes require exact arity
+                df = df.select(*cols)
+            target.delete(rec.table, cols, df)
+        else:
+            raise ValueError(f"unknown operation kind {rec.kind!r} at seq {rec.seq}")
+        applied.append(rec)
+    return applied
+
 
 def replay(
     spark: SparkSession,
     log_path: str,
     warehouse: Warehouse,
     *,
-    execute_sql: Callable[[str], None] | None = None,
-    on_opaque: str = "skip",
+    on_opaque: str | None = None,
 ) -> list[OpRecord]:
-    """Replay an operation log in seq order against a warehouse (S10).
-
-    ``execute_sql`` handles ddl records. Default None: DDL is *skipped* for
-    parquet warehouses — payload parquet is self-describing, and executing
-    CREATE TABLE against the live session catalog would shadow/pollute it.
-    Pass ``spark.sql`` (or a JDBC statement executor) when replaying into a
-    real SQL catalog. ``on_opaque`` is 'skip' (default — parquet targets
-    can't run Oracle DDL) or 'error'. Returns the applied records.
-
-    Replayed VIEW records (and the table temp views they read through)
-    deliberately OUTLIVE the replay in the session catalog: a view whose
-    definition is dropped the moment the import ends would be useless to
-    the reader the import exists for. On a shared session, replay N's
-    views shadow same-named earlier ones (latest import wins) — callers
-    needing isolation should replay in their own SparkSession or
-    ``spark.catalog.dropTempView`` afterwards.
-    """
-    from oracle_schema_copy_spark.operators import mutate
-
-    applied: list[OpRecord] = []
-    # Idempotence: the FIRST insert op for a table in THIS replay run
-    # overwrites whatever exists (a prior partial replay's leftovers);
-    # only subsequent insert ops for the same table within the same log
-    # append (multi-chunk exports). Re-running a failed replay from seq 0
-    # therefore reproduces the same final state instead of duplicating
-    # rows — the file-storage substitute for the reference's
-    # single-JDBC-transaction import.
-    inserted_this_run: set[str] = set()
-    for rec in read_manifest(log_path):
-        if rec.kind == "ddl":
-            if execute_sql is not None:
-                for stmt in rec.params["statements"]:
-                    execute_sql(stmt)
-        elif rec.kind == "opaque_sql":
-            if on_opaque == "error":
-                raise ValueError(f"opaque SQL operation {rec.seq} on a non-JDBC target")
-        elif rec.kind == "view":
-            # view defs reference imported tables by bare name: expose every
-            # table written so far as a session-scoped temp view, then
-            # create the logged view on top (no persistent-catalog writes)
-            for t in warehouse.tables_written:
-                warehouse.read(t).createOrReplaceTempView(t)
-            spark.sql(
-                f"CREATE OR REPLACE TEMPORARY VIEW {rec.params['name']} "
-                f"AS {rec.params['query']}"
-            )
-        elif rec.kind == "insert":
-            df = spark.read.parquet(os.path.join(log_path, rec.payload))
-            if rec.table in inserted_this_run:
-                warehouse.append(rec.table, df)
-            else:
-                warehouse.write(rec.table, df)
-                inserted_this_run.add(rec.table)
-        elif rec.kind == "upsert":
-            updates = spark.read.parquet(os.path.join(log_path, rec.payload))
-            merged = mutate.merge_upsert(
-                warehouse.read(rec.table), updates, rec.params["key_columns"]
-            )
-            warehouse.rewrite(rec.table, merged)
-        elif rec.kind == "delete":
-            keys = spark.read.parquet(os.path.join(log_path, rec.payload))
-            # key_columns is the current form; key_column the pre-composite one
-            cols = rec.params.get("key_columns") or [rec.params["key_column"]]
-            if set(cols) <= set(keys.columns):
-                # project by name: tolerates a payload carrying extra
-                # columns (e.g. a legacy single-key record over a wider
-                # key frame) — delete_by_keys requires exact arity
-                keys = keys.select(*cols)
-            kept = mutate.delete_by_keys(warehouse.read(rec.table), cols, keys)
-            warehouse.rewrite(rec.table, kept)
-        else:
-            raise ValueError(f"unknown operation kind {rec.kind!r} at seq {rec.seq}")
-        applied.append(rec)
+    """Replay an operation log into a parquet warehouse through a
+    :class:`WarehouseTarget`. First rolls forward a commit that a crashed
+    :func:`replay_atomic` left pending, so its stale stage cannot later land
+    over tables written here; creates the logged views last, because a view
+    made mid-log reads files that a later rewrite deletes. Returns the
+    records that reached the warehouse."""
+    recover_replay(warehouse)
+    target = WarehouseTarget(warehouse)
+    applied = replay_into_target(spark, log_path, target, on_opaque=on_opaque)
+    warehouse.create_views(target.views)
     return applied
 
 
@@ -327,6 +402,7 @@ class _StagingWarehouse(Warehouse):
     def __init__(self, spark: SparkSession, root: str, base: Warehouse):
         super().__init__(spark, root)
         self.base = base
+        self.views: dict[str, str] = {}
 
     def _staged(self, table: str) -> bool:
         return os.path.isdir(os.path.join(self.root, table))
@@ -339,100 +415,16 @@ class _StagingWarehouse(Warehouse):
             return self.spark.read.parquet(self._dir(table))
         return self.base.read(table)
 
-
-def replay_into_target(
-    spark: SparkSession,
-    log_path: str,
-    target,
-    *,
-    ddl: str = "infer",
-    on_opaque: str = "execute",
-    on_view: str = "skip",
-) -> list[OpRecord]:
-    """Replay an operation log into a LIVE execute-target — the
-    reference's actual import flow (``Main.java:46-58`` ``import``:
-    serialized stream → ordered execution against a JDBC connection,
-    §3.2), where :func:`replay` is the parquet-warehouse analog. The
-    target is anything with the ExecuteTarget verb surface
-    (insert/upsert/delete/execute_sql — ``engine.JdbcTarget``,
-    ``sources.derby.DerbyTarget``, ``engine.FileTarget``).
-
-    ``ddl`` handling, because logged table DDL is Spark-SQL dialect:
-    - ``"infer"`` (default): SKIP logged table-DDL records and create
-      each table on its first insert from the payload parquet's own
-      schema (via ``target.create_table`` when the target has one —
-      dialect-correct for that target). Matches the reference's
-      constraints-AFTER-data load order: tables exist before data,
-      constraint/opaque records still execute in sequence afterwards.
-    - ``"execute"``: pass logged DDL text through ``target.execute_sql``
-      (for targets that speak the logged dialect).
-    ``on_opaque``: ``"execute"`` (default — the reference carries opaque
-    source-dialect SQL to live targets), ``"skip"``, or ``"error"``.
-    ``on_view``: ``"execute"`` or ``"skip"`` (default: logged view
-    definitions are Spark-SQL SELECT text; execute only against targets
-    that parse it).
-
-    Returns the records that actually EXECUTED against the target —
-    records skipped by ``ddl="infer"``/``on_opaque="skip"``/
-    ``on_view="skip"`` are excluded, so callers can audit exactly what
-    reached the database.
-
-    Scale: payload chunks stream through ``target.insert`` (parallel
-    batched JDBC writes for database targets); upserts/deletes reuse the
-    staged set-oriented paths. Nothing passes through the driver but the
-    manifest.
-    """
-    applied: list[OpRecord] = []
-    created: set[str] = set()
-    for rec in read_manifest(log_path):
-        if rec.kind == "ddl":
-            if ddl != "execute":
-                continue  # "infer": table DDL is re-derived at first insert
-            target.execute_sql(list(rec.params["statements"]))
-        elif rec.kind == "opaque_sql":
-            if on_opaque == "error":
-                raise ValueError(f"opaque SQL operation {rec.seq} refused")
-            if on_opaque != "execute":
-                continue
-            target.execute_sql(list(rec.params["statements"]))
-        elif rec.kind == "view":
-            if on_view != "execute":
-                continue
-            target.execute_sql(
-                [f"CREATE VIEW {rec.params['name']} AS {rec.params['query']}"]
-            )
-        elif rec.kind == "insert":
-            df = spark.read.parquet(os.path.join(log_path, rec.payload))
-            if (
-                ddl == "infer"
-                and rec.table not in created
-                and hasattr(target, "create_table")
-            ):
-                target.create_table(rec.table, df.schema)
-                created.add(rec.table)
-            target.insert(rec.table, df)
-        elif rec.kind == "upsert":
-            df = spark.read.parquet(os.path.join(log_path, rec.payload))
-            target.upsert(rec.table, df, rec.params["key_columns"])
-        elif rec.kind == "delete":
-            keys = spark.read.parquet(os.path.join(log_path, rec.payload))
-            cols = rec.params.get("key_columns") or [rec.params["key_column"]]
-            if set(cols) <= set(keys.columns):
-                keys = keys.select(*cols)
-            target.delete(rec.table, cols, keys)
-        else:
-            raise ValueError(f"unknown operation kind {rec.kind!r} at seq {rec.seq}")
-        applied.append(rec)
-    return applied
+    def create_views(self, views: dict[str, str]) -> None:
+        """Held for :func:`replay_atomic`, which creates them over the base
+        warehouse after commit — the commit moves the staged files away."""
+        self.views = views
 
 
 def replay_atomic(
     spark: SparkSession,
     log_path: str,
     warehouse: Warehouse,
-    *,
-    execute_sql: Callable[[str], None] | None = None,
-    on_opaque: str = "skip",
 ) -> list[OpRecord]:
     """Whole-log transactional replay: the reference imports an entire
     schema inside ONE JDBC transaction (``CopyUtils.java:353-375``, commit
@@ -442,31 +434,32 @@ def replay_atomic(
     delta). This closes it with a staging warehouse + commit marker:
 
     1. Roll forward a previous crashed commit (marker present → finish it).
-    2. Replay every operation into ``<root>/.replay_stage`` — reads
-       overlay stage-over-target, the target is never written.
+    2. :func:`replay` every operation into ``<root>/.replay_stage`` —
+       reads overlay stage-over-target, the target is never written.
     3. COMMIT POINT: one atomic rename of a marker file listing the staged
        tables into the warehouse root.
     4. Roll forward: move each staged table over its live counterpart,
-       then drop marker + stage.
+       then drop marker + stage; then create the logged views over the
+       committed tables.
 
     A failure before (3) leaves the target byte-identical (the stale stage
     is discarded by the next run); a failure during (4) is completed by
     the roll-forward in (1), which skips already-moved tables — so readers
     either see the pre-replay state or the fully-replayed one, never a
-    prefix. Single-writer, like the reference's import."""
+    prefix. Single-writer, like the reference's import. Returns the
+    records that reached the warehouse."""
     os.makedirs(warehouse.root, exist_ok=True)
     recover_replay(warehouse)
     stage_root = os.path.join(warehouse.root, STAGE_DIRNAME)
     shutil.rmtree(stage_root, ignore_errors=True)
     stage = _StagingWarehouse(spark, stage_root, warehouse)
-    applied = replay(
-        spark, log_path, stage, execute_sql=execute_sql, on_opaque=on_opaque
-    )
+    applied = replay(spark, log_path, stage)
     fd, tmp = tempfile.mkstemp(dir=warehouse.root, suffix=".marker.tmp")
     with os.fdopen(fd, "w") as f:
         json.dump({"tables": sorted(stage.tables_written)}, f)
     os.replace(tmp, os.path.join(warehouse.root, COMMIT_MARKER))  # COMMIT POINT
     _apply_commit(warehouse)
+    warehouse.create_views(stage.views)
     return applied
 
 

@@ -37,7 +37,7 @@ def test_connection_factory(tmp_path):
 
 def test_execute_script_copy_tree(spark, sf_dir, tmp_path):
     """End-to-end: CLI `execute` runs a script that copy_trees into an
-    operation log, then CLI `import` replays it into a warehouse."""
+    operation log, then CLI `import` replays it atomically into a warehouse."""
     script = tmp_path / "job.py"
     log = tmp_path / "log"
     wh = tmp_path / "wh"
@@ -60,3 +60,6 @@ def test_execute_script_copy_tree(spark, sf_dir, tmp_path):
     from oracle_schema_copy_spark.plans.oplog import Warehouse
 
     assert Warehouse(spark, str(wh)).read("customer").count() == 2
+    # the import is atomic and committed: no stage or commit marker left
+    assert not (wh / ".replay_stage").exists()
+    assert not (wh / ".replay_commit.json").exists()

@@ -128,23 +128,24 @@ def test_live_ddl_types_roundtrip(spark, tgt):
 
 
 def test_replay_into_target_modes(spark, tgt, tmp_path):
-    """replay_into_target: infer-DDL creates tables from payload schemas
-    on first insert; multi-chunk inserts append; upsert/delete records
-    execute through the staged live paths; opaque records run by default
-    and on_opaque='error' refuses them; on_view='skip' ignores
-    Spark-dialect view text."""
+    """replay_into_target: tables are created from payload schemas on
+    first insert; multi-chunk inserts append; upsert/delete records
+    execute through the staged live paths; opaque records (here SQL sent
+    through a file target) run by default and on_opaque='error' refuses
+    them; Spark-dialect view text is skipped."""
+    from oracle_schema_copy_spark.engine import FileTarget
     from oracle_schema_copy_spark.plans import oplog
 
     base = _mk(spark, [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)])
     log_path = str(tmp_path / "log")
     with oplog.OperationLogWriter(log_path, rows_per_op=2) as log:
         log.insert("t", base)  # one insert record; rows_per_op chunks files
-        log.ddl(["CREATE INDEX T_IX ON T (V)"], opaque=True)
+        FileTarget(log).execute_sql(["CREATE INDEX T_IX ON T (V)"])
         log.upsert("t", _mk(spark, [(2, "B", 20.0), (9, "i", 9.0)]), ["k"])
         log.delete("t", "k", spark.createDataFrame([Row(k=1)]))
         log.view("v_t", "SELECT k FROM t")  # Spark-dialect text
     applied = oplog.replay_into_target(spark, log_path, tgt)
-    # executed records only: the on_view='skip' view record is excluded
+    # executed records only: the skipped view record is excluded
     assert [r.kind for r in applied] == [
         "insert", "opaque_sql", "upsert", "delete",
     ]

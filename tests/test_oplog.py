@@ -70,8 +70,9 @@ def test_replay_opaque_sql_skip_and_error(spark, scratch):
     log_path = os.path.join(scratch, "log4")
     with oplog.OperationLogWriter(log_path) as log:
         log.ddl(["CREATE SEQUENCE seq1"], opaque=True)
+    assert [r.kind for r in oplog.read_manifest(log_path)] == ["opaque_sql"]
     wh = oplog.Warehouse(spark, os.path.join(scratch, "wh4"))
-    assert oplog.replay(spark, log_path, wh)[0].kind == "opaque_sql"
+    assert oplog.replay(spark, log_path, wh) == []  # skipped: never reached the warehouse
     with pytest.raises(ValueError, match="opaque"):
         oplog.replay(spark, log_path, wh, on_opaque="error")
 
@@ -193,6 +194,24 @@ def test_atomic_replay_rolls_forward_after_commit_marker(spark, sf_dir, tmp_path
     assert not os.path.exists(os.path.join(wh.root, oplog.COMMIT_MARKER))
     assert not os.path.isdir(stage)
     assert oplog.recover_replay(wh) is False  # idempotent; nothing pending
+
+    # a plain replay rolls a pending commit forward first: the stale stage
+    # lands BEFORE the log's newer nation, and no later replay sees it
+    nation.write.mode("overwrite").parquet(os.path.join(stage, "nation"))
+    with open(os.path.join(wh.root, oplog.COMMIT_MARKER), "w") as f:
+        json.dump({"tables": ["nation"]}, f)
+    log = str(tmp_path / "log")
+    with oplog.OperationLogWriter(log) as lg:
+        lg.insert("nation", nation.filter(F.col("n_nationkey") < 10))
+    oplog.replay(spark, log, wh)
+    assert wh.read("nation").count() == 10
+    assert not os.path.exists(os.path.join(wh.root, oplog.COMMIT_MARKER))
+    assert not os.path.isdir(stage)
+    region_log = str(tmp_path / "region_log")
+    with oplog.OperationLogWriter(region_log) as lg:
+        lg.insert("region", load_table(spark, sf_dir, "region"))
+    oplog.replay_atomic(spark, region_log, wh)
+    assert wh.read("nation").count() == 10  # the stale stage never resurfaces
     _sh.rmtree(str(tmp_path / "wh"), ignore_errors=True)
 
 
@@ -239,9 +258,11 @@ def test_replay_composite_and_legacy_delete_records(spark, sf_dir, tmp_path):
 
 
 def test_view_and_opaque_objects_roundtrip(spark, sf_dir, tmp_path):
-    """S9: view defs replay as views over imported tables; opaque SQL
-    (triggers/sequences) survives in the manifest, is skipped by parquet
-    targets, errors when demanded, and executes only via a SQL executor."""
+    """S9: view defs replay as views over imported tables — plain and
+    atomic, where the views must read the committed tables, not the
+    deleted stage; opaque SQL (triggers/sequences) survives in the
+    manifest, is skipped by parquet targets, errors when demanded, and
+    executes only via a SQL executor."""
     from oracle_schema_copy_spark.sources.tables import load_tables
 
     tabs = dict(load_tables(spark, sf_dir, ("region", "nation")))
@@ -257,9 +278,10 @@ def test_view_and_opaque_objects_roundtrip(spark, sf_dir, tmp_path):
     kinds = [r.kind for r in oplog.read_manifest(log)]
     assert kinds == ["ddl", "insert", "insert", "view", "opaque_sql"]
 
-    wh = oplog.Warehouse(spark, str(tmp_path / "wh"))
-    oplog.replay(spark, log, wh)  # opaque skipped by default
-    assert spark.table("region_names_v").count() == 5
+    for replay_fn in (oplog.replay, oplog.replay_atomic):
+        wh = oplog.Warehouse(spark, str(tmp_path / replay_fn.__name__))
+        replay_fn(spark, log, wh)  # opaque skipped by default
+        assert spark.table("region_names_v").count() == 5
 
     with pytest.raises(ValueError, match="opaque"):
         oplog.replay(spark, log, oplog.Warehouse(spark, str(tmp_path / "wh2")), on_opaque="error")
@@ -272,6 +294,24 @@ def test_view_and_opaque_objects_roundtrip(spark, sf_dir, tmp_path):
         if rec.kind == "opaque_sql":
             executed.extend(rec.params["statements"])
     assert executed == opaque
+
+
+def test_replay_view_reads_table_rewritten_later_in_log(spark, sf_dir, tmp_path):
+    """A view logged before a rewrite of the table it reads is created after
+    the last op, so it reads the final table (not the rewrite's deleted
+    files)."""
+    nation = load_table(spark, sf_dir, "nation")
+    log = str(tmp_path / "log")
+    with oplog.OperationLogWriter(log) as lg:
+        lg.insert("nation_rw", nation)
+        lg.view("nation_rw_keys_v", "SELECT n_nationkey FROM nation_rw")
+        lg.delete("nation_rw", "n_nationkey", nation.filter(F.col("n_nationkey") < 5))
+    oplog.replay(spark, log, oplog.Warehouse(spark, str(tmp_path / "wh")))
+    try:
+        assert spark.table("nation_rw_keys_v").count() == 20
+    finally:
+        spark.catalog.dropTempView("nation_rw_keys_v")
+        spark.catalog.dropTempView("nation_rw")
 
 
 def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
