@@ -19,7 +19,12 @@ the median and round-over-round comparisons became undecidable):
 - **7 timed runs per query** (``SPARK_GRAFT_BENCH_RUNS``), reported as a
   one-sided trimmed median (worst third dropped — contention noise is
   one-sided, see ``_trimmed_median``), plus min, max-min spread, and the
-  full sample list so outliers are visible in the record.
+  full sample list so outliers are visible in the record. Each sample's
+  driver build seconds (building the frame, before ``.count()``) sit
+  beside it in ``BENCH_FULL.json``.
+- **One failed query never loses the run**: a query whose subprocess
+  fails or times out gets an ``error`` / ``timeout`` entry, the other
+  queries still run, and the process exits non-zero at the end.
 - Machine state (cpu count, 1-min loadavg before/after, fixed CPU-speed
   probe + steal) is recorded so an overloaded-sandbox run is
   distinguishable from a plan regression.
@@ -62,7 +67,9 @@ def _time_query(spark, fn, sf_dir: str, runs: int) -> dict:
 
     Two warmup passes, not one: measured single-warmup runs still carried
     5× first-sample JIT residue (C2 compiles the hot loops during/after
-    the first full execution).
+    the first full execution). ``build`` holds, per sample, the seconds
+    spent building the frame (py4j + analysis + any eager checkpoint job
+    inside the builder) — the part of the sample before ``.count()``.
 
     The timed phase is bounded by ``SPARK_GRAFT_BENCH_QUERY_BUDGET``
     seconds (default 60, min 3 samples always taken): under co-tenant
@@ -75,15 +82,18 @@ def _time_query(spark, fn, sf_dir: str, runs: int) -> dict:
     assert fn(spark, sf_dir).count() >= 0
     warm = time.perf_counter() - t0
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_QUERY_BUDGET", "60"))
-    samples = []
+    samples, build = [], []
     t_start = time.perf_counter()
     for i in range(runs):
         if i >= 3 and time.perf_counter() - t_start > budget:
             break
         t0 = time.perf_counter()
-        assert fn(spark, sf_dir).count() >= 0
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        assert df.count() >= 0
         samples.append(round(time.perf_counter() - t0, 3))
-    return {"samples": samples, "warmup": round(warm, 3)}
+        build.append(round(t1 - t0, 3))
+    return {"samples": samples, "build": build, "warmup": round(warm, 3)}
 
 
 
@@ -160,19 +170,25 @@ def _trimmed_median(xs: list[float]) -> float:
     return _median(s[: len(s) - drop])
 
 
-def _cpu_probe() -> dict:
-    """Machine-speed calibration recorded alongside the timings: a fixed
-    single-thread Python workload plus the /proc/stat steal share over a
-    2 s window. Loadavg alone cannot distinguish "this round's sandbox is
-    simply slower / more stolen-from" from a plan regression — r8 measured
-    a quiet-loadavg machine running the identical committed queries ~1.5×
-    slower than r6 with ~6% steal at idle. Cross-round comparisons should
-    normalize by probe_sec (same fixed work every round)."""
+def _probe_sec() -> float:
+    """Seconds for a fixed single-thread Python workload — the host-speed
+    probe every gate and A/B arm records."""
     t0 = time.perf_counter()
     s = 0
     for i in range(5_000_000):
         s += i
-    probe = round(time.perf_counter() - t0, 4)
+    return round(time.perf_counter() - t0, 4)
+
+
+def _cpu_probe() -> dict:
+    """Machine-speed calibration recorded alongside the timings:
+    :func:`_probe_sec` plus the /proc/stat steal share over a 2 s window.
+    Loadavg alone cannot distinguish "this round's sandbox is simply
+    slower / more stolen-from" from a plan regression — r8 measured a
+    quiet-loadavg machine running the identical committed queries ~1.5×
+    slower than r6 with ~6% steal at idle. Cross-round comparisons should
+    normalize by probe_sec (same fixed work every round)."""
+    probe = _probe_sec()
     steal = None
     try:
         def snap():
@@ -194,12 +210,13 @@ def _cpu_probe() -> dict:
 def _bw_probe() -> float | None:
     """Aggregate all-core memory bandwidth in GB/s: concurrent numpy
     block copies on min(8, cpus) threads (numpy releases the GIL on
-    large copies), buffers far past LLC. Advisory telemetry only, never
-    a gate. Exists because the single-thread probe is provably blind to
-    all-core degradation: r14 session 4 recorded the fastest probe ever
-    (0.131 s) on a host whose 32-core bench ran ~9 % SLOWER than a
-    0.179 s-probe window and whose sf10 Σcpu on identical code swung
-    1.6–2.5× (BENCH_r14_c4 vs c2, AB_SF10_r14_quiet.jsonl)."""
+    large copies), buffers far past LLC. Advisory in the bench record;
+    ``tools/ab.py`` can gate launches on it. Exists because the
+    single-thread probe is provably blind to all-core degradation: r14
+    session 4 recorded the fastest probe ever (0.131 s) on a host whose
+    32-core bench ran ~9 % SLOWER than a 0.179 s-probe window and whose
+    sf10 Σcpu on identical code swung 1.6–2.5× (BENCH_r14_c4 vs c2,
+    AB_SF10_r14_quiet.jsonl)."""
     try:
         import threading
 
@@ -259,6 +276,26 @@ PROBE_REF_SEC = 0.20
 # record as gate-failed so readers know to distrust the absolute numbers.
 GATE_PROBE_MAX = 0.25
 GATE_LOAD_MAX = 1.0
+# Wall-clock cap on one fresh-process measurement (a bench query or an
+# A/B arm); past it the child is killed and recorded as a ``timeout``.
+CHILD_TIMEOUT_SEC = 1800
+
+
+def _run_child(cmd: list[str], prefix: str, *, cwd: str | None = None) -> dict:
+    """Run one fresh-process measurement; its record is the JSON object on
+    the first stdout line starting with ``prefix``. A failed or timed-out
+    child returns an ``error`` / ``timeout`` entry instead of raising, so
+    one bad query never loses the other queries' samples."""
+    try:
+        proc = subprocess.run(
+            cmd, capture_output=True, text=True, timeout=CHILD_TIMEOUT_SEC, cwd=cwd
+        )
+    except subprocess.TimeoutExpired:
+        return {"timeout": CHILD_TIMEOUT_SEC}
+    line = next((ln for ln in proc.stdout.splitlines() if ln.startswith(prefix)), None)
+    if proc.returncode != 0 or line is None:
+        return {"error": f"rc={proc.returncode}: {proc.stderr[-800:]}"}
+    return json.loads(line[line.index("{"):])
 
 
 def _machine_gate() -> dict:
@@ -311,11 +348,7 @@ def main() -> None:
         waited = 0.0
         while True:
             load = os.getloadavg()[0]
-            t0 = time.perf_counter()
-            s = 0
-            for i in range(5_000_000):
-                s += i
-            probe = round(time.perf_counter() - t0, 4)
+            probe = _probe_sec()
             ok = probe <= GATE_PROBE_MAX and load <= GATE_LOAD_MAX
             if ok or waited >= per_q_wait:
                 return {"probe_sec": probe, "loadavg_1m": round(load, 2), "gate_ok": ok}
@@ -326,27 +359,12 @@ def main() -> None:
     gate_retries: dict[str, dict] = {}
     if isolate:
         def _run_isolated(name: str) -> dict:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--one", name],
-                capture_output=True,
-                text=True,
-                timeout=1800,
+            res = _run_child(
+                [sys.executable, os.path.abspath(__file__), "--one", name], "BENCH_ONE "
             )
-            line = next(
-                (
-                    ln.removeprefix("BENCH_ONE ")
-                    for ln in proc.stdout.splitlines()
-                    if ln.startswith("BENCH_ONE ")
-                ),
-                None,
-            )
-            if proc.returncode != 0 or line is None:
-                sys.stderr.write(
-                    f"bench subprocess for {name} failed (rc={proc.returncode}):\n"
-                    f"{proc.stderr[-2000:]}\n"
-                )
-                raise SystemExit(1)
-            return json.loads(line)
+            if "samples" not in res:
+                sys.stderr.write(f"bench subprocess for {name} failed: {res}\n")
+            return res
 
         for name in names:
             query_gates[name] = _query_gate()
@@ -359,10 +377,13 @@ def main() -> None:
         # fails keeps the original rows — still loud in the record.
         for name in [n for n, g in query_gates.items() if not g["gate_ok"]]:
             gate = _query_gate()
+            kept = "original"
             if gate["gate_ok"]:
-                query_gates[name] = gate
-                per_query[name] = _run_isolated(name)
-            gate_retries[name] = {"gate": gate, "kept": "retry" if gate["gate_ok"] else "original"}
+                res = _run_isolated(name)
+                # a failed retry never replaces a completed sample set
+                if "samples" in res or "samples" not in per_query[name]:
+                    query_gates[name], per_query[name], kept = gate, res, "retry"
+            gate_retries[name] = {"gate": gate, "kept": kept}
     else:
         from oracle_schema_copy_spark.session import get_spark
 
@@ -373,6 +394,8 @@ def main() -> None:
             per_query[name] = {"name": name, **_time_query(spark, fns[name], sf_dir, runs)}
         spark.stop()
 
+    failed = {n: r for n, r in per_query.items() if "samples" not in r}
+    per_query = {n: r for n, r in per_query.items() if n not in failed}
     timings = {n: round(_trimmed_median(r["samples"]), 3) for n, r in per_query.items()}
     mins = {n: min(r["samples"]) for n, r in per_query.items()}
     spreads = {n: round(max(r["samples"]) - min(r["samples"]), 3) for n, r in per_query.items()}
@@ -416,6 +439,7 @@ def main() -> None:
         "probe_ref_sec": PROBE_REF_SEC,
         "spread": spreads,
         "samples": {n: r["samples"] for n, r in per_query.items()},
+        "build": {n: r["build"] for n, r in per_query.items()},
         "warmup": {n: r["warmup"] for n, r in per_query.items()},
         "runs_per_query": runs,
         "isolated": isolate,
@@ -429,6 +453,8 @@ def main() -> None:
         },
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
+    if failed:
+        full_record["failed"] = failed
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"),
@@ -451,6 +477,8 @@ def main() -> None:
     compact["gate_ok"] = probe0.get("gate_ok")
     compact["probe_best_sec"] = round(probe_best, 4)
     compact["full_record"] = out_path
+    if failed:
+        compact["failed"] = sorted(failed)
     # <2KB stdout contract (CLAUDE.md): the two per-query maps grow
     # linearly with the headline set — shed them largest-first before the
     # serialized line can exceed the tail window (r11 ADVICE). The full
@@ -475,6 +503,8 @@ def main() -> None:
         }
     sys.stderr.flush()
     print(json.dumps(compact), flush=True)
+    if failed:
+        raise SystemExit(1)
 
 
 if __name__ == "__main__":

@@ -20,6 +20,7 @@ from oracle_schema_copy_spark.catalog import Catalog
 from oracle_schema_copy_spark.operators import mutate, walk
 from oracle_schema_copy_spark.plans import oplog
 from oracle_schema_copy_spark.plans.oplog import WarehouseTarget
+from oracle_schema_copy_spark.sources import derby
 from oracle_schema_copy_spark.sources import jdbc as jdbc_mod
 from oracle_schema_copy_spark.sources import jdbc_mutations
 from oracle_schema_copy_spark.sources.tables import load_table
@@ -55,9 +56,10 @@ class JdbcTarget:
     Inserts are parallel batched JDBC writes; upsert stages the update set
     and runs one MERGE; deletes batch keys into IN-lists (or stage + one
     EXISTS delete for huge key sets); SQL lists execute in order on one
-    connection (see sources/jdbc_mutations.py). ``executor`` is injectable
-    for tests; by default statements run through the Spark JVM's
-    java.sql.DriverManager.
+    connection (see sources/jdbc_mutations.py). A ``jdbc:derby:`` URL
+    gets Derby's identifier-case convention (``derby.at_boundary``).
+    ``executor`` is injectable for tests; by default statements run
+    through the Spark JVM's java.sql.DriverManager.
     """
 
     conn: jdbc_mod.JdbcConnection
@@ -73,29 +75,34 @@ class JdbcTarget:
         return self.executor
 
     def insert(self, table: str, df: DataFrame) -> None:
+        table, df, _, opts = derby.at_boundary(self.conn.url, table, df)
         jdbc_mod.write_table(
-            df, self.conn, table, allow_production=self.allow_production
+            df, self.conn, table, allow_production=self.allow_production, write_options=opts
         )
 
     def upsert(self, table: str, df: DataFrame, key) -> None:
+        table, df, keys, opts = derby.at_boundary(self.conn.url, table, df, key)
         jdbc_mutations.jdbc_upsert(
             df,
             self.conn,
             table,
-            key,
+            keys,
             executor=self._executor(),
             dialect=self.dialect,
             allow_production=self.allow_production,
+            write_options=opts,
         )
 
     def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
+        table, keys, cols, opts = derby.at_boundary(self.conn.url, table, keys, key_columns)
         jdbc_mutations.jdbc_delete(
             keys,
             self.conn,
             table,
-            key_columns,
+            cols,
             executor=self._executor(),
             allow_production=self.allow_production,
+            write_options=opts,
         )
 
     def execute_sql(self, statements: list[str]) -> None:
@@ -142,16 +149,16 @@ class Engine:
         target.execute_sql(statements)
 
     def copy_tree(self, target, paths: list[str], root_ids) -> dict[str, int]:
-        """Walk FK paths from seed ids and copy the reachable subgraph."""
+        """Walk FK paths from seed ids and copy the reachable subgraph.
+        Returns the copied row count per table, read from the walk's
+        coverage check (no recount)."""
         from oracle_schema_copy_spark.catalog import tables_from_paths
 
         tabs = self.tables(tables_from_paths(paths))
-        copied = walk.copy_tree(self.spark, tabs, self.catalog, paths, root_ids)
-        out = {}
+        copied, rows = walk.copy_tree(self.spark, tabs, self.catalog, paths, root_ids)
         for t, df in copied.items():
             target.insert(t, df)
-            out[t] = df.count()
-        return out
+        return rows
 
     def delete_tree(self, target, paths: list[str], root_ids) -> None:
         """Walk FK paths and delete the reachable subgraph (child-first by

@@ -399,7 +399,6 @@ def remove_repeated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     span_tokens: int = 16,
-    checkpoint_spans: bool = False,
 ) -> DataFrame:
     """Exact-substring span REMOVAL — the rewrite pass of Lee et al. 2022
     (ExactSubstr): excise every length-L token window whose hash occurs
@@ -422,7 +421,7 @@ def remove_repeated_spans(
     conservative variant — dedup-then-keep-one needs a keeper rule, which
     :func:`paragraph_dedup_docs` demonstrates at paragraph granularity.
     """
-    # checkpoint_spans=False (r9 default, ADVICE r8 #3 measured): the
+    # No checkpoint (ADVICE r8 #3 measured, BENCH_NOTES_r09.md): the
     # exploded (id, start, hash) frame feeds two consumers, but eagerly
     # localCheckpoint-ing it — ~corpus x windows rows pinned to executor
     # memory/disk — was 6.7x SLOWER than recomputing the per-row hashing
@@ -430,8 +429,6 @@ def remove_repeated_spans(
     # cheap codegen'd expression work, the materialization is not), on
     # top of the memory-footprint risk the checkpoint carries.
     ex = _span_starts(docs, id_col, text_col, span_tokens)
-    if checkpoint_spans:
-        ex = ex.localCheckpoint()
     counts = ex.groupBy("__h").agg(F.count(F.lit(1)).alias("__cnt"))
     flagged = (
         ex.join(counts.filter(F.col("__cnt") > 1), "__h")

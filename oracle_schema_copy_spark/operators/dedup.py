@@ -19,8 +19,6 @@ xxhash64 would be ~3x faster JVM-side and is the drop-in for production.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -468,14 +466,10 @@ def minhash_lsh_pairs(
     # pattern walk.py uses for frontiers. At scale this is an explicit
     # storage-for-compute trade: the materialized sets are ~text-sized ×
     # n and spill to executor disk, vs re-parsing the corpus three times.
-    # Env knob for matched A/Bs only (VERDICT r13 #3 re-cost; the r13 A/B
-    # read eager/lazy/none within 0.04 s of each other) — default
-    # unchanged: eager keeps the materialization deterministic instead of
-    # racing the first two consumer stages.
-    mode = os.environ.get("SPARK_GRAFT_MINHASH_CKPT", "eager")
-    sets = shingle_sets(df, id_col, text_col, n)
-    if mode != "none":
-        sets = sets.localCheckpoint(eager=(mode == "eager"))
+    # The r13 A/B read eager/lazy/none within 0.04 s of each other; eager
+    # keeps the materialization deterministic instead of racing the first
+    # two consumer stages.
+    sets = shingle_sets(df, id_col, text_col, n).localCheckpoint(eager=True)
     cands = minhash_candidate_pairs(
         sets, id_col, bands=bands, max_bucket=max_bucket
     )
@@ -502,9 +496,7 @@ def minhash_candidate_pairs(
     # signature aggregation (an exchange stacked under the bucket
     # exchange) is re-run per join side (the r14 AQE reuse finding
     # documented in ngram_jaccard_pairs)
-    sig = _signatures_from_sets(sets, id_col).localCheckpoint(
-        eager=os.environ.get("SPARK_GRAFT_MINHASH_SIG_CKPT", "eager") == "eager"
-    )
+    sig = _signatures_from_sets(sets, id_col).localCheckpoint(eager=True)
     band_cols = [
         F.struct(
             F.lit(bi).alias("band"),

@@ -280,21 +280,24 @@ def walk_linked(
 
 
 def copy_selections(
-    tables: dict[str, DataFrame], selections: list[TableSelection], assert_counts: bool = True
-) -> dict[str, DataFrame]:
-    """Materialize each selection's rows (G3). Asserts per-table that the
-    scanned rows cover every requested key, like the reference's post-copy
-    verification (``CopyUtils.java:44-46``) — but set-based: composite-PK
-    tables may legitimately yield more rows than keys.
+    tables: dict[str, DataFrame], selections: list[TableSelection]
+) -> tuple[dict[str, DataFrame], dict[str, int]]:
+    """Materialize each selection's rows (G3); returns ``(frames, rows)``
+    — the selected frame and its row count per table. Asserts per-table
+    that the scanned rows cover every requested key, like the reference's
+    post-copy verification (``CopyUtils.java:44-46``) — but set-based:
+    composite-PK tables may legitimately yield more rows than keys.
 
-    All per-table checks are fused into ONE Spark job (one ``collect``):
-    each (table, found/want) side keeps its own native ``count_distinct``
-    aggregate — whole-stage-codegen HashAggregate with map-side partial
-    dedup over the original (mostly numeric) key columns — and only the
-    tagged ONE-ROW aggregate outputs are unioned and collected. The
-    crossJoin-per-table reconciliation of the pre-r13 shape (a broadcast
-    round per table) is gone; reconciliation happens driver-side over the
-    collected rows. r13 note: an alternative fusion that unioned the RAW
+    All per-table checks are fused into ONE action (one ``collect``; AQE
+    still submits one Spark job per query stage): each (table, found/want)
+    side keeps its own native ``count_distinct`` aggregate — whole-stage-
+    codegen HashAggregate with map-side partial dedup over the original
+    (mostly numeric) key columns — and only the tagged ONE-ROW aggregate
+    outputs are unioned and collected. The found side's aggregate also
+    carries ``count(*)``, so the per-table row counts cost no extra scan.
+    The crossJoin-per-table reconciliation of the pre-r13 shape (a
+    broadcast round per table) is gone; reconciliation happens driver-side
+    over the collected rows. r13 note: an alternative fusion that unioned the RAW
     key streams under a common ``array<string>`` encoding and aggregated
     once was measured 2.2x SLOWER end-to-end at sf0.1 (0.95 s -> 2.14 s
     bench median) — per-row string casts + array allocation in the
@@ -314,47 +317,50 @@ def copy_selections(
         )
         for sel in selections
     }
-    if assert_counts and selections:
+    if not selections:
+        return out, {}
 
-        def _counted(df: DataFrame, cols: Sequence[str], table: str, side: str) -> DataFrame:
-            return df.agg(
-                F.count_distinct(*[F.col(c) for c in cols]).alias("n")
-            ).select(
-                F.lit(table).alias("table_name"),
-                F.lit(side).alias("side"),
-                "n",
+    def _counted(df: DataFrame, cols: Sequence[str], table: str, side: str) -> DataFrame:
+        return df.agg(
+            F.count_distinct(*[F.col(c) for c in cols]).alias("n"),
+            F.count(F.lit(1)).alias("rows"),
+        ).select(
+            F.lit(table).alias("table_name"),
+            F.lit(side).alias("side"),
+            "n",
+            "rows",
+        )
+
+    op_of: dict[str, str] = {}
+    checks = None
+    for sel in selections:
+        if sel.rows is not None:
+            op_of[sel.table] = "le"
+            found = _counted(out[sel.table], [sel.probe_column], sel.table, "found")
+            want = _counted(sel.probe, sel.probe.columns, sel.table, "want")
+        else:
+            op_of[sel.table] = "eq"
+            found = _counted(out[sel.table], list(sel.key_columns), sel.table, "found")
+            want = _counted(sel.keys, list(sel.keys.columns), sel.table, "want")
+        for part in (found, want):
+            checks = part if checks is None else checks.unionByName(part)
+    collected = {(r.table_name, r.side): r for r in checks.collect()}
+    for sel in selections:
+        # direct indexing, not .get(..., 0): count_distinct on an empty
+        # frame still yields a row, so a MISSING row means the fused
+        # check lost an aggregate — fail loudly (KeyError), never let
+        # 0 == 0 pass silently
+        n_found = collected[(sel.table, "found")].n
+        n_keys = collected[(sel.table, "want")].n
+        op = op_of[sel.table]
+        if (n_found != n_keys) if op == "eq" else (n_found > n_keys):
+            raise AssertionError(
+                f"selection copy of {sel.table} matched {n_found} of {n_keys} keys"
+                if op == "eq"
+                else f"leaf selection of {sel.table} carried {n_found} distinct "
+                f"FK values but the probe held only {n_keys} keys"
             )
-
-        op_of: dict[str, str] = {}
-        checks = None
-        for sel in selections:
-            if sel.rows is not None:
-                op_of[sel.table] = "le"
-                found = _counted(out[sel.table], [sel.probe_column], sel.table, "found")
-                want = _counted(sel.probe, sel.probe.columns, sel.table, "want")
-            else:
-                op_of[sel.table] = "eq"
-                found = _counted(out[sel.table], list(sel.key_columns), sel.table, "found")
-                want = _counted(sel.keys, list(sel.keys.columns), sel.table, "want")
-            for part in (found, want):
-                checks = part if checks is None else checks.unionByName(part)
-        counts = {(r.table_name, r.side): r.n for r in checks.collect()}
-        for sel in selections:
-            # direct indexing, not .get(..., 0): count_distinct on an empty
-            # frame still yields a row, so a MISSING row means the fused
-            # check lost an aggregate — fail loudly (KeyError), never let
-            # 0 == 0 pass silently
-            n_found = counts[(sel.table, "found")]
-            n_keys = counts[(sel.table, "want")]
-            op = op_of[sel.table]
-            if (n_found != n_keys) if op == "eq" else (n_found > n_keys):
-                raise AssertionError(
-                    f"selection copy of {sel.table} matched {n_found} of {n_keys} keys"
-                    if op == "eq"
-                    else f"leaf selection of {sel.table} carried {n_found} distinct "
-                    f"FK values but the probe held only {n_keys} keys"
-                )
-    return out
+    return out, {t: collected[(t, "found")].rows for t in out}
 
 
 def delete_selections(
@@ -392,8 +398,9 @@ def copy_tree(
     catalog: Catalog,
     paths: list[str],
     root_ids: Iterable | DataFrame,
-) -> dict[str, DataFrame]:
-    """walk + copy: the reference's ``copyTree`` verb (``Main.java:142-155``)."""
+) -> tuple[dict[str, DataFrame], dict[str, int]]:
+    """walk + copy: the reference's ``copyTree`` verb (``Main.java:142-155``).
+    Returns :func:`copy_selections`' ``(frames, rows)``."""
     sels = walk_linked(spark, tables, catalog, paths, root_ids)
     return copy_selections(tables, sels)
 

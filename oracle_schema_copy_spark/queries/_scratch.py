@@ -3,7 +3,7 @@
 
 Two invariants (ADVICE r9):
 - the root lives next to THIS checkout (a second tree — e.g. the
-  tools/ab_bench.py A/B worktree — scratches in its own repo, never in
+  tools/ab.py A/B worktree — scratches in its own repo, never in
   another one), overridable via ``SPARK_GRAFT_SCRATCH``;
 - per-uuid dirs are swept once stale: every query builds a fresh dir and
   collects within its own run, so an entry untouched for hours can only

@@ -44,7 +44,7 @@ def q_copy_tree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem rows (walk = ordered left-semi joins over cached key frontiers)."""
     c = cat.tpch_catalog(sf_dir)
     tables = load_tables(spark, sf_dir, ("customer", "orders", "lineitem"))
-    copied = walk.copy_tree(
+    copied, _ = walk.copy_tree(
         spark, tables, c, FLAGSHIP_PATHS, _flagship_roots(spark, sf_dir)
     )
     return copied["lineitem"]
@@ -70,17 +70,13 @@ def q_copy_tree_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     assertions of copy_selections)."""
     c = cat.tpch_catalog(sf_dir)
     tables = load_tables(spark, sf_dir, ("customer", "orders", "lineitem"))
-    copied = walk.copy_tree(
+    _, rows = walk.copy_tree(
         spark, tables, c, FLAGSHIP_PATHS, _flagship_roots(spark, sf_dir)
     )
-    # one fused job: union of per-table count aggregates (no driver loop)
-    counts = None
-    for t, df in copied.items():
-        one = df.agg(F.count(F.lit(1)).alias("n_rows")).select(
-            F.lit(t).alias("table_name"), F.col("n_rows")
-        )
-        counts = one if counts is None else counts.unionByName(one)
-    return counts
+    # the counts ride on copy_selections' fused coverage check
+    return spark.createDataFrame(
+        list(rows.items()), "table_name string, n_rows bigint"
+    )
 
 
 @query(
@@ -129,7 +125,7 @@ def q_copy_tree_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFram
         spark, ("l_orderkey", "l_linenumber"), [tuple(r) for r in seed_rows]
     )
     sel = walk.TableSelection("lineitem", ("l_orderkey", "l_linenumber"), keys)
-    return walk.copy_selections({"lineitem": li}, [sel])["lineitem"]
+    return walk.copy_selections({"lineitem": li}, [sel])[0]["lineitem"]
 
 
 @query(

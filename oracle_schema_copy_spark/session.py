@@ -56,15 +56,13 @@ def tuning_confs(cpus: int) -> dict[str, str]:
         # collect_list/collect_set aggs use ObjectHashAggregate, which falls
         # back to sort-based aggregation after 128 distinct groups per
         # partition by default — posting-list builds (dedup) have 10⁴-10⁶
-        # groups per partition and never want the sort. Env-overridable for
-        # scale A/Bs; an sf10 A/B (OPTIMIZATION_r13.md §6) showed the bound
-        # never engages even at the 100× fixture (shingle universe stays
-        # under 128k groups/partition, zero spill either way), so the r4
-        # value is kept — the dedup stages' GC load is allocation churn
-        # (collect_list buffer growth), not a too-large live map.
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": os.environ.get(
-            "SPARK_GRAFT_OBJAGG_FALLBACK", "4194304"
-        ),
+        # groups per partition and never want the sort. An sf10 A/B
+        # (OPTIMIZATION_r13.md §6) showed the bound never engages even at
+        # the 100× fixture (shingle universe stays under 128k
+        # groups/partition, zero spill either way) — the dedup stages' GC
+        # load is allocation churn (collect_list buffer growth), not a
+        # too-large live map.
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "4194304",
     }
 
 

@@ -102,6 +102,31 @@ def fold_names(df: DataFrame, names: list[str], schema: T.StructType | None = No
     )
 
 
+def at_boundary(
+    url: str,
+    table: str,
+    df,
+    columns: str | list[str] = (),
+    *,
+    varchar_len: int = 1024,
+) -> tuple[str, object, list[str], dict[str, str] | None]:
+    """Apply the identifier-case convention (module doc) for the database
+    at ``url`` to one write: on Derby (``jdbc:derby:``) upper-case the
+    table, the key ``columns`` and the frame's columns, and type staged
+    strings VARCHAR; any other database passes through unchanged. ``df``
+    may be a key iterable instead of a DataFrame (left as is). Returns
+    ``(table, df, columns, write_options)``."""
+    cols = [columns] if isinstance(columns, str) else list(columns)
+    if not url.startswith("jdbc:derby:"):
+        return table, df, cols, None
+    opts = None
+    if isinstance(df, DataFrame):
+        df = fold_upper(df)
+        ct = column_types_option(df.schema, varchar_len=varchar_len)
+        opts = {"createTableColumnTypes": ct} if ct else {}
+    return table.upper(), df, [c.upper() for c in cols], opts
+
+
 def embedded_connection(spark: SparkSession, db_dir: str, *, create: bool = True) -> JdbcConnection:
     """Connection to a file-backed embedded Derby database inside the
     Spark JVM. Routes derby.log away from the CWD (first call only — the
@@ -131,41 +156,30 @@ class DerbyTarget:
         self.conn = embedded_connection(spark, db_dir)
         self.executor = jdbc_mutations.jvm_statement_executor(spark, self.conn)
 
-    def _types(self, df: DataFrame) -> dict[str, str]:
-        ct = column_types_option(fold_upper(df).schema, varchar_len=self.varchar_len)
-        return {"createTableColumnTypes": ct} if ct else {}
-
     def insert(self, table: str, df: DataFrame) -> None:
         from oracle_schema_copy_spark.sources.jdbc import write_table
 
-        write_table(
-            fold_upper(df), self.conn, table.upper(), write_options=self._types(df)
-        )
+        table, df, _, opts = at_boundary(self.conn.url, table, df, varchar_len=self.varchar_len)
+        write_table(df, self.conn, table, write_options=opts)
 
     def upsert(self, table: str, df: DataFrame, key) -> None:
         from oracle_schema_copy_spark.sources import jdbc_mutations
 
-        keys = [key] if isinstance(key, str) else list(key)
+        table, df, keys, opts = at_boundary(
+            self.conn.url, table, df, key, varchar_len=self.varchar_len
+        )
         jdbc_mutations.jdbc_upsert(
-            fold_upper(df),
-            self.conn,
-            table.upper(),
-            [k.upper() for k in keys],
-            executor=self.executor,
-            write_options=self._types(df),
+            df, self.conn, table, keys, executor=self.executor, write_options=opts
         )
 
     def delete(self, table: str, key_columns, keys: DataFrame) -> None:
         from oracle_schema_copy_spark.sources import jdbc_mutations
 
-        cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
+        table, keys, cols, opts = at_boundary(
+            self.conn.url, table, keys, key_columns, varchar_len=self.varchar_len
+        )
         jdbc_mutations.jdbc_delete(
-            fold_upper(keys) if isinstance(keys, DataFrame) else keys,
-            self.conn,
-            table.upper(),
-            [c.upper() for c in cols],
-            executor=self.executor,
-            write_options=self._types(keys) if isinstance(keys, DataFrame) else None,
+            keys, self.conn, table, cols, executor=self.executor, write_options=opts
         )
 
     def execute_sql(self, statements: list[str]) -> None:

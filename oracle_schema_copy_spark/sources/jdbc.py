@@ -106,8 +106,8 @@ def read_table_keyed(
 
     This is SURVEY §4's custom-strategy candidate for walking a subgraph
     OUT of a live database (``S2 keyed scan``): the A/B against the
-    default read-all + Spark semi-join is tools/inlist_ab.py, recorded in
-    BENCH_NOTES_r10.md — pushed probes win when the frontier is a small
+    default read-all + Spark semi-join is recorded in BENCH_NOTES_r10.md
+    §1 — pushed probes win when the frontier is a small
     fraction of the child table (the common copy_tree shape) because the
     read-all path ships the entire child table through JDBC first.
 

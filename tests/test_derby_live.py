@@ -219,3 +219,39 @@ def test_read_table_keyed_pushed_probe(spark, tgt):
     empty = read_table_keyed(spark, tgt.conn, "T", "K", [])
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == ["K", "V", "P"]
+
+
+def test_engine_db_target_over_derby_url(spark, tmp_path, sf_dir):
+    """Engine.create_db_target over a plain ``jdbc:derby:`` URL applies the
+    same identifier-case convention as DerbyTarget: copy, the staged-MERGE
+    update, a keyed delete and a read-back all run against unquoted DDL."""
+    from oracle_schema_copy_spark import catalog as cat
+    from oracle_schema_copy_spark.engine import Engine
+
+    eng = Engine(spark, cat.tpch_catalog(sf_dir))
+    db = str(tmp_path / "dbt")
+    tgt = eng.create_db_target(derby.embedded_connection(spark, db))
+    try:
+        orders = eng.table("orders")
+        tgt.execute_sql(
+            [derby.create_table_sql("orders", orders.schema, primary_key=["o_orderkey"])]
+        )
+        eng.copy(tgt, "orders")
+        keys = [r[0] for r in orders.orderBy("o_orderkey").limit(4).collect()]
+        changed = orders.filter(F.col("o_orderkey").isin(keys[:2])).withColumn(
+            "o_orderpriority", F.lit("updated")
+        )
+        eng.update(tgt, "orders", changed)
+        tgt.delete("orders", ["o_orderkey"], spark.createDataFrame([(keys[3],)], "k long"))
+
+        back = derby.fold_names(
+            read_query(spark, tgt.conn, "SELECT * FROM ORDERS"), orders.columns, orders.schema
+        )
+        assert back.count() == orders.count() - 1
+        sample = back.filter(F.col("o_orderkey").isin(keys))
+        priority = dict(sample.select("o_orderkey", "o_orderpriority").collect())
+        assert sorted(priority) == sorted(keys[:3])
+        assert priority[keys[0]] == priority[keys[1]] == "updated"
+        assert priority[keys[2]] != "updated"
+    finally:
+        derby.shutdown(spark, db)

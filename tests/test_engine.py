@@ -30,6 +30,26 @@ def test_copy_tree_via_file_target_then_import(engine, spark, tmp_path):
     assert wh.read("lineitem").count() == counts["lineitem"]
 
 
+def test_copy_tree_counts_come_from_the_walk_check(engine, tmp_path, monkeypatch):
+    """copy_tree's per-table row counts ride on the walk's fused coverage
+    check: no DataFrame.count() recount per copied table."""
+    target = engine.create_warehouse_target(str(tmp_path / "wh"))
+    expected = {
+        "customer": 3,
+        "orders": engine.table("orders").filter(F.col("o_custkey").isin([1, 2, 3])).count(),
+    }
+
+    def no_count(self):
+        raise AssertionError("copy_tree recounted a copied table")
+
+    # the concrete class: Spark 4's classic DataFrame overrides count()
+    monkeypatch.setattr(type(engine.table("orders")), "count", no_count)
+    counts = engine.copy_tree(target, ["CUSTOMER->ORDERS.O_CUSTKEY"], [1, 2, 3])
+    monkeypatch.undo()
+    assert counts == expected
+    assert target.wh.read("orders").count() == expected["orders"]
+
+
 def test_delete_tree_child_first_on_warehouse(engine, spark, tmp_path):
     wh_target = engine.create_warehouse_target(str(tmp_path / "wh"))
     # seed warehouse with full copies

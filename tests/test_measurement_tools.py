@@ -1,0 +1,170 @@
+"""The measurement path: bench.py's per-query failure handling, the
+tools/ab.py A/B driver, and an import check over every measurement
+script. No JVM starts here — child processes are faked through
+``subprocess.run``."""
+
+from __future__ import annotations
+
+import importlib
+import json
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+
+import bench  # noqa: E402
+from tools import ab  # noqa: E402
+
+COMPACT_KEYS = {
+    "metric", "value", "unit", "queries", "value_min", "min",
+    "value_min_probe_normalized", "probe_norm_factor", "runs_per_query",
+    "isolated", "cpus", "loadavg", "sf", "gate_ok", "probe_best_sec",
+    "full_record",
+}
+
+
+@pytest.fixture
+def quiet_host(monkeypatch):
+    """Instant probes on a quiet host; any sleep is a test failure."""
+    monkeypatch.setattr(bench, "_probe_sec", lambda: 0.1)
+    monkeypatch.setattr(bench, "_cpu_probe", lambda: {"probe_sec": 0.1, "steal_pct": 0.0})
+    monkeypatch.setattr(bench, "_bw_probe", lambda: 50.0)
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.1, 0.1, 0.1))
+
+    def no_sleep(s):
+        raise AssertionError(f"unexpected sleep({s})")
+
+    monkeypatch.setattr(bench.time, "sleep", no_sleep)
+
+
+def _fake_run(outcomes: dict[str, object], calls: list):
+    """``subprocess.run`` stand-in: the outcome is chosen by the first
+    key that is an argument of the command, or a prefix of one."""
+
+    def run(cmd, **kw):
+        calls.append((cmd, kw))
+        key = next(k for k in outcomes if any(c.startswith(k) for c in cmd))
+        out = outcomes[key]
+        if out == "timeout":
+            raise subprocess.TimeoutExpired(cmd, kw.get("timeout"))
+        if out == "error":
+            return subprocess.CompletedProcess(cmd, 1, "", "boom: the child died")
+        return subprocess.CompletedProcess(cmd, 0, out, "")
+
+    return run
+
+
+def _bench_one(name: str) -> str:
+    rec = {"name": name, "samples": [1.0, 1.2, 1.1], "build": [0.1, 0.1, 0.2], "warmup": 3.0}
+    return "spark noise\nBENCH_ONE " + json.dumps(rec) + "\n"
+
+
+def test_bench_records_failed_and_timed_out_queries(monkeypatch, tmp_path, capsys, quiet_host):
+    names = list(bench._query_set()[1])[:3]
+    ok, dies, hangs = names
+    out = tmp_path / "full.json"
+    for k, v in {
+        "SPARK_GRAFT_BENCH_ONLY": ",".join(names),
+        "SPARK_GRAFT_BENCH_OUT": str(out),
+        "SPARK_GRAFT_BENCH_GATE_WAIT": "0",
+        "SPARK_GRAFT_BENCH_QUERY_GATE_WAIT": "0",
+        "SPARK_GRAFT_BENCH_ISOLATE": "1",
+    }.items():
+        monkeypatch.setenv(k, v)
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+    calls: list = []
+    monkeypatch.setattr(
+        subprocess, "run", _fake_run({ok: _bench_one(ok), dies: "error", hangs: "timeout"}, calls)
+    )
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert exc.value.code == 1
+    assert len(calls) == 3  # every query ran despite the failures
+    compact = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert COMPACT_KEYS <= set(compact)
+    assert compact["failed"] == sorted([dies, hangs])
+    assert compact["value"] == 1.05  # trimmed median of the one good query
+    full = json.loads(out.read_text())
+    assert full["samples"] == {ok: [1.0, 1.2, 1.1]}
+    assert full["build"] == {ok: [0.1, 0.1, 0.2]}
+    assert "error" in full["failed"][dies]
+    assert full["failed"][hangs] == {"timeout": bench.CHILD_TIMEOUT_SEC}
+
+
+def _stage_rec(q: str) -> str:
+    return json.dumps({"query": q, "wall_sec": 1.0, "totals": {}, "stages": []}) + "\n"
+
+
+def _ab_rows(capsys) -> list[dict]:
+    return [json.loads(ln) for ln in capsys.readouterr().out.splitlines()]
+
+
+def test_ab_resolves_relative_trees(monkeypatch, tmp_path, capsys, quiet_host):
+    monkeypatch.chdir(tmp_path)
+    calls: list = []
+    monkeypatch.setattr(subprocess, "run", _fake_run({"q1": _bench_one("q1")}, calls))
+    assert ab.main(["bench", "a", "./b", "q1", "1"]) == 0
+    for (cmd, kw), tree in zip(calls, ("a", "b")):
+        assert cmd[1] == str(tmp_path / tree / "bench.py")
+        assert kw["cwd"] == str(tmp_path / tree)
+    rows = _ab_rows(capsys)
+    assert [r["arm"] for r in rows] == ["A", "B"]
+    assert rows[0]["rec"]["samples"] == [1.0, 1.2, 1.1]
+
+
+def test_ab_failed_and_timed_out_arms_keep_the_loop_going(
+    monkeypatch, tmp_path, capsys, quiet_host
+):
+    calls: list = []
+    monkeypatch.setattr(
+        subprocess,
+        "run",
+        _fake_run(
+            {
+                str(tmp_path / "a" / "tools"): "error",
+                str(tmp_path / "b" / "tools"): "timeout",
+            },
+            calls,
+        ),
+    )
+    rc = ab.main(["stage", str(tmp_path / "a"), str(tmp_path / "b"), "q1,q2", "2", "/fixture"])
+    assert rc == 1
+    rows = _ab_rows(capsys)
+    assert len(rows) == len(calls) == 8  # 2 rounds x 2 queries x 2 arms
+    assert all(cmd[2:] == ["/fixture", r["query"]] for (cmd, _), r in zip(calls, rows))
+    assert all("error" in r and "rec" not in r for r in rows if r["arm"] == "A")
+    assert all(r["timeout"] == bench.CHILD_TIMEOUT_SEC for r in rows if r["arm"] == "B")
+
+
+def test_ab_exits_zero_only_when_every_arm_succeeds(monkeypatch, tmp_path, capsys, quiet_host):
+    calls: list = []
+    monkeypatch.setattr(subprocess, "run", _fake_run({"q1": _stage_rec("q1")}, calls))
+    assert ab.main(["stage", "a", "b", "q1", "1", "/fixture"]) == 0
+    assert all(r["rec"]["query"] == "q1" for r in _ab_rows(capsys))
+
+
+def test_ab_unavailable_bandwidth_probe_does_not_wait(monkeypatch, tmp_path, capsys, quiet_host):
+    monkeypatch.setenv("SPARK_GRAFT_AB_BW_GATE", "100")
+    monkeypatch.setattr(bench, "_bw_probe", lambda: None)
+    calls: list = []
+    monkeypatch.setattr(subprocess, "run", _fake_run({"q1": _bench_one("q1")}, calls))
+    assert ab.main(["bench", "a", "b", "q1", "1"]) == 0  # quiet_host fails any sleep
+    assert [r["bw_before"] for r in _ab_rows(capsys)] == [None, None]
+
+
+def test_ab_rejects_bad_arguments():
+    with pytest.raises(SystemExit):
+        ab.main(["stage", "a", "b", "q1", "1"])  # stage needs a fixture
+
+
+@pytest.mark.parametrize(
+    "module", ["bench"] + [f"tools.{p.stem}" for p in sorted((ROOT / "tools").glob("*.py"))]
+)
+def test_measurement_script_imports(module):
+    """Every measurement script imports cleanly (no JVM starts at import),
+    so a tool still importing a deleted helper fails here."""
+    importlib.import_module(module)

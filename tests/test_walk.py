@@ -59,7 +59,7 @@ def test_walk_unions_when_child_reached_twice(spark, ctx, sf_dir):
 
 def test_copy_selections_counts_match(spark, ctx):
     c, tables = ctx
-    copied = walk.copy_tree(spark, tables, c, PATHS, [1, 2, 3])
+    copied, rows = walk.copy_tree(spark, tables, c, PATHS, [1, 2, 3])
     n_li = copied["lineitem"].count()
     expected = (
         tables["lineitem"]
@@ -71,6 +71,7 @@ def test_copy_selections_counts_match(spark, ctx):
         .count()
     )
     assert n_li == expected and n_li > 0
+    assert rows == {t: df.count() for t, df in copied.items()}
 
 
 def test_copy_selection_count_assertion_fires(spark, ctx):
@@ -146,9 +147,9 @@ def test_walk_composite_seed_frame_copy(spark, ctx):
     assert seeds, "fixture should contain seed tuples"
     keys = walk.seed_frame(spark, ("l_orderkey", "l_linenumber"), seeds)
     sel = walk.TableSelection("lineitem", ("l_orderkey", "l_linenumber"), keys)
-    out = walk.copy_selections({"lineitem": li}, [sel])["lineitem"]
+    frames, rows = walk.copy_selections({"lineitem": li}, [sel])
     # composite-PK rows: one row per seeded tuple, exactly
-    assert out.count() == len(seeds)
+    assert frames["lineitem"].count() == rows["lineitem"] == len(seeds)
 
 
 def test_walk_leaf_selection_is_rows_with_lazy_keys(spark, ctx):

@@ -30,6 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from tools.stage_profile import profile_query
+
 
 def shingle_df_stats(spark, sf_dir: str, *, n=3, max_df=10_000):
     from oracle_schema_copy_spark.operators.dedup import shingle_sets
@@ -216,97 +218,6 @@ HEAVY_QUERIES = [
 ]
 
 
-def _iter_seq(seq):
-    for i in range(seq.size()):
-        yield seq.apply(i)
-
-
-def query_resource_metrics(spark, sf_dir: str, qname: str) -> dict:
-    """Execute one registered query and sum its stages' resource metrics
-    from the AppStatusStore: shuffle read/write bytes, memory/disk spill,
-    peak execution memory (max over stages), input bytes, executor run
-    time. This is the evidence behind 'no spilling at this scale' —
-    asserted topology becomes measured bytes."""
-    import time as _time
-
-    import __spark_entry__ as m
-
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-
-    def _stages():
-        # Spark 4.1 AppStatusStore.stageList(statuses, details,
-        # withSummaries, unsortedQuantiles, taskStatus)
-        return store.stageList(
-            sc._jvm.java.util.ArrayList(),
-            False,
-            False,
-            sc._gateway.new_array(sc._jvm.double, 0),
-            sc._jvm.java.util.ArrayList(),
-        )
-
-    seen = {s.stageId() for s in _iter_seq(_stages())}
-    t0 = _time.perf_counter()
-    df = m.queries()[qname](spark, sf_dir)
-    # noop write, not count(): count() lets Catalyst ELIMINATE a
-    # unique-key left join whose right side feeds no surviving column
-    # (the rewrite-family queries end in documents LEFT JOIN rewritten)
-    # and answer from parquet row-group stats — the r10 sf10 audit
-    # recorded 0 stages / 0 bytes for text_exactsubstr_removal that way.
-    # The noop sink materializes every output row JVM-side.
-    df.write.format("noop").mode("overwrite").save()
-    wall = round(_time.perf_counter() - t0, 2)
-    agg = {
-        "query": qname,
-        "wall_sec": wall,
-        "n_stages": 0,
-        "input_bytes": 0,
-        "shuffle_read_bytes": 0,
-        "shuffle_write_bytes": 0,
-        "memory_bytes_spilled": 0,
-        "disk_bytes_spilled": 0,
-        "peak_execution_memory": 0,
-        "executor_run_time_ms": 0,
-        "executor_cpu_time_ms": 0,
-    }
-    cpu_ns = 0
-    gc_ms = 0
-    for s in _iter_seq(_stages()):
-        if s.stageId() in seen:
-            continue
-        if gc_ms >= 0:
-            try:
-                # GC share is the r13-identified bound of the sf10 dedup
-                # stages; capture it wherever the status API exposes it
-                gc_ms += s.jvmGcTime()
-            except Exception:
-                gc_ms = -1  # metric unsupported on this status API
-        agg["n_stages"] += 1
-        agg["input_bytes"] += s.inputBytes()
-        agg["shuffle_read_bytes"] += s.shuffleReadBytes()
-        agg["shuffle_write_bytes"] += s.shuffleWriteBytes()
-        agg["memory_bytes_spilled"] += s.memoryBytesSpilled()
-        agg["disk_bytes_spilled"] += s.diskBytesSpilled()
-        agg["executor_run_time_ms"] += s.executorRunTime()
-        # CPU time is robust to co-tenant contention (run time inflates
-        # under steal; cpu time does not) — compare THIS across rounds.
-        # Accumulate raw nanoseconds; a per-stage floor-divide would lose
-        # up to ~1 ms per stage across many-stage queries.
-        cpu_ns += s.executorCpuTime()
-        try:
-            if agg["peak_execution_memory"] is not None:
-                agg["peak_execution_memory"] = max(
-                    agg["peak_execution_memory"], s.peakExecutionMemory()
-                )
-        except Exception:
-            # metric unsupported on this status API: mark once, stop probing
-            agg["peak_execution_memory"] = None
-    agg["executor_cpu_time_ms"] = cpu_ns // 1_000_000
-    if gc_ms >= 0:
-        agg["jvm_gc_time_ms"] = gc_ms
-    return agg
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else ".localdata/sf1"
     out_md = sys.argv[2] if len(sys.argv) > 2 else "SCALE_sf1.md"
@@ -340,8 +251,12 @@ def main() -> int:
         aqe_flip_check(spark, sf_dir, "tpch_q9_product_profit"),
         aqe_flip_check(spark, sf_dir, "join_salted_skew"),
     ]
+    # per-stage resource totals (tools/stage_profile.py): shuffle, spill,
+    # input bytes and peak execution memory are the evidence behind 'no
+    # spilling at this scale' — asserted topology becomes measured bytes
     report["resources"] = [
-        query_resource_metrics(spark, sf_dir, q) for q in HEAVY_QUERIES
+        {"query": q, "wall_sec": r["wall_sec"], **r["totals"]}
+        for r in (profile_query(spark, sf_dir, q) for q in HEAVY_QUERIES)
     ]
     body = json.dumps(report, indent=2)
     print(body)
