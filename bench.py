@@ -113,20 +113,20 @@ def _query_set():
     """Query set selected by ``SPARK_GRAFT_BENCH_SET``: ``headline``
     (default — what the round driver records) or ``tpch`` (the complete
     TPC-H shape surface as a secondary relational benchmark)."""
-    from oracle_schema_copy_spark import suite
+    from oracle_schema_copy_spark import queries
 
     sel = os.environ.get("SPARK_GRAFT_BENCH_SET", "headline")
     if sel == "headline":
-        name, fns = "headline", suite.headline_queries()
+        name, fns = "headline", queries.headline_queries()
     elif sel == "tpch":
-        qs = suite.queries()
+        qs = queries.queries()
         names = [n for n in qs if n.startswith("tpch_")] + _TPCH_EXTRAS
         name, fns = "tpch", {n: qs[n] for n in names}
     elif sel == "registry":
         # any registered query by name — for subset records at scale
         # fixtures (r12 VERDICT #2: the sf10 bench wants the heavy TPC-H
         # joins plus a couple of headline shapes, not a fixed set)
-        name, fns = "registry", dict(suite.queries())
+        name, fns = "registry", dict(queries.queries())
     else:
         raise SystemExit(f"unknown SPARK_GRAFT_BENCH_SET {sel!r}")
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")

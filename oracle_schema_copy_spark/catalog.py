@@ -209,9 +209,6 @@ class Catalog:
             )
         return pk[0]
 
-    def pk_of_map(self) -> dict[str, str]:
-        return {t: pk[0] for t, pk in self.primary_keys.items() if len(pk) == 1}
-
     def topo_order(self, tables: list[str] | None = None) -> list[str]:
         return topo_sort(tables or sorted(self.paths), self.edges)
 

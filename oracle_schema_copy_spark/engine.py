@@ -6,7 +6,9 @@ copyTree, deleteTree, copy, update``. Here scripts are plain Python and
 the verbs are methods on ``Engine``; targets are strategy objects
 (operation-log file target vs warehouse target vs JDBC target); the
 warehouse target lives in ``plans/oplog.py`` beside the warehouse it
-writes, because every warehouse replay runs through it.
+writes, because every warehouse replay runs through it, and the one JDBC
+target lives in ``sources/jdbc_mutations.py`` beside the statements it
+runs, so ``sources/derby.py`` can build on it.
 """
 
 from __future__ import annotations
@@ -20,9 +22,8 @@ from oracle_schema_copy_spark.catalog import Catalog
 from oracle_schema_copy_spark.operators import mutate, walk
 from oracle_schema_copy_spark.plans import oplog
 from oracle_schema_copy_spark.plans.oplog import WarehouseTarget
-from oracle_schema_copy_spark.sources import derby
 from oracle_schema_copy_spark.sources import jdbc as jdbc_mod
-from oracle_schema_copy_spark.sources import jdbc_mutations
+from oracle_schema_copy_spark.sources.jdbc_mutations import JdbcTarget
 from oracle_schema_copy_spark.sources.tables import load_table
 
 
@@ -47,69 +48,6 @@ class FileTarget:
 
     def close(self) -> None:
         self.log.close()
-
-
-@dataclass
-class JdbcTarget:
-    """Applies operations to a live database via spark JDBC (ExecuteTarget).
-
-    Inserts are parallel batched JDBC writes; upsert stages the update set
-    and runs one MERGE; deletes batch keys into IN-lists (or stage + one
-    EXISTS delete for huge key sets); SQL lists execute in order on one
-    connection (see sources/jdbc_mutations.py). A ``jdbc:derby:`` URL
-    gets Derby's identifier-case convention (``derby.at_boundary``).
-    ``executor`` is injectable for tests; by default statements run
-    through the Spark JVM's java.sql.DriverManager.
-    """
-
-    conn: jdbc_mod.JdbcConnection
-    allow_production: bool = False
-    dialect: str = "ansi"
-    executor: jdbc_mutations.StatementExecutor | None = None
-
-    def _executor(self) -> jdbc_mutations.StatementExecutor:
-        if self.executor is None:
-            spark = SparkSession.getActiveSession()
-            assert spark is not None, "an active SparkSession is required"
-            self.executor = jdbc_mutations.jvm_statement_executor(spark, self.conn)
-        return self.executor
-
-    def insert(self, table: str, df: DataFrame) -> None:
-        table, df, _, opts = derby.at_boundary(self.conn.url, table, df)
-        jdbc_mod.write_table(
-            df, self.conn, table, allow_production=self.allow_production, write_options=opts
-        )
-
-    def upsert(self, table: str, df: DataFrame, key) -> None:
-        table, df, keys, opts = derby.at_boundary(self.conn.url, table, df, key)
-        jdbc_mutations.jdbc_upsert(
-            df,
-            self.conn,
-            table,
-            keys,
-            executor=self._executor(),
-            dialect=self.dialect,
-            allow_production=self.allow_production,
-            write_options=opts,
-        )
-
-    def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
-        table, keys, cols, opts = derby.at_boundary(self.conn.url, table, keys, key_columns)
-        jdbc_mutations.jdbc_delete(
-            keys,
-            self.conn,
-            table,
-            cols,
-            executor=self._executor(),
-            allow_production=self.allow_production,
-            write_options=opts,
-        )
-
-    def execute_sql(self, statements: list[str]) -> None:
-        self._executor()(statements)
-
-    def close(self) -> None:
-        pass
 
 
 class Engine:

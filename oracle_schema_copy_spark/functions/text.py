@@ -131,16 +131,6 @@ def punct_ratio(text: Column) -> Column:
     return F.length(stripped) / F.length(text)
 
 
-def avg_token_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return total / F.size(toks)
-
-
 def quality_score(text: Column) -> Column:
     """A composite document-quality heuristic in [0, 1]: favors texts with
     reasonable length, low punctuation density and some stopword mass.

@@ -31,20 +31,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def assert_unique_keys(df: DataFrame, key_columns: list[str], side: str = "updates") -> None:
-    """Raise if any key occurs more than once (reference's >1-row-updated guard)."""
-    dup = (
-        df.groupBy(*[F.col(c) for c in key_columns])
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise AssertionError(
-            f"{side} has duplicate key {dup[0][:len(key_columns)]} — upsert would match >1 row"
-        )
+from oracle_schema_copy_spark.operators.walk import _eq_cond, key_frame
 
 
 def merge_upsert(
@@ -116,27 +103,18 @@ def delete_by_keys(
     spark: SparkSession | None = None,
 ) -> DataFrame:
     """Rows of ``target`` surviving a keyed delete (anti-join rewrite).
-    ``key_columns`` may be composite; a keys DataFrame pairs its columns
-    positionally with ``key_columns``."""
+    ``key_columns`` may be composite; a keys DataFrame pairs with them by
+    ``walk.key_frame``."""
     cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
     if not isinstance(keys, DataFrame):
         assert spark is not None, "spark session required for driver-side key lists"
         vals = [tuple(k) if isinstance(k, (tuple, list)) else (k,) for k in keys]
         keys = spark.createDataFrame(vals, cols)
-    # a shorter key frame would silently truncate the condition to the
-    # leading columns and delete every row matching on those alone
-    assert len(keys.columns) == len(cols), (
-        f"key frame arity mismatch: {len(keys.columns)} columns vs {cols}"
-    )
-    keys = keys.distinct()
-    cond = None
-    for tcol, kcol in zip(cols, keys.columns):
-        e = target[tcol] == keys[kcol]
-        cond = e if cond is None else cond & e
+    keys = key_frame(keys, cols).distinct()
     # no broadcast hint: a forced hint overrides the size threshold and
     # collects arbitrarily large key sets to the driver; the planner / AQE
     # broadcasts small key frames on its own (see walk.py module docstring)
-    return target.join(keys, cond, "left_anti")
+    return target.join(keys, _eq_cond(target, keys), "left_anti")
 
 
 def snapshot_diff(

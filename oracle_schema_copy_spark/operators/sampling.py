@@ -30,11 +30,6 @@ def hash_bucket(id_col: Column, salt: str = "") -> Column:
     return token_hash(F.concat(F.lit(salt), id_col.cast("string")), 7) % BUCKETS
 
 
-def hash_sample(df: DataFrame, id_col: str, rate_bp: int, *, salt: str = "") -> DataFrame:
-    """Keep ~rate_bp/10000 of rows, chosen deterministically by id hash."""
-    return df.filter(hash_bucket(F.col(id_col), salt) < rate_bp)
-
-
 def stratified_hash_sample(
     df: DataFrame,
     id_col: str,

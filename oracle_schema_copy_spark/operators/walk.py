@@ -63,18 +63,32 @@ def _key_cols(key_columns: str | Sequence[str]) -> list[str]:
     return [key_columns] if isinstance(key_columns, str) else list(key_columns)
 
 
-def _eq_cond(table_df: DataFrame, table_cols: Sequence[str], keys: DataFrame):
-    """AND-of-equalities join condition pairing table columns with the key
-    frame's columns positionally. The arities must match — a shorter key
-    frame would silently delete/select on the leading columns alone."""
-    cols = list(table_cols)
-    assert len(keys.columns) == len(cols), (
-        f"key frame arity mismatch: {len(keys.columns)} columns vs "
-        f"key columns {cols}"
-    )
+def key_frame(keys: DataFrame, key_columns: str | Sequence[str]) -> DataFrame:
+    """The one pairing rule for a key frame: returns ``keys`` with exactly
+    ``key_columns``, in that order. When every key column is in the frame
+    the columns pair BY NAME (extra columns are dropped); otherwise they
+    pair BY POSITION and the arities must match — a shorter key frame
+    would silently delete/select on the leading columns alone. Every
+    keyed delete and keyed scan goes through here (DeleteByPk's one key
+    rule, ``DeleteByPk.java:15-43``)."""
+    cols = _key_cols(key_columns)
+    if list(keys.columns) == cols:
+        return keys
+    if set(cols) <= set(keys.columns):
+        return keys.select(*cols)
+    if len(keys.columns) != len(cols):
+        raise ValueError(
+            f"key frame arity mismatch: columns {keys.columns} vs key columns {cols}"
+        )
+    return keys.toDF(*cols)
+
+
+def _eq_cond(table_df: DataFrame, keys: DataFrame):
+    """AND-of-equalities join condition between ``table_df`` and a
+    :func:`key_frame` (whose columns are the table's key columns)."""
     cond = None
-    for tcol, kcol in zip(cols, keys.columns):
-        e = table_df[tcol] == keys[kcol]
+    for c in keys.columns:
+        e = table_df[c] == keys[c]
         cond = e if cond is None else cond & e
     return cond
 
@@ -150,12 +164,13 @@ def keyed_scan(
 ) -> DataFrame:
     """Rows of ``table_df`` whose key column(s) appear in ``keys`` (S2).
 
-    ``keys`` columns pair positionally with ``key_columns``; it is the
+    ``keys`` pairs with ``key_columns`` by :func:`key_frame`; it is the
     build side of a left-semi join — broadcast by the planner/AQE when
     under the size threshold, shuffled when not (no forced hint; see
     module docstring).
     """
-    return table_df.join(keys, _eq_cond(table_df, _key_cols(key_columns), keys), "left_semi")
+    keys = key_frame(keys, key_columns)
+    return table_df.join(keys, _eq_cond(table_df, keys), "left_semi")
 
 
 def find_linked_rows(
@@ -215,7 +230,7 @@ def walk_linked(
     their composite PK (the r3 regression: ~600k 2-column tuples cached
     per walk at sf0.1, 3× the whole walk's runtime).
     """
-    edges: list[FkEdge] = parse_paths(paths, catalog.pk_of_map() | _walk_pks(catalog))
+    edges: list[FkEdge] = parse_paths(paths, _walk_pks(catalog))
     root_table = root_table_of_paths(paths)
     root_pk = _walk_pk_cols(catalog, root_table)
 
@@ -386,9 +401,8 @@ def delete_selections(
                 "left_anti",
             )
         else:
-            out[sel.table] = tdf.join(
-                sel.keys, _eq_cond(tdf, sel.key_columns, sel.keys), "left_anti"
-            )
+            keys = key_frame(sel.keys, sel.key_columns)
+            out[sel.table] = tdf.join(keys, _eq_cond(tdf, keys), "left_anti")
     return out
 
 

@@ -44,11 +44,6 @@ def schema_to_ddl(table: str, schema: T.StructType, *, if_not_exists: bool = Fal
     return f"CREATE TABLE {ine}{table} (\n  {cols}\n) USING PARQUET"
 
 
-def view_ddl(view: str, query: str, *, or_replace: bool = True) -> str:
-    orr = "OR REPLACE " if or_replace else ""
-    return f"CREATE {orr}VIEW {view} AS {query}"
-
-
 def export_schema_ddl(tables: dict[str, DataFrame]) -> list[tuple[str, str]]:
     """Per-table CREATE TABLE statements (the reference's
     ``exportSchemaTablesList``, ``CopyUtils.java:197-206``)."""

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from oracle_schema_copy_spark.operators import mutate
+from oracle_schema_copy_spark.operators.walk import key_frame
 
 MANIFEST = "manifest.jsonl"
 
@@ -133,20 +134,10 @@ class OperationLogWriter:
 
     def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
         """Delete rows of ``table`` by (possibly composite) key on replay
-        (K5 / DeleteByPk).
-
-        Column pairing: when every key-column NAME exists in ``keys`` the
-        named columns are selected (order-insensitive — a frame that
-        coincidentally shares the names is assumed to mean them); otherwise
-        the frame's columns pair POSITIONALLY with ``key_columns`` and the
-        arity must match."""
+        (K5 / DeleteByPk). ``keys`` pairs with ``key_columns`` by
+        ``walk.key_frame``; the payload holds exactly the key columns."""
         cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
-        if set(cols) <= set(keys.columns):
-            payload = keys.select(*cols)
-        else:  # positional pairing (e.g. a differently-named key frame)
-            assert len(keys.columns) == len(cols), "key frame arity mismatch"
-            payload = keys.toDF(*cols)
-        self._data_op("delete", table, payload, {"key_columns": cols})
+        self._data_op("delete", table, key_frame(keys, cols), {"key_columns": cols})
 
     # -- plumbing ------------------------------------------------------------
 
@@ -316,7 +307,7 @@ def replay_into_target(
     the reference's ``import`` flow (``Main.java:46-58``, §3.2). The target
     is anything with the ExecuteTarget verb surface
     (insert/upsert/delete/execute_sql — :class:`WarehouseTarget`,
-    ``engine.JdbcTarget``, ``sources.derby.DerbyTarget``,
+    ``jdbc_mutations.JdbcTarget`` and its ``derby.DerbyTarget``,
     ``engine.FileTarget``); the module docstring lists how each record
     kind applies. ``on_opaque`` is ``"execute"``, ``"skip"`` or
     ``"error"``; the default is the target's ``on_opaque`` attribute, else
@@ -355,13 +346,9 @@ def replay_into_target(
         elif rec.kind == "upsert":
             target.upsert(rec.table, df, rec.params["key_columns"])
         elif rec.kind == "delete":
-            # key_columns is the current form; key_column the pre-composite one
+            # key_columns is the current form; key_column the pre-composite
+            # one. The target pairs the payload's columns (walk.key_frame).
             cols = rec.params.get("key_columns") or [rec.params["key_column"]]
-            if set(cols) <= set(df.columns):
-                # project by name: tolerates a payload carrying extra
-                # columns (e.g. a legacy single-key record over a wider
-                # key frame) — keyed deletes require exact arity
-                df = df.select(*cols)
             target.delete(rec.table, cols, df)
         else:
             raise ValueError(f"unknown operation kind {rec.kind!r} at seq {rec.seq}")

@@ -76,6 +76,33 @@ def _load_all() -> None:
 # least fresh information.  Names absent from both lists keep registry
 # (insertion) order in the middle.
 _CHECK_FIRST: list[str] = [
+    # (tb) code path changed by the one target boundary: every keyed
+    # delete/scan pairs its key frame through walk.key_frame (walk,
+    # mutate, oplog writer + replay, MOR delete batches, jdbc_delete), the
+    # live database runs through the one JdbcTarget (every DerbyTarget
+    # query), DDL comes from dialects directly and walk paths parse
+    # without Catalog.pk_of_map; the copy_tree_* names also changed when
+    # copy_tree took its row counts from the walk check, and were not
+    # moved forward then
+    "copy_tree_lineitem",
+    "copy_tree_summary",
+    "copy_tree_lineitem_composite",
+    "delete_tree_orders",
+    "delete_by_keys_lineitem",
+    "keyed_scan_orders",
+    "oplog_roundtrip_orders",
+    "oplog_atomic_replay_orders",
+    "oplog_history_source",
+    "mor_read_orders",
+    "mor_time_travel_orders",
+    "mor_compaction_equivalence",
+    "jdbc_roundtrip_orders",
+    "oplog_import_into_derby",
+    "jdbc_copy_tree_derby",
+    "stream_cdc_apply_derby",
+    "jdbc_walk_pushed_probe",
+    "jdbc_walk_probe_matrix",
+    "ddl_dialect_matrix",
     # (m14c3) changed late in round 14: explicit-count repartition pins
     # in lsh_banded_topk (exact scorer only), ngram_jaccard_pairs and
     # minhash_candidate_pairs — front the banded-family consumers; the
@@ -105,9 +132,6 @@ _CHECK_FIRST: list[str] = [
     # syntax error) — re-gate the names those paths feed first
     "assign_nearest_centroid_vectorized",
     "pq_codes_vectorized",
-    "jdbc_walk_probe_matrix",
-    "jdbc_walk_pushed_probe",
-    "jdbc_copy_tree_derby",
     # (m12) the r12 sf10 widening caught round-of-double-sum drift in the
     # bucketed-join rollup (5 groups growing with the corpus) — moved to
     # exact per-row cents — and a 1-micro round(double,6) implementation
@@ -124,12 +148,8 @@ _CHECK_FIRST: list[str] = [
     "sql_parameterized_group_by_all",
     "stream_sliding_window",
     "stream_sliding_window_live",
-    "stream_cdc_apply_derby",
     "similarity_topk_pq_adc",
     "assign_nearest_centroid",
-    # (r10) new in round 10 (jdbc_walk_pushed_probe moved to the r12
-    # section above)
-    "ddl_dialect_matrix",
     # (m10) changed in round 10 by the sf10 (100x) audit fixes: PQ
     # ks=256 codebook cap + packed scalar-max encode argmax; packed
     # micro-unit assignment argmax; micro-unit tumbling sums — re-gate
@@ -140,10 +160,7 @@ _CHECK_FIRST: list[str] = [
     "stream_tumbling_window",
     "stream_tumbling_window_live",
     # (m10) read-back path changed in round 10 (eager localCheckpoint +
-    # database shutdown + scratch cleanup; replay_into_target skip
-    # audit; jdbc_copy_tree_derby moved to the r12 section above)
-    "jdbc_roundtrip_orders",
-    "oplog_import_into_derby",
+    # scratch cleanup; the Derby names moved to the tb section above)
     "multimodal_resize_real",
     # (m9) oracle or implementation changed in round 9 — re-gate first
     # (DoReMi overflow reduction; salted-skew exact-cents revenue;
@@ -199,12 +216,9 @@ _CHECK_FIRST: list[str] = [
     "dedup_embedding_lsh",
     "graph_triangle_counts",
     # (r6) new in round 6, all recorded green by the r6 driver
-    "mor_time_travel_orders",
-    "mor_compaction_equivalence",
     "bpe_pair_merge_step",
     # (z) first driver rows recorded r6 (VERDICT r5 "next round" #2)
     "asof_join_planted_ties",
-    "mor_read_orders",
     "multimodal_feature_extract_arrow",
     "observe_pipeline_metrics",
     "partition_pruned_rollup",
@@ -246,7 +260,6 @@ _CHECK_FIRST: list[str] = [
     "dq_constraint_checks",
     "dedup_jaccard_incremental",
     "sql_recursive_cte_bfs",
-    "oplog_history_source",
     "text_repeated_spans",
     "minhash_merge_contract",
     "stats_benford_digits",
@@ -264,9 +277,6 @@ _CHECK_FIRST: list[str] = [
     "sql_scripting_threshold_loop",
     "curation_shard_capstone",
     # (a) modified in round 4 (r5 driver re-gated the walk family)
-    "copy_tree_lineitem",  # r4: leaf-frontier walk fast path
-    "copy_tree_summary",  # r4: same walk rewrite
-    "delete_tree_orders",  # r4: leaf anti-join delete path
     "similarity_lsh_bucket_histogram",  # r4: plane_dot change
     "asof_join_last_click",  # r4: deterministic tie-break (quote-struct order)
     "asof_forward_next_error",  # r4: same tie-break change
@@ -280,12 +290,9 @@ _CHECK_FIRST: list[str] = [
     "agg_rollup_flag_status",
     "edges_by_table",
     "text_lang_id",
-    "delete_by_keys_lineitem",
     "ddl_rewrite",
-    "oplog_roundtrip_orders",
     "multimodal_binary_metadata",
     "text_stats_quality",
-    "keyed_scan_orders",
     "join_inner_revenue_by_order",
     "agg_pricing_summary",
     "dedup_normalized",

@@ -1104,7 +1104,7 @@ def q_ddl_dialect_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver-side generation by design: DDL strings are catalog-scale
     metadata (rows = tables x dialects), never data-plane."""
     from oracle_schema_copy_spark.sources import jdbc_mutations as jm
-    from oracle_schema_copy_spark.sources.derby import create_table_sql
+    from oracle_schema_copy_spark.sources.dialects import get_dialect
 
     rows = []
     for t, pk in (("nation", "n_nationkey"), ("orders", "o_orderkey")):
@@ -1112,7 +1112,7 @@ def q_ddl_dialect_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         for d in ("derby", "oracle", "postgres"):
             rows.append(
                 (d, t, "create_table",
-                 create_table_sql(t, schema, primary_key=[pk], dialect=d))
+                 get_dialect(d).create_table_sql(t, schema, primary_key=[pk]))
             )
     ocols = [c.upper() for c in load_table(spark, sf_dir, "orders").columns]
     for d in ("derby", "oracle", "postgres"):

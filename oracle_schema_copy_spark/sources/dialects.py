@@ -24,8 +24,21 @@ Type-mapping rules per dialect:
   above the practical VARCHAR threshold.
 
 MERGE/upsert (see ``jdbc_mutations.merge_sql``): Derby and Oracle take the
-ANSI MERGE; Postgres defaults to ``INSERT ... ON CONFLICT`` (correct on
-every supported version; PG15+ also accepts the ANSI form).
+ANSI MERGE; Postgres takes ``INSERT ... ON CONFLICT`` (correct on every
+supported version; only PG15+ accepts the ANSI form).
+
+Identifier case at the JDBC boundary (``fold_upper``, proven live on
+Derby): Spark's JDBC writer QUOTES column names in its generated
+INSERT/CREATE statements (case-sensitive), while hand-written DDL/DML
+folds unquoted identifiers to uppercase. Mixing the two makes
+"o_orderkey" and O_ORDERKEY different columns. A ``fold_upper`` dialect
+upper-cases every table, key and DataFrame column name before it crosses
+the boundary, and types staged strings with ``column_type`` (Spark's own
+DerbyDialect would create CLOB, which has no equality — it breaks MERGE ON
+and keyed DELETE); all hand DDL/DML stays unquoted, so both sides agree on
+uppercase. Reads fold back to the engine's lowercase schema
+(``derby.fold_names``). ``jdbc_mutations.JdbcTarget`` applies the rule,
+once, for the dialect its URL names (:func:`url_dialect`).
 """
 
 from __future__ import annotations
@@ -91,6 +104,7 @@ class Dialect:
     lob_type: str  # what strings above varchar_max become under 'lob'
     decimal_keyword: str  # DECIMAL / NUMBER / NUMERIC
     merge_style: str  # 'ansi' or 'postgres_upsert'
+    fold_upper: bool = False  # identifier rule at the JDBC boundary (module doc)
 
     def column_type(self, dt: T.DataType, *, varchar_len: int = 1024) -> str:
         """SQL column type for one Spark type."""
@@ -121,9 +135,9 @@ class Dialect:
         """CREATE TABLE DDL for a Spark schema (the ExecuteSqlList-analog
         DDL the reference ships ahead of data, ``CopyUtils.java:682-710``
         export order). Unquoted identifiers, uppercase — every supported
-        dialect folds unquoted identifiers consistently, and the JDBC
-        boundary uppercase-folds DataFrames to match (``sources/derby.py``
-        module doc)."""
+        dialect folds unquoted identifiers consistently, and a
+        ``fold_upper`` dialect's JDBC boundary folds DataFrames to match
+        (module doc)."""
         pk = [c.upper() for c in (primary_key or [])]
         cols = []
         for f in schema.fields:
@@ -148,6 +162,7 @@ DIALECTS: dict[str, Dialect] = {
         lob_type="CLOB",
         decimal_keyword="DECIMAL",
         merge_style="ansi",
+        fold_upper=True,
     ),
     "oracle": Dialect(
         name="oracle",
@@ -177,3 +192,15 @@ def get_dialect(name: str) -> Dialect:
         raise ValueError(
             f"unknown dialect {name!r}; known: {sorted(DIALECTS)}"
         ) from None
+
+
+_URL_DIALECTS = {"jdbc:derby:": "derby", "jdbc:oracle:": "oracle", "jdbc:postgresql:": "postgres"}
+
+
+def url_dialect(url: str) -> Dialect | None:
+    """The dialect a JDBC URL names, or None for a database with no dialect
+    here (ANSI MERGE, identifiers as given)."""
+    for prefix, name in _URL_DIALECTS.items():
+        if url.startswith(prefix):
+            return DIALECTS[name]
+    return None

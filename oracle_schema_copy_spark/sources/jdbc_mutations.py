@@ -16,6 +16,8 @@ Reference behavior re-expressed (not ported):
   SQL literals.
 - execute_sql ≈ ``ExecuteSqlList.java:11-40`` — ordered statement list on
   one connection, optionally transactional.
+- ``JdbcTarget`` ≈ ``ExecuteTarget.java:12-32`` — the one target class
+  that applies these verbs to a live database.
 
 No database ships in this environment: every statement generator below is
 a pure function unit-tested against expected SQL, and the executor is
@@ -29,16 +31,21 @@ from __future__ import annotations
 
 import datetime as _dt
 import math as _math
+from dataclasses import dataclass
 from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
+from oracle_schema_copy_spark.operators.walk import key_frame
+from oracle_schema_copy_spark.sources.dialects import get_dialect, url_dialect
 from oracle_schema_copy_spark.sources.jdbc import JdbcConnection, prod_check, write_table
 
 # An executor runs SQL statements in order against the target database.
 StatementExecutor = Callable[[Sequence[str]], None]
 
 DELETE_BATCH = 500  # the reference's key-batch size (CopyUtils.java)
+_MERGE_STYLES = ("ansi", "postgres_upsert")
 
 
 # ---------------------------------------------------------------------------
@@ -56,21 +63,17 @@ def merge_sql(
 ) -> str:
     """One set-oriented MERGE from staging into the target table.
 
-    ``ansi`` covers Oracle / SQL Server / DB2 / recent Postgres (15+);
-    ``postgres_upsert`` emits ``INSERT ... ON CONFLICT`` for older
-    Postgres. Dialect NAMES from ``sources/dialects.py`` also resolve:
-    ``derby``/``oracle`` → ansi MERGE, ``postgres`` → ON CONFLICT (correct
-    on every supported PG version). Non-key columns update on match; all
-    columns insert on miss.
+    ``dialect`` is a merge style or a dialect name from
+    ``sources/dialects.py`` (its ``merge_style`` applies). ``ansi`` covers
+    Oracle / SQL Server / DB2 / Derby / recent Postgres (15+);
+    ``postgres_upsert`` emits ``INSERT ... ON CONFLICT``, correct on every
+    supported Postgres. Non-key columns update on match; all columns
+    insert on miss.
     """
-    dialect = {
-        "derby": "ansi",
-        "oracle": "ansi",
-        "postgres": "postgres_upsert",
-    }.get(dialect, dialect)
+    style = dialect if dialect in _MERGE_STYLES else get_dialect(dialect).merge_style
     keys = list(key_columns)
     non_keys = [c for c in columns if c not in keys]
-    if dialect == "postgres_upsert":
+    if style == "postgres_upsert":
         sets = ", ".join(f"{c} = EXCLUDED.{c}" for c in non_keys)
         action = f"DO UPDATE SET {sets}" if non_keys else "DO NOTHING"
         return (
@@ -78,8 +81,6 @@ def merge_sql(
             f"SELECT {', '.join(columns)} FROM {staging_table} "
             f"ON CONFLICT ({', '.join(keys)}) {action}"
         )
-    if dialect != "ansi":
-        raise ValueError(f"unknown merge dialect {dialect!r}")
     on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
     sets = ", ".join(f"t.{c} = s.{c}" for c in non_keys)
     ins_cols = ", ".join(columns)
@@ -240,16 +241,17 @@ def jdbc_upsert(
     key_columns: Sequence[str] | str,
     *,
     executor: StatementExecutor,
-    dialect: str = "ansi",
     batchsize: int = 10_000,
     allow_production: bool = False,
     write_options: dict[str, str] | None = None,
 ) -> list[str]:
     """Staged set-oriented upsert: bulk-write ``df`` to a staging table
-    (parallel batched INSERT across executors), MERGE once, drop staging.
+    (parallel batched INSERT across executors), MERGE once in the merge
+    style of the URL's dialect (ANSI when it names none), drop staging.
     Returns the executed statements (for logs/tests)."""
     prod_check(conn.url, allow_production=allow_production)
     keys = [key_columns] if isinstance(key_columns, str) else list(key_columns)
+    dialect = url_dialect(conn.url)
     staging = staging_name(table, "upsert")
     write_table(
         df,
@@ -262,7 +264,7 @@ def jdbc_upsert(
     )
     statements = [
         staging_index_sql(staging, keys),
-        merge_sql(table, staging, df.columns, keys, dialect=dialect),
+        merge_sql(table, staging, df.columns, keys, dialect=dialect.name if dialect else "ansi"),
         f"DROP TABLE {staging}",
     ]
     executor(statements)
@@ -285,22 +287,18 @@ def jdbc_delete(
     OR-of-AND (composite) statements — bounded driver memory: keys only,
     never rows. A larger key DataFrame is staged to the database and
     deleted with one set-oriented EXISTS statement — no driver collect of
-    the key set. A keys DataFrame pairs its columns positionally with
-    ``key_columns`` and must match in arity.
-    Returns the executed statements."""
+    the key set. A keys DataFrame pairs with ``key_columns`` by
+    ``walk.key_frame``. Returns the executed statements."""
     prod_check(conn.url, allow_production=allow_production)
     cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
     if isinstance(keys, DataFrame):
-        assert len(keys.columns) == len(cols), (
-            f"key frame arity mismatch: {len(keys.columns)} columns vs {cols}"
-        )
-        distinct = keys.distinct()
+        distinct = key_frame(keys, cols).distinct()
         # bounded probe: count first, collect only under the inline cap
         n = distinct.count()
         if n > max_inline_keys:
             staging = staging_name(table, "delete")
             write_table(
-                distinct.toDF(*cols),
+                distinct,
                 conn,
                 staging,
                 mode="overwrite",
@@ -329,3 +327,90 @@ def jdbc_delete(
         statements = delete_tuples_sql(table, cols, key_list)
     executor(statements)
     return statements
+
+
+# ---------------------------------------------------------------------------
+# The live-database target
+# ---------------------------------------------------------------------------
+
+
+@dataclass
+class JdbcTarget:
+    """Applies operations to a live database via spark JDBC (ExecuteTarget,
+    ``ExecuteTarget.java:12-32``): the one target class for every JDBC
+    database (``derby.DerbyTarget`` adds only the embedded database's
+    boot and shutdown, ``create_table`` and read-back).
+
+    Inserts are parallel batched JDBC writes; upsert stages the update set
+    and runs one MERGE; deletes batch keys into IN-lists (or stage + one
+    EXISTS delete for huge key sets); SQL lists execute in order on one
+    connection. The dialect the URL names (``dialects.url_dialect``)
+    decides the identifier case at the boundary, the staged string types
+    and the merge style. ``executor`` is injectable for tests; by default
+    statements run through the Spark JVM's java.sql.DriverManager.
+    """
+
+    conn: JdbcConnection
+    allow_production: bool = False
+    executor: StatementExecutor | None = None
+
+    def _executor(self) -> StatementExecutor:
+        if self.executor is None:
+            spark = SparkSession.getActiveSession()
+            assert spark is not None, "an active SparkSession is required"
+            self.executor = jvm_statement_executor(spark, self.conn)
+        return self.executor
+
+    def _boundary(
+        self, table: str, df: DataFrame, columns: str | Sequence[str] = ()
+    ) -> tuple[str, DataFrame, list[str], dict[str, str] | None]:
+        """``(table, df, columns, write_options)`` for one write, under the
+        URL dialect's identifier rule (``dialects`` module doc)."""
+        cols = [columns] if isinstance(columns, str) else list(columns)
+        d = url_dialect(self.conn.url)
+        if d is None or not d.fold_upper:
+            return table, df, cols, None
+        df = df.toDF(*[c.upper() for c in df.columns])
+        staged = ", ".join(
+            f"{f.name} {d.column_type(f.dataType)}"
+            for f in df.schema.fields
+            if isinstance(f.dataType, T.StringType)
+        )
+        opts = {"createTableColumnTypes": staged} if staged else {}
+        return table.upper(), df, [c.upper() for c in cols], opts
+
+    def insert(self, table: str, df: DataFrame) -> None:
+        table, df, _, opts = self._boundary(table, df)
+        write_table(
+            df, self.conn, table, allow_production=self.allow_production, write_options=opts
+        )
+
+    def upsert(self, table: str, df: DataFrame, key) -> None:
+        table, df, keys, opts = self._boundary(table, df, key)
+        jdbc_upsert(
+            df,
+            self.conn,
+            table,
+            keys,
+            executor=self._executor(),
+            allow_production=self.allow_production,
+            write_options=opts,
+        )
+
+    def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
+        table, keys, cols, opts = self._boundary(table, keys, key_columns)
+        jdbc_delete(
+            keys,
+            self.conn,
+            table,
+            cols,
+            executor=self._executor(),
+            allow_production=self.allow_production,
+            write_options=opts,
+        )
+
+    def execute_sql(self, statements: list[str]) -> None:
+        self._executor()(statements)
+
+    def close(self) -> None:
+        pass

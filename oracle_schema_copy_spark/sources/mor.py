@@ -50,6 +50,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from oracle_schema_copy_spark.operators.walk import key_frame
+
 
 class MergeOnReadTable:
     def __init__(self, spark: SparkSession, path: str, key_columns: Sequence[str]):
@@ -78,13 +80,11 @@ class MergeOnReadTable:
         return f"{self.path}/{kind}/b_{seq:010d}_{uuid.uuid4().hex[:8]}"
 
     def delete_keys(self, keys: DataFrame) -> None:
-        """Append a delete batch: a key-only frame (columns must equal
-        ``key_columns``)."""
-        assert set(keys.columns) == set(self.key_columns), (
-            f"delete batch columns {keys.columns} != key {self.key_columns}"
-        )
+        """Append a delete batch: ``keys`` pairs with ``key_columns`` by
+        ``walk.key_frame``, and the batch stores only the key columns."""
+        keys = key_frame(keys, self.key_columns)
         seq = self._next_seq()
-        keys.select(*self.key_columns).withColumn(
+        keys.withColumn(
             "__seq", F.lit(seq).cast("long")
         ).write.mode("overwrite").parquet(self._batch_dir("deletes", seq))
 

@@ -106,9 +106,3 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
 ) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> None:
-    """Register each table as a temp view so ``spark.sql`` queries work."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

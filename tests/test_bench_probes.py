@@ -28,9 +28,18 @@ def test_bw_probe_returns_positive_or_none():
     assert bw is None or bw > 0
 
 
+def _best_of_three() -> float | None:
+    readings = [bench._bw_probe() for _ in range(3)]
+    if None in readings:
+        return None
+    return max(readings)
+
+
 def test_bw_probe_is_repeatable_order_of_magnitude():
-    a = bench._bw_probe()
-    b = bench._bw_probe()
+    # each reading is the best of three probes, so one co-tenant burst
+    # landing on a single probe cannot fake a 4x swing
+    a = _best_of_three()
+    b = _best_of_three()
     if a is None or b is None:
         return  # environment without numpy/threads — contract still held
     # same fixed workload back-to-back: readings must agree within 4x

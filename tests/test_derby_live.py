@@ -16,6 +16,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.sources import derby, jdbc_mutations
+from oracle_schema_copy_spark.sources.dialects import get_dialect
 from oracle_schema_copy_spark.sources.jdbc import read_query
 
 
@@ -67,7 +68,7 @@ def test_live_delete_staged_exists_path(spark, tgt):
     tgt.insert("t", base)
     keys = spark.range(0, 20, 2).select(F.col("id").alias("k"))
     stmts = jdbc_mutations.jdbc_delete(
-        derby.fold_upper(keys),
+        keys,
         tgt.conn,
         "T",
         ["K"],
@@ -233,9 +234,10 @@ def test_engine_db_target_over_derby_url(spark, tmp_path, sf_dir):
     tgt = eng.create_db_target(derby.embedded_connection(spark, db))
     try:
         orders = eng.table("orders")
-        tgt.execute_sql(
-            [derby.create_table_sql("orders", orders.schema, primary_key=["o_orderkey"])]
+        ddl = get_dialect("derby").create_table_sql(
+            "orders", orders.schema, primary_key=["o_orderkey"]
         )
+        tgt.execute_sql([ddl])
         eng.copy(tgt, "orders")
         keys = [r[0] for r in orders.orderBy("o_orderkey").limit(4).collect()]
         changed = orders.filter(F.col("o_orderkey").isin(keys[:2])).withColumn(

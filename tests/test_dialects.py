@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import types as T
 
 from oracle_schema_copy_spark.sources import jdbc_mutations as jm
-from oracle_schema_copy_spark.sources.derby import create_table_sql
 from oracle_schema_copy_spark.sources.dialects import DIALECTS, get_dialect
 
 # One schema exercising every mapped family: integer widths, IEEE floats,
@@ -57,7 +56,7 @@ GOLDEN_DDL = {
 
 @pytest.mark.parametrize("dialect", sorted(DIALECTS))
 def test_create_table_golden(dialect):
-    sql = create_table_sql("t", SCHEMA, primary_key=["id"], dialect=dialect)
+    sql = get_dialect(dialect).create_table_sql("t", SCHEMA, primary_key=["id"])
     assert sql == GOLDEN_DDL[dialect]
 
 

@@ -80,5 +80,12 @@ def test_compaction_preserves_rows_and_clears_log(spark, table):
 
 
 def test_delete_batch_schema_enforced(spark, table):
-    with pytest.raises(AssertionError, match="delete batch columns"):
-        table.delete_keys(spark.createDataFrame([(1, "a")], "k long, v string"))
+    """A delete batch pairs with the key by walk.key_frame: a frame that
+    cannot pair raises; one that names the key column deletes by name and
+    stores only the key."""
+    with pytest.raises(ValueError, match="arity"):
+        table.delete_keys(spark.createDataFrame([(1, "a")], "x long, v string"))
+    table.delete_keys(spark.createDataFrame([(1, "a")], "k long, v string"))
+    assert _rows(table.read()) == [(2, "b"), (3, "c"), (4, "d")]
+    batch = spark.read.parquet(table._log("deletes")[0])  # noqa: SLF001
+    assert batch.columns == ["k", "__seq"]

@@ -327,10 +327,10 @@ def test_auto_lsh_r_memoized_one_count_job(spark):
     status-tracker job listener under per-pass job groups; a throwaway
     first build flushes session one-time jobs so the cold/warm delta is
     exactly the memoized count job."""
-    from oracle_schema_copy_spark import suite
+    from oracle_schema_copy_spark import queries
     from oracle_schema_copy_spark.queries import pipeline_dedup as pl
 
-    suite.queries()  # force-load the registry
+    queries.queries()  # force-load the registry
     names = [
         "similarity_topk_lsh_banded",
         "similarity_topk_lsh_vectorized",
@@ -343,7 +343,7 @@ def test_auto_lsh_r_memoized_one_count_job(spark):
     def build_all(group: str) -> int:
         sc.setJobGroup(group, "lsh query builds")
         for n in names:
-            suite.REGISTRY[n].fn(spark, sf)
+            queries.REGISTRY[n].fn(spark, sf)
         sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from oracle_schema_copy_spark import suite
+from oracle_schema_copy_spark import queries
 from tests.oracle_check import compare, duck_connection
 
 SF = "/root/testdata/sf0.001"
@@ -18,14 +18,14 @@ def duck():
     con.close()
 
 
-suite.queries()  # force-load every query module into the registry
-ORACLED = sorted(n for n, s in suite.REGISTRY.items() if s.oracle is not None)
-ROWS_ONLY = sorted(n for n, s in suite.REGISTRY.items() if s.oracle is None)
+queries.queries()  # force-load every query module into the registry
+ORACLED = sorted(n for n, s in queries.REGISTRY.items() if s.oracle is not None)
+ROWS_ONLY = sorted(n for n, s in queries.REGISTRY.items() if s.oracle is None)
 
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, duck, name):
-    spec = suite.REGISTRY[name]
+    spec = queries.REGISTRY[name]
     sdf = spec.fn(spark, SF)
     ddf = duck.sql(spec.oracle).df()
     compare(sdf, ddf, name)
@@ -33,7 +33,7 @@ def test_query_matches_oracle(spark, duck, name):
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_query_runs(spark, name):
-    spec = suite.REGISTRY[name]
+    spec = queries.REGISTRY[name]
     sdf = spec.fn(spark, SF)
     assert sdf.count() >= 0
     assert len(sdf.schema) > 0

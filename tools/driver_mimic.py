@@ -2,6 +2,7 @@
 DuckDB oracle at a given SF (default sf0.01, the driver's t2 scale).
 
 Usage: python tools/driver_mimic.py [sf_dir] [only_query1,only_query2]
+Compares under ``tests/oracle_check.mismatch``, the rule tier-1 uses too.
 Set SPARK_GRAFT_MIMIC_JSON=<path> to also write a JSON artifact
 (per-query status + row counts — the committed sf0.1 evidence file).
 """
@@ -9,39 +10,14 @@ Set SPARK_GRAFT_MIMIC_JSON=<path> to also write a JSON artifact
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 
 import duckdb
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    cols = sorted(df.columns)
-    df = df.reindex(cols, axis=1)
-    return df.sort_values(by=cols, ignore_index=True)
-
-
-def dtype_family(s: pd.Series) -> str:
-    """Coarse dtype family for strict comparison.
-
-    The real driver hashes stringified cells, so a Spark BIGINT ``2`` vs a
-    DuckDB DOUBLE ``2.0`` hash-diverges even when values are numerically
-    identical.  The float-tolerant value compare below would mask that, so
-    dtype families must match exactly for numeric columns.
-    """
-    if pd.api.types.is_bool_dtype(s):
-        return "bool"
-    if pd.api.types.is_integer_dtype(s):
-        return "int"
-    if pd.api.types.is_float_dtype(s):
-        return "float"
-    if pd.api.types.is_datetime64_any_dtype(s):
-        return "datetime"
-    return "obj"
+from tests.oracle_check import mismatch  # noqa: E402  (the one comparison rule)
 
 
 def main() -> int:
@@ -124,34 +100,8 @@ def main() -> int:
             fails.append(name)
             _write_artifact(sf, results, fails)
             continue
-        s, d = normalize(s), normalize(d)
-        ok, why = True, ""
-        if len(s) != len(d):
-            ok, why = False, f"rows {len(s)} != {len(d)}"
-        elif list(s.columns) != list(d.columns):
-            ok, why = False, f"cols {list(s.columns)} != {list(d.columns)}"
-        else:
-            for c in s.columns:
-                a, b = s[c], d[c]
-                fa, fb = dtype_family(a), dtype_family(b)
-                if fa != fb and {fa, fb} & {"int", "float", "bool"}:
-                    ok, why = False, f"col {c} dtype {a.dtype} != {b.dtype}"
-                    break
-                if pd.api.types.is_float_dtype(a) or pd.api.types.is_float_dtype(b):
-                    aa, bb = a.astype(float).to_numpy(), b.astype(float).to_numpy()
-                    for i, (x, y) in enumerate(zip(aa, bb)):
-                        if (math.isnan(x) != math.isnan(y)) or (
-                            not math.isnan(x) and x != y
-                        ):
-                            ok, why = False, f"col {c} row {i}: {x!r} != {y!r}"
-                            break
-                else:
-                    neq = a.astype(str) != b.astype(str)
-                    if neq.any():
-                        i = int(neq.idxmax())
-                        ok, why = False, f"col {c} row {i}: {a[i]!r} != {b[i]!r}"
-                if not ok:
-                    break
+        why = mismatch(s, d)
+        ok = why is None
         print(f"{name}: {'MATCH' if ok else 'MISMATCH ' + why} ({len(s)} rows)")
         results[name] = {"status": "MATCH" if ok else "MISMATCH", "rows": len(s)}
         if not ok:

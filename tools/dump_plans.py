@@ -20,12 +20,12 @@ def main() -> int:
     sf_dir, out_dir, suffix = sys.argv[1:4]
     names = sys.argv[4].split(",") if len(sys.argv) > 4 else None
 
-    from oracle_schema_copy_spark import suite
+    from oracle_schema_copy_spark import queries
     from oracle_schema_copy_spark.session import get_spark
 
-    fns = suite.queries()
+    fns = queries.queries()
     if names is None:
-        names = list(suite.headline_queries())
+        names = list(queries.headline_queries())
     unknown = sorted(set(names) - set(fns))
     if unknown:
         raise SystemExit(f"unknown query names: {unknown}")
