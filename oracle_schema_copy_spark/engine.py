@@ -9,6 +9,13 @@ warehouse target lives in ``plans/oplog.py`` beside the warehouse it
 writes, because every warehouse replay runs through it, and the one JDBC
 target lives in ``sources/jdbc_mutations.py`` beside the statements it
 runs, so ``sources/derby.py`` can build on it.
+
+The subgraph verbs pay few fixed Spark jobs per call: ``Engine.table``
+reads each source's parquet schema once (a bare ``spark.read.parquet``
+starts a schema-inference job on every call), ``copy_tree`` checks the
+copy on what landed in the target (``walk.copy_selections`` with the
+target's ``insert`` as its sink), and both ``copy_tree`` and
+``delete_tree`` release what the walk cached before they return.
 """
 
 from __future__ import annotations
@@ -17,6 +24,7 @@ from dataclasses import dataclass
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from oracle_schema_copy_spark.catalog import Catalog
 from oracle_schema_copy_spark.operators import mutate, walk
@@ -33,8 +41,11 @@ class FileTarget:
 
     log: oplog.OperationLogWriter
 
-    def insert(self, table: str, df: DataFrame) -> None:
-        self.log.insert(table, df)
+    def insert(self, table: str, df: DataFrame) -> DataFrame:
+        """Logs ``df``; returns the payload that landed, read with ``df``'s
+        schema."""
+        path = self.log.insert(table, df)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
     def upsert(self, table: str, df: DataFrame, key) -> None:
         self.log.upsert(table, df, key)
@@ -56,13 +67,22 @@ class Engine:
     def __init__(self, spark: SparkSession, catalog: Catalog):
         self.spark = spark
         self.catalog = catalog
+        self._schemas: dict[str, StructType] = {}
 
     # -- sources -------------------------------------------------------------
 
     def table(self, name: str) -> DataFrame:
-        path = self.catalog.paths[name.lower()]
-        sf_dir, fname = path.rsplit("/", 1)
-        return load_table(self.spark, sf_dir, fname.removesuffix(".parquet"))
+        """The catalog table as a DataFrame. Its parquet schema is inferred
+        on the first call only; later calls read with the remembered one."""
+        sf_dir, fname = self.catalog.paths[name.lower()].rsplit("/", 1)
+        stem = fname.removesuffix(".parquet")
+        path = f"{sf_dir}/{stem}.parquet"
+        if path in self._schemas:
+            return self.spark.read.schema(self._schemas[path]).parquet(path)
+        df = load_table(self.spark, sf_dir, stem)
+        if stem != "events":  # load_table converts its timestamps after the read
+            self._schemas[path] = df.schema
+        return df
 
     def tables(self, names: Iterable[str]) -> dict[str, DataFrame]:
         return {n: self.table(n) for n in names}
@@ -87,16 +107,18 @@ class Engine:
         target.execute_sql(statements)
 
     def copy_tree(self, target, paths: list[str], root_ids) -> dict[str, int]:
-        """Walk FK paths from seed ids and copy the reachable subgraph.
-        Returns the copied row count per table, read from the walk's
-        coverage check (no recount)."""
+        """Walk FK paths from seed ids and copy the reachable subgraph into
+        ``target``. The coverage check runs on what landed and raises after
+        the write (``walk.copy_selections``). Returns the landed row count
+        per table (no recount)."""
         from oracle_schema_copy_spark.catalog import tables_from_paths
 
         tabs = self.tables(tables_from_paths(paths))
-        copied, rows = walk.copy_tree(self.spark, tabs, self.catalog, paths, root_ids)
-        for t, df in copied.items():
-            target.insert(t, df)
-        return rows
+        sels = walk.walk_linked(self.spark, tabs, self.catalog, paths, root_ids)
+        try:
+            return walk.copy_selections(tabs, sels, insert=target.insert)[1]
+        finally:
+            walk.release(sels)
 
     def delete_tree(self, target, paths: list[str], root_ids) -> None:
         """Walk FK paths and delete the reachable subgraph (child-first by
@@ -105,12 +127,15 @@ class Engine:
 
         tabs = self.tables(tables_from_paths(paths))
         sels = walk.walk_linked(self.spark, tabs, self.catalog, paths, root_ids)
-        for sel in reversed(sels):
-            # full composite key list — the leading column alone would
-            # over-delete any partial selection of a composite-PK table.
-            # Leaf selections derive their key tuples lazily here (sinks
-            # need explicit keys; data-plane deletes never do).
-            target.delete(sel.table, list(sel.key_columns), sel.keys)
+        try:
+            for sel in reversed(sels):
+                # full composite key list — the leading column alone would
+                # over-delete any partial selection of a composite-PK table.
+                # Leaf selections derive their key tuples lazily here (sinks
+                # need explicit keys; data-plane deletes never do).
+                target.delete(sel.table, list(sel.key_columns), sel.keys)
+        finally:
+            walk.release(sels)
 
     def copy(self, target, table: str, columns: list[str] | None = None) -> None:
         """Whole-table copy (the reference's ``copy`` verb)."""

@@ -16,8 +16,11 @@ Spark-first design: the reference batches key lists into 500-element
 IN-list SQL statements; here every probe is a single ``left_semi`` join
 whose build side is the (bounded, cached) key-frontier DataFrame — Catalyst
 broadcasts it when small, shuffles when not, and AQE re-plans at runtime.
-No driver-side collect of data rows ever happens; only frontier *counts*
-are materialized for the copy assertion.
+No driver-side collect of data rows ever happens: the copy assertion
+collects one row of counts per table and side. The walk caches its roots
+and key frontiers; a verb that hands the selections to a sink releases
+them when it returns (:func:`release`), so a long-lived session holds no
+cache blocks between verbs.
 
 Semantic deltas from the reference, on purpose (SURVEY.md §4 quirks):
 - when two declared edges reach the same child table, reachable key sets
@@ -51,9 +54,10 @@ side with local shuffle readers) broadcasts exactly when it's safe.
 from __future__ import annotations
 
 from collections import Counter
-from typing import Iterable, Sequence
+from typing import Callable, Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.catalog import Catalog, FkEdge, parse_paths, root_table_of_paths
@@ -116,7 +120,9 @@ class TableSelection:
 
     ``key_columns`` accepts a single column name or a sequence (composite
     PK); a given ``keys`` frame must have matching columns in the same
-    order."""
+    order. ``cached`` lists the frames the walk cached for this table (the
+    keys, and any frontier a union superseded); :func:`release` unpersists
+    them."""
 
     def __init__(
         self,
@@ -127,6 +133,7 @@ class TableSelection:
         rows: DataFrame | None = None,
         probe_column: str | None = None,
         probe: DataFrame | None = None,
+        cached: Sequence[DataFrame] = (),
     ):
         if keys is None and rows is None:
             raise ValueError("TableSelection needs keys or rows")
@@ -138,6 +145,7 @@ class TableSelection:
         self.rows = rows
         self.probe_column = probe_column
         self.probe = probe
+        self.cached: list[DataFrame] = list(cached)
 
     @property
     def keys(self) -> DataFrame:
@@ -151,6 +159,7 @@ class TableSelection:
         relative to the rows they select, so caching is safe at scale."""
         if self._keys is None:
             self._keys = self.rows.select(*self.key_columns).distinct().cache()
+            self.cached.append(self._keys)
         return self._keys
 
     @property
@@ -219,6 +228,8 @@ def walk_linked(
     Each declared edge is evaluated exactly once, in order (a bounded
     transitive closure over a user-declared DAG — not a fixpoint, matching
     the reference). Raises if an edge's parent table was never reached.
+    ``root_ids`` is seed values, or a DataFrame paired with the root's key
+    columns by :func:`key_frame`.
 
     Frontier materialization policy (the 100 TB-relevant decision): a
     child's full-PK frontier is computed, de-duplicated and cached ONLY
@@ -235,7 +246,7 @@ def walk_linked(
     root_pk = _walk_pk_cols(catalog, root_table)
 
     if isinstance(root_ids, DataFrame):
-        roots = root_ids.toDF(*root_pk).distinct()
+        roots = key_frame(root_ids, root_pk).distinct()
     else:
         roots = seed_frame(spark, root_pk, root_ids)
     roots = roots.cache()
@@ -244,6 +255,7 @@ def walk_linked(
     n_edges_in = Counter(e.child_table for e in edges)
 
     ids_by_table: dict[str, DataFrame] = {root_table: roots}
+    cached: dict[str, list[DataFrame]] = {root_table: [roots]}
     leaf_parts: dict[str, tuple[str, DataFrame, DataFrame]] = {}
     order: list[str] = [root_table]
     key_col: dict[str, tuple[str, ...]] = {root_table: root_pk}
@@ -270,6 +282,7 @@ def walk_linked(
                 ids_by_table[child] = found.cache()
                 order.append(child)
                 key_col[child] = child_pk
+            cached.setdefault(child, []).append(ids_by_table[child])
         else:
             # leaf fast path: rows = FK semi-join, no PK frontier
             rows = tables[child].join(
@@ -283,7 +296,7 @@ def walk_linked(
     out: list[TableSelection] = []
     for t in order:
         if t in ids_by_table:
-            out.append(TableSelection(t, key_col[t], ids_by_table[t]))
+            out.append(TableSelection(t, key_col[t], ids_by_table[t], cached=cached[t]))
         else:
             fk_col, probe, rows = leaf_parts[t]
             out.append(
@@ -294,35 +307,89 @@ def walk_linked(
     return out
 
 
+def _counted(df: DataFrame, cols: Sequence[str], table: str, side: str) -> DataFrame:
+    """One tagged row: ``count_distinct`` of ``cols`` and ``count(*)``."""
+    return df.agg(
+        F.count_distinct(*[F.col(c) for c in cols]).alias("n"),
+        F.count(F.lit(1)).alias("rows"),
+    ).select(F.lit(table).alias("table_name"), F.lit(side).alias("side"), "n", "rows")
+
+
+def _collect_counts(parts: list[DataFrame]) -> dict:
+    """Run the tagged one-row aggregates as ONE action; keyed by
+    ``(table, side)``."""
+    checks = parts[0]
+    for part in parts[1:]:
+        checks = checks.unionByName(part)
+    return {(r.table_name, r.side): r for r in checks.collect()}
+
+
+def _found(sel: TableSelection, df: DataFrame) -> DataFrame:
+    """Found-side counts of ``df``: distinct keys (distinct FK values for a
+    leaf) and rows."""
+    cols = [sel.probe_column] if sel.rows is not None else list(sel.key_columns)
+    return _counted(df, cols, sel.table, "found")
+
+
+def _want(sel: TableSelection) -> DataFrame:
+    """Want-side counts: the distinct keys a keyed copy must match, or the
+    probe keys a leaf's distinct FK values may not exceed."""
+    df = sel.probe if sel.rows is not None else sel.keys
+    return _counted(df, list(df.columns), sel.table, "want")
+
+
 def copy_selections(
-    tables: dict[str, DataFrame], selections: list[TableSelection]
+    tables: dict[str, DataFrame],
+    selections: list[TableSelection],
+    insert: Callable[[str, DataFrame], DataFrame | None] | None = None,
 ) -> tuple[dict[str, DataFrame], dict[str, int]]:
     """Materialize each selection's rows (G3); returns ``(frames, rows)``
     — the selected frame and its row count per table. Asserts per-table
-    that the scanned rows cover every requested key, like the reference's
+    that the copied rows cover every requested key, like the reference's
     post-copy verification (``CopyUtils.java:44-46``) — but set-based:
     composite-PK tables may legitimately yield more rows than keys.
 
-    All per-table checks are fused into ONE action (one ``collect``; AQE
-    still submits one Spark job per query stage): each (table, found/want)
-    side keeps its own native ``count_distinct`` aggregate — whole-stage-
-    codegen HashAggregate with map-side partial dedup over the original
-    (mostly numeric) key columns — and only the tagged ONE-ROW aggregate
-    outputs are unioned and collected. The found side's aggregate also
-    carries ``count(*)``, so the per-table row counts cost no extra scan.
-    The crossJoin-per-table reconciliation of the pre-r13 shape (a
-    broadcast round per table) is gone; reconciliation happens driver-side
-    over the collected rows. r13 note: an alternative fusion that unioned the RAW
-    key streams under a common ``array<string>`` encoding and aggregated
-    once was measured 2.2x SLOWER end-to-end at sf0.1 (0.95 s -> 2.14 s
-    bench median) — per-row string casts + array allocation in the
-    aggregate key cost far more than the saved AQE scheduling rounds.
+    Keyed selections must match their key set exactly (``==`` on distinct
+    key tuples). Leaf selections (``sel.rows`` set) ARE their rows — no
+    key-frontier re-join — and are checked against the probe side: the
+    distinct FK values in the copied rows can never exceed the probe key
+    count (``<=``, not ``==`` — a probe key with zero children is
+    legitimate); a violated bound means the join condition selected
+    foreign rows. Every side is a native ``count_distinct`` aggregate
+    (whole-stage-codegen HashAggregate over the original key columns); the
+    tagged one-row outputs are unioned and collected in one action (AQE
+    still submits one Spark job per query stage) and reconciled
+    driver-side. r13 note: unioning the RAW key streams under a common
+    ``array<string>`` encoding and aggregating once was measured 2.2x
+    SLOWER end-to-end at sf0.1 — per-row string casts cost far more than
+    the saved scheduling rounds.
 
-    Leaf selections (``sel.rows`` set) ARE their rows — no key-frontier
-    re-join. Their check is against the probe side: the distinct FK values
-    appearing in the copied rows can never exceed the probe key count
-    (``<=``, not ``==`` — a probe key with zero children is legitimate);
-    a violated bound means the join condition selected foreign rows.
+    Without ``insert`` (the registered queries, whose returned frames are
+    the copy) found and want sides run as ONE fused action, and the row
+    counts come from the found side's ``count(*)``.
+
+    With ``insert`` (``Engine.copy_tree`` passes ``target.insert``) the
+    check runs on what landed, in the reference's order — copy, then
+    assert — in three steps:
+
+    1. one action computes the want side from the walk's cached frontiers
+       (this also materializes those caches before any write plans over
+       them);
+    2. each selection is handed to ``insert`` once, wrapped in an
+       ``observe(count(*))``. ``insert`` may return the frame that landed
+       (file and warehouse targets read back exactly the files they
+       wrote); a target that returns nothing (JDBC) is checked on the
+       source frames instead;
+    3. one action computes the found side over what landed: distinct keys
+       (distinct FK values for a leaf) and ``count(*)``.
+
+    Beside the keyed ``==`` and leaf ``<=`` rules, every table that
+    returned a landed frame must have landed exactly the rows it was
+    handed (the observed count): this catches a sink that drops or
+    duplicates rows, leaf rows included. The observation is read only
+    after a landed frame proves the write ran, and a missing count raises
+    — it never reads as ``0 == 0``. A failed check therefore raises AFTER
+    the write. The returned row counts are the landed ``count(*)``.
     """
     out: dict[str, DataFrame] = {
         sel.table: (
@@ -335,47 +402,45 @@ def copy_selections(
     if not selections:
         return out, {}
 
-    def _counted(df: DataFrame, cols: Sequence[str], table: str, side: str) -> DataFrame:
-        return df.agg(
-            F.count_distinct(*[F.col(c) for c in cols]).alias("n"),
-            F.count(F.lit(1)).alias("rows"),
-        ).select(
-            F.lit(table).alias("table_name"),
-            F.lit(side).alias("side"),
-            "n",
-            "rows",
+    handed: dict[str, Observation] = {}
+    if insert is None:
+        found = want = _collect_counts(
+            [p for s in selections for p in (_found(s, out[s.table]), _want(s))]
         )
+    else:
+        want = _collect_counts([_want(s) for s in selections])
+        landed: dict[str, DataFrame] = {}
+        for sel in selections:
+            obs = Observation()
+            got = insert(sel.table, out[sel.table].observe(obs, F.count(F.lit(1)).alias("rows")))
+            if got is not None:
+                landed[sel.table], handed[sel.table] = got, obs
+        found = _collect_counts([_found(s, landed.get(s.table, out[s.table])) for s in selections])
 
-    op_of: dict[str, str] = {}
-    checks = None
-    for sel in selections:
-        if sel.rows is not None:
-            op_of[sel.table] = "le"
-            found = _counted(out[sel.table], [sel.probe_column], sel.table, "found")
-            want = _counted(sel.probe, sel.probe.columns, sel.table, "want")
-        else:
-            op_of[sel.table] = "eq"
-            found = _counted(out[sel.table], list(sel.key_columns), sel.table, "found")
-            want = _counted(sel.keys, list(sel.keys.columns), sel.table, "want")
-        for part in (found, want):
-            checks = part if checks is None else checks.unionByName(part)
-    collected = {(r.table_name, r.side): r for r in checks.collect()}
     for sel in selections:
         # direct indexing, not .get(..., 0): count_distinct on an empty
-        # frame still yields a row, so a MISSING row means the fused
-        # check lost an aggregate — fail loudly (KeyError), never let
-        # 0 == 0 pass silently
-        n_found = collected[(sel.table, "found")].n
-        n_keys = collected[(sel.table, "want")].n
-        op = op_of[sel.table]
-        if (n_found != n_keys) if op == "eq" else (n_found > n_keys):
+        # frame still yields a row, so a MISSING row means a check action
+        # lost an aggregate — fail loudly (KeyError), never let 0 == 0 pass
+        n_found = found[(sel.table, "found")].n
+        n_keys = want[(sel.table, "want")].n
+        if sel.rows is None and n_found != n_keys:
             raise AssertionError(
                 f"selection copy of {sel.table} matched {n_found} of {n_keys} keys"
-                if op == "eq"
-                else f"leaf selection of {sel.table} carried {n_found} distinct "
+            )
+        if sel.rows is not None and n_found > n_keys:
+            raise AssertionError(
+                f"leaf selection of {sel.table} carried {n_found} distinct "
                 f"FK values but the probe held only {n_keys} keys"
             )
-    return out, {t: collected[(t, "found")].rows for t in out}
+    for t, obs in handed.items():
+        try:
+            n_handed = obs.get["rows"]
+        except (Py4JJavaError, KeyError) as e:  # the plan lost its observation
+            raise AssertionError(f"sink for {t} reported no handed-row count") from e
+        n_landed = found[(t, "found")].rows
+        if n_handed != n_landed:
+            raise AssertionError(f"sink for {t} was handed {n_handed} rows but {n_landed} landed")
+    return out, {t: found[(t, "found")].rows for t in out}
 
 
 def delete_selections(
@@ -429,6 +494,17 @@ def delete_tree(
     """walk + delete: the reference's ``deleteTree`` verb (``Main.java:156-169``)."""
     sels = walk_linked(spark, tables, catalog, paths, root_ids)
     return delete_selections(tables, sels)
+
+
+def release(selections: list[TableSelection]) -> None:
+    """Unpersist every frame the walk cached for ``selections`` — roots,
+    frontiers (superseded union inputs included) and derived leaf keys —
+    dependents first. Verbs that hand their selections to a sink call this
+    in a ``finally``; frames still built on the selections recompute
+    instead of reading the caches."""
+    for sel in reversed(selections):
+        while sel.cached:
+            sel.cached.pop().unpersist(blocking=True)
 
 
 def _walk_pk_cols(catalog: Catalog, table: str) -> tuple[str, ...]:

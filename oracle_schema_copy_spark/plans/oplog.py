@@ -9,6 +9,11 @@ Spark-native format: a directory
     <log>/manifest.jsonl      one JSON record per operation, in seq order
     <log>/payloads/op_NNNNN/  parquet payload for data operations
 
+A data operation's record carries its payload's schema
+(``params["schema"]``), so replay reads each payload without a
+schema-inference job; a record without one (an older log) replays by
+inference.
+
 This keeps the two semantics that matter — ordered replay and
 self-contained data+schema per operation — while making payloads
 splittable/columnar (a 100 TB export is N parquet files per op, written
@@ -123,9 +128,10 @@ class OperationLogWriter:
             )
         )
 
-    def insert(self, table: str, df: DataFrame) -> None:
-        """Bulk-load rows into ``table`` on replay (K3 / ExecuteTableLoad)."""
-        self._data_op("insert", table, df, {})
+    def insert(self, table: str, df: DataFrame) -> str:
+        """Bulk-load rows into ``table`` on replay (K3 / ExecuteTableLoad).
+        Returns the payload directory."""
+        return self._data_op("insert", table, df, {})
 
     def upsert(self, table: str, df: DataFrame, key_columns: list[str] | str) -> None:
         """Merge rows into ``table`` by key on replay (K4 / ExecuteTableUpdate)."""
@@ -141,15 +147,14 @@ class OperationLogWriter:
 
     # -- plumbing ------------------------------------------------------------
 
-    def _data_op(self, kind: str, table: str, df: DataFrame, params: dict) -> None:
+    def _data_op(self, kind: str, table: str, df: DataFrame, params: dict) -> str:
         seq = len(self._records)
         rel = f"payloads/op_{seq:05d}"
-        (
-            df.write.option("maxRecordsPerFile", self.rows_per_op)
-            .mode("overwrite")
-            .parquet(os.path.join(self.path, rel))
-        )
+        path = os.path.join(self.path, rel)
+        df.write.option("maxRecordsPerFile", self.rows_per_op).mode("overwrite").parquet(path)
+        params = {**params, "schema": df.schema.jsonValue()}
         self._append(OpRecord(seq=seq, kind=kind, table=table, params=params, payload=rel))
+        return path
 
     def _append(self, rec: OpRecord) -> None:
         assert not self._closed, "operation log already closed"
@@ -171,6 +176,12 @@ class OperationLogWriter:
             self.close()
 
 
+def read_parquet(spark: SparkSession, path: str, schema: StructType | None) -> DataFrame:
+    """A parquet read; with ``schema`` it starts no schema-inference job
+    (``spark.read.parquet`` alone starts one on every call)."""
+    return (spark.read.schema(schema) if schema is not None else spark.read).parquet(path)
+
+
 def read_manifest(path: str) -> Iterator[OpRecord]:
     """Operation-log source (S10): manifest records in seq order."""
     with open(os.path.join(path, MANIFEST)) as f:
@@ -183,11 +194,16 @@ def read_manifest(path: str) -> Iterator[OpRecord]:
 class Warehouse:
     """A directory of parquet tables — the replay target for file-based
     imports (the ExecuteTarget analog for our storage). Mutations are
-    staged-write + atomic swap; reads always see a complete table."""
+    staged-write + atomic swap; reads always see a complete table.
+
+    ``schemas`` holds the schema of each table this warehouse wrote
+    (``write``/``rewrite`` set it, ``drop`` forgets it), so ``read`` starts
+    no schema-inference job for them."""
 
     spark: SparkSession
     root: str
     tables_written: set[str] = field(default_factory=set)
+    schemas: dict[str, StructType] = field(default_factory=dict)
 
     def _dir(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -195,8 +211,15 @@ class Warehouse:
     def exists(self, table: str) -> bool:
         return os.path.isdir(self._dir(table))
 
+    def files(self, table: str) -> set[str]:
+        """The table's parquet data files."""
+        d = self._dir(table)
+        if not os.path.isdir(d):
+            return set()
+        return {os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")}
+
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self._dir(table))
+        return read_parquet(self.spark, self._dir(table), self.schemas.get(table))
 
     def write(
         self,
@@ -214,6 +237,11 @@ class Warehouse:
             w = w.partitionBy(*partition_by)
         w.parquet(self._dir(table))
         self.tables_written.add(table)
+        if partition_by:
+            # partition columns read back last, typed from the directory names
+            self.schemas.pop(table, None)
+        elif mode == "overwrite":
+            self.schemas[table] = df.schema
 
     def append(self, table: str, df: DataFrame) -> None:
         self.write(table, df, mode="append")
@@ -232,9 +260,11 @@ class Warehouse:
         os.replace(stage, old)
         shutil.rmtree(trash, ignore_errors=True)
         self.tables_written.add(table)
+        self.schemas[table] = df.schema
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._dir(table), ignore_errors=True)
+        self.schemas.pop(table, None)
 
     def create_views(self, views: dict[str, str]) -> None:
         """Create logged views (S9) as session temp views: every table
@@ -276,11 +306,17 @@ class WarehouseTarget:
         over the final tables."""
         self.views[name] = query
 
-    def insert(self, table: str, df: DataFrame) -> None:
+    def insert(self, table: str, df: DataFrame) -> DataFrame:
+        """Writes (or appends) ``df``; returns the rows that landed — the
+        files this call added, read with ``df``'s schema, so an append's
+        earlier files are not counted."""
+        before = self.wh.files(table)
         if self.wh.exists(table):
             self.wh.append(table, df)
         else:
             self.wh.write(table, df)
+        added = sorted(self.wh.files(table) - before)
+        return self.wh.spark.read.schema(df.schema).parquet(*added)
 
     def upsert(self, table: str, df: DataFrame, key) -> None:
         self.wh.rewrite(table, mutate.merge_upsert(self.wh.read(table), df, key))
@@ -325,7 +361,11 @@ def replay_into_target(
     applied: list[OpRecord] = []
     created: set[str] = set()
     for rec in read_manifest(log_path):
-        df = spark.read.parquet(os.path.join(log_path, rec.payload)) if rec.payload else None
+        df = None
+        if rec.payload:
+            logged = rec.params.get("schema")
+            schema = StructType.fromJson(logged) if logged is not None else None
+            df = read_parquet(spark, os.path.join(log_path, rec.payload), schema)
         if rec.kind == "ddl":
             continue  # tables come from payload schemas at their first insert
         elif rec.kind == "opaque_sql":
@@ -398,9 +438,7 @@ class _StagingWarehouse(Warehouse):
         return self._staged(table) or self.base.exists(table)
 
     def read(self, table: str) -> DataFrame:
-        if self._staged(table):
-            return self.spark.read.parquet(self._dir(table))
-        return self.base.read(table)
+        return super().read(table) if self._staged(table) else self.base.read(table)
 
     def create_views(self, views: dict[str, str]) -> None:
         """Held for :func:`replay_atomic`, which creates them over the base
@@ -476,6 +514,7 @@ def _apply_commit(warehouse: Warehouse) -> None:
         os.replace(src, dst)
         shutil.rmtree(trash, ignore_errors=True)
         warehouse.tables_written.add(t)
+        warehouse.schemas.pop(t, None)  # the staged files replaced the table
     os.remove(os.path.join(root, COMMIT_MARKER))
     shutil.rmtree(stage_root, ignore_errors=True)
 

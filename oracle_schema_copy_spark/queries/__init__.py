@@ -76,6 +76,24 @@ def _load_all() -> None:
 # least fresh information.  Names absent from both lists keep registry
 # (insertion) order in the middle.
 _CHECK_FIRST: list[str] = [
+    # (sj) code path changed by the subgraph-verb job cuts: Engine.copy_tree
+    # checks the copy on what landed and releases the walk's caches;
+    # walk.copy_selections was restructured (the no-sink fused check
+    # registered queries keep) and walk_linked pairs a DataFrame root by
+    # walk.key_frame; Engine.table, Warehouse.read and replay read with a
+    # known schema, and the oplog writer logs each payload's schema
+    "jdbc_copy_tree_derby",
+    "copy_tree_lineitem",
+    "copy_tree_summary",
+    "copy_tree_lineitem_composite",
+    "delete_tree_orders",
+    "oplog_roundtrip_orders",
+    "oplog_atomic_replay_orders",
+    "oplog_import_into_derby",
+    "oplog_history_source",
+    "export_all_roundtrip_nation",
+    "export_view_opaque_roundtrip",
+    "copy_verify_end_to_end",
     # (tb) code path changed by the one target boundary: every keyed
     # delete/scan pairs its key frame through walk.key_frame (walk,
     # mutate, oplog writer + replay, MOR delete batches, jdbc_delete), the
@@ -84,21 +102,12 @@ _CHECK_FIRST: list[str] = [
     # without Catalog.pk_of_map; the copy_tree_* names also changed when
     # copy_tree took its row counts from the walk check, and were not
     # moved forward then
-    "copy_tree_lineitem",
-    "copy_tree_summary",
-    "copy_tree_lineitem_composite",
-    "delete_tree_orders",
     "delete_by_keys_lineitem",
     "keyed_scan_orders",
-    "oplog_roundtrip_orders",
-    "oplog_atomic_replay_orders",
-    "oplog_history_source",
     "mor_read_orders",
     "mor_time_travel_orders",
     "mor_compaction_equivalence",
     "jdbc_roundtrip_orders",
-    "oplog_import_into_derby",
-    "jdbc_copy_tree_derby",
     "stream_cdc_apply_derby",
     "jdbc_walk_pushed_probe",
     "jdbc_walk_probe_matrix",
@@ -239,7 +248,6 @@ _CHECK_FIRST: list[str] = [
     "abc_classification_parts",
     "rfm_customer_segments",
     "yoy_revenue_growth",
-    "copy_verify_end_to_end",
     "tpch_q2_min_cost_supplier",
     "tpch_q3_shipping_priority",
     "tpch_q5_local_supplier_volume",
@@ -313,7 +321,6 @@ _CHECK_FIRST: list[str] = [
     "edge_exclusion_filter",
     "table_exclusion",
     "bulk_copy_projection",
-    "export_all_roundtrip_nation",
 ]
 _CHECK_LAST: list[str] = [
     # green in CORRECTNESS_r02 with unchanged implementations; each has an
@@ -326,7 +333,6 @@ _CHECK_LAST: list[str] = [
     "scalar_json_events",
     "schema_ddl_catalog",
     "multimodal_feature_extract",
-    "export_view_opaque_roundtrip",
     "range_join_error_views",
     "sample_stratified_by_lang",
     "train_val_test_split",

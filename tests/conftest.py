@@ -30,3 +30,44 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def reader_jobs(spark):
+    """``reader_jobs(fn)`` runs ``fn`` and returns ``(jobs, reader_jobs)``:
+    the Spark jobs it started, and how many of those were submitted by
+    ``DataFrameReader.parquet`` — schema inference (or file listing),
+    which a read with a known schema never starts. Read from the status
+    store."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn) -> tuple[int, int]:
+        group = f"reader-probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "reader probe")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jsc = sc._jsc.sc()  # noqa: SLF001
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        store = jsc.statusStore()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+
+        def details(stage: int) -> str:
+            try:
+                return store.lastStageAttempt(stage).details()
+            except Exception:  # noqa: BLE001 — a skipped stage has no attempt
+                return ""
+
+        reader = sum(
+            1
+            for j in jobs
+            if any("DataFrameReader.parquet" in details(s) for s in tracker.getJobInfo(j).stageIds)
+        )
+        return len(jobs), reader
+
+    return run

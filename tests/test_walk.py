@@ -131,6 +131,23 @@ def test_walk_composite_parent_frontier(spark, ctx, sf_dir):
     assert li_sel.rows.count() == expected_li
 
 
+def test_walk_pairs_root_frame_by_name(spark, ctx, sf_dir):
+    """A composite root DataFrame whose columns hold the key names in
+    another order pairs by name (walk.key_frame), not by position."""
+    _, tables = ctx
+    roots = (
+        tables["orders"]
+        .filter(F.col("o_custkey").isin([1, 2, 3]))
+        .select("o_custkey", "o_orderkey")
+    )
+    sels = walk.walk_linked(
+        spark, tables, _composite_catalog(sf_dir), ["ORDERS->LINEITEM.L_ORDERKEY"], roots
+    )
+    assert sels[0].keys.columns == ["o_orderkey", "o_custkey"]
+    want = {tuple(r) for r in roots.select("o_orderkey", "o_custkey").collect()}
+    assert {tuple(r) for r in sels[0].keys.collect()} == want and want
+
+
 def test_walk_composite_seed_frame_copy(spark, ctx):
     """seed_frame with composite tuples → copy_selections composite
     semi-join + composite count_distinct coverage assert."""
