@@ -89,8 +89,8 @@ class Engine:
 
     # -- targets (createDbTarget / createFileTarget) -------------------------
 
-    def create_file_target(self, path: str, rows_per_op: int = 10_000) -> FileTarget:
-        return FileTarget(oplog.OperationLogWriter(path, rows_per_op=rows_per_op))
+    def create_file_target(self, path: str) -> FileTarget:
+        return FileTarget(oplog.OperationLogWriter(path))
 
     def create_warehouse_target(self, root: str) -> WarehouseTarget:
         return WarehouseTarget(oplog.Warehouse(self.spark, root))

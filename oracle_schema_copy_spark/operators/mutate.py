@@ -26,9 +26,7 @@ splitting applies. No per-row Python anywhere.
 
 from __future__ import annotations
 
-from typing import Iterable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.operators.walk import _eq_cond, key_frame
@@ -97,19 +95,12 @@ def merge_upsert(
 
 
 def delete_by_keys(
-    target: DataFrame,
-    key_columns: str | list[str],
-    keys: Iterable | DataFrame,
-    spark: SparkSession | None = None,
+    target: DataFrame, key_columns: str | list[str], keys: DataFrame
 ) -> DataFrame:
     """Rows of ``target`` surviving a keyed delete (anti-join rewrite).
-    ``key_columns`` may be composite; a keys DataFrame pairs with them by
+    ``key_columns`` may be composite; ``keys`` pairs with them by
     ``walk.key_frame``."""
     cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
-    if not isinstance(keys, DataFrame):
-        assert spark is not None, "spark session required for driver-side key lists"
-        vals = [tuple(k) if isinstance(k, (tuple, list)) else (k,) for k in keys]
-        keys = spark.createDataFrame(vals, cols)
     keys = key_frame(keys, cols).distinct()
     # no broadcast hint: a forced hint overrides the size threshold and
     # collects arbitrarily large key sets to the driver; the planner / AQE

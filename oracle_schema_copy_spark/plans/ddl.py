@@ -34,14 +34,13 @@ def _sql_type(dt: T.DataType) -> str:
     return dt.simpleString().upper()
 
 
-def schema_to_ddl(table: str, schema: T.StructType, *, if_not_exists: bool = False) -> str:
+def schema_to_ddl(table: str, schema: T.StructType) -> str:
     """Generate a Spark-SQL ``CREATE TABLE`` statement from a StructType."""
     cols = ",\n  ".join(
         f"{f.name} {_sql_type(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
         for f in schema.fields
     )
-    ine = "IF NOT EXISTS " if if_not_exists else ""
-    return f"CREATE TABLE {ine}{table} (\n  {cols}\n) USING PARQUET"
+    return f"CREATE TABLE {table} (\n  {cols}\n) USING PARQUET"
 
 
 def export_schema_ddl(tables: dict[str, DataFrame]) -> list[tuple[str, str]]:

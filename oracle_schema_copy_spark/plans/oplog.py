@@ -38,10 +38,12 @@ observable as a partially-applied warehouse (CopyUtils.java:367). Both
 roll a pending commit forward first and create views last, over the final
 tables.
 
-Data operations are chunked at ``rows_per_op`` (reference flushes every
-10k rows, ``AbstractLoadRowsCallback.java:28``) — kept as a knob for
-payload file sizing, implemented with ``maxRecordsPerFile`` rather than
-driver-side buffering.
+Data operations are chunked at ``ROWS_PER_OP`` rows per payload file
+(the reference flushes every 10k rows, ``AbstractLoadRowsCallback.java:28``),
+implemented with ``maxRecordsPerFile`` rather than driver-side buffering.
+
+Every directory swap — ``Warehouse.rewrite``, the atomic replay's commit
+and ``mor.MergeOnReadTable.compact`` — goes through :func:`swap_in`.
 """
 
 from __future__ import annotations
@@ -60,6 +62,20 @@ from oracle_schema_copy_spark.operators import mutate
 from oracle_schema_copy_spark.operators.walk import key_frame
 
 MANIFEST = "manifest.jsonl"
+ROWS_PER_OP = 10_000  # rows per payload file
+
+
+def swap_in(src: str, dst: str) -> None:
+    """Replace directory ``dst`` with the staged directory ``src``: move
+    the old one aside, rename the staged one in (the commit point), then
+    delete the old one. ``dst`` is absent between the two renames, but a
+    reader never sees old and new files mixed."""
+    trash = dst + ".__old__"
+    shutil.rmtree(trash, ignore_errors=True)
+    if os.path.isdir(dst):
+        os.replace(dst, trash)
+    os.replace(src, dst)
+    shutil.rmtree(trash, ignore_errors=True)
 
 
 @dataclass
@@ -90,9 +106,8 @@ class OperationLogWriter:
     ``close()`` so a partially-written log is never readable as valid.
     """
 
-    def __init__(self, path: str, rows_per_op: int = 10_000):
+    def __init__(self, path: str):
         self.path = path
-        self.rows_per_op = rows_per_op
         self._records: list[OpRecord] = []
         self._closed = False
         os.makedirs(os.path.join(path, "payloads"), exist_ok=True)
@@ -151,7 +166,7 @@ class OperationLogWriter:
         seq = len(self._records)
         rel = f"payloads/op_{seq:05d}"
         path = os.path.join(self.path, rel)
-        df.write.option("maxRecordsPerFile", self.rows_per_op).mode("overwrite").parquet(path)
+        df.write.option("maxRecordsPerFile", ROWS_PER_OP).mode("overwrite").parquet(path)
         params = {**params, "schema": df.schema.jsonValue()}
         self._append(OpRecord(seq=seq, kind=kind, table=table, params=params, payload=rel))
         return path
@@ -221,26 +236,10 @@ class Warehouse:
     def read(self, table: str) -> DataFrame:
         return read_parquet(self.spark, self._dir(table), self.schemas.get(table))
 
-    def write(
-        self,
-        table: str,
-        df: DataFrame,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """``partition_by`` lays the table out hive-style (one directory
-        per value): queries filtering on those columns prune whole
-        directories at planning time — the 100 TB analog of the
-        reference's per-table copy granularity."""
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._dir(table))
+    def write(self, table: str, df: DataFrame, mode: str = "overwrite") -> None:
+        df.write.mode(mode).parquet(self._dir(table))
         self.tables_written.add(table)
-        if partition_by:
-            # partition columns read back last, typed from the directory names
-            self.schemas.pop(table, None)
-        elif mode == "overwrite":
+        if mode == "overwrite":
             self.schemas[table] = df.schema
 
     def append(self, table: str, df: DataFrame) -> None:
@@ -252,13 +251,7 @@ class Warehouse:
         stage = self._dir(table) + ".__stage__"
         shutil.rmtree(stage, ignore_errors=True)
         df.write.mode("overwrite").parquet(stage)
-        old = self._dir(table)
-        trash = old + ".__old__"
-        shutil.rmtree(trash, ignore_errors=True)
-        if os.path.isdir(old):
-            os.replace(old, trash)
-        os.replace(stage, old)
-        shutil.rmtree(trash, ignore_errors=True)
+        swap_in(stage, self._dir(table))
         self.tables_written.add(table)
         self.schemas[table] = df.schema
 
@@ -506,13 +499,7 @@ def _apply_commit(warehouse: Warehouse) -> None:
         src = os.path.join(stage_root, t)
         if not os.path.isdir(src):
             continue  # already moved by a previous (crashed) roll-forward
-        dst = os.path.join(root, t)
-        trash = dst + ".__old__"
-        shutil.rmtree(trash, ignore_errors=True)
-        if os.path.isdir(dst):
-            os.replace(dst, trash)
-        os.replace(src, dst)
-        shutil.rmtree(trash, ignore_errors=True)
+        swap_in(src, os.path.join(root, t))
         warehouse.tables_written.add(t)
         warehouse.schemas.pop(t, None)  # the staged files replaced the table
     os.remove(os.path.join(root, COMMIT_MARKER))
@@ -527,7 +514,6 @@ def export_all(
     constraint_sql: list[str] | None = None,
     views: dict[str, str] | None = None,
     other_object_sql: list[str] | None = None,
-    rows_per_op: int = 10_000,
 ) -> None:
     """Full export pipeline (E1 / ``exportAll`` ``CopyUtils.java:966-1010``):
     table DDL → row data (in FK-safe topo order) → constraints AFTER data
@@ -537,7 +523,7 @@ def export_all(
     from oracle_schema_copy_spark.plans.ddl import export_schema_ddl
 
     order = topo_order or sorted(tables)
-    with OperationLogWriter(log_path, rows_per_op=rows_per_op) as log:
+    with OperationLogWriter(log_path) as log:
         log.ddl([ddl for _, ddl in export_schema_ddl({t: tables[t] for t in order})])
         for t in order:
             log.insert(t, tables[t])

@@ -76,24 +76,39 @@ def _load_all() -> None:
 # least fresh information.  Names absent from both lists keep registry
 # (insertion) order in the middle.
 _CHECK_FIRST: list[str] = [
+    # (kd) code path changed by the one keyed delete: every live-database
+    # delete stages its keys and runs one EXISTS statement, upsert and
+    # delete share one staged-statement helper, the statement executor is
+    # always one transaction and JDBC write batch/connection sizes are
+    # constants (every DerbyTarget query); mutate.delete_by_keys takes a
+    # key frame only; the oplog writer chunks at oplog.ROWS_PER_OP; and
+    # Warehouse.rewrite, the atomic replay's commit and MOR compaction
+    # share oplog.swap_in
+    "jdbc_roundtrip_orders",
+    "oplog_import_into_derby",
+    "stream_cdc_apply_derby",
+    "jdbc_copy_tree_derby",
+    "jdbc_walk_pushed_probe",
+    "jdbc_walk_probe_matrix",
+    "delete_by_keys_lineitem",
+    "mor_compaction_equivalence",
+    "oplog_roundtrip_orders",
+    "oplog_atomic_replay_orders",
+    "oplog_history_source",
+    "export_all_roundtrip_nation",
+    "export_view_opaque_roundtrip",
+    "copy_verify_end_to_end",
     # (sj) code path changed by the subgraph-verb job cuts: Engine.copy_tree
     # checks the copy on what landed and releases the walk's caches;
     # walk.copy_selections was restructured (the no-sink fused check
     # registered queries keep) and walk_linked pairs a DataFrame root by
     # walk.key_frame; Engine.table, Warehouse.read and replay read with a
-    # known schema, and the oplog writer logs each payload's schema
-    "jdbc_copy_tree_derby",
+    # known schema, and the oplog writer logs each payload's schema (the
+    # oplog and Derby names of this section lead the list above)
     "copy_tree_lineitem",
     "copy_tree_summary",
     "copy_tree_lineitem_composite",
     "delete_tree_orders",
-    "oplog_roundtrip_orders",
-    "oplog_atomic_replay_orders",
-    "oplog_import_into_derby",
-    "oplog_history_source",
-    "export_all_roundtrip_nation",
-    "export_view_opaque_roundtrip",
-    "copy_verify_end_to_end",
     # (tb) code path changed by the one target boundary: every keyed
     # delete/scan pairs its key frame through walk.key_frame (walk,
     # mutate, oplog writer + replay, MOR delete batches, jdbc_delete), the
@@ -101,16 +116,11 @@ _CHECK_FIRST: list[str] = [
     # query), DDL comes from dialects directly and walk paths parse
     # without Catalog.pk_of_map; the copy_tree_* names also changed when
     # copy_tree took its row counts from the walk check, and were not
-    # moved forward then
-    "delete_by_keys_lineitem",
+    # moved forward then (this section's delete, MOR-compaction and Derby
+    # names lead the list above)
     "keyed_scan_orders",
     "mor_read_orders",
     "mor_time_travel_orders",
-    "mor_compaction_equivalence",
-    "jdbc_roundtrip_orders",
-    "stream_cdc_apply_derby",
-    "jdbc_walk_pushed_probe",
-    "jdbc_walk_probe_matrix",
     "ddl_dialect_matrix",
     # (m14c3) changed late in round 14: explicit-count repartition pins
     # in lsh_banded_topk (exact scorer only), ngram_jaccard_pairs and

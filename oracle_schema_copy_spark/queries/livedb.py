@@ -13,16 +13,16 @@ connection factory) executed end-to-end:
 - upsert as staged write + ONE set-oriented MERGE
   (``ExecuteTableUpdate.java:10-27``'s per-row UPDATE-else-INSERT,
   re-expressed O(1)-statements)
-- keyed DELETE batched IN-lists under 100k keys, staged EXISTS above
-  (``DeleteByPk.java:15-43``'s 500-key batches) — the scale switch is
-  automatic, so this same query exercises the inline path at sf≤0.1 and
-  the staged path at sf1.
+- keyed DELETE as staged keys + ONE ``EXISTS`` statement
+  (``DeleteByPk.java:15-43``'s 500-key batches), the same path at every
+  scale
 
 Scale: embedded Derby is the in-sandbox stand-in; the identical code path
 (JdbcConnection + write_table + jvm_statement_executor) points at any
 server RDBMS. The Spark side stays fully distributed — parallel batched
-writes, partitioned read-back; only key lists (bounded by
-``max_inline_keys``) ever pass through the driver.
+writes, partitioned read-back; no mutation passes keys through the
+driver, and only the pushed keyed read collects key lists (bounded by
+``read_table_keyed_auto``'s ``max_inline_keys``).
 """
 
 from __future__ import annotations
@@ -417,8 +417,8 @@ def q_jdbc_walk_pushed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Demo crossover for the probe-matrix gate: small enough that the even-
 # custkey frontier sits BELOW it at sf <= 0.1 (pushed) and ABOVE it at
 # sf1 (75k keys -> staged), so one registered query exercises both arms
-# of the automatic switch across the fixture ladder. Production default
-# stays 100k (the keyed-delete budget).
+# of the automatic switch across the fixture ladder. The reader's own
+# default stays 100k.
 _PROBE_MATRIX_BUDGET = 10_000
 
 

@@ -5,10 +5,10 @@ a real RDBMS (``ExecuteTarget.java:12-32``, ``Main.java:46-58``). No
 external database ships in this environment, but Derby 10.16 rides inside
 Spark's own jars directory (``derby-10.16.1.1.jar`` + shared + tools), is
 embeddable (same-JVM, file-backed), and supports ANSI ``MERGE`` — so the
-K1/K4/K5/K6 paths (live batched INSERT, staged MERGE upsert, keyed DELETE,
-ordered DDL execution) can run for real through the exact same
-``spark.write.jdbc`` + ``jvm_statement_executor`` code a production Oracle
-or Postgres target would use.
+K1/K4/K5/K6 paths (live batched INSERT, staged MERGE upsert, staged
+keyed DELETE, ordered DDL execution) can run for real through the exact
+same ``spark.write.jdbc`` + ``jvm_statement_executor`` code a production
+Oracle or Postgres target would use.
 
 Identifier case: Derby's dialect folds identifiers at the JDBC boundary
 (``dialects.Dialect.fold_upper``, module doc there); ``JdbcTarget``
@@ -19,8 +19,8 @@ Scale note: embedded Derby is the TEST database; at production scale the
 same code paths point at a server-class RDBMS via ``JdbcConnection`` with
 partitioned reads and capped write connections (``sources/jdbc.py``). The
 Spark-side plumbing — parallel batched INSERT, one set-oriented MERGE
-statement instead of O(rows) round-trips, staged EXISTS deletes — is what
-this module proves live.
+statement instead of O(rows) round-trips, one staged EXISTS statement per
+keyed delete — is what this module proves live.
 """
 
 from __future__ import annotations
@@ -54,17 +54,17 @@ def fold_names(df: DataFrame, names: list[str], schema: T.StructType | None = No
     )
 
 
-def embedded_connection(spark: SparkSession, db_dir: str, *, create: bool = True) -> JdbcConnection:
+def embedded_connection(spark: SparkSession, db_dir: str) -> JdbcConnection:
     """Connection to a file-backed embedded Derby database inside the
-    Spark JVM. Routes derby.log away from the CWD (first call only — the
-    property is read when the Derby engine boots)."""
+    Spark JVM, created on first use. Routes derby.log away from the CWD
+    (first call only — the property is read when the Derby engine
+    boots)."""
     import os
 
     os.makedirs(os.path.dirname(db_dir) or ".", exist_ok=True)
     jvm = spark._jvm  # noqa: SLF001
     jvm.java.lang.System.setProperty("derby.stream.error.file", f"{db_dir}.derby.log")
-    url = f"jdbc:derby:{db_dir}" + (";create=true" if create else "")
-    return JdbcConnection(url=url)
+    return JdbcConnection(url=f"jdbc:derby:{db_dir};create=true")
 
 
 class DerbyTarget(JdbcTarget):

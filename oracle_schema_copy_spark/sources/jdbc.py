@@ -14,8 +14,8 @@ Scale notes baked into the defaults:
   upperBound/numPartitions``) so a 100 TB table fans out across executors
   instead of one connection;
 - ``pushDownPredicate`` (default on) sends filters to the database;
-- writes batch at ``batchsize`` (the reference's 500 → 10k default here,
-  modern drivers handle it) and cap ``numPartitions`` to bound concurrent
+- writes batch at ``WRITE_BATCH`` rows (the reference's 500 → 10k here,
+  modern drivers handle it) over at most ``WRITE_CONNECTIONS`` concurrent
   connections.
 """
 
@@ -24,6 +24,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+WRITE_BATCH = 10_000  # rows per JDBC batch insert
+WRITE_CONNECTIONS = 16  # cap on one write's concurrent connections
 
 
 class ProductionGuardError(RuntimeError):
@@ -71,13 +74,10 @@ def read_table(
     lower_bound: int | None = None,
     upper_bound: int | None = None,
     num_partitions: int = 32,
-    predicate: str | None = None,
 ) -> DataFrame:
     """Partitioned JDBC table read; single-connection only when no
     partition column is given (fine for dimension tables)."""
-    reader = spark.read.format("jdbc").options(**conn.spark_options())
-    src = f"(SELECT * FROM {table} WHERE {predicate}) t" if predicate else table
-    reader = reader.option("dbtable", src)
+    reader = spark.read.format("jdbc").options(**conn.spark_options()).option("dbtable", table)
     if partition_column is not None:
         assert lower_bound is not None and upper_bound is not None
         reader = (
@@ -111,10 +111,9 @@ def read_table_keyed(
     fraction of the child table (the common copy_tree shape) because the
     read-all path ships the entire child table through JDBC first.
 
-    ``keys`` is a driver-side sequence — bounded by the same
-    ``max_inline_keys``-scale contract as the keyed-delete path (key
-    lists, never rows, and a frontier larger than that belongs on the
-    staged/semi-join path anyway).
+    ``keys`` is a driver-side sequence — key lists, never rows, bounded
+    by ``read_table_keyed_auto``'s ``max_inline_keys`` (a frontier larger
+    than that belongs on the staged/semi-join path anyway).
     """
     from oracle_schema_copy_spark.sources.jdbc_mutations import sql_literal
 
@@ -205,11 +204,12 @@ def read_table_keyed_auto(
     allow_production: bool = False,
     write_options: dict[str, str] | None = None,
 ) -> tuple[DataFrame, str]:
-    """The keyed-read strategy matrix as one entry point, mirroring the
-    delete verb's automatic scale switch: frontiers up to
-    ``max_inline_keys`` collect driver-side (keys only, bounded) and go
-    as batched pushed IN-list probes; larger frontiers stage into the
-    database and probe with one set-oriented join — no driver collect.
+    """The keyed-read strategy matrix as one entry point, switching on the
+    frontier size: frontiers up to ``max_inline_keys`` collect
+    driver-side (keys only, bounded) and go as batched pushed IN-list
+    probes, which win on small frontiers (BENCH_NOTES_r10.md §1); larger
+    frontiers stage into the database and probe with one set-oriented
+    join — no driver collect.
     Returns (rows, path) with path in {'pushed', 'staged'} so callers
     (and the gating oracle) can assert the crossover rule itself."""
     distinct = keys_df.toDF(key_column).distinct()
@@ -275,13 +275,12 @@ def write_table(
     table: str,
     *,
     mode: str = "append",
-    batchsize: int = 10_000,
-    max_connections: int = 16,
     allow_production: bool = False,
     write_options: dict[str, str] | None = None,
 ) -> None:
-    """Batched JDBC write (K1/K3). Caps write parallelism so a wide cluster
-    doesn't open thousands of connections against the database.
+    """Batched JDBC write (K1/K3), ``WRITE_BATCH`` rows per batch. Caps
+    write parallelism at ``WRITE_CONNECTIONS`` so a wide cluster doesn't
+    open thousands of connections against the database.
     ``write_options`` carries per-write, table-specific options — e.g.
     ``createTableColumnTypes`` so overwrite-mode staging tables get
     comparable VARCHAR strings instead of a dialect's CLOB default."""
@@ -289,13 +288,13 @@ def write_table(
     # coalesce never increases partition count, so this caps concurrent
     # connections without the plan->RDD conversion a getNumPartitions()
     # probe would force, and without a shuffle
-    df = df.coalesce(max_connections)
+    df = df.coalesce(WRITE_CONNECTIONS)
     (
         df.write.format("jdbc")
         .options(**conn.spark_options())
         .options(**(write_options or {}))
         .option("dbtable", table)
-        .option("batchsize", str(batchsize))
+        .option("batchsize", str(WRITE_BATCH))
         .mode(mode)
         .save()
     )

@@ -10,21 +10,22 @@ Reference behavior re-expressed (not ported):
   instead of O(rows) round-trips; the database's MERGE raises on duplicate
   source keys (e.g. ORA-30926), preserving the reference's ">1 row
   updated" guard server-side.
-- delete      ≈ ``DeleteByPk.java:15-43`` — batched ``DELETE ... WHERE pk
-  IN (...)`` statements (the reference's 500-key batches), plus a
-  staging-table ``EXISTS`` variant for key sets too large to ship through
-  SQL literals.
+- delete      ≈ ``DeleteByPk.java:15-43`` — batched keyed ``DELETE``
+  statements. Same staged shape as upsert: the distinct keys bulk-write
+  to a staging table and ONE ``DELETE ... WHERE EXISTS`` statement
+  removes the matching rows. The keys never pass through the driver and
+  never become SQL literals.
 - execute_sql ≈ ``ExecuteSqlList.java:11-40`` — ordered statement list on
-  one connection, optionally transactional.
+  one connection, in one transaction.
 - ``JdbcTarget`` ≈ ``ExecuteTarget.java:12-32`` — the one target class
   that applies these verbs to a live database.
 
-No database ships in this environment: every statement generator below is
-a pure function unit-tested against expected SQL, and the executor is
-pluggable — tests inject a recorder; production uses
-``jvm_statement_executor`` which drives ``java.sql.DriverManager`` through
-Spark's own JVM (the JDBC driver jar is already on the classpath for
-spark.read/write.jdbc to work).
+The statement generators below are pure functions unit-tested against
+expected SQL. The executor is pluggable: production uses
+``jvm_statement_executor``, which drives ``java.sql.DriverManager``
+through Spark's own JVM (the JDBC driver jar is already on the classpath
+for spark.read/write.jdbc to work); tests run the verbs live against
+embedded Derby (``sources/derby.py``).
 """
 
 from __future__ import annotations
@@ -32,19 +33,18 @@ from __future__ import annotations
 import datetime as _dt
 import math as _math
 from dataclasses import dataclass
-from typing import Callable, Iterable, Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from oracle_schema_copy_spark.operators.walk import key_frame
 from oracle_schema_copy_spark.sources.dialects import get_dialect, url_dialect
-from oracle_schema_copy_spark.sources.jdbc import JdbcConnection, prod_check, write_table
+from oracle_schema_copy_spark.sources.jdbc import JdbcConnection, write_table
 
 # An executor runs SQL statements in order against the target database.
 StatementExecutor = Callable[[Sequence[str]], None]
 
-DELETE_BATCH = 500  # the reference's key-batch size (CopyUtils.java)
 _MERGE_STYLES = ("ansi", "postgres_upsert")
 
 
@@ -95,7 +95,8 @@ def merge_sql(
 
 def sql_literal(v) -> str:
     """Render a Python value as a SQL literal (key values only: numbers,
-    strings, dates — the types primary keys are made of)."""
+    strings, dates — the types primary keys are made of). The pushed
+    keyed read (``jdbc.read_table_keyed``) renders its probes with it."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -123,45 +124,12 @@ def sql_literal(v) -> str:
     return f"'{s}'"
 
 
-def delete_in_sql(table: str, key_column: str, keys: Sequence) -> list[str]:
-    """Batched ``DELETE ... WHERE pk IN (...)`` statements, ``DELETE_BATCH``
-    keys per statement (the reference's 500-element batches)."""
-    out = []
-    ks = list(keys)
-    for i in range(0, len(ks), DELETE_BATCH):
-        chunk = ", ".join(sql_literal(k) for k in ks[i : i + DELETE_BATCH])
-        out.append(f"DELETE FROM {table} WHERE {key_column} IN ({chunk})")
-    return out
-
-
-def delete_tuples_sql(
-    table: str, key_columns: Sequence[str], key_tuples: Sequence[Sequence]
-) -> list[str]:
-    """Composite-key batched delete: ``DELETE ... WHERE (a=.. AND b=..) OR
-    ...`` — OR-of-AND rather than a row-value ``(a, b) IN (...)`` because
-    row-value constructors are not portable (SQL Server lacks them).
-    Same ``DELETE_BATCH`` batching as the single-column path."""
-    cols = list(key_columns)
-    out = []
-    ts = list(key_tuples)
-    for i in range(0, len(ts), DELETE_BATCH):
-        preds = " OR ".join(
-            "("
-            + " AND ".join(
-                f"{c} = {sql_literal(v)}" for c, v in zip(cols, t)
-            )
-            + ")"
-            for t in ts[i : i + DELETE_BATCH]
-        )
-        out.append(f"DELETE FROM {table} WHERE {preds}")
-    return out
-
-
 def delete_using_staging_sql(
     table: str, staging_table: str, key_columns: Sequence[str]
 ) -> str:
-    """Set-oriented keyed delete via a staged key table — the scale path
-    when the key set is too large for SQL literals."""
+    """Set-oriented keyed delete via a staged key table: one statement
+    whatever the key count. A NULL key component matches nothing, as
+    SQL equality never holds for NULL."""
     on = " AND ".join(f"s.{k} = t.{k}" for k in key_columns)
     return (
         f"DELETE FROM {table} t WHERE EXISTS "
@@ -170,7 +138,7 @@ def delete_using_staging_sql(
 
 
 def staging_name(table: str, op: str) -> str:
-    """Deterministic staging-table name: re-running a failed upsert reuses
+    """Deterministic staging-table name: re-running a failed verb reuses
     (overwrites) the same staging table instead of leaking one per run."""
     return f"{table}_oscs_{op}_stg"
 
@@ -192,16 +160,14 @@ def staging_index_sql(staging_table: str, key_columns: Sequence[str]) -> str:
 # ---------------------------------------------------------------------------
 
 
-def jvm_statement_executor(
-    spark: SparkSession, conn: JdbcConnection, *, transactional: bool = True
-) -> StatementExecutor:
+def jvm_statement_executor(spark: SparkSession, conn: JdbcConnection) -> StatementExecutor:
     """Ordered statement execution over one java.sql connection obtained
     through Spark's JVM (the driver jar is on the classpath already).
 
-    ``transactional=True`` wraps the list in one commit, restoring the
-    reference's single-transaction replay semantics where the database
-    supports transactional DDL/DML mixes; on failure the transaction is
-    rolled back and the error re-raised.
+    The list runs in one transaction, the reference's single-transaction
+    replay semantics where the database supports transactional DDL/DML
+    mixes; on failure the transaction is rolled back and the error
+    re-raised.
     """
 
     def run(statements: Sequence[str]) -> None:
@@ -209,19 +175,16 @@ def jvm_statement_executor(
         dm = jvm.java.sql.DriverManager
         c = dm.getConnection(conn.url, conn.user, conn.password)
         try:
-            if transactional:
-                c.setAutoCommit(False)
+            c.setAutoCommit(False)
             st = c.createStatement()
             try:
                 for s in statements:
                     st.execute(s)
             finally:
                 st.close()
-            if transactional:
-                c.commit()
+            c.commit()
         except Exception:
-            if transactional:
-                c.rollback()
+            c.rollback()
             raise
         finally:
             c.close()
@@ -234,6 +197,39 @@ def jvm_statement_executor(
 # ---------------------------------------------------------------------------
 
 
+def _staged(
+    df: DataFrame,
+    conn: JdbcConnection,
+    staging: str,
+    key_columns: list[str],
+    statement: str,
+    *,
+    executor: StatementExecutor,
+    allow_production: bool,
+    write_options: dict[str, str] | None,
+) -> list[str]:
+    """Bulk-write ``df`` to the ``staging`` table (``write_table``'s
+    production guard runs first), then index its key, run the one set
+    ``statement`` and drop staging, in one transaction. An empty ``df``
+    still creates the table, so the index and the drop succeed. Returns
+    the executed statements."""
+    write_table(
+        df,
+        conn,
+        staging,
+        mode="overwrite",
+        allow_production=allow_production,
+        write_options=write_options,
+    )
+    statements = [
+        staging_index_sql(staging, key_columns),
+        statement,
+        f"DROP TABLE {staging}",
+    ]
+    executor(statements)
+    return statements
+
+
 def jdbc_upsert(
     df: DataFrame,
     conn: JdbcConnection,
@@ -241,92 +237,46 @@ def jdbc_upsert(
     key_columns: Sequence[str] | str,
     *,
     executor: StatementExecutor,
-    batchsize: int = 10_000,
     allow_production: bool = False,
     write_options: dict[str, str] | None = None,
 ) -> list[str]:
-    """Staged set-oriented upsert: bulk-write ``df`` to a staging table
-    (parallel batched INSERT across executors), MERGE once in the merge
+    """Staged set-oriented upsert: stage ``df``, MERGE once in the merge
     style of the URL's dialect (ANSI when it names none), drop staging.
     Returns the executed statements (for logs/tests)."""
-    prod_check(conn.url, allow_production=allow_production)
     keys = [key_columns] if isinstance(key_columns, str) else list(key_columns)
     dialect = url_dialect(conn.url)
     staging = staging_name(table, "upsert")
-    write_table(
-        df,
-        conn,
-        staging,
-        mode="overwrite",
-        batchsize=batchsize,
-        allow_production=allow_production,
-        write_options=write_options,
+    merge = merge_sql(table, staging, df.columns, keys, dialect=dialect.name if dialect else "ansi")
+    return _staged(
+        df, conn, staging, keys, merge,
+        executor=executor, allow_production=allow_production, write_options=write_options,
     )
-    statements = [
-        staging_index_sql(staging, keys),
-        merge_sql(table, staging, df.columns, keys, dialect=dialect.name if dialect else "ansi"),
-        f"DROP TABLE {staging}",
-    ]
-    executor(statements)
-    return statements
 
 
 def jdbc_delete(
-    keys: DataFrame | Iterable,
+    keys: DataFrame,
     conn: JdbcConnection,
     table: str,
     key_columns: Sequence[str] | str,
     *,
     executor: StatementExecutor,
-    max_inline_keys: int = 100_000,
     allow_production: bool = False,
     write_options: dict[str, str] | None = None,
 ) -> list[str]:
-    """Keyed delete, single-column or composite. Key sets up to
-    ``max_inline_keys`` ship as batched IN-list (single column) or
-    OR-of-AND (composite) statements — bounded driver memory: keys only,
-    never rows. A larger key DataFrame is staged to the database and
-    deleted with one set-oriented EXISTS statement — no driver collect of
-    the key set. A keys DataFrame pairs with ``key_columns`` by
-    ``walk.key_frame``. Returns the executed statements."""
-    prod_check(conn.url, allow_production=allow_production)
+    """Staged keyed delete, single-column or composite: stage the distinct
+    keys, delete with one ``EXISTS`` statement, drop staging. ``keys``
+    pairs with ``key_columns`` by ``walk.key_frame``. No count and no
+    collect: the key set never reaches the driver. A string key column
+    needs a comparable staged type on databases whose default is a CLOB
+    (``write_options={"createTableColumnTypes": "K VARCHAR(1024)"}``;
+    ``JdbcTarget`` passes it). Returns the executed statements."""
     cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
-    if isinstance(keys, DataFrame):
-        distinct = key_frame(keys, cols).distinct()
-        # bounded probe: count first, collect only under the inline cap
-        n = distinct.count()
-        if n > max_inline_keys:
-            staging = staging_name(table, "delete")
-            write_table(
-                distinct,
-                conn,
-                staging,
-                mode="overwrite",
-                allow_production=allow_production,
-                write_options=write_options,
-            )
-            statements = [
-                staging_index_sql(staging, cols),
-                delete_using_staging_sql(table, staging, cols),
-                f"DROP TABLE {staging}",
-            ]
-            executor(statements)
-            return statements
-        key_list = [tuple(r) for r in distinct.collect()]
-    else:
-        key_list = [
-            tuple(k) if isinstance(k, (tuple, list)) else (k,)
-            for k in dict.fromkeys(
-                tuple(k) if isinstance(k, (tuple, list)) else k for k in keys
-            )
-        ]
-        assert all(len(k) == len(cols) for k in key_list), "key tuple arity mismatch"
-    if len(cols) == 1:
-        statements = delete_in_sql(table, cols[0], [k[0] for k in key_list])
-    else:
-        statements = delete_tuples_sql(table, cols, key_list)
-    executor(statements)
-    return statements
+    staging = staging_name(table, "delete")
+    return _staged(
+        key_frame(keys, cols).distinct(), conn, staging, cols,
+        delete_using_staging_sql(table, staging, cols),
+        executor=executor, allow_production=allow_production, write_options=write_options,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -342,9 +292,9 @@ class JdbcTarget:
     boot and shutdown, ``create_table`` and read-back).
 
     Inserts are parallel batched JDBC writes; upsert stages the update set
-    and runs one MERGE; deletes batch keys into IN-lists (or stage + one
-    EXISTS delete for huge key sets); SQL lists execute in order on one
-    connection. The dialect the URL names (``dialects.url_dialect``)
+    and runs one MERGE; delete stages the distinct keys and runs one
+    EXISTS delete; SQL lists execute in order on one connection, in one
+    transaction. The dialect the URL names (``dialects.url_dialect``)
     decides the identifier case at the boundary, the staged string types
     and the merge style. ``executor`` is injectable for tests; by default
     statements run through the Spark JVM's java.sql.DriverManager.

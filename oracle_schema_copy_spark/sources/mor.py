@@ -35,9 +35,9 @@ mutation log — a window over log rows only, never over base. The base
 table contributes one broadcast anti-join against the distinct mutated
 keys; base file scans stay pruned/pushed-down because read() is plain
 DataFrame composition over parquet scans. ``compact()`` folds the log
-into a new base via the same staged-directory-swap used by the oplog
-warehouse, bounding read amplification; ``stats()`` reports the log size
-that triggers it.
+into a new base via the oplog warehouse's staged-directory swap
+(``oplog.swap_in``), bounding read amplification; ``stats()`` reports
+the log size that triggers it.
 """
 
 from __future__ import annotations
@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.operators.walk import key_frame
+from oracle_schema_copy_spark.plans.oplog import swap_in
 
 
 class MergeOnReadTable:
@@ -183,9 +184,6 @@ class MergeOnReadTable:
         bound. Readers opened after the swap see identical rows."""
         staged = f"{self.path}/base_staged_{uuid.uuid4().hex[:8]}"
         self.read().write.mode("overwrite").parquet(staged)
-        old = f"{self.path}/base_old_{uuid.uuid4().hex[:8]}"
-        os.rename(f"{self.path}/base", old)
-        os.rename(staged, f"{self.path}/base")
+        swap_in(staged, f"{self.path}/base")
         for kind in ("deletes", "updates"):
             shutil.rmtree(f"{self.path}/{kind}", ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)

@@ -42,7 +42,7 @@ def write_partitioned(
 ) -> None:
     """Write ``df`` as a hive-layout parquet table partitioned by the
     given columns. ``max_records_per_file`` bounds output file size the
-    same way the oplog sink's ``rows_per_op`` does."""
+    same way the oplog sink's ``ROWS_PER_OP`` does."""
     w = df.write.mode(mode).partitionBy(*partition_by)
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", str(max_records_per_file))

@@ -54,29 +54,116 @@ def test_live_insert_upsert_delete_roundtrip(spark, tgt):
     with pytest.raises(Exception, match="does not exist"):
         read_query(spark, tgt.conn, "SELECT * FROM T_OSCS_UPSERT_STG").collect()
 
-    # keyed delete (inline IN-list path)
+    # keyed delete: staged keys + one EXISTS statement
     keys = spark.createDataFrame([Row(k=1), Row(k=4)])
     tgt.delete("t", "k", keys)
     assert _state(spark, tgt) == [(2, "B", 20.0), (3, "c", 3.0)]
+    assert _staging_tables(spark, tgt) == []
+
+
+def _staging_tables(spark, tgt):
+    """Names of the staging tables left in the database."""
+    df = read_query(
+        spark, tgt.conn,
+        "SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLENAME LIKE '%_OSCS_%'",
+    )
+    return [r[0] for r in df.collect()]
+
+
+def _keyed_table(spark, tgt, rows, schema, key):
+    df = spark.createDataFrame(rows, schema)
+    tgt.create_table("t", df.schema, primary_key=key)
+    tgt.insert("t", df)
+
+
+def _rows(spark, tgt, cols):
+    df = read_query(spark, tgt.conn, f"SELECT {cols} FROM T")
+    return sorted(tuple(r) for r in df.collect())
 
 
 def test_live_delete_staged_exists_path(spark, tgt):
-    """Force the above-max_inline_keys branch: keys stage to the database
-    and one set-oriented EXISTS delete runs (no driver key collect)."""
+    """Keys stage to the database and one set-oriented EXISTS delete runs
+    in the executor's one transaction: index, delete, drop."""
     base = _mk(spark, [(i, f"v{i}", float(i)) for i in range(20)])
     tgt.create_table("t", base.schema, primary_key=["k"])
     tgt.insert("t", base)
     keys = spark.range(0, 20, 2).select(F.col("id").alias("k"))
-    stmts = jdbc_mutations.jdbc_delete(
-        keys,
-        tgt.conn,
-        "T",
-        ["K"],
-        executor=tgt.executor,
-        max_inline_keys=3,
-    )
-    assert any("EXISTS" in s for s in stmts)
+    stmts = jdbc_mutations.jdbc_delete(keys, tgt.conn, "T", ["K"], executor=tgt.executor)
+    assert stmts == [
+        "CREATE INDEX T_oscs_delete_stg_kix ON T_oscs_delete_stg (K)",
+        jdbc_mutations.delete_using_staging_sql("T", "T_oscs_delete_stg", ["K"]),
+        "DROP TABLE T_oscs_delete_stg",
+    ]
     assert [r[0] for r in _state(spark, tgt)] == list(range(1, 20, 2))
+    assert _staging_tables(spark, tgt) == []
+
+
+def test_live_delete_composite_key(spark, tgt):
+    """A two-column key deletes exactly the (a, b) pairs given: a pair
+    sharing one component with a deleted pair survives."""
+    _keyed_table(
+        spark, tgt, [(a, b, f"{a}{b}") for a in range(3) for b in range(3)],
+        "a long, b long, v string", ["a", "b"],
+    )
+    keys = spark.createDataFrame([(0, 1), (2, 2), (1, 0), (7, 7)], "a long, b long")
+    tgt.delete("t", ["a", "b"], keys)
+    gone = {(0, 1), (2, 2), (1, 0)}
+    want = [(a, b) for a in range(3) for b in range(3) if (a, b) not in gone]
+    assert _rows(spark, tgt, "A, B") == want
+    assert _staging_tables(spark, tgt) == []
+
+
+def test_live_delete_adversarial_string_keys(spark, tgt):
+    """String keys with quotes, SQL text and unicode delete exactly
+    themselves: they travel as staged rows, never as SQL literals."""
+    nasty = ["O'Brien", "''", "'; DROP TABLE T; --", "a''b'", "日本語'キー", 'q"q', "é"]
+    keep = ["O'Brie", "plain", "日本語", "a'b"]
+    _keyed_table(
+        spark, tgt, [(k, i) for i, k in enumerate(nasty + keep)], "k string, v long", ["k"]
+    )
+    tgt.delete("t", "k", spark.createDataFrame([(k,) for k in nasty], "k string"))
+    assert _rows(spark, tgt, "K") == sorted((k,) for k in keep)
+    assert _staging_tables(spark, tgt) == []
+
+
+def test_live_delete_null_key_deletes_nothing(spark, tgt):
+    """A NULL key matches no row, not even rows whose key column is NULL
+    (SQL equality), and the statement still runs."""
+    _keyed_table(
+        spark, tgt, [(1, 2), (2, None), (3, 5)], "k long, g long", ["k"]
+    )
+    keys = spark.createDataFrame([(None,), (2,)], "g long")
+    tgt.delete("t", "g", keys)
+    assert _rows(spark, tgt, "K") == [(2,), (3,)]
+    tgt.delete("t", "g", spark.createDataFrame([(None,)], "g long"))
+    assert _rows(spark, tgt, "K") == [(2,), (3,)]
+    assert _staging_tables(spark, tgt) == []
+
+
+def test_live_delete_empty_key_frame(spark, tgt):
+    """An empty key frame still creates the staging table, so the index,
+    the delete and the drop all run; nothing is deleted."""
+    _keyed_table(spark, tgt, [(1, "a"), (2, "b")], "k long, v string", ["k"])
+    tgt.delete("t", "k", spark.createDataFrame([], "k long"))
+    assert _rows(spark, tgt, "K") == [(1,), (2,)]
+    assert _staging_tables(spark, tgt) == []
+
+
+def test_live_delete_runs_no_driver_count_or_collect(spark, tgt, monkeypatch):
+    """The keyed delete neither counts nor collects its key set: the keys
+    go from the executors straight to the staging table."""
+    _keyed_table(spark, tgt, [(i, str(i)) for i in range(10)], "k long, v string", ["k"])
+    keys = spark.range(0, 10, 3).select(F.col("id").alias("k"))
+
+    def refuse(self, *a, **kw):
+        raise AssertionError("jdbc_delete pulled its keys to the driver")
+
+    # the concrete class: Spark 4's classic DataFrame overrides both
+    for name in ("count", "collect"):
+        monkeypatch.setattr(type(keys), name, refuse)
+    tgt.delete("t", "k", keys)
+    monkeypatch.undo()
+    assert _rows(spark, tgt, "K") == [(k,) for k in range(10) if k % 3]
 
 
 def test_live_merge_duplicate_source_keys_raise(spark, tgt):
@@ -128,7 +215,7 @@ def test_live_ddl_types_roundtrip(spark, tgt):
     assert back.collect() == df.collect()
 
 
-def test_replay_into_target_modes(spark, tgt, tmp_path):
+def test_replay_into_target_modes(spark, tgt, tmp_path, monkeypatch):
     """replay_into_target: tables are created from payload schemas on
     first insert; multi-chunk inserts append; upsert/delete records
     execute through the staged live paths; opaque records (here SQL sent
@@ -139,8 +226,9 @@ def test_replay_into_target_modes(spark, tgt, tmp_path):
 
     base = _mk(spark, [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)])
     log_path = str(tmp_path / "log")
-    with oplog.OperationLogWriter(log_path, rows_per_op=2) as log:
-        log.insert("t", base)  # one insert record; rows_per_op chunks files
+    monkeypatch.setattr(oplog, "ROWS_PER_OP", 2)
+    with oplog.OperationLogWriter(log_path) as log:
+        log.insert("t", base)  # one insert record; ROWS_PER_OP chunks files
         FileTarget(log).execute_sql(["CREATE INDEX T_IX ON T (V)"])
         log.upsert("t", _mk(spark, [(2, "B", 20.0), (9, "i", 9.0)]), ["k"])
         log.delete("t", "k", spark.createDataFrame([Row(k=1)]))

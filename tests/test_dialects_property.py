@@ -249,15 +249,18 @@ def test_sql_literal_roundtrips_through_duckdb(v):
     ),
     extra=st.lists(st.text(max_size=20), max_size=5, unique=True),
 )
-def test_delete_in_sql_executes_in_duckdb(keys, extra):
-    """The batched DELETE statements remove exactly the requested keys."""
+def test_delete_using_staging_sql_executes_in_duckdb(keys, extra):
+    """The EXISTS delete over a staged key table removes exactly the
+    staged keys; a NULL staged key matches nothing."""
     survivors = [e for e in extra if e not in keys]
     con = duckdb.connect()
     con.execute("CREATE TABLE T (K VARCHAR)")
+    con.execute("CREATE TABLE T_STG (K VARCHAR)")
     for k in itertools.chain(keys, survivors):
         con.execute("INSERT INTO T VALUES (?)", [k])
-    for stmt in jm.delete_in_sql("T", "K", keys):
-        con.execute(stmt)
+    for k in [*keys, None]:
+        con.execute("INSERT INTO T_STG VALUES (?)", [k])
+    con.execute(jm.delete_using_staging_sql("T", "T_STG", ["K"]))
     got = sorted(r[0] for r in con.execute("SELECT K FROM T").fetchall())
     assert got == sorted(survivors)
     con.close()

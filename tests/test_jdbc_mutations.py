@@ -1,7 +1,9 @@
-"""JDBC mutation path: SQL generation + target plumbing, executor mocked
-(no database in this environment — the generated statements ARE the
-contract; cf. ExecuteTableUpdate.java:10-27, DeleteByPk.java:15-43,
-ExecuteSqlList.java:11-40)."""
+"""JDBC mutation path: SQL generation + target plumbing (cf.
+ExecuteTableUpdate.java:10-27, DeleteByPk.java:15-43,
+ExecuteSqlList.java:11-40). The generated statements are the contract;
+statement lists run through a recording executor, and the verbs that
+stage rows run against embedded Derby, because staging needs a live
+database."""
 
 from __future__ import annotations
 
@@ -10,8 +12,9 @@ import datetime as dt
 import pytest
 
 from oracle_schema_copy_spark.engine import JdbcTarget
+from oracle_schema_copy_spark.sources import derby
 from oracle_schema_copy_spark.sources import jdbc_mutations as jm
-from oracle_schema_copy_spark.sources.jdbc import JdbcConnection
+from oracle_schema_copy_spark.sources.jdbc import JdbcConnection, read_query
 
 
 def test_merge_sql_ansi():
@@ -56,14 +59,6 @@ def test_sql_literals():
     )
 
 
-def test_delete_in_sql_batches_at_reference_size():
-    stmts = jm.delete_in_sql("lineitem", "l_orderkey", range(1201))
-    assert len(stmts) == 3  # 500 + 500 + 201
-    assert stmts[0].startswith("DELETE FROM lineitem WHERE l_orderkey IN (0, 1,")
-    assert stmts[0].count(",") == 499
-    assert stmts[2].count(",") == 200
-
-
 def test_delete_using_staging_sql():
     sql = jm.delete_using_staging_sql("orders", "orders_oscs_delete_stg", ["o_orderkey"])
     assert sql == (
@@ -72,31 +67,37 @@ def test_delete_using_staging_sql():
     )
 
 
-def test_jdbc_delete_driver_side_batches(spark):
+@pytest.fixture
+def derby_target(spark, tmp_path):
+    t = derby.DerbyTarget(spark, f"{tmp_path}/db")
+    t.execute_sql(["CREATE TABLE ORDERS (O_ORDERKEY BIGINT PRIMARY KEY)"])
+    t.execute_sql([f"INSERT INTO ORDERS VALUES ({i})" for i in range(10)])
+    yield t
+    t.close()
+
+
+def _orderkeys(spark, t):
+    return sorted(r[0] for r in read_query(spark, t.conn, "SELECT O_ORDERKEY FROM ORDERS").collect())
+
+
+def test_jdbc_delete_stages_distinct_keys_once(spark, derby_target):
+    """Duplicate keys stage once (distinct) and one statement list runs
+    through the executor: index the staged key, delete, drop."""
     recorded: list[str] = []
+    staged: list[int] = []
+
+    def executor(statements):
+        recorded.extend(statements)
+        q = "SELECT COUNT(*) AS N FROM ORDERS_OSCS_DELETE_STG"
+        staged.append(read_query(spark, derby_target.conn, q).first()[0])
+        derby_target.executor(statements)
+
     keys = spark.createDataFrame([(i,) for i in range(7)] + [(3,)], ["k"])
-    stmts = jm.jdbc_delete(
-        keys,
-        JdbcConnection(url="jdbc:h2:mem:test"),
-        "orders",
-        "o_orderkey",
-        executor=recorded.extend,
-    )
-    assert recorded == stmts and len(stmts) == 1
-    # keys dedup'd and inlined
-    assert stmts[0].count(",") == 6
-
-
-def test_jdbc_delete_iterable_keys():
-    recorded: list[str] = []
-    stmts = jm.jdbc_delete(
-        ["a", "b", "a"],
-        JdbcConnection(url="jdbc:h2:mem:test"),
-        "t",
-        "name",
-        executor=recorded.extend,
-    )
-    assert stmts == ["DELETE FROM t WHERE name IN ('a', 'b')"]
+    stmts = jm.jdbc_delete(keys, derby_target.conn, "ORDERS", "O_ORDERKEY", executor=executor)
+    assert staged == [7]
+    assert recorded == stmts and len(stmts) == 3
+    assert stmts[1] == jm.delete_using_staging_sql("ORDERS", "ORDERS_oscs_delete_stg", ["O_ORDERKEY"])
+    assert _orderkeys(spark, derby_target) == [7, 8, 9]
 
 
 def test_jdbc_target_execute_sql_and_prod_guard(spark):
@@ -111,7 +112,7 @@ def test_jdbc_target_execute_sql_and_prod_guard(spark):
 
     with pytest.raises(ProductionGuardError):
         jm.jdbc_delete(
-            [1],
+            spark.createDataFrame([(1,)], "k long"),
             JdbcConnection(url="jdbc:oracle:thin:@prod:1521/X"),
             "t",
             "k",
@@ -119,14 +120,21 @@ def test_jdbc_target_execute_sql_and_prod_guard(spark):
         )
 
 
-def test_jdbc_target_delete_no_notimplemented(spark):
-    """The round-1 NotImplementedError stubs are gone: delete flows through
-    SQL generation with an injected executor."""
+def test_jdbc_target_delete_no_notimplemented(spark, derby_target):
+    """The round-1 NotImplementedError stubs are gone: a JdbcTarget over a
+    live URL deletes through the staged path with an injected executor."""
     recorded: list[str] = []
-    t = JdbcTarget(JdbcConnection(url="jdbc:h2:mem:test"), executor=recorded.extend)
+
+    def executor(statements):
+        recorded.extend(statements)
+        derby_target.executor(statements)
+
+    t = JdbcTarget(derby_target.conn, executor=executor)
     keys = spark.createDataFrame([(1,), (2,)], ["o_orderkey"])
     t.delete("orders", "o_orderkey", keys)
-    assert len(recorded) == 1 and recorded[0].startswith("DELETE FROM orders")
+    assert [s.split(" ")[0] for s in recorded] == ["CREATE", "DELETE", "DROP"]
+    assert recorded[1].startswith("DELETE FROM ORDERS t WHERE EXISTS")
+    assert _orderkeys(spark, derby_target) == [0, *range(3, 10)]
 
 
 def test_staging_name_deterministic():

@@ -37,7 +37,8 @@ def test_delete_by_keys_list_and_df(spark, sf_dir):
     n = orders.count()
     keys = [1, 2, 3]
     present = orders.filter(F.col("o_orderkey").isin(keys)).count()
-    out = mutate.delete_by_keys(orders, "o_orderkey", keys, spark)
+    listed = spark.createDataFrame([(k,) for k in keys], "o_orderkey long")
+    out = mutate.delete_by_keys(orders, "o_orderkey", listed)
     assert out.count() == n - present
 
     kdf = orders.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey")

@@ -315,15 +315,17 @@ def test_replay_view_reads_table_rewritten_later_in_log(spark, sf_dir, tmp_path)
 
 
 def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
-    """A warehouse table partitioned by a column must plan scans with
-    PartitionFilters (directory pruning) when filtered on it."""
+    """A table laid out hive-style in a warehouse directory must plan
+    scans with PartitionFilters (directory pruning) when filtered on the
+    partition column."""
+    from oracle_schema_copy_spark.sources.partitioned import read_partitioned, write_partitioned
     from oracle_schema_copy_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    wh = oplog.Warehouse(spark, str(tmp_path / "wh"))
-    wh.write("orders_p", orders, partition_by=["o_orderstatus"])
+    path = str(tmp_path / "wh" / "orders_p")
+    write_partitioned(orders, path, ["o_orderstatus"])
 
-    q = wh.read("orders_p").filter(F.col("o_orderstatus") == "F")
+    q = read_partitioned(spark, path).filter(F.col("o_orderstatus") == "F")
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     # the partition predicate must be IN the partition filters, not a data filter

@@ -35,17 +35,6 @@ def test_sql_literal_escapes_strings(s):
     assert "'" not in lit[1:-1].replace("''", "")
 
 
-@given(st.lists(st.integers(), min_size=0, max_size=2500))
-def test_delete_in_sql_partitions_all_keys(keys):
-    stmts = jm.delete_in_sql("t", "k", keys)
-    assert len(stmts) == (len(keys) + jm.DELETE_BATCH - 1) // jm.DELETE_BATCH
-    found = []
-    for s in stmts:
-        inner = s[s.index("(") + 1 : s.rindex(")")]
-        found.extend(int(x) for x in inner.split(", "))
-    assert found == list(keys)
-
-
 @given(
     st.lists(
         st.text(alphabet="abcdefgh", min_size=1, max_size=6), min_size=1, max_size=8, unique=True
