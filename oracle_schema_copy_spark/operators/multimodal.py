@@ -20,10 +20,11 @@ Decode has two tiers:
   tested, and ``real=True`` routes to the BMP decoder. Swap in
   PIL/ffmpeg for compressed payloads; nothing else changes.
 
-Scale notes: feature extraction is ``mapInPandas`` (Arrow-batched, no
-row-at-a-time Python); binary payloads respect ``maxRecordsPerFile`` so
-parquet files stay balanced even with large blobs; frame sampling is an
-explode of computed offsets — rows multiply, bytes do not (offsets only).
+Scale notes: feature extraction is ``mapInArrow`` (Arrow-batched, no
+row-at-a-time Python, no pandas boxing); binary payloads respect
+``maxRecordsPerFile`` so parquet files stay balanced even with large
+blobs; frame sampling is an explode of computed offsets — rows multiply,
+bytes do not (offsets only).
 """
 
 from __future__ import annotations
@@ -33,7 +34,6 @@ import struct
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -258,16 +258,19 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, list[float]]:
 def extract_features(
     df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload", real: bool = False
 ) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
+    """Arrow-batched feature extraction over binary payloads (``mapInArrow``:
+    payload bytes go straight from Arrow buffers into the decoder and the
+    features come back as Arrow arrays, with no pandas boxing).
 
     ``real=True`` decodes payloads as 24-bit BMP with the pure-numpy
     :func:`decode_bmp` and emits real pixel statistics as features
     (channel means, dimensions, min/max/mean — all exact rationals of
     integer pixel sums). Compressed formats (JPEG/PNG) additionally need
     codec libraries (PIL/ffmpeg) not present in this environment — for
-    those, swap the decode call; the ``mapInPandas`` plumbing — schema,
-    batching, per-partition iteration — is the production shape either way.
+    those, swap the decode call; the plumbing — schema, batching,
+    per-partition iteration — is the production shape either way.
     """
+    import pyarrow as pa
 
     def _real_decode(payload: bytes) -> tuple[int, int, int, list[float]]:
         img = decode_bmp(payload)
@@ -293,40 +296,11 @@ def extract_features(
 
     decode = _real_decode if real else _fake_decode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_channels": [d[2] for d in decoded],
-                    "features": [d[3] for d in decoded],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, FEATURE_SCHEMA)
-
-
-def extract_features_arrow(
-    df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_features`: identical stub
-    decode, but the batch iterator stays in pyarrow RecordBatch form —
-    no pandas materialization per batch. For decode-style workloads the
-    payload bytes go straight from Arrow buffers into the codec and the
-    features come back as an Arrow array, skipping the pandas object
-    boxing entirely — the lower-overhead production path when the UDF
-    body does not need pandas semantics. Output is bit-identical to the
-    pandas path (pytest-pinned)."""
-    import pyarrow as pa
-
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             ids = batch.column(batch.schema.get_field_index(id_col))
             payloads = batch.column(batch.schema.get_field_index(payload_col))
-            decoded = [_fake_decode(p.as_py()) for p in payloads]
+            decoded = [decode(p.as_py()) for p in payloads]
             yield pa.RecordBatch.from_arrays(
                 [
                     ids.cast(pa.int64()),

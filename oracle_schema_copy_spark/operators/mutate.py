@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oracle_schema_copy_spark.operators.walk import _eq_cond, key_frame
+from oracle_schema_copy_spark.operators.walk import _eq_cond, key_cols, key_frame
 
 
 def merge_upsert(
@@ -45,7 +45,7 @@ def merge_upsert(
     UPDATE * WHEN NOT MATCHED INSERT *``, expressed as anti-join + union so
     it runs on plain DataFrames with no table format requirement.
     """
-    keys = [key_columns] if isinstance(key_columns, str) else list(key_columns)
+    keys = key_cols(key_columns)
     updates = updates.select(*target.columns)  # align column order
     if check_unique:
         # Both uniqueness probes (updates side; target side restricted by
@@ -100,8 +100,7 @@ def delete_by_keys(
     """Rows of ``target`` surviving a keyed delete (anti-join rewrite).
     ``key_columns`` may be composite; ``keys`` pairs with them by
     ``walk.key_frame``."""
-    cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
-    keys = key_frame(keys, cols).distinct()
+    keys = key_frame(keys, key_columns).distinct()
     # no broadcast hint: a forced hint overrides the size threshold and
     # collects arbitrarily large key sets to the driver; the planner / AQE
     # broadcasts small key frames on its own (see walk.py module docstring)
@@ -130,7 +129,7 @@ def snapshot_diff(
     in any SQL engine, with no canonical-serialization trap. Unchanged
     keys are dropped map-side after the join.
     """
-    keys = [key_columns] if isinstance(key_columns, str) else list(key_columns)
+    keys = key_cols(key_columns)
     data_cols = [c for c in base.columns if c not in keys]
     assert set(base.columns) == set(current.columns), "snapshot schemas differ"
     b = base.select(
@@ -192,7 +191,7 @@ def scd2_merge(
     detection as in :func:`snapshot_diff`. This is the plan MERGE INTO
     produces for SCD2 on Delta, without the table-format dependency.
     """
-    keys = [key_columns] if isinstance(key_columns, str) else list(key_columns)
+    keys = key_cols(key_columns)
     eff = F.lit(effective_date).cast("date")
     data_cols = [c for c in updates.columns if c not in keys]
     open_rows = current.filter(F.col(valid_to) == F.lit(open_end).cast("date"))

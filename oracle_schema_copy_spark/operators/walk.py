@@ -63,7 +63,8 @@ from pyspark.sql import functions as F
 from oracle_schema_copy_spark.catalog import Catalog, FkEdge, parse_paths, root_table_of_paths
 
 
-def _key_cols(key_columns: str | Sequence[str]) -> list[str]:
+def key_cols(key_columns: str | Sequence[str]) -> list[str]:
+    """The one key-column rule: a bare name is a one-column key."""
     return [key_columns] if isinstance(key_columns, str) else list(key_columns)
 
 
@@ -75,7 +76,7 @@ def key_frame(keys: DataFrame, key_columns: str | Sequence[str]) -> DataFrame:
     would silently delete/select on the leading columns alone. Every
     keyed delete and keyed scan goes through here (DeleteByPk's one key
     rule, ``DeleteByPk.java:15-43``)."""
-    cols = _key_cols(key_columns)
+    cols = key_cols(key_columns)
     if list(keys.columns) == cols:
         return keys
     if set(cols) <= set(keys.columns):
@@ -140,7 +141,7 @@ class TableSelection:
         if rows is not None and (probe_column is None or probe is None):
             raise ValueError("a rows (leaf) selection needs probe_column and probe")
         self.table = table
-        self.key_columns: tuple[str, ...] = tuple(_key_cols(key_columns))
+        self.key_columns: tuple[str, ...] = tuple(key_cols(key_columns))
         self._keys = keys
         self.rows = rows
         self.probe_column = probe_column
@@ -198,7 +199,7 @@ def find_linked_rows(
         child_df.join(
             parent_keys, child_df[child_column] == parent_keys[kcol], "left_semi"
         )
-        .select(*[F.col(c) for c in _key_cols(child_pk)])
+        .select(*[F.col(c) for c in key_cols(child_pk)])
         # frontiers are key SETS: single-col projections of a composite-PK
         # child may repeat across matched rows, and the frontier is
         # broadcast on the next hop — dedup here keeps it minimal
@@ -211,7 +212,7 @@ def seed_frame(
 ) -> DataFrame:
     """Build the root key frontier from driver-side seed values (bounded).
     For composite keys pass tuple values matching ``key_columns`` order."""
-    cols = _key_cols(key_columns)
+    cols = key_cols(key_columns)
     vals = [tuple(v) if isinstance(v, (tuple, list)) else (v,) for v in values]
     return spark.createDataFrame(vals, cols).distinct()
 

@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from oracle_schema_copy_spark.operators import mutate
-from oracle_schema_copy_spark.operators.walk import key_frame
+from oracle_schema_copy_spark.operators.walk import key_cols, key_frame
 
 MANIFEST = "manifest.jsonl"
 ROWS_PER_OP = 10_000  # rows per payload file
@@ -150,14 +150,13 @@ class OperationLogWriter:
 
     def upsert(self, table: str, df: DataFrame, key_columns: list[str] | str) -> None:
         """Merge rows into ``table`` by key on replay (K4 / ExecuteTableUpdate)."""
-        keys = [key_columns] if isinstance(key_columns, str) else list(key_columns)
-        self._data_op("upsert", table, df, {"key_columns": keys})
+        self._data_op("upsert", table, df, {"key_columns": key_cols(key_columns)})
 
     def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
         """Delete rows of ``table`` by (possibly composite) key on replay
         (K5 / DeleteByPk). ``keys`` pairs with ``key_columns`` by
         ``walk.key_frame``; the payload holds exactly the key columns."""
-        cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
+        cols = key_cols(key_columns)
         self._data_op("delete", table, key_frame(keys, cols), {"key_columns": cols})
 
     # -- plumbing ------------------------------------------------------------

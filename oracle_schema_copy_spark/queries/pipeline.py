@@ -761,9 +761,9 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.frame_offsets(docs, bytes_per_frame=10, stride=5)
 
 
-@query(
-    "multimodal_feature_extract",
-    """
+# feature bytes re-derived from the sha256 hex digest (b/256 is exact in
+# float32 on both engines)
+_SQL_FEATURE_EXTRACT = """
     WITH h AS (SELECT doc_id, sha256(text) AS hx FROM documents)
     SELECT doc_id,
            CAST(16 + CAST(('0x' || substr(hx, 1, 2)) AS INT) % 16 AS INT) AS width,
@@ -772,15 +772,18 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(u AS INT) AS feat_pos,
            CAST(CAST(('0x' || substr(hx, 5 + 2 * u, 2)) AS INT) / 256.0 AS REAL) AS feat_value
     FROM h, (SELECT unnest(generate_series(0, 7)) AS u)
-    """,
-)
+"""
+
+
+@query("multimodal_feature_extract_arrow", _SQL_FEATURE_EXTRACT, changed_in=10)
+@query("multimodal_feature_extract", _SQL_FEATURE_EXTRACT, changed_in=10)
 def q_multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched (mapInPandas) feature extraction over binary payloads
+    """Arrow-batched (mapInArrow) feature extraction over binary payloads
     with a deterministic stub decoder (codec libs absent — the schema /
     batching / partition plumbing is the production shape). The query
     posexplodes the feature vector to scalar rows so every value is
-    driver-hashable; the oracle re-derives each feature byte from the
-    sha256 hex digest (b/256 is exact in float32 on both engines)."""
+    driver-hashable. Both names run this one path, so the driver's rows
+    under each name stay comparable."""
     docs = multimodal.attach_binary(load_table(spark, sf_dir, "documents"))
     feats = multimodal.extract_features(docs)
     return feats.select(

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.functions import text as tf
-from oracle_schema_copy_spark.operators import dedup, multimodal, similarity
+from oracle_schema_copy_spark.operators import dedup, similarity
 from oracle_schema_copy_spark.queries import query
 from oracle_schema_copy_spark.sources.tables import load_table
 from oracle_schema_copy_spark.queries._fragments import (
@@ -413,36 +413,6 @@ def q_curation_shard_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("sum_tokens"),
         F.sum("pos").cast("long").alias("pos_checksum"),
-    )
-
-
-@query(
-    "multimodal_feature_extract_arrow",
-    """
-    WITH h AS (SELECT doc_id, sha256(text) AS hx FROM documents)
-    SELECT doc_id,
-           CAST(16 + CAST(('0x' || substr(hx, 1, 2)) AS INT) % 16 AS INT) AS width,
-           CAST(16 + CAST(('0x' || substr(hx, 3, 2)) AS INT) % 16 AS INT) AS height,
-           CAST(3 AS INT) AS n_channels,
-           CAST(u AS INT) AS feat_pos,
-           CAST(CAST(('0x' || substr(hx, 5 + 2 * u, 2)) AS INT) / 256.0 AS REAL) AS feat_value
-    FROM h, (SELECT unnest(generate_series(0, 7)) AS u)
-    """,
-)
-def q_multimodal_feature_extract_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mapInArrow twin of multimodal_feature_extract: same stub
-    decode, same oracle, but batches stay pyarrow RecordBatches — payload
-    bytes go straight from Arrow buffers into the decoder with no pandas
-    boxing, the lower-overhead production path for codec-style UDFs
-    (operators/multimodal.py extract_features_arrow)."""
-    docs = multimodal.attach_binary(load_table(spark, sf_dir, "documents"))
-    feats = multimodal.extract_features_arrow(docs)
-    return feats.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_channels",
-        F.posexplode("features").alias("feat_pos", "feat_value"),
     )
 
 

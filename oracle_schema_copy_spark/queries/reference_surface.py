@@ -38,6 +38,7 @@ def _flagship_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
     headline=True,
+    changed_in=8,
 )
 def q_copy_tree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: FK-subgraph copy customer→orders→lineitem, return the copied
@@ -64,6 +65,7 @@ def q_copy_tree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey FROM orders
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
+    changed_in=8,
 )
 def q_copy_tree_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-table copied-row counts of the flagship walk (exercises the count
@@ -85,6 +87,7 @@ def q_copy_tree_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o.* FROM orders o
     WHERE o.o_custkey NOT IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0)
     """,
+    changed_in=10,
 )
 def q_delete_tree_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """deleteTree: surviving orders rows after deleting the walked subgraph."""
@@ -102,6 +105,7 @@ def q_delete_tree_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l.* FROM lineitem l
     WHERE l.l_orderkey % 200 = 0 AND l.l_linenumber <= 2
     """,
+    changed_in=8,
 )
 def q_copy_tree_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-PK selection copy: (l_orderkey, l_linenumber) tuples seeded
@@ -134,6 +138,7 @@ def q_copy_tree_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFram
     SELECT o.* FROM orders o
     WHERE o.o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 5 = 0)
     """,
+    changed_in=6,
 )
 def q_keyed_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 keyed scan: orders whose o_custkey is in a key frontier (the
@@ -178,6 +183,7 @@ def q_linked_rows_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT * FROM orders WHERE o_orderkey % 7 <> 0
     """,
     headline=True,
+    changed_in=10,
 )
 def q_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K4 upsert as a single set-oriented merge (vs the reference's per-row
@@ -195,6 +201,7 @@ def q_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l.* FROM lineitem l
     WHERE l.l_orderkey NOT IN (SELECT o_orderkey FROM orders WHERE o_orderkey % 13 = 0)
     """,
+    changed_in=10,
 )
 def q_delete_by_keys_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 keyed delete: anti-join rewrite of lineitem."""
@@ -444,6 +451,7 @@ def q_partition_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT * FROM upd
     """,
+    changed_in=6,
 )
 def q_mor_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read SEQUENCED mutation log (sources/mor.py): base orders
@@ -478,6 +486,7 @@ def q_mor_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mor_time_travel_orders",
     "SELECT * FROM orders WHERE o_orderkey % 13 <> 0",
+    changed_in=6,
 )
 def q_mor_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-travel read of the sequenced merge-on-read log: same table
@@ -519,6 +528,7 @@ def q_mor_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT * FROM upd
     """,
+    changed_in=9,
 )
 def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read COMPACTION is invisible to readers: the same
@@ -566,6 +576,7 @@ def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
+    changed_in=10,
 )
 def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2+S10 operation-log round trip: export insert+upsert+delete ops to a
@@ -602,6 +613,7 @@ def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
+    changed_in=10,
 )
 def q_oplog_atomic_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The transactional twin of oplog_roundtrip_orders: the same
@@ -638,6 +650,7 @@ def q_oplog_atomic_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n.n_name AS nation_name, r.r_name AS region_name
     FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
     """,
+    changed_in=9,
 )
 def q_export_view_opaque_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 other-object export: a VIEW definition plus trigger/sequence
@@ -675,7 +688,7 @@ def q_export_view_opaque_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.table(view_name)
 
 
-@query("export_all_roundtrip_nation", "SELECT * FROM nation")
+@query("export_all_roundtrip_nation", "SELECT * FROM nation", changed_in=9)
 def q_export_all_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 exportAll pipeline: DDL → data in topo order → constraints after
     data; replayed into a fresh warehouse, returning the imported nation."""
@@ -725,6 +738,7 @@ def q_export_all_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame
        OR b.o_orderdate     IS DISTINCT FROM c.o_orderdate
        OR b.o_orderpriority IS DISTINCT FROM c.o_orderpriority
     """,
+    changed_in=10,
 )
 def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC snapshot diff: which keys changed between two table versions,
@@ -849,6 +863,7 @@ def q_zorder_locality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST('2001-06-01' AS DATE), CAST('9999-12-31' AS DATE)
     FROM upd u WHERE u.c_custkey NOT IN (SELECT c_custkey FROM cur)
     """,
+    changed_in=10,
 )
 def q_scd2_customer_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type-2 merge over the customer dimension:
@@ -895,7 +910,7 @@ def _copy_verify_oracle() -> str:
     """
 
 
-@query("copy_verify_end_to_end", _copy_verify_oracle())
+@query("copy_verify_end_to_end", _copy_verify_oracle(), changed_in=9)
 def q_copy_verify_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's mission as one gated row: COPY a table through the
     full operation-log pipeline (export -> manifest+parquet log -> replay
@@ -1018,6 +1033,7 @@ def q_dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 2, 'delete', 'orders', 0,
            (SELECT CAST(count(*) AS BIGINT) FROM orders WHERE o_orderkey % 500 = 0)
     """,
+    changed_in=10,
 )
 def q_oplog_history_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 Python Data Source (SPARK-44076) surface: the operation
@@ -1092,6 +1108,7 @@ _ORDERS_EXCL = ", ".join(
        'INSERT INTO ORDERS ({_ORDERS_COLS}) SELECT {_ORDERS_COLS} FROM ORDERS_oscs_upsert_stg ON CONFLICT (O_ORDERKEY) DO UPDATE SET {_ORDERS_EXCL}')
     ) AS t(dialect, object_name, stmt_kind, sql_text)
     """,
+    changed_in=6,
 )
 def q_ddl_dialect_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K6/K4 portability matrix: the dialect-parameterized DDL + upsert

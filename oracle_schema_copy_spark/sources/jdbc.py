@@ -21,6 +21,8 @@ Scale notes baked into the defaults:
 
 from __future__ import annotations
 
+import datetime as _dt
+import math as _math
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,6 +91,37 @@ def read_table(
     return reader.load()
 
 
+def sql_literal(v) -> str:
+    """Render a Python value as a SQL literal (key values only: numbers,
+    strings, dates — the types primary keys are made of). The pushed
+    keyed read (:func:`read_table_keyed`) renders its probes with it."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, float) and not _math.isfinite(v):
+        # str(nan/inf) is not valid SQL in any dialect; a NaN "key" can
+        # never equality-match a row anyway, so this is always a caller bug
+        raise ValueError(f"non-finite float {v!r} cannot be a SQL key literal")
+    if isinstance(v, (int, float)):
+        return str(v)
+    if isinstance(v, _dt.datetime):
+        # isoformat keeps microseconds when present; a whole-second value
+        # renders without them — both are valid TIMESTAMP literals, and
+        # sub-second keys must not be silently truncated to a wrong match.
+        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
+    if isinstance(v, _dt.date):
+        return f"DATE '{v.isoformat()}'"
+    s = str(v).replace("'", "''")
+    if "\x00" in s:
+        # NUL terminates the quoted literal in the PG-family parsers (and
+        # PG text columns cannot store it at all) — inlining it silently
+        # yields an unparseable statement (found by the r13 dialect
+        # property suite). Loud, like the non-finite-float guard above.
+        raise ValueError("NUL (\\x00) cannot appear in a SQL string literal key")
+    return f"'{s}'"
+
+
 def read_table_keyed(
     spark: SparkSession,
     conn: JdbcConnection,
@@ -115,8 +148,6 @@ def read_table_keyed(
     by ``read_table_keyed_auto``'s ``max_inline_keys`` (a frontier larger
     than that belongs on the staged/semi-join path anyway).
     """
-    from oracle_schema_copy_spark.sources.jdbc_mutations import sql_literal
-
     # dedupe: predicates must partition the keyspace DISJOINTLY — a key
     # landing in two probe batches would return its rows twice. None is
     # dropped, not rendered: a bare NULL inside IN (...) is a syntax error

@@ -30,15 +30,13 @@ embedded Derby (``sources/derby.py``).
 
 from __future__ import annotations
 
-import datetime as _dt
-import math as _math
 from dataclasses import dataclass
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from oracle_schema_copy_spark.operators.walk import key_frame
+from oracle_schema_copy_spark.operators.walk import key_cols, key_frame
 from oracle_schema_copy_spark.sources.dialects import get_dialect, url_dialect
 from oracle_schema_copy_spark.sources.jdbc import JdbcConnection, write_table
 
@@ -91,37 +89,6 @@ def merge_sql(
         f"{matched}"
         f"WHEN NOT MATCHED THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
     )
-
-
-def sql_literal(v) -> str:
-    """Render a Python value as a SQL literal (key values only: numbers,
-    strings, dates — the types primary keys are made of). The pushed
-    keyed read (``jdbc.read_table_keyed``) renders its probes with it."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, float) and not _math.isfinite(v):
-        # str(nan/inf) is not valid SQL in any dialect; a NaN "key" can
-        # never equality-match a row anyway, so this is always a caller bug
-        raise ValueError(f"non-finite float {v!r} cannot be a SQL key literal")
-    if isinstance(v, (int, float)):
-        return str(v)
-    if isinstance(v, _dt.datetime):
-        # isoformat keeps microseconds when present; a whole-second value
-        # renders without them — both are valid TIMESTAMP literals, and
-        # sub-second keys must not be silently truncated to a wrong match.
-        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
-    if isinstance(v, _dt.date):
-        return f"DATE '{v.isoformat()}'"
-    s = str(v).replace("'", "''")
-    if "\x00" in s:
-        # NUL terminates the quoted literal in the PG-family parsers (and
-        # PG text columns cannot store it at all) — inlining it silently
-        # yields an unparseable statement (found by the r13 dialect
-        # property suite). Loud, like the non-finite-float guard above.
-        raise ValueError("NUL (\\x00) cannot appear in a SQL string literal key")
-    return f"'{s}'"
 
 
 def delete_using_staging_sql(
@@ -243,7 +210,7 @@ def jdbc_upsert(
     """Staged set-oriented upsert: stage ``df``, MERGE once in the merge
     style of the URL's dialect (ANSI when it names none), drop staging.
     Returns the executed statements (for logs/tests)."""
-    keys = [key_columns] if isinstance(key_columns, str) else list(key_columns)
+    keys = key_cols(key_columns)
     dialect = url_dialect(conn.url)
     staging = staging_name(table, "upsert")
     merge = merge_sql(table, staging, df.columns, keys, dialect=dialect.name if dialect else "ansi")
@@ -270,7 +237,7 @@ def jdbc_delete(
     needs a comparable staged type on databases whose default is a CLOB
     (``write_options={"createTableColumnTypes": "K VARCHAR(1024)"}``;
     ``JdbcTarget`` passes it). Returns the executed statements."""
-    cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
+    cols = key_cols(key_columns)
     staging = staging_name(table, "delete")
     return _staged(
         key_frame(keys, cols).distinct(), conn, staging, cols,
@@ -316,7 +283,7 @@ class JdbcTarget:
     ) -> tuple[str, DataFrame, list[str], dict[str, str] | None]:
         """``(table, df, columns, write_options)`` for one write, under the
         URL dialect's identifier rule (``dialects`` module doc)."""
-        cols = [columns] if isinstance(columns, str) else list(columns)
+        cols = key_cols(columns)
         d = url_dialect(self.conn.url)
         if d is None or not d.fold_upper:
             return table, df, cols, None

@@ -23,7 +23,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import types as T
 
-from oracle_schema_copy_spark.sources import jdbc_mutations as jm
+from oracle_schema_copy_spark.sources import jdbc, jdbc_mutations as jm
 from oracle_schema_copy_spark.sources.dialects import DIALECTS
 
 # The generators emit UNQUOTED uppercase identifiers (their documented
@@ -226,9 +226,9 @@ def test_ansi_merge_invariants(cols, data):
 def test_sql_literal_roundtrips_through_duckdb(v):
     if isinstance(v, str) and "\x00" in v:
         with pytest.raises(ValueError, match="NUL"):
-            jm.sql_literal(v)
+            jdbc.sql_literal(v)
         return
-    got = duckdb.connect().execute(f"SELECT {jm.sql_literal(v)}").fetchone()[0]
+    got = duckdb.connect().execute(f"SELECT {jdbc.sql_literal(v)}").fetchone()[0]
     if isinstance(v, bool):
         assert got is v
     elif isinstance(v, float):

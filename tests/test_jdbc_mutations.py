@@ -12,7 +12,7 @@ import datetime as dt
 import pytest
 
 from oracle_schema_copy_spark.engine import JdbcTarget
-from oracle_schema_copy_spark.sources import derby
+from oracle_schema_copy_spark.sources import derby, jdbc
 from oracle_schema_copy_spark.sources import jdbc_mutations as jm
 from oracle_schema_copy_spark.sources.jdbc import JdbcConnection, read_query
 
@@ -46,15 +46,15 @@ def test_merge_sql_postgres_upsert():
 
 
 def test_sql_literals():
-    assert jm.sql_literal(42) == "42"
-    assert jm.sql_literal(None) == "NULL"
-    assert jm.sql_literal("O'Brien") == "'O''Brien'"
-    assert jm.sql_literal(dt.date(2024, 3, 1)) == "DATE '2024-03-01'"
-    assert jm.sql_literal(dt.datetime(2024, 3, 1, 12, 30)) == "TIMESTAMP '2024-03-01 12:30:00'"
+    assert jdbc.sql_literal(42) == "42"
+    assert jdbc.sql_literal(None) == "NULL"
+    assert jdbc.sql_literal("O'Brien") == "'O''Brien'"
+    assert jdbc.sql_literal(dt.date(2024, 3, 1)) == "DATE '2024-03-01'"
+    assert jdbc.sql_literal(dt.datetime(2024, 3, 1, 12, 30)) == "TIMESTAMP '2024-03-01 12:30:00'"
     # sub-second precision must survive (a truncated literal silently
     # matches the wrong rows on a timestamp key)
     assert (
-        jm.sql_literal(dt.datetime(2024, 3, 1, 12, 30, 0, 123456))
+        jdbc.sql_literal(dt.datetime(2024, 3, 1, 12, 30, 0, 123456))
         == "TIMESTAMP '2024-03-01 12:30:00.123456'"
     )
 

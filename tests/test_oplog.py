@@ -314,25 +314,6 @@ def test_replay_view_reads_table_rewritten_later_in_log(spark, sf_dir, tmp_path)
         spark.catalog.dropTempView("nation_rw")
 
 
-def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
-    """A table laid out hive-style in a warehouse directory must plan
-    scans with PartitionFilters (directory pruning) when filtered on the
-    partition column."""
-    from oracle_schema_copy_spark.sources.partitioned import read_partitioned, write_partitioned
-    from oracle_schema_copy_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "wh" / "orders_p")
-    write_partitioned(orders, path, ["o_orderstatus"])
-
-    q = read_partitioned(spark, path).filter(F.col("o_orderstatus") == "F")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    # the partition predicate must be IN the partition filters, not a data filter
-    assert "o_orderstatus" in plan.split("PartitionFilters:")[1].split("]")[0]
-    assert q.count() == orders.filter(F.col("o_orderstatus") == "F").count()
-
-
 def test_warehouse_reads_with_the_schema_it_wrote(spark, tmp_path, reader_jobs):
     """A table this warehouse wrote reads without a schema job; drop
     forgets the schema, so a later append with another schema reads with

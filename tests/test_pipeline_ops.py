@@ -237,21 +237,6 @@ def test_shard_assignment_writer_plan(spark, tmp_path):
     assert s.exceptAll(again).isEmpty() and again.exceptAll(s).isEmpty()
 
 
-def test_extract_features_arrow_matches_pandas_path(spark):
-    """mapInArrow and mapInPandas feature extraction are bit-identical:
-    same stub decoder, same schema, no pandas boxing on the arrow path."""
-    from oracle_schema_copy_spark.operators import multimodal
-    from oracle_schema_copy_spark.sources.tables import load_table
-
-    docs = multimodal.attach_binary(
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-    ).limit(50)
-    a = multimodal.extract_features_arrow(docs)
-    p = multimodal.extract_features(docs)
-    assert a.schema == p.schema
-    assert a.exceptAll(p).isEmpty() and p.exceptAll(a).isEmpty()
-
-
 def test_bmp_codec_roundtrip_and_real_resize(spark):
     """The pure-numpy BMP codec is a REAL codec: encode→decode round-trips
     arbitrary RGB arrays exactly (incl. widths that force 4-byte row

@@ -14,7 +14,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from oracle_schema_copy_spark.sources import jdbc_mutations as jm
+from oracle_schema_copy_spark.sources import jdbc, jdbc_mutations as jm
 
 # ---------------------------------------------------------------------------
 # pure functions: wide coverage
@@ -27,9 +27,9 @@ def test_sql_literal_escapes_strings(s):
         # NUL cannot be expressed inside a quoted SQL literal (r13 dialect
         # property suite finding) — the generator refuses loudly
         with pytest.raises(ValueError, match="NUL"):
-            jm.sql_literal(s)
+            jdbc.sql_literal(s)
         return
-    lit = jm.sql_literal(s)
+    lit = jdbc.sql_literal(s)
     assert lit.startswith("'") and lit.endswith("'")
     # every quote in the body is doubled: stripping doubled quotes leaves none
     assert "'" not in lit[1:-1].replace("''", "")

@@ -1,8 +1,9 @@
 """Registry / check-order invariants (no SparkSession needed).
 
-Round 3 shipped three _CHECK_FIRST names with no implementation behind
-them — silently dropped by the old _check_order, so the list claimed
-coverage that didn't exist. These tests pin the loud-failure behavior.
+The check order is computed from each query's ``changed_in`` tag, the
+registry order and the short ``_CHECK_LAST`` list. A ``_CHECK_LAST`` name
+with no implementation behind it, or listed twice, fails loudly instead
+of silently claiming coverage.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ from oracle_schema_copy_spark import queries as q
 
 def test_check_order_names_all_resolve():
     names = list(q.queries())  # raises on ghosts / duplicates
-    assert set(q._CHECK_FIRST) <= set(names)
     assert set(q._CHECK_LAST) <= set(names)
     assert len(names) == len(set(names)) == len(q.REGISTRY)
 
@@ -31,12 +31,45 @@ def test_r4_deliverables_are_registered_with_oracles():
 
 
 def test_ghost_check_order_name_raises():
-    q._CHECK_FIRST.append("query_that_does_not_exist")
+    q._CHECK_LAST.append("query_that_does_not_exist")
     try:
         with pytest.raises(ValueError, match="ghosts"):
             q.queries()
     finally:
-        q._CHECK_FIRST.remove("query_that_does_not_exist")
+        q._CHECK_LAST.remove("query_that_does_not_exist")
+
+
+def test_check_order_is_computed_from_tags_registry_and_last():
+    """Tagged names lead, highest tag first with ties in registry order;
+    untagged names follow in registry order; untagged ``_CHECK_LAST``
+    names close in its order; a tagged ``_CHECK_LAST`` name leads."""
+    q._load_all()
+    registry = list(q.REGISTRY)
+    untagged = [n for n in registry if not q.REGISTRY[n].changed_in]
+    a, b, c, d = [n for n in untagged if n not in q._CHECK_LAST][:4]
+    listed = q._CHECK_LAST[0]
+    tags = {a: 1001, b: 1000, c: 1001, listed: 1000}  # d stays untagged
+    q._CHECK_LAST.append(d)
+    try:
+        for n, t in tags.items():
+            q.REGISTRY[n].changed_in = t
+        names = list(q.queries())
+        assert names[:4] == [a, c, b, listed]
+        tagged = [n for n in names if q.REGISTRY[n].changed_in]
+        assert names[: len(tagged)] == tagged
+        assert [q.REGISTRY[n].changed_in for n in tagged] == sorted(
+            (q.REGISTRY[n].changed_in for n in tagged), reverse=True
+        )
+        last = [n for n in q._CHECK_LAST if not q.REGISTRY[n].changed_in]
+        assert names[len(names) - len(last) :] == last
+        assert names[-1] == d
+        middle = names[len(tagged) : len(names) - len(last)]
+        assert middle == [n for n in registry if n not in tagged and n not in last]
+        assert list(q.oracle_sql()) == [n for n in names if q.REGISTRY[n].oracle]
+    finally:
+        q._CHECK_LAST.remove(d)
+        for n in tags:
+            q.REGISTRY[n].changed_in = 0
 
 
 def test_never_driver_checked_queries_lead_check_order():
@@ -84,7 +117,7 @@ def test_driver_mimic_unknown_only_name_fails_fast():
 
 
 def test_duplicate_check_order_name_raises():
-    q._CHECK_LAST.append(q._CHECK_FIRST[0])
+    q._CHECK_LAST.append(q._CHECK_LAST[0])
     try:
         with pytest.raises(ValueError, match="twice"):
             q.queries()
