@@ -140,13 +140,19 @@ def _query_set():
 
 
 def _run_one(name: str, sf_dir: str, cpus: int, runs: int) -> None:
-    """Subprocess entry: fresh JVM, warmup, time one query, print JSON."""
+    """Subprocess entry: fresh JVM, warmup, time one query, print JSON.
+    ``name`` is looked up in the whole registry, whatever the bench set;
+    an unknown name exits before the JVM starts."""
+    from oracle_schema_copy_spark import queries
     from oracle_schema_copy_spark.session import get_spark
 
+    fns = queries.queries()
+    if name not in fns:
+        raise SystemExit(f"unknown query {name!r}")
     spark = get_spark(f"oscs-bench-{name}", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     _warmup(spark)
-    res = _time_query(spark, _query_set()[1][name], sf_dir, runs)
+    res = _time_query(spark, fns[name], sf_dir, runs)
     print("BENCH_ONE " + json.dumps({"name": name, **res}), flush=True)
     spark.stop()
 

@@ -131,8 +131,9 @@ class Engine:
             for sel in reversed(sels):
                 # full composite key list — the leading column alone would
                 # over-delete any partial selection of a composite-PK table.
-                # Leaf selections derive their key tuples lazily here (sinks
-                # need explicit keys; data-plane deletes never do).
+                # A selection that is not exact derives its key tuples
+                # lazily here (sinks need explicit keys; data-plane deletes
+                # never do).
                 target.delete(sel.table, list(sel.key_columns), sel.keys)
         finally:
             walk.release(sels)

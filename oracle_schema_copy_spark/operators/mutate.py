@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oracle_schema_copy_spark.operators.walk import _eq_cond, key_cols, key_frame
+from oracle_schema_copy_spark.operators.walk import _keyed_join, key_cols
 
 
 def merge_upsert(
@@ -54,12 +54,7 @@ def merge_upsert(
         # Spark job: two serial collect()s were two full scheduling
         # rounds for two tiny aggregates (r13 bench: ~0.2s of the
         # upsert_orders build was the second round).
-        # no .distinct() on the semi-probe: semi-join output is invariant
-        # to build-side duplicates, and the dedup cost an exchange inside
-        # the guard job
-        touched = target.join(
-            updates.select(*keys), on=keys, how="left_semi"
-        )
+        touched = _keyed_join(target, keys, updates, "left_semi")
         # guard-internal aliases carry a "__guard_" prefix so a key column
         # legitimately named "n" or "__side" can never collide with them
         tagged = updates.select(
@@ -90,7 +85,7 @@ def merge_upsert(
                 f"{bad[0].side} has duplicate key [{bad[0].key}] — upsert "
                 "would match >1 row"
             )
-    untouched = target.join(updates.select(*keys), on=keys, how="left_anti")
+    untouched = _keyed_join(target, keys, updates, "left_anti")
     return untouched.unionByName(updates)
 
 
@@ -100,11 +95,10 @@ def delete_by_keys(
     """Rows of ``target`` surviving a keyed delete (anti-join rewrite).
     ``key_columns`` may be composite; ``keys`` pairs with them by
     ``walk.key_frame``."""
-    keys = key_frame(keys, key_columns).distinct()
     # no broadcast hint: a forced hint overrides the size threshold and
     # collects arbitrarily large key sets to the driver; the planner / AQE
     # broadcasts small key frames on its own (see walk.py module docstring)
-    return target.join(keys, _eq_cond(target, keys), "left_anti")
+    return _keyed_join(target, key_columns, keys, "left_anti")
 
 
 def snapshot_diff(
@@ -234,9 +228,7 @@ def scd2_merge(
         F.lit(open_end).cast("date").alias(valid_to),
     ).select(*current.columns)
     # brand-new keys: first open version starts at the effective date
-    inserts = updates.join(
-        open_rows.select(*keys).distinct(), keys, "left_anti"
-    ).select(
+    inserts = _keyed_join(updates, keys, open_rows, "left_anti").select(
         *[x for x in current.columns if x not in (valid_from, valid_to)],
         eff.alias(valid_from),
         F.lit(open_end).cast("date").alias(valid_to),

@@ -194,7 +194,7 @@ def q_oplog_import_into_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey FROM orders
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_jdbc_copy_tree_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2+K1 live: the flagship FK-subgraph walk copied INTO embedded Derby
@@ -449,7 +449,7 @@ _PROBE_MATRIX_BUDGET = 10_000
            nk AS n_orders, CAST(0.0 AS DOUBLE) AS total_price
     FROM n
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_jdbc_walk_probe_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The keyed-read strategy MATRIX live (VERDICT r10 #7): the same

@@ -38,7 +38,7 @@ def _flagship_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
     headline=True,
-    changed_in=8,
+    changed_in=11,
 )
 def q_copy_tree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: FK-subgraph copy customer→orders→lineitem, return the copied
@@ -65,7 +65,7 @@ def q_copy_tree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey FROM orders
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
-    changed_in=8,
+    changed_in=11,
 )
 def q_copy_tree_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-table copied-row counts of the flagship walk (exercises the count
@@ -87,7 +87,7 @@ def q_copy_tree_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o.* FROM orders o
     WHERE o.o_custkey NOT IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0)
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_delete_tree_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """deleteTree: surviving orders rows after deleting the walked subgraph."""
@@ -105,7 +105,7 @@ def q_delete_tree_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l.* FROM lineitem l
     WHERE l.l_orderkey % 200 = 0 AND l.l_linenumber <= 2
     """,
-    changed_in=8,
+    changed_in=11,
 )
 def q_copy_tree_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-PK selection copy: (l_orderkey, l_linenumber) tuples seeded
@@ -138,7 +138,7 @@ def q_copy_tree_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFram
     SELECT o.* FROM orders o
     WHERE o.o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 5 = 0)
     """,
-    changed_in=6,
+    changed_in=11,
 )
 def q_keyed_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 keyed scan: orders whose o_custkey is in a key frontier (the
@@ -158,6 +158,7 @@ def q_keyed_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT DISTINCT l.l_orderkey FROM lineitem l
     WHERE l.l_partkey IN (SELECT p_partkey FROM part WHERE p_size > 40)
     """,
+    changed_in=11,
 )
 def q_linked_rows_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 linked-rows probe: child PKs reachable from a parent key set."""
@@ -183,7 +184,7 @@ def q_linked_rows_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT * FROM orders WHERE o_orderkey % 7 <> 0
     """,
     headline=True,
-    changed_in=10,
+    changed_in=11,
 )
 def q_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K4 upsert as a single set-oriented merge (vs the reference's per-row
@@ -201,7 +202,7 @@ def q_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l.* FROM lineitem l
     WHERE l.l_orderkey NOT IN (SELECT o_orderkey FROM orders WHERE o_orderkey % 13 = 0)
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_delete_by_keys_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 keyed delete: anti-join rewrite of lineitem."""
@@ -451,7 +452,7 @@ def q_partition_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT * FROM upd
     """,
-    changed_in=6,
+    changed_in=11,
 )
 def q_mor_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read SEQUENCED mutation log (sources/mor.py): base orders
@@ -486,7 +487,7 @@ def q_mor_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mor_time_travel_orders",
     "SELECT * FROM orders WHERE o_orderkey % 13 <> 0",
-    changed_in=6,
+    changed_in=11,
 )
 def q_mor_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-travel read of the sequenced merge-on-read log: same table
@@ -528,7 +529,7 @@ def q_mor_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT * FROM upd
     """,
-    changed_in=9,
+    changed_in=11,
 )
 def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read COMPACTION is invisible to readers: the same
@@ -576,7 +577,7 @@ def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2+S10 operation-log round trip: export insert+upsert+delete ops to a
@@ -613,7 +614,7 @@ def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_oplog_atomic_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The transactional twin of oplog_roundtrip_orders: the same
@@ -863,7 +864,7 @@ def q_zorder_locality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST('2001-06-01' AS DATE), CAST('9999-12-31' AS DATE)
     FROM upd u WHERE u.c_custkey NOT IN (SELECT c_custkey FROM cur)
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_scd2_customer_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type-2 merge over the customer dimension:

@@ -569,7 +569,7 @@ def q_stream_cms_sketch_live(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 6) AS total_value
     FROM events GROUP BY user_id
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_stream_cdc_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL end-to-end streaming CDC pipeline: the event stream is staged

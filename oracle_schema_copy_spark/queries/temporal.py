@@ -593,7 +593,7 @@ def q_events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS sum_totalprice_cents
     FROM j GROUP BY 1
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time join of the orders fact stream against an SCD2
@@ -671,7 +671,7 @@ def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND o.o_orderdate >= d.valid_from
      AND o.o_orderdate <  d.valid_to
     """,
-    changed_in=10,
+    changed_in=11,
 )
 def q_scd2_point_in_time_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixture-wide point-in-time attribution (r6 VERDICT ask #7): EVERY

@@ -22,7 +22,7 @@ Reference behavior re-expressed (not ported):
 
 The statement generators below are pure functions unit-tested against
 expected SQL. The executor is pluggable: production uses
-``jvm_statement_executor``, which drives ``java.sql.DriverManager``
+``jdbc.jvm_statement_executor``, which drives ``java.sql.DriverManager``
 through Spark's own JVM (the JDBC driver jar is already on the classpath
 for spark.read/write.jdbc to work); tests run the verbs live against
 embedded Derby (``sources/derby.py``).
@@ -31,17 +31,21 @@ embedded Derby (``sources/derby.py``).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from oracle_schema_copy_spark.operators.walk import key_cols, key_frame
 from oracle_schema_copy_spark.sources.dialects import get_dialect, url_dialect
-from oracle_schema_copy_spark.sources.jdbc import JdbcConnection, write_table
-
-# An executor runs SQL statements in order against the target database.
-StatementExecutor = Callable[[Sequence[str]], None]
+from oracle_schema_copy_spark.sources.jdbc import (
+    JdbcConnection,
+    StatementExecutor,
+    jvm_statement_executor,
+    staging_index_sql,
+    staging_name,
+    write_table,
+)
 
 _MERGE_STYLES = ("ansi", "postgres_upsert")
 
@@ -102,61 +106,6 @@ def delete_using_staging_sql(
         f"DELETE FROM {table} t WHERE EXISTS "
         f"(SELECT 1 FROM {staging_table} s WHERE {on})"
     )
-
-
-def staging_name(table: str, op: str) -> str:
-    """Deterministic staging-table name: re-running a failed verb reuses
-    (overwrites) the same staging table instead of leaking one per run."""
-    return f"{table}_oscs_{op}_stg"
-
-
-def staging_index_sql(staging_table: str, key_columns: Sequence[str]) -> str:
-    """Index the staging key before the set-oriented MERGE / EXISTS-delete.
-    Without it a planner with no staging statistics (measured: embedded
-    Derby) nested-loops the probe — 1.65M x 236k row scans turned a
-    seconds-long delete into 45+ minutes at the 10x fixture. One O(n log n)
-    index build makes the probe an index lookup on any RDBMS."""
-    return (
-        f"CREATE INDEX {staging_table}_kix ON {staging_table} "
-        f"({', '.join(key_columns)})"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Executors
-# ---------------------------------------------------------------------------
-
-
-def jvm_statement_executor(spark: SparkSession, conn: JdbcConnection) -> StatementExecutor:
-    """Ordered statement execution over one java.sql connection obtained
-    through Spark's JVM (the driver jar is on the classpath already).
-
-    The list runs in one transaction, the reference's single-transaction
-    replay semantics where the database supports transactional DDL/DML
-    mixes; on failure the transaction is rolled back and the error
-    re-raised.
-    """
-
-    def run(statements: Sequence[str]) -> None:
-        jvm = spark._jvm  # noqa: SLF001 — py4j bridge is the supported path
-        dm = jvm.java.sql.DriverManager
-        c = dm.getConnection(conn.url, conn.user, conn.password)
-        try:
-            c.setAutoCommit(False)
-            st = c.createStatement()
-            try:
-                for s in statements:
-                    st.execute(s)
-            finally:
-                st.close()
-            c.commit()
-        except Exception:
-            c.rollback()
-            raise
-        finally:
-            c.close()
-
-    return run
 
 
 # ---------------------------------------------------------------------------

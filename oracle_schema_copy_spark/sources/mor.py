@@ -32,8 +32,8 @@ Read semantics (documented contract, mirrored by every SQL oracle):
 Ordered replay is evaluated RELATIONALLY, not iteratively: last-writer-
 wins per key is one argmax over (key, __seq) on the union of the (small)
 mutation log — a window over log rows only, never over base. The base
-table contributes one broadcast anti-join against the distinct mutated
-keys; base file scans stay pruned/pushed-down because read() is plain
+table contributes one broadcast anti-join against the mutated keys;
+base file scans stay pruned/pushed-down because read() is plain
 DataFrame composition over parquet scans. ``compact()`` folds the log
 into a new base via the oplog warehouse's staged-directory swap
 (``oplog.swap_in``), bounding read amplification; ``stats()`` reports
@@ -50,7 +50,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from oracle_schema_copy_spark.operators.walk import key_frame
+from oracle_schema_copy_spark.operators.walk import _keyed_join, key_frame
 from oracle_schema_copy_spark.plans.oplog import swap_in
 
 
@@ -152,11 +152,7 @@ class MergeOnReadTable:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        live = base.join(
-            muts.select(*self.key_columns).distinct(),
-            self.key_columns,
-            "left_anti",
-        )
+        live = _keyed_join(base, self.key_columns, muts, "left_anti")
         if updates is None:
             return live
         win_upserts = winner.filter(~F.col("__del")).select(

@@ -156,6 +156,27 @@ def test_ab_unavailable_bandwidth_probe_does_not_wait(monkeypatch, tmp_path, cap
     assert [r["bw_before"] for r in _ab_rows(capsys)] == [None, None]
 
 
+def test_bench_one_looks_names_up_in_the_whole_registry(monkeypatch):
+    """``bench.py --one`` (what ``tools/ab.py bench`` runs) finds a name
+    outside the default bench set, and an unknown name exits loudly —
+    both before a session starts."""
+    from oracle_schema_copy_spark import queries, session
+
+    class Started(Exception):
+        pass
+
+    def no_session(*args, **kwargs):
+        raise Started
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_SET", raising=False)
+    name = next(n for n in queries.queries() if n not in bench._query_set()[1])
+    with pytest.raises(Started):
+        bench._run_one(name, "/fixture", 1, 1)
+    with pytest.raises(SystemExit, match="unknown query 'no_such_query'"):
+        bench._run_one("no_such_query", "/fixture", 1, 1)
+
+
 def test_ab_rejects_bad_arguments():
     with pytest.raises(SystemExit):
         ab.main(["stage", "a", "b", "q1", "1"])  # stage needs a fixture

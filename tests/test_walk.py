@@ -118,7 +118,7 @@ def test_walk_composite_parent_frontier(spark, ctx, sf_dir):
     expected_orders = tables["orders"].filter(F.col("o_custkey").isin([1, 2, 3])).count()
     assert orders_sel.keys.count() == expected_orders
     li_sel = sels[2]
-    assert li_sel.rows is not None and li_sel.probe_column == "l_orderkey"
+    assert not li_sel.exact and li_sel.on == ("l_orderkey",)
     expected_li = (
         tables["lineitem"]
         .join(
@@ -128,7 +128,7 @@ def test_walk_composite_parent_frontier(spark, ctx, sf_dir):
         )
         .count()
     )
-    assert li_sel.rows.count() == expected_li
+    assert walk.copy_selections(tables, [li_sel])[0]["lineitem"].count() == expected_li
 
 
 def test_walk_pairs_root_frame_by_name(spark, ctx, sf_dir):
@@ -170,16 +170,18 @@ def test_walk_composite_seed_frame_copy(spark, ctx):
 
 
 def test_walk_leaf_selection_is_rows_with_lazy_keys(spark, ctx):
-    """Leaf tables (no later probe) carry rows, not a materialized PK
-    frontier; explicit key tuples derive lazily and cover every row."""
+    """Leaf tables (no later probe) are selected by their FK against the
+    parent probe, not by a materialized PK frontier; explicit key tuples
+    derive lazily and cover every selected row."""
     c, tables = ctx
     sels = walk.walk_linked(spark, tables, c, PATHS, [1, 2, 3])
     li_sel = sels[2]
-    assert li_sel.table == "lineitem" and li_sel.rows is not None
+    assert li_sel.table == "lineitem" and not li_sel.exact
     assert tuple(li_sel.keys.columns) == ("l_orderkey", "l_linenumber")
     # lazy keys = distinct PK tuples of the selected rows (the fixture's
     # composite "PK" repeats, so distinct < rows is expected)
-    expected = li_sel.rows.select("l_orderkey", "l_linenumber").distinct().count()
+    rows = walk.copy_selections(tables, [li_sel])[0]["lineitem"]
+    expected = rows.select("l_orderkey", "l_linenumber").distinct().count()
     assert li_sel.keys.count() == expected > 0
 
 

@@ -3,9 +3,10 @@
 Each (round, query, arm) is a fresh process — and so a fresh JVM — of
 either instrument in that arm's checkout:
 
-- ``bench``: ``bench.py --one <query>`` (timed samples + build seconds;
-  fixture, cores and runs come from the usual ``SPARK_GRAFT_SF_DIR`` /
-  ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_BENCH_RUNS``);
+- ``bench``: ``bench.py --one <query>`` (timed samples + build seconds
+  of any registered query; fixture, cores and runs come from the usual
+  ``SPARK_GRAFT_SF_DIR`` / ``SPARK_GRAFT_CPUS`` /
+  ``SPARK_GRAFT_BENCH_RUNS``);
 - ``stage``: ``tools/stage_profile.py <sf_dir> <query>`` (per-stage run,
   CPU, GC, shuffle, spill).
 
