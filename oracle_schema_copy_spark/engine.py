@@ -13,9 +13,11 @@ runs, so ``sources/derby.py`` can build on it.
 The subgraph verbs pay few fixed Spark jobs per call: ``Engine.table``
 reads each source's parquet schema once (a bare ``spark.read.parquet``
 starts a schema-inference job on every call), ``copy_tree`` checks the
-copy on what landed in the target (``walk.copy_selections`` with the
-target's ``insert`` as its sink), and both ``copy_tree`` and
-``delete_tree`` release what the walk cached before they return.
+copy on what landed in the target with one count action after the
+writes (``walk.copy_selections`` with the target's ``insert`` as its
+sink; one exchange per counted side), seed ids become a broadcast frame
+with no Spark ``distinct`` (``walk.seed_frame``), and both ``copy_tree``
+and ``delete_tree`` release what the walk cached before they return.
 """
 
 from __future__ import annotations

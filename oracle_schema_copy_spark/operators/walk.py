@@ -16,11 +16,13 @@ Spark-first design: the reference batches key lists into 500-element
 IN-list SQL statements; here every probe is a single ``left_semi`` join
 whose build side is the (bounded, cached) key-frontier DataFrame — Catalyst
 broadcasts it when small, shuffles when not, and AQE re-plans at runtime.
-No driver-side collect of data rows ever happens: the copy assertion
-collects one row of counts per table and side. The walk caches its roots
-and key frontiers; a verb that hands the selections to a sink releases
-them when it returns (:func:`release`), so a long-lived session holds no
-cache blocks between verbs.
+No driver-side collect of data rows ever happens: the copy assertion is
+ONE action after the writes, which collects one row of counts per table
+and side, each side planned over a single exchange. Seed values are
+de-duplicated on the driver, so the root frontier costs no shuffle. The
+walk caches its roots and key frontiers; a verb that hands the
+selections to a sink releases them when it returns (:func:`release`), so
+a long-lived session holds no cache blocks between verbs.
 
 Semantic deltas from the reference, on purpose (SURVEY.md §4 quirks):
 - when two declared edges reach the same child table, reachable key sets
@@ -61,7 +63,8 @@ explicit ``F.broadcast`` is honored regardless of size, so a frontier of
 10^8 keys would be collected to the driver and OOM it — whereas the
 size-threshold planner plus AQE (which re-plans a shuffled join into a
 broadcast join from the runtime map-stage statistics, reading the big
-side with local shuffle readers) broadcasts exactly when it's safe.
+side with local shuffle readers) broadcasts exactly when it's safe. The
+one exception is :func:`seed_frame`, whose rows the driver already holds.
 """
 
 from __future__ import annotations
@@ -194,10 +197,19 @@ def seed_frame(
     spark: SparkSession, key_columns: str | Sequence[str], values: Iterable
 ) -> DataFrame:
     """Build the root key frontier from driver-side seed values (bounded).
-    For composite keys pass tuple values matching ``key_columns`` order."""
+    For composite keys pass tuple values matching ``key_columns`` order.
+    Duplicate values are dropped on the driver, first occurrence kept, so
+    the frontier costs no shuffle job.
+
+    The frame carries a broadcast hint, the one explicit hint of the walk:
+    its rows already sit in driver memory, so the hint cannot make the
+    driver hold more than it does. Without it the planner sizes the frame
+    from its RDD (``Long.MaxValue`` bytes, as for any ``createDataFrame``)
+    until its cache is materialized, so a write over a fresh seed cache
+    would plan a sort-merge join and shuffle the whole table."""
     cols = key_cols(key_columns)
     vals = [tuple(v) if isinstance(v, (tuple, list)) else (v,) for v in values]
-    return spark.createDataFrame(vals, cols).distinct()
+    return F.broadcast(spark.createDataFrame(list(dict.fromkeys(vals)), cols))
 
 
 def walk_linked(
@@ -269,10 +281,18 @@ def walk_linked(
 
 
 def _counted(df: DataFrame, cols: Sequence[str], table: str, side: str) -> DataFrame:
-    """One tagged row: ``count_distinct`` of ``cols`` and ``count(*)``."""
-    return df.agg(
-        F.count_distinct(*[F.col(c) for c in cols]).alias("n"),
-        F.count(F.lit(1)).alias("rows"),
+    """One tagged row of ``df``'s counts over ONE exchange: ``n`` is the
+    distinct ``cols`` tuples with no NULL part (what ``count_distinct``
+    counts) and ``rows`` is ``count(*)``. The grouping is the one shuffle;
+    ``coalesce(1)`` merges its groups in one task, so the global aggregate
+    plans no second exchange. An empty frame still yields its row."""
+    groups = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__rows")).coalesce(1)
+    whole = F.lit(True)
+    for c in cols:
+        whole = whole & F.col(c).isNotNull()
+    return groups.agg(
+        F.count(F.when(whole, 1)).alias("n"),
+        F.coalesce(F.sum("__rows"), F.lit(0)).alias("rows"),
     ).select(F.lit(table).alias("table_name"), F.lit(side).alias("side"), "n", "rows")
 
 
@@ -283,16 +303,6 @@ def _collect_counts(parts: list[DataFrame]) -> dict:
     for part in parts[1:]:
         checks = checks.unionByName(part)
     return {(r.table_name, r.side): r for r in checks.collect()}
-
-
-def _found(sel: TableSelection, df: DataFrame) -> DataFrame:
-    """Found-side counts of ``df``: distinct ``on`` tuples and rows."""
-    return _counted(df, sel.on, sel.table, "found")
-
-
-def _want(sel: TableSelection) -> DataFrame:
-    """Want-side counts: the distinct probe tuples."""
-    return _counted(key_frame(sel.probe, sel.on), sel.on, sel.table, "want")
 
 
 def copy_selections(
@@ -311,67 +321,62 @@ def copy_selections(
     (``==`` on distinct key tuples); otherwise the distinct FK values in
     the copied rows can never exceed the probe key count (``<=``, not
     ``==`` — a probe key with zero children is legitimate), and a violated
-    bound means the join selected foreign rows. Every side is a native
-    ``count_distinct`` aggregate (whole-stage-codegen HashAggregate over
-    the original key columns); the tagged one-row outputs are unioned and
-    collected in one action (AQE still submits one Spark job per query
-    stage) and reconciled driver-side. r13 note: unioning the RAW key streams under a common
-    ``array<string>`` encoding and aggregating once was measured 2.2x
-    SLOWER end-to-end at sf0.1 — per-row string casts cost far more than
-    the saved scheduling rounds.
+    bound means the join selected foreign rows.
 
-    Without ``insert`` (the registered queries, whose returned frames are
-    the copy) found and want sides run as ONE fused action, and the row
-    counts come from the found side's ``count(*)``.
+    The check is ONE action, after the last write. Per table it counts a
+    want side (the distinct probe tuples) and a found side (distinct
+    ``on`` tuples and ``count(*)`` of the copied rows) with
+    :func:`_counted`, one exchange per side; the tagged one-row outputs
+    are unioned and collected together (AQE still submits one Spark job
+    per query stage) and reconciled driver-side. r13 note: unioning the
+    RAW key streams under a common ``array<string>`` encoding and
+    aggregating once was measured 2.2x SLOWER end-to-end at sf0.1 —
+    per-row string casts cost far more than the saved scheduling rounds.
 
-    With ``insert`` (``Engine.copy_tree`` passes ``target.insert``) the
-    check runs on what landed, in the reference's order — copy, then
-    assert — in three steps:
+    With ``insert`` (``Engine.copy_tree`` passes ``target.insert``) each
+    selection is first handed to ``insert`` once, wrapped in an
+    ``observe(count(*))``, in the reference's order — copy, then assert.
+    ``insert`` may return the frame that landed (file and warehouse
+    targets read back exactly the files they wrote), and the found side
+    then counts what landed; a target that returns nothing (JDBC), and
+    every selection without ``insert`` (the registered queries, whose
+    returned frames are the copy), is counted on the selected frame.
 
-    1. one action computes the want side from the walk's cached frontiers
-       (this also materializes those caches before any write plans over
-       them);
-    2. each selection is handed to ``insert`` once, wrapped in an
-       ``observe(count(*))``. ``insert`` may return the frame that landed
-       (file and warehouse targets read back exactly the files they
-       wrote); a target that returns nothing (JDBC) is checked on the
-       source frames instead;
-    3. one action computes the found side over what landed: distinct
-       ``on`` tuples and ``count(*)``.
-
-    Beside the ``==`` / ``<=`` rules, every table that
-    returned a landed frame must have landed exactly the rows it was
-    handed (the observed count): this catches a sink that drops or
-    duplicates rows, leaf rows included. The observation is read only
-    after a landed frame proves the write ran, and a missing count raises
-    — it never reads as ``0 == 0``. A failed check therefore raises AFTER
-    the write. The returned row counts are the landed ``count(*)``.
+    Beside the ``==`` / ``<=`` rules, every table that returned a landed
+    frame must have landed exactly the rows it was handed (the observed
+    count): this catches a sink that drops or duplicates rows, leaf rows
+    included. The observation is read only after the found side proves
+    the write ran, and a missing count raises — it never reads as
+    ``0 == 0``. A failed check therefore raises AFTER the write. The
+    returned row counts are the found side's ``count(*)``.
     """
     out = {s.table: _keyed_join(tables[s.table], s.on, s.probe, "left_semi") for s in selections}
     if not selections:
         return out, {}
 
+    landed: dict[str, DataFrame] = {}
     handed: dict[str, Observation] = {}
-    if insert is None:
-        found = want = _collect_counts(
-            [p for s in selections for p in (_found(s, out[s.table]), _want(s))]
-        )
-    else:
-        want = _collect_counts([_want(s) for s in selections])
-        landed: dict[str, DataFrame] = {}
+    if insert is not None:
         for sel in selections:
             obs = Observation()
             got = insert(sel.table, out[sel.table].observe(obs, F.count(F.lit(1)).alias("rows")))
             if got is not None:
                 landed[sel.table], handed[sel.table] = got, obs
-        found = _collect_counts([_found(s, landed.get(s.table, out[s.table])) for s in selections])
+    counts = _collect_counts([
+        part
+        for s in selections
+        for part in (
+            _counted(landed.get(s.table, out[s.table]), s.on, s.table, "found"),
+            _counted(key_frame(s.probe, s.on), s.on, s.table, "want"),
+        )
+    ])
 
     for sel in selections:
-        # direct indexing, not .get(..., 0): count_distinct on an empty
-        # frame still yields a row, so a MISSING row means a check action
-        # lost an aggregate — fail loudly (KeyError), never let 0 == 0 pass
-        n_found = found[(sel.table, "found")].n
-        n_keys = want[(sel.table, "want")].n
+        # direct indexing, not .get(..., 0): an empty frame still yields
+        # its row, so a MISSING row means the check action lost an
+        # aggregate — fail loudly (KeyError), never let 0 == 0 pass
+        n_found = counts[(sel.table, "found")].n
+        n_keys = counts[(sel.table, "want")].n
         if sel.exact and n_found != n_keys:
             raise AssertionError(
                 f"selection copy of {sel.table} matched {n_found} of {n_keys} keys"
@@ -386,10 +391,10 @@ def copy_selections(
             n_handed = obs.get["rows"]
         except (Py4JJavaError, KeyError) as e:  # the plan lost its observation
             raise AssertionError(f"sink for {t} reported no handed-row count") from e
-        n_landed = found[(t, "found")].rows
+        n_landed = counts[(t, "found")].rows
         if n_handed != n_landed:
             raise AssertionError(f"sink for {t} was handed {n_handed} rows but {n_landed} landed")
-    return out, {t: found[(t, "found")].rows for t in out}
+    return out, {t: counts[(t, "found")].rows for t in out}
 
 
 def delete_selections(

@@ -43,7 +43,10 @@ Data operations are chunked at ``ROWS_PER_OP`` rows per payload file
 implemented with ``maxRecordsPerFile`` rather than driver-side buffering.
 
 Every directory swap — ``Warehouse.rewrite``, the atomic replay's commit
-and ``mor.MergeOnReadTable.compact`` — goes through :func:`swap_in`.
+and ``mor.MergeOnReadTable.compact`` — goes through :func:`swap_in`. A
+crash between its two renames leaves a warehouse table absent; the
+warehouse rolls that back (:func:`undo_cut_swap`) before it next touches
+the table, so a read sees the old rows and a retried mutation succeeds.
 """
 
 from __future__ import annotations
@@ -68,14 +71,25 @@ ROWS_PER_OP = 10_000  # rows per payload file
 def swap_in(src: str, dst: str) -> None:
     """Replace directory ``dst`` with the staged directory ``src``: move
     the old one aside, rename the staged one in (the commit point), then
-    delete the old one. ``dst`` is absent between the two renames, but a
-    reader never sees old and new files mixed."""
+    delete the old one. ``dst`` is absent between the two renames (see
+    :func:`undo_cut_swap`), but a reader never sees old and new files
+    mixed."""
     trash = dst + ".__old__"
     shutil.rmtree(trash, ignore_errors=True)
     if os.path.isdir(dst):
         os.replace(dst, trash)
     os.replace(src, dst)
     shutil.rmtree(trash, ignore_errors=True)
+
+
+def undo_cut_swap(dst: str) -> None:
+    """Roll back a :func:`swap_in` cut between its two renames: ``dst`` is
+    missing and ``dst.__old__`` still holds the last committed directory,
+    so rename it back. The staged directory never reached the commit
+    point; the next rewrite replaces it."""
+    trash = dst + ".__old__"
+    if not os.path.isdir(dst) and os.path.isdir(trash):
+        os.replace(trash, dst)
 
 
 @dataclass
@@ -220,7 +234,12 @@ class Warehouse:
     schemas: dict[str, StructType] = field(default_factory=dict)
 
     def _dir(self, table: str) -> str:
-        return os.path.join(self.root, table)
+        """The table's directory. Every read, listing, write and rewrite
+        goes through here, so a swap cut between its two renames (the
+        table gone, ``<table>.__old__`` left) is rolled back first."""
+        d = os.path.join(self.root, table)
+        undo_cut_swap(d)
+        return d
 
     def exists(self, table: str) -> bool:
         return os.path.isdir(self._dir(table))
@@ -255,7 +274,11 @@ class Warehouse:
         self.schemas[table] = df.schema
 
     def drop(self, table: str) -> None:
-        shutil.rmtree(self._dir(table), ignore_errors=True)
+        d = self._dir(table)
+        shutil.rmtree(d, ignore_errors=True)
+        # a swap cut after its second rename leaves the table's previous
+        # files here; they must not come back as the dropped table
+        shutil.rmtree(d + ".__old__", ignore_errors=True)
         self.schemas.pop(table, None)
 
     def create_views(self, views: dict[str, str]) -> None:

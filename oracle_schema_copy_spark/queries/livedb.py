@@ -194,7 +194,7 @@ def q_oplog_import_into_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey FROM orders
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
-    changed_in=11,
+    changed_in=12,
 )
 def q_jdbc_copy_tree_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2+K1 live: the flagship FK-subgraph walk copied INTO embedded Derby

@@ -38,7 +38,7 @@ def _flagship_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
     headline=True,
-    changed_in=11,
+    changed_in=12,
 )
 def q_copy_tree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: FK-subgraph copy customer→orders→lineitem, return the copied
@@ -65,7 +65,7 @@ def q_copy_tree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey FROM orders
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
-    changed_in=11,
+    changed_in=12,
 )
 def q_copy_tree_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-table copied-row counts of the flagship walk (exercises the count
@@ -87,7 +87,7 @@ def q_copy_tree_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o.* FROM orders o
     WHERE o.o_custkey NOT IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0)
     """,
-    changed_in=11,
+    changed_in=12,
 )
 def q_delete_tree_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """deleteTree: surviving orders rows after deleting the walked subgraph."""
@@ -105,7 +105,7 @@ def q_delete_tree_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l.* FROM lineitem l
     WHERE l.l_orderkey % 200 = 0 AND l.l_linenumber <= 2
     """,
-    changed_in=11,
+    changed_in=12,
 )
 def q_copy_tree_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-PK selection copy: (l_orderkey, l_linenumber) tuples seeded
@@ -114,7 +114,7 @@ def q_copy_tree_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFram
     which the reference REFUSES for composite-PK tables
     (``CopyUtils.java:410-412``) and we support first-class. Copy goes
     through the full composite-key semi-join and the composite
-    ``count_distinct`` coverage assert of ``copy_selections``.
+    distinct-tuple coverage assert of ``copy_selections``.
 
     The seed list is a bounded deterministic collect of the PK projection
     (9 / 69 / 845 tuples at sf0.001/0.01/0.1) — literal seeding is

@@ -371,3 +371,32 @@ def test_replay_reads_payloads_with_the_logged_schema(spark, sf_dir, tmp_path, r
     old = wh_old.read("nation")
     assert old.schema == got.schema
     assert sorted(map(tuple, old.collect())) == sorted(map(tuple, got.collect()))
+
+
+def test_swap_cut_between_renames_rolls_back(spark, sf_dir, scratch, monkeypatch):
+    """A crash between swap_in's two renames inside a warehouse delete
+    leaves only ``nation.__old__`` and ``nation.__stage__``; the next read
+    returns the old rows and a retried delete succeeds."""
+    target = oplog.WarehouseTarget(oplog.Warehouse(spark, os.path.join(scratch, "wh_cut")))
+    nation = load_table(spark, sf_dir, "nation")
+    target.insert("nation", nation)
+    keys = nation.filter(F.col("n_nationkey") < 5).select("n_nationkey")
+    real_replace, calls = os.replace, []
+
+    def cut_after_first_rename(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("crash between the two renames")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", cut_after_first_rename)
+    with pytest.raises(OSError, match="between the two renames"):
+        target.delete("nation", "n_nationkey", keys)
+    monkeypatch.undo()
+    root = target.wh.root
+    assert sorted(os.listdir(root)) == ["nation.__old__", "nation.__stage__"]
+
+    assert target.wh.read("nation").count() == 25
+    target.delete("nation", "n_nationkey", keys)
+    assert sorted(r.n_nationkey for r in target.wh.read("nation").collect()) == list(range(5, 25))
+    assert sorted(os.listdir(root)) == ["nation"]

@@ -11,7 +11,7 @@ from __future__ import annotations
 import re
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from oracle_schema_copy_spark.sources import jdbc, jdbc_mutations as jm
@@ -95,6 +95,47 @@ def test_normalize_and_shingles_match_python_reference(spark, texts):
     for r in rows:
         assert r.norm == _py_normalize(texts[r.i])
         assert list(r.sh) == _py_shingles(texts[r.i])
+
+
+# ---------------------------------------------------------------------------
+# the copy check's one-exchange counts equal count_distinct / count(*):
+# a key tuple with a NULL part is not counted, duplicate tuples count once,
+# and an empty frame still yields its row
+# ---------------------------------------------------------------------------
+
+_KEY_PART = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
+
+
+@given(st.lists(st.tuples(_KEY_PART, _KEY_PART), max_size=30))
+@example([])
+@example([(None, None), (None, 1), (1, None), (1, 1), (1, 1)])
+@settings(max_examples=4, deadline=None)
+def test_counted_matches_count_distinct(spark, keys):
+    from pyspark.sql import functions as F
+
+    from oracle_schema_copy_spark.operators.walk import _counted
+
+    df = spark.createDataFrame(keys, "a int, b int")
+    parts = []
+    for cols in (["a"], ["a", "b"]):
+        side = ",".join(cols)
+        parts.append(_counted(df, cols, "t", side).withColumn("how", F.lit("counted")))
+        parts.append(
+            df.agg(
+                F.count_distinct(*cols).alias("n"), F.count(F.lit(1)).alias("rows")
+            ).select(F.lit("t").alias("table_name"), F.lit(side).alias("side"), "n", "rows",
+                     F.lit("reference").alias("how"))
+        )
+    checks = parts[0]
+    for part in parts[1:]:
+        checks = checks.unionByName(part)
+    got = {(r.side, r.how): (r.n, r.rows) for r in checks.collect()}
+    py_n = {
+        "a": len({a for a, _ in keys if a is not None}),
+        "a,b": len({k for k in keys if None not in k}),
+    }
+    for side in ("a", "a,b"):
+        assert got[(side, "counted")] == got[(side, "reference")] == (py_n[side], len(keys))
 
 
 # ---------------------------------------------------------------------------

@@ -98,6 +98,25 @@ def test_sink_that_writes_nothing_is_caught(engine, spark, tmp_path):
         engine.copy_tree(target, PATHS, [1, 2, 3])
 
 
+def test_copy_tree_runs_one_check_action(engine, spark, tmp_path, monkeypatch):
+    """The whole coverage check of a copy is one action after the writes:
+    want and found sides of every table in one collect."""
+    target = engine.create_warehouse_target(str(tmp_path / "wh"))
+    cls = type(spark.range(1))  # the concrete class: Spark 4's classic DataFrame
+    real = cls.collect
+    calls = []
+
+    def counting(self, *a, **kw):
+        calls.append(self)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "collect", counting)
+    rows = engine.copy_tree(target, PATHS, [1, 2, 3])
+    monkeypatch.undo()
+    assert len(calls) == 1
+    assert rows == {t: target.wh.read(t).count() for t in rows} and rows["lineitem"] > 0
+
+
 def test_repeated_verbs_run_no_schema_job(engine, spark, tmp_path, reader_jobs):
     """After the first call, copy_tree and delete_tree read every source,
     warehouse table and landed file with a known schema."""
