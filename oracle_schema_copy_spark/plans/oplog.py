@@ -25,9 +25,26 @@ Replay (``Operation.execute(Connection)``, ``Operation.java:9-11``):
 each record through a target's verbs. Targets differ by one rule and
 hooks, not options: a table's first insert in a run calls the target's
 ``create_table`` (a live database creates it, a warehouse drops it so the
-run replaces it); opaque SQL follows the target's ``on_opaque`` (a
+run replaces it); an insert goes to the target's ``adopt`` where it has
+one, else to ``insert``; opaque SQL follows the target's ``on_opaque`` (a
 warehouse skips it, a live database executes it); views go to
 ``create_view`` where a target has one. Logged table DDL is skipped.
+
+Zero-copy warehouse import: a payload is already parquet, the warehouse's
+own storage format, so a warehouse adopts an insert's payload files
+instead of re-encoding them (:meth:`Warehouse.adopt`; the Iceberg
+``add_files`` / Delta ``CONVERT TO DELTA`` move). Each payload file and
+its Hadoop ``.crc`` sidecar is hard-linked into the table directory under
+a name unique to the record (``op00003-part-...parquet``). When the link
+cannot be made (the log on another filesystem, a filesystem without hard
+links, a full link count) the call removes the links it made and replay
+falls back to the Spark write; bytes are never copied in Python, so every
+written byte stays visible in Spark's output metrics. An adopted
+warehouse file SHARES ITS INODE with the log's payload: nothing may open a
+warehouse or payload parquet file for writing in place. Every mutation
+here writes new files and swaps or unlinks old ones, which leaves the
+other name intact — so upserting, deleting or dropping an imported table
+never changes the log, and the log replays again to the same rows.
 
 Transactionality (SURVEY §3.2): the reference imports inside one JDBC
 transaction. ``replay`` (the warehouse entry point) is per-table staged
@@ -44,13 +61,15 @@ implemented with ``maxRecordsPerFile`` rather than driver-side buffering.
 
 Every directory swap — ``Warehouse.rewrite``, the atomic replay's commit
 and ``mor.MergeOnReadTable.compact`` — goes through :func:`swap_in`. A
-crash between its two renames leaves a warehouse table absent; the
-warehouse rolls that back (:func:`undo_cut_swap`) before it next touches
-the table, so a read sees the old rows and a retried mutation succeeds.
+crash between its two renames leaves a warehouse table (or a
+merge-on-read base) absent; the warehouse and the merge-on-read table roll
+that back (:func:`undo_cut_swap`) before they next touch it, so a read sees
+the old rows and a retried mutation succeeds.
 """
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import shutil
@@ -66,6 +85,8 @@ from oracle_schema_copy_spark.operators.walk import key_cols, key_frame
 
 MANIFEST = "manifest.jsonl"
 ROWS_PER_OP = 10_000  # rows per payload file
+# os.link failures that mean "no hard link here": replay writes instead
+LINK_FALLBACK = {errno.EXDEV, errno.EPERM, errno.ENOTSUP, errno.EMLINK}
 
 
 def swap_in(src: str, dst: str) -> None:
@@ -224,9 +245,14 @@ class Warehouse:
     imports (the ExecuteTarget analog for our storage). Mutations are
     staged-write + atomic swap; reads always see a complete table.
 
+    A replayed insert adopts the payload's files by hard link
+    (:meth:`adopt`), so a table file may share its inode with an oplog
+    payload: files here are only ever created, renamed or unlinked, never
+    opened for writing in place.
+
     ``schemas`` holds the schema of each table this warehouse wrote
-    (``write``/``rewrite`` set it, ``drop`` forgets it), so ``read`` starts
-    no schema-inference job for them."""
+    (``write``/``rewrite`` and a table-creating ``adopt`` set it, ``drop``
+    forgets it), so ``read`` starts no schema-inference job for them."""
 
     spark: SparkSession
     root: str
@@ -262,6 +288,41 @@ class Warehouse:
 
     def append(self, table: str, df: DataFrame) -> None:
         self.write(table, df, mode="append")
+
+    def adopt(self, table: str, payload_dir: str, tag: str, schema: StructType) -> bool:
+        """Add the parquet files of ``payload_dir`` to ``table`` by hard
+        link, each under ``<tag>-<name>`` beside its linked ``.crc``
+        sidecar, without reading or writing a byte. Returns False, having
+        removed the links this call made, when the filesystem cannot link
+        them (``LINK_FALLBACK``); the caller then writes the rows. Any other
+        error (a name already taken, too) propagates after the same
+        clean-up. ``schema`` becomes the table's read schema only when this
+        call created the table."""
+        names = sorted(f for f in os.listdir(payload_dir) if f.endswith(".parquet"))
+        d = self._dir(table)
+        created = not os.path.isdir(d)
+        os.makedirs(d, exist_ok=True)
+        made: list[str] = []
+        try:
+            for name in names:
+                links = [(name, f"{tag}-{name}")]
+                if os.path.isfile(os.path.join(payload_dir, f".{name}.crc")):
+                    links.append((f".{name}.crc", f".{tag}-{name}.crc"))
+                for src, dst in links:
+                    os.link(os.path.join(payload_dir, src), os.path.join(d, dst))
+                    made.append(dst)
+        except OSError as e:
+            for f in made:
+                os.remove(os.path.join(d, f))
+            if created:
+                os.rmdir(d)
+            if e.errno in LINK_FALLBACK:
+                return False
+            raise
+        self.tables_written.add(table)
+        if created:
+            self.schemas[table] = schema
+        return True
 
     def rewrite(self, table: str, df: DataFrame) -> None:
         """Full-table rewrite via staging dir + atomic swap (upsert/delete
@@ -303,7 +364,10 @@ class Warehouse:
 @dataclass
 class WarehouseTarget:
     """Applies operations directly to a parquet warehouse (ExecuteTarget
-    analog for file-backed tables); every warehouse replay runs through it."""
+    analog for file-backed tables); every warehouse replay runs through it.
+    A replayed insert is adopted (:meth:`adopt`): its payload files are
+    hard-linked into the table, and only where that fails are the rows
+    written by :meth:`insert`."""
 
     wh: Warehouse
     views: dict[str, str] = field(default_factory=dict, init=False)
@@ -320,6 +384,11 @@ class WarehouseTarget:
         """Deferred: :func:`replay` creates views after the last operation,
         over the final tables."""
         self.views[name] = query
+
+    def adopt(self, table: str, payload_dir: str, tag: str, schema: StructType) -> bool:
+        """Links a logged insert's payload files into ``table``
+        (:meth:`Warehouse.adopt`); False means replay must insert the rows."""
+        return self.wh.adopt(table, payload_dir, tag, schema)
 
     def insert(self, table: str, df: DataFrame) -> DataFrame:
         """Writes (or appends) ``df``; returns the rows that landed — the
@@ -368,19 +437,21 @@ def replay_into_target(
     Returns the records that reached the target; skipped records are
     excluded, so callers can audit exactly what was applied. Nothing passes
     through the driver but the manifest: payloads stream through the
-    target's set-oriented verbs.
+    target's set-oriented verbs, or are linked in whole by its ``adopt``.
     """
     on_opaque = on_opaque or getattr(target, "on_opaque", "execute")
     create_table = getattr(target, "create_table", None)
     create_view = getattr(target, "create_view", None)
+    adopt = getattr(target, "adopt", None)
     applied: list[OpRecord] = []
     created: set[str] = set()
     for rec in read_manifest(log_path):
-        df = None
+        df = payload = None
         if rec.payload:
             logged = rec.params.get("schema")
             schema = StructType.fromJson(logged) if logged is not None else None
-            df = read_parquet(spark, os.path.join(log_path, rec.payload), schema)
+            payload = os.path.join(log_path, rec.payload)
+            df = read_parquet(spark, payload, schema)
         if rec.kind == "ddl":
             continue  # tables come from payload schemas at their first insert
         elif rec.kind == "opaque_sql":
@@ -397,7 +468,8 @@ def replay_into_target(
             if create_table is not None and rec.table not in created:
                 create_table(rec.table, df.schema)
                 created.add(rec.table)
-            target.insert(rec.table, df)
+            if adopt is None or not adopt(rec.table, payload, f"op{rec.seq:05d}", df.schema):
+                target.insert(rec.table, df)
         elif rec.kind == "upsert":
             target.upsert(rec.table, df, rec.params["key_columns"])
         elif rec.kind == "delete":

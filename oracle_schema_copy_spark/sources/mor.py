@@ -37,7 +37,11 @@ base file scans stay pruned/pushed-down because read() is plain
 DataFrame composition over parquet scans. ``compact()`` folds the log
 into a new base via the oplog warehouse's staged-directory swap
 (``oplog.swap_in``), bounding read amplification; ``stats()`` reports
-the log size that triggers it.
+the log size that triggers it. A compaction cut between the swap's two
+renames leaves ``base`` missing and the log in place; ``read``,
+``compact`` and ``write_base`` roll that back first
+(``oplog.undo_cut_swap``), so the table reads its pre-compaction rows and
+a retried compaction succeeds.
 """
 
 from __future__ import annotations
@@ -51,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.operators.walk import _keyed_join, key_frame
-from oracle_schema_copy_spark.plans.oplog import swap_in
+from oracle_schema_copy_spark.plans.oplog import swap_in, undo_cut_swap
 
 
 class MergeOnReadTable:
@@ -62,8 +66,14 @@ class MergeOnReadTable:
 
     # -- write side ---------------------------------------------------------
 
+    def _base(self) -> str:
+        """The base directory, with a cut compaction swap rolled back."""
+        base = f"{self.path}/base"
+        undo_cut_swap(base)
+        return base
+
     def write_base(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(f"{self.path}/base")
+        df.write.mode("overwrite").parquet(self._base())
 
     def _next_seq(self) -> int:
         """Next table-wide sequence number: 1 + max over BOTH log kinds.
@@ -116,7 +126,7 @@ class MergeOnReadTable:
         reproducing the table exactly as it stood after that batch —
         free on this layout, since the log is append-only and sequenced
         (the Delta/Iceberg snapshot-isolation read re-expressed)."""
-        base = self.spark.read.parquet(f"{self.path}/base")
+        base = self.spark.read.parquet(self._base())
         del_dirs = self._log("deletes")
         upd_dirs = self._log("updates")
         if as_of_seq is not None:
@@ -180,6 +190,6 @@ class MergeOnReadTable:
         bound. Readers opened after the swap see identical rows."""
         staged = f"{self.path}/base_staged_{uuid.uuid4().hex[:8]}"
         self.read().write.mode("overwrite").parquet(staged)
-        swap_in(staged, f"{self.path}/base")
+        swap_in(staged, self._base())
         for kind in ("deletes", "updates"):
             shutil.rmtree(f"{self.path}/{kind}", ignore_errors=True)

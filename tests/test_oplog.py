@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import errno
+import hashlib
 import json
 import os
 
@@ -400,3 +402,166 @@ def test_swap_cut_between_renames_rolls_back(spark, sf_dir, scratch, monkeypatch
     target.delete("nation", "n_nationkey", keys)
     assert sorted(r.n_nationkey for r in target.wh.read("nation").collect()) == list(range(5, 25))
     assert sorted(os.listdir(root)) == ["nation"]
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def _hashes(root: str, skip: str | None = None) -> dict[str, str]:
+    """sha256 of every file under ``root`` by relative path, skipping the
+    top-level entry ``skip``."""
+    out = {}
+    for d, dirs, files in os.walk(root):
+        if d == root and skip in dirs:
+            dirs.remove(skip)
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def _cut_link(monkeypatch, k: int, exc: OSError) -> None:
+    """``os.link`` raises ``exc`` on its k-th call (1-based)."""
+    real_link, calls = os.link, []
+
+    def link(src, dst, *a, **kw):
+        calls.append(dst)
+        if len(calls) == k:
+            raise exc
+        return real_link(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "link", link)
+
+
+def _orders_log(spark, sf_dir, log: str):
+    """A log inserting orders (three payload files) and nation."""
+    orders = load_table(spark, sf_dir, "orders").repartition(3)
+    with oplog.OperationLogWriter(log) as lg:
+        lg.insert("orders", orders)
+        lg.insert("nation", load_table(spark, sf_dir, "nation"))
+    return orders
+
+
+def test_replay_adopts_insert_payloads_by_hard_link(spark, sf_dir, tmp_path, reader_jobs):
+    """A warehouse replay of inserts starts no Spark job: every payload
+    file and its .crc sidecar land in the table by hard link under the
+    record's ``opNNNNN-`` name, and the table reads with the logged
+    schema."""
+    log = str(tmp_path / "log")
+    orders = _orders_log(spark, sf_dir, log)
+    wh = oplog.Warehouse(spark, str(tmp_path / "wh"))
+    jobs, _ = reader_jobs(lambda: oplog.replay(spark, log, wh))
+    assert jobs == 0
+    for rec in oplog.read_manifest(log):
+        payload = os.path.join(log, rec.payload)
+        names = sorted(f for f in os.listdir(payload) if f.endswith(".parquet"))
+        assert names and (rec.table != "orders" or len(names) == 3)
+        d = os.path.join(wh.root, rec.table)
+        tag = f"op{rec.seq:05d}"
+        assert sorted(f for f in os.listdir(d) if f.endswith(".parquet")) == [
+            f"{tag}-{n}" for n in names
+        ]
+        for n in names:
+            assert os.path.samefile(os.path.join(payload, n), os.path.join(d, f"{tag}-{n}"))
+            assert os.path.samefile(
+                os.path.join(payload, f".{n}.crc"), os.path.join(d, f".{tag}-{n}.crc")
+            )
+    assert wh.tables_written == {"orders", "nation"}
+    _, reader = reader_jobs(lambda: _rows(wh.read("orders")))
+    assert reader == 0
+    assert _rows(wh.read("orders")) == _rows(orders)
+
+
+@pytest.mark.parametrize("k", [1, 4])
+def test_adopt_falls_back_to_the_spark_write(spark, sf_dir, tmp_path, monkeypatch, k):
+    """A link the filesystem refuses (EXDEV: the log on another
+    filesystem) on the k-th file makes the replay write the rows with
+    Spark instead; no ``op*-`` link is left behind."""
+    log = str(tmp_path / "log")
+    orders = _orders_log(spark, sf_dir, log)
+    wh = oplog.Warehouse(spark, str(tmp_path / "wh"))
+    _cut_link(monkeypatch, k, OSError(errno.EXDEV, "Invalid cross-device link"))
+    oplog.replay(spark, log, wh)
+    monkeypatch.undo()
+    files = os.listdir(os.path.join(wh.root, "orders"))
+    assert files and not [f for f in files if f.lstrip(".").startswith("op")]
+    payload = os.path.join(log, next(oplog.read_manifest(log)).payload)
+    assert all(os.stat(os.path.join(payload, f)).st_nlink == 1 for f in os.listdir(payload))
+    assert _rows(wh.read("orders")) == _rows(orders)
+    # nation came after the refused link and was adopted
+    assert all(f.lstrip(".").startswith("op00001-")
+               for f in os.listdir(os.path.join(wh.root, "nation")))
+
+
+@pytest.mark.parametrize(
+    "exc",
+    [FileExistsError(errno.EEXIST, "File exists"), OSError(errno.EIO, "I/O error")],
+    ids=["exists", "eio"],
+)
+def test_adopt_error_outside_the_fallback_set_propagates(spark, sf_dir, tmp_path, monkeypatch, exc):
+    """Only the no-hard-link errnos fall back; any other link error
+    propagates (after removing the call's links), never rewritten."""
+    log = str(tmp_path / "log")
+    _orders_log(spark, sf_dir, log)
+    wh = oplog.Warehouse(spark, str(tmp_path / "wh"))
+    _cut_link(monkeypatch, 3, exc)
+    with pytest.raises(type(exc)) as raised:
+        oplog.replay(spark, log, wh)
+    assert raised.value is exc
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(wh.root, "orders"))
+
+
+def test_adopted_tables_leave_the_log_intact(spark, sf_dir, tmp_path):
+    """Upserting, deleting and dropping adopted tables never changes the
+    payload files they share inodes with: the log hashes the same and
+    replays again to the original rows."""
+    log = str(tmp_path / "log")
+    orders = _orders_log(spark, sf_dir, log)
+    nation = load_table(spark, sf_dir, "nation")
+    before = _hashes(log)
+    target = oplog.WarehouseTarget(oplog.Warehouse(spark, str(tmp_path / "wh")))
+    oplog.replay_into_target(spark, log, target)
+    target.upsert(
+        "orders",
+        orders.filter(F.col("o_orderkey") % 10 == 0).withColumn("o_orderstatus", F.lit("X")),
+        ["o_orderkey"],
+    )
+    target.delete("nation", "n_nationkey", nation.filter(F.col("n_nationkey") < 5))
+    assert target.wh.read("orders").filter(F.col("o_orderstatus") == "X").count() > 0
+    assert target.wh.read("nation").count() == 20
+    assert _hashes(log) == before
+
+    oplog.replay_into_target(spark, log, target)
+    assert _rows(target.wh.read("orders")) == _rows(orders)
+    assert _rows(target.wh.read("nation")) == _rows(nation)
+    target.wh.drop("orders")
+    assert _hashes(log) == before
+    payload = os.path.join(log, next(oplog.read_manifest(log)).payload)
+    assert _rows(spark.read.parquet(payload)) == _rows(orders)
+
+
+def test_atomic_import_cut_mid_adoption(spark, sf_dir, tmp_path, monkeypatch):
+    """A link error inside replay_atomic leaves the warehouse
+    byte-identical; the next replay_atomic commits and leaves no stage."""
+    nation = load_table(spark, sf_dir, "nation")
+    wh = oplog.Warehouse(spark, str(tmp_path / "wh"))
+    wh.write("nation", nation.filter(F.col("n_nationkey") < 5))
+    wh.write("orders", load_table(spark, sf_dir, "orders").limit(7))
+    before = _hashes(wh.root, skip=oplog.STAGE_DIRNAME)
+    log = str(tmp_path / "log")
+    orders = _orders_log(spark, sf_dir, log)
+
+    _cut_link(monkeypatch, 7, OSError(errno.EIO, "I/O error"))  # nation's parquet link
+    with pytest.raises(OSError, match="I/O error"):
+        oplog.replay_atomic(spark, log, wh)
+    monkeypatch.undo()
+    assert _hashes(wh.root, skip=oplog.STAGE_DIRNAME) == before
+    assert not os.path.exists(os.path.join(wh.root, oplog.COMMIT_MARKER))
+
+    oplog.replay_atomic(spark, log, wh)
+    assert sorted(os.listdir(wh.root)) == ["nation", "orders"]
+    assert _rows(wh.read("orders")) == _rows(orders)
+    assert _rows(wh.read("nation")) == _rows(nation)
