@@ -19,7 +19,7 @@ xxhash64 would be ~3x faster JVM-side and is the drop-in for production.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.functions.text import (
@@ -653,106 +653,48 @@ def embedding_cosine_pairs(
     )
 
 
-def near_dup_components(pairs: DataFrame, *, max_iter: int = 25) -> DataFrame:
-    """Connected components over near-dup pairs: (id, component) where
-    component = min doc id reachable through the pair graph. This is the
-    clustering step of a dedup pipeline — keep component == id as the
-    canonical representative, drop the rest.
+def near_dup_components(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
+    """Connected components over near-dup pairs: (doc_id, component)
+    where component = min doc id reachable through the pair graph. This
+    is the clustering step of a dedup pipeline — keep component == id as
+    the canonical representative, drop the rest.
 
-    Iterative min-label propagation: each round, every node adopts the
-    smallest label among itself and its neighbors; converges in <= graph
-    diameter rounds (near-dup clusters are shallow — boilerplate stars and
-    short chains). Each round is one join + one aggregation, all
-    DataFrame-native; ``localCheckpoint`` truncates the growing lineage so
-    round N doesn't replan rounds 0..N-1 (the standard iterative-Spark
-    hazard). The driver-side loop reads ONE scalar per round (convergence
-    count) — bounded control flow, never data. At larger diameters swap
-    the propagation body for large-star/small-star (same loop shape,
-    O(log n) rounds).
-    """
-    fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    rev = pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    edges = fwd.union(rev).distinct().cache()
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).localCheckpoint()
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        updated = (
-            labels.join(nbr_min, labels["id"] == nbr_min["src"], "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("new_label"),
-                "label",
-            )
-        ).localCheckpoint()
-        changed = updated.filter(F.col("new_label") != F.col("label")).limit(1).count()
-        labels = updated.select("id", F.col("new_label").alias("label"))
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        # Returning unconverged labels would silently split one duplicate
-        # cluster into several "canonical" survivors — fail loudly instead.
-        raise RuntimeError(
-            f"near_dup_components did not converge within {max_iter} rounds "
-            "(pair-graph diameter exceeds max_iter); raise max_iter or switch "
-            "the loop body to large-star/small-star for O(log n) rounds"
-        )
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component"))
-
-
-def near_dup_components_star(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log n)-round scale path that ``near_dup_components``'
-    docstring names as its upgrade. Same output contract: (doc_id,
-    component = min reachable id).
-
-    Per round: large-star hangs every neighbor LARGER than u off u's
-    minimum (m = min(Γ(u) ∪ {u})); small-star re-points the smaller
-    neighbors (and u itself) at m. Both are one min-aggregation + one
-    equi-join over the edge list — no vectors, no text, just id pairs —
-    and the edge set monotonically collapses toward per-component stars.
-    Label propagation needs O(diameter) rounds (a 1000-link chain = 1000
-    shuffles); this needs O(log n) regardless of shape, which is the
-    difference between feasible and not on a 100 TB pair graph.
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14). Per round: large-star
+    hangs every neighbor LARGER than u off u's minimum
+    (m = min(Γ(u) ∪ {u})); small-star re-points the smaller neighbors
+    (and u itself) at m. Both are one min-aggregation + one equi-join
+    over the edge list — no vectors, no text, just id pairs — and the
+    edge set monotonically collapses toward per-component stars. Rounds
+    grow O(log n) regardless of shape, where min-label propagation needs
+    O(diameter) (a 1000-link chain = 1000 shuffles).
 
     Convergence = (count, xxhash64 checksum) of the edge list stable
-    across a round — two scalars to the driver per round, same bounded
-    control flow as the sibling loop. ``localCheckpoint`` truncates
-    iterative lineage. Non-convergence raises (same policy: a silently
-    split cluster is worse than a loud failure).
+    across a round — two scalars observed on the round's checkpoint job,
+    bounded control flow, never data. ``localCheckpoint`` truncates the
+    iterative lineage so round N doesn't replan rounds 0..N-1.
+    Non-convergence raises: returning unconverged labels would silently
+    split one duplicate cluster into several "canonical" survivors.
     """
-    E = (
+
+    def _checkpoint(edges: DataFrame):
+        """``edges`` materialized, with its (count, checksum) observed on
+        the same job — no extra scan. bit_xor, not sum: ANSI mode (Spark 4
+        default) throws on long-sum overflow, and xor is order-independent
+        with no overflow at all."""
+        obs = Observation()
+        edges = edges.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+        ).localCheckpoint()
+        return edges, (obs.get["n"], obs.get["h"])
+
+    E, prev = _checkpoint(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-    nodes = (
-        E.select(F.col("u").alias("id"))
-        .union(E.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _checksum(edges: DataFrame):
-        # bit_xor, not sum: ANSI mode (Spark 4 default) throws on long-sum
-        # overflow, and xor is order-independent with no overflow at all
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return row.n, row.h
-
-    prev = _checksum(E)
     converged = False
     for _ in range(max_iter):
         # large-star: emit (v, m) for every neighbor v > u
@@ -777,30 +719,24 @@ def near_dup_components_star(pairs: DataFrame, *, max_iter: int = 20) -> DataFra
             .select(F.col("v").alias("u"), F.col("mn").alias("v"))
         )
         selfedge = mins.select(F.col("u"), F.col("mn").alias("v"))
-        E = (
-            repointed.union(selfedge)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
+        E, cur = _checkpoint(
+            repointed.union(selfedge).filter(F.col("u") != F.col("v")).distinct()
         )
-        cur = _checksum(E)
         if cur == prev:
             converged = True
             break
         prev = cur
     if not converged:
         raise RuntimeError(
-            f"near_dup_components_star did not converge within {max_iter} rounds"
+            f"near_dup_components did not converge within {max_iter} rounds"
         )
-    # At convergence E is a star per component: (member, root). Roots have
-    # no outgoing edge — they are their own component.
-    members = E.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = nodes.join(E.select(F.col("u").alias("id")), "id", "left_anti").select(
-        "id", F.col("id").alias("component")
+    # At convergence E is a star per component: (member, root), and every
+    # root is the target of its members' edges — its own component.
+    members = E.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
+    roots = E.select(F.col("v").alias("doc_id")).distinct().select(
+        "doc_id", F.col("doc_id").alias("component")
     )
-    return members.union(roots).select(
-        F.col("id").alias("doc_id"), F.col("component").alias("component")
-    )
+    return members.union(roots)
 
 
 def embedding_lsh_pairs(

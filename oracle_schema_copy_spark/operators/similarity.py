@@ -11,8 +11,16 @@ Three strategies:
                           fixed literals so the bucketing is deterministic
                           and SQL-mirrorable; candidates share a bucket
 
-All dot products run JVM-side in sequential double precision (see
-functions/vectors.py) — bit-identical to the DuckDB oracles.
+Exact scores run JVM-side in sequential double precision (see
+functions/vectors.py) — bit-identical to the DuckDB oracles. The two
+micro-unit argmax steps, quantizer assignment
+(``assign_nearest_centroid_vectorized``) and PQ encoding (``pq_encode``),
+run one numpy matmul per Arrow batch instead (``_micro_argmax``): they
+keep only the HALF_UP-rounded integer micro-units, so the matmul's
+last-ulp difference from the sequential dot matters only at a rounding
+boundary. That parity is empirical: both names MATCH their oracles at
+sf0.01 and sf0.1, and ``pq_codes_vectorized`` matched at sf10
+(1,600,000 rows, CORRECTNESS_sf10.json).
 """
 
 from __future__ import annotations
@@ -276,7 +284,6 @@ def assign_nearest_centroid(
     vec_col: str = "embedding",
     group_col: str = "label",
     dim: int | None = 64,
-    micro_units: bool = False,
 ) -> DataFrame:
     """Assign each vector to its highest-dot-product centroid — the
     quantizer-assignment step that pairs with ``group_centroids`` (one
@@ -287,24 +294,16 @@ def assign_nearest_centroid(
     and BROADCAST against a single corpus scan. Each vector scores k dot
     products locally and the argmax collapses the k scored rows to ONE
     row per vector before any shuffle. The dot is the sequential-double
-    ``dot()``, bit-equal to the SQL twin.
+    ``dot()``, bit-equal to the SQL twin; the argmax is min-of-struct
+    over (-dot, group) — exact-double ordering, ties -> smallest group,
+    ``dot`` rounded to 6 decimals.
 
-    Two argmax modes:
-    - default (exact): min-of-struct over (-dot, group) — exact-double
-      ordering, ties -> smallest group. Struct aggregation is NOT
-      HashAggregate-compatible, so Spark sorts the corpus x k expansion
-      (SortAggregate); fine when k is a fixed design parameter (k-means
-      k=8), pathological when k grows with the corpus (the sf10 fixture:
-      2,000 label centroids -> 400M-row sort, >30 min stragglers).
-    - ``micro_units=True``: the scale path. Groups get a dense index
-      (ordered by group id, broadcast-sized frame), each score rounds to
-      integer micro-units (the pq_lut/pq_encode resolution), and
-      (micro-dot, index) packs into ONE BIGINT — ``dm * k + (k - idx)``
-      — reduced by a scalar ``max`` in whole-stage codegen with map-side
-      combine. Micro-ties -> smallest group id; the returned dot is
-      ``dm / 1e6`` (6-decimal resolution, same as the exact path's
-      round(dot, 6) up to micro-rounding). SQL twins mirror the
-      micro-unit ordering directly.
+    Struct aggregation is NOT HashAggregate-compatible, so Spark sorts
+    the corpus x k expansion (SortAggregate); fine when k is a fixed
+    design parameter (k-means k=8), pathological when k grows with the
+    corpus (the sf10 fixture: 2,000 label centroids -> 400M-row sort).
+    There, use :func:`assign_nearest_centroid_vectorized`, which never
+    materializes the expansion.
     """
     cvecs = centroids.groupBy(group_col).agg(
         F.transform(
@@ -312,36 +311,6 @@ def assign_nearest_centroid(
             lambda s: s["centroid"],
         ).alias("__cvec")
     ).select(F.col(group_col).alias("__grp"), "__cvec")
-    if micro_units:
-        # dense 1..k index over the broadcast-sized group frame; k bounds
-        # the packing modulus (single-partition window on k rows only)
-        idx = cvecs.withColumn(
-            "__idx", F.row_number().over(Window.orderBy("__grp"))
-        )
-        k = idx.count()  # tiny frame, bounded action
-        scored = spread(df.select(id_col, vec_col)).join(F.broadcast(idx)).select(
-            F.col(id_col),
-            (
-                F.round(_exact_dot(vec_col, "__cvec", dim) * F.lit(1000000.0), 0)
-                .cast("long")
-                * F.lit(k)
-                + (F.lit(k) - F.col("__idx"))
-            ).alias("__packed"),
-        )
-        best = scored.groupBy(id_col).agg(F.max("__packed").alias("__p"))
-        rec = best.select(
-            id_col,
-            (F.lit(k) - F.pmod(F.col("__p"), F.lit(k))).alias("__idx"),
-            (
-                ((F.col("__p") - F.pmod(F.col("__p"), F.lit(k))) / F.lit(k))
-                .cast("long")
-                .cast("double")
-                / F.lit(1000000.0)
-            ).alias("dot"),
-        )
-        return rec.join(F.broadcast(idx.select("__idx", "__grp")), "__idx").select(
-            id_col, F.col("__grp").alias("assigned"), "dot"
-        )
     # restrict to (id, vec) first: the corpus may itself carry group_col
     scored = spread(df.select(id_col, vec_col)).join(F.broadcast(cvecs)).select(
         F.col(id_col),
@@ -364,6 +333,40 @@ def assign_nearest_centroid(
     )
 
 
+def _micro_argmax(scores):
+    """Per row of an (n, k) score matrix: the column of the highest score
+    in integer micro-units, and those micro-units. Rounding is HALF_UP
+    (copysign/floor; np.round is half-even) like the JVM ``F.round`` and
+    DuckDB's ``round``; ties go to the first column. Parity with the
+    sequential-double SQL twins is empirical at two points: numpy's
+    pairwise matmul differs from the sequential dot in the last ulp
+    (|diff| < 1e-12 for unit-norm 64-dim vectors), and the float add in
+    |x| + 0.5 can carry for a value one ulp below a .5 boundary."""
+    import numpy as np
+
+    p = scores * 1e6
+    dm = np.copysign(np.floor(np.abs(p) + 0.5), p).astype(np.int64)
+    best = np.argmax(dm, axis=1)
+    return best, dm[np.arange(len(dm)), best]
+
+
+def _ids_and_vectors(batch, dim: int):
+    """(int64 ids, (n, dim) float64 matrix) of an Arrow batch whose
+    columns are (id, fixed-width vector); ``flatten()`` honors array
+    offsets, so sliced batches stay correct."""
+    import numpy as np
+
+    ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+    X = (
+        batch.column(1)
+        .flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64)
+        .reshape(batch.num_rows, dim)
+    )
+    return ids, X
+
+
 def assign_nearest_centroid_vectorized(
     df: DataFrame,
     centroids: DataFrame,
@@ -373,31 +376,18 @@ def assign_nearest_centroid_vectorized(
     group_col: str = "label",
     dim: int = 64,
 ) -> DataFrame:
-    """PRODUCTION BLAS path for quantizer assignment — the mapInArrow /
-    numpy-matmul scorer beside :func:`assign_nearest_centroid`'s exact
-    micro-unit twin (VERDICT r10 #3, the pattern lsh ``scorer=
-    "vectorized"`` already proved).
+    """Quantizer assignment at integer micro-unit resolution — the scale
+    path beside :func:`assign_nearest_centroid`'s exact-double argmax.
 
-    The centroid frame is bounded (groups x dim — the same frame the
-    broadcast path collects JVM-side) and is collected ONCE into a
-    (k, dim) float64 matrix closed over by the Arrow kernel. Each Arrow
-    batch of corpus vectors becomes one (batch x dim) matrix and ONE
-    numpy matmul scores all k centroids; the argmax happens inside the
-    kernel, so the stage emits one row per vector with ZERO shuffle, no
-    corpus x k row expansion, no join, no aggregate — at the sf10
-    fixture the packed-argmax path streams a 400M-row expansion through
-    HashAggregate (663 s); this path never materializes the expansion
-    at all.
+    The centroid frame is bounded (groups x dim) and is collected ONCE
+    into a (k, dim) float64 matrix closed over by the Arrow kernel. Each
+    Arrow batch of corpus vectors becomes one (batch x dim) matrix and
+    ONE numpy matmul scores all k centroids; the argmax happens inside
+    the kernel, so the stage emits one row per vector with ZERO shuffle,
+    no corpus x k row expansion, no join, no aggregate.
 
-    Semantics mirror ``micro_units=True`` exactly at the 1e-6
-    resolution: scores round to integer micro-units, ties -> smallest
-    group id (labels sorted ascending; ``argmax`` returns the first
-    max), ``dot = dm / 1e6``. numpy's pairwise-summed matmul differs
-    from the sequential double dot in the last ulp (|diff| < 1e-12 for
-    unit-norm 64-dim vectors); rounding is HALF_UP by construction
-    (copysign/floor — r12), matching the JVM ``F.round`` and the DuckDB
-    oracle, so only the last-ulp matmul difference remains and the
-    parity tests (sf0.001-sf1) pin it empirically."""
+    Scores round to integer micro-units (``_micro_argmax``), ties ->
+    smallest group id (labels sorted ascending), ``dot = dm / 1e6``."""
     import numpy as np
     import pyarrow as pa
 
@@ -422,32 +412,15 @@ def assign_nearest_centroid_vectorized(
 
     def run(batches):
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            emb_col = batch.column(1)
-            # fixed-width list -> flat values -> (n, dim); flatten()
-            # honors array offsets, so sliced batches stay correct
-            X = (
-                emb_col.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(n, dim)
-            )
-            p = (X @ CT) * 1e6  # (n, k) micro, pre-round
-            # HALF_UP like the JVM F.round / DuckDB round (np.round is
-            # half-even) for the exact-.5 class. Caveat (r12 ADVICE): the
-            # float add in |x|+0.5 can carry for values one ulp below a .5
-            # boundary, so parity there is empirical (same rarity class as
-            # the last-ulp matmul note), not by construction.
-            dm = np.copysign(np.floor(np.abs(p) + 0.5), p).astype(np.int64)
-            best = np.argmax(dm, axis=1)  # first max = smallest label
+            ids, X = _ids_and_vectors(batch, dim)
+            best, dm = _micro_argmax(X @ CT)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ids.astype(np.int64), pa.int64()),
+                    pa.array(ids, pa.int64()),
                     pa.array(labs[best], pa.int64()),
-                    pa.array(dm[np.arange(n), best] / 1e6, pa.float64()),
+                    pa.array(dm / 1e6, pa.float64()),
                 ],
                 names=[id_col, "assigned", "dot"],
             )
@@ -488,13 +461,13 @@ def pq_codebooks(
     Scale: the codebook is <= n_codes x n_subspaces rows — broadcast-
     sized by construction; encode cost is corpus x n_codes, linear in
     the corpus."""
-    # pq_encode packs (micro-dot, code) as dm * 512 + (511 - code); a
+    # the SQL twins pack (micro-dot, code) as dm * 512 + (511 - code); a
     # code >= 512 silently corrupts that ordering, so refuse to build a
-    # codebook pq_encode cannot pack (r10 ADVICE).
+    # codebook they cannot pack.
     if n_codes > 512:
         raise ValueError(
-            f"pq_codebooks: n_codes={n_codes} exceeds pq_encode's packing "
-            "modulus (512); codes must stay < 512"
+            f"pq_codebooks: n_codes={n_codes} exceeds 512, the packing "
+            "modulus of the SQL twins' (micro-dot, code) argmax"
         )
     sub = dim // n_subspaces
     folded = emb.withColumn(group_col, F.pmod(F.col(group_col), F.lit(n_codes)))
@@ -538,74 +511,19 @@ def pq_encode(
 ) -> DataFrame:
     """Encode each vector as ``n_subspaces`` codebook codes — per
     subspace, the code whose entry has the highest dot with the vector's
-    slice in integer MICRO-UNITS (CAST(round(dot * 1e6) AS BIGINT), the
-    same resolution the ADC lookup table already scores at; micro-ties
-    -> smallest code). Output (vec_id, subspace, code): the
-    PQ-compressed corpus, n_subspaces small ints instead of dim floats —
-    the ~32x memory cut that makes billion-vector ANN RAM-resident.
+    slice in integer MICRO-UNITS (``_micro_argmax``: the same resolution
+    the ADC lookup table scores at; micro-ties -> smallest code). Output
+    (vec_id, subspace, code): the PQ-compressed corpus, n_subspaces small
+    ints instead of dim floats — the ~32x memory cut that makes
+    billion-vector ANN RAM-resident.
 
-    Scale: codebook broadcasts; one corpus scan; the argmax packs
-    (micro-dot, code) into ONE BIGINT — ``dm * 512 + (511 - code)`` —
-    so the per-(vector, subspace) reduction is a scalar ``max`` that
-    whole-stage-codegen HashAggregates with map-side combine. The
-    earlier min-of-struct argmax forced SortAggregate, which SORTED the
-    corpus x n_codes expansion (measured at the sf10 fixture: 571 s /
-    7.9 GB spill in that one stage); the packed form streams it. The
-    packing is injective because codes are < 512 (``pq_codebooks``
-    raises on n_codes > 512; externally built codebooks MUST honor the
-    same codes < 512 precondition) and |dm| <= ~1e6 for unit-norm
-    slices keeps the product far inside int64."""
-    sub = dim // n_subspaces
-    sliced = _subspace_slices(
-        emb, id_col, id_col=id_col, vec_col=vec_col,
-        n_subspaces=n_subspaces, sub=sub,
-    )
-    scored = sliced.join(F.broadcast(codebooks), "subspace").select(
-        id_col,
-        "subspace",
-        (
-            F.round(_exact_dot("__sv", "cv", sub) * F.lit(1000000.0), 0).cast("long")
-            * F.lit(512)
-            + (F.lit(511) - F.col("code"))
-        ).alias("__packed"),
-    )
-    best = scored.groupBy(id_col, "subspace").agg(F.max("__packed").alias("__p"))
-    return best.select(
-        id_col,
-        F.col("subspace").cast("long").alias("subspace"),
-        (F.lit(511) - F.pmod(F.col("__p"), F.lit(512))).alias("code"),
-    )
-
-
-def pq_encode_vectorized(
-    emb: DataFrame,
-    codebooks: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_subspaces: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    """PRODUCTION BLAS twin of :func:`pq_encode` — the same mapInArrow /
-    numpy pattern as ``assign_nearest_centroid_vectorized``, applied to
-    the OTHER dense-dot hot spot the sf10 audit named (encode was the
-    bulk of ivfpq_rerank's 130 s at the 100x fixture).
-
-    The codebook frame is bounded (n_subspaces x n_codes entries,
-    broadcast-sized by construction) and collects once into one
-    (sub x codes) float64 matrix per subspace, codes sorted ascending.
-    Each Arrow batch slices its (batch x dim) matrix per subspace and
-    ONE matmul scores every codebook entry; the micro-unit argmax runs
-    in-kernel (ties -> smallest code: first max over ascending codes —
-    exactly the packed ``dm * 512 + (511 - code)`` ordering). No
-    corpus x codes row expansion, no join, no aggregate: the stage
-    emits n_subspaces rows per vector with zero shuffle.
-
-    Same last-ulp caveat as the assignment twin: numpy's pairwise
-    matmul differs from the sequential dot only in the final ulp, and
-    rounding is HALF_UP by construction (copysign/floor — r12) like the
-    JVM/DuckDB twins; parity is pinned by pytest against
-    :func:`pq_encode` and by the shared-shape DuckDB gate."""
+    The codebook frame is bounded (n_subspaces x n_codes entries) and
+    collects once into one (sub x codes) float64 matrix per subspace,
+    codes sorted ascending. Each Arrow batch slices its (batch x dim)
+    matrix per subspace and ONE matmul scores every codebook entry; the
+    argmax runs in-kernel. No corpus x codes row expansion, no join, no
+    aggregate: the stage emits n_subspaces rows per vector with zero
+    shuffle."""
     import numpy as np
     import pyarrow as pa
 
@@ -619,14 +537,13 @@ def pq_encode_vectorized(
     if missing:
         # fail loudly driver-side: an empty (sub, 0) matrix would make
         # np.argmax raise an opaque worker traceback inside the executor
-        # (r11 ADVICE)
         raise ValueError(
-            f"pq_encode_vectorized: codebook has no entries for "
-            f"subspace(s) {missing}; expected all of 0..{n_subspaces - 1}"
+            f"pq_encode: codebook has no entries for subspace(s) {missing}; "
+            f"expected all of 0..{n_subspaces - 1}"
         )
     mats, code_ids = [], []
     for s in range(n_subspaces):
-        entries = sorted(per.get(s, []))
+        entries = sorted(per[s])
         code_ids.append(np.asarray([c for c, _ in entries], dtype=np.int64))
         mats.append(
             np.ascontiguousarray(
@@ -647,28 +564,16 @@ def pq_encode_vectorized(
             n = batch.num_rows
             if n == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            X = (
-                batch.column(1)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(n, dim)
-            )
-            out_i, out_s, out_c = [], [], []
-            for s in range(n_subspaces):
-                p = (X[:, s * sub : (s + 1) * sub] @ mats[s]) * 1e6
-                # HALF_UP, mirroring the JVM/DuckDB twins (r11 ADVICE)
-                dm = np.copysign(np.floor(np.abs(p) + 0.5), p).astype(np.int64)
-                best = np.argmax(dm, axis=1)  # first max = smallest code
-                out_i.append(ids)
-                out_s.append(np.full(n, s, dtype=np.int64))
-                out_c.append(code_ids[s][best])
+            ids, X = _ids_and_vectors(batch, dim)
+            codes = [
+                code_ids[s][_micro_argmax(X[:, s * sub : (s + 1) * sub] @ m)[0]]
+                for s, m in enumerate(mats)
+            ]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(out_i), pa.int64()),
-                    pa.array(np.concatenate(out_s), pa.int64()),
-                    pa.array(np.concatenate(out_c), pa.int64()),
+                    pa.array(np.tile(ids, n_subspaces), pa.int64()),
+                    pa.array(np.repeat(np.arange(n_subspaces, dtype=np.int64), n), pa.int64()),
+                    pa.array(np.concatenate(codes), pa.int64()),
                 ],
                 names=[id_col, "subspace", "code"],
             )
@@ -728,7 +633,7 @@ def ivfpq_topk(
     REPRESENTATION (8 small ints per vector, ADC lookup-table scoring).
     Composes the two gated primitives unchanged: ivf_probe_cells picks
     cells, pq_encode/pq_lut score candidates in integer micro-units, so
-    the composition is bit-identical to its SQL twin like each half.
+    the composition matches its SQL twin exactly wherever each half does.
 
     Plan shape: centroids, probe list and LUT all broadcast; the corpus
     contributes one (cell-pruned id) join plus its code rows; the

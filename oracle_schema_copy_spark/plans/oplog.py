@@ -51,8 +51,10 @@ transaction. ``replay`` (the warehouse entry point) is per-table staged
 writes + atomic renames, idempotent to re-run after failure;
 ``replay_atomic`` stages the WHOLE replay into a shadow warehouse and
 commits via one marker rename + roll-forward, so a crashed import is never
-observable as a partially-applied warehouse (CopyUtils.java:367). Both
-roll a pending commit forward first and create views last, over the final
+observable as a partially-applied warehouse (CopyUtils.java:367). A
+:class:`Warehouse` rolls a pending commit forward before it touches any
+table, so no reader sees a cut commit's prefix and no later mutation is
+overwritten by its stale stage. Both create views last, over the final
 tables.
 
 Data operations are chunked at ``ROWS_PER_OP`` rows per payload file
@@ -60,7 +62,8 @@ Data operations are chunked at ``ROWS_PER_OP`` rows per payload file
 implemented with ``maxRecordsPerFile`` rather than driver-side buffering.
 
 Every directory swap — ``Warehouse.rewrite``, the atomic replay's commit
-and ``mor.MergeOnReadTable.compact`` — goes through :func:`swap_in`. A
+and ``mor.MergeOnReadTable.compact`` — goes through :func:`swap_in`; the
+two full rewrites stage their files with :func:`write_staged`. A
 crash between its two renames leaves a warehouse table (or a
 merge-on-read base) absent; the warehouse and the merge-on-read table roll
 that back (:func:`undo_cut_swap`) before they next touch it, so a read sees
@@ -101,6 +104,16 @@ def swap_in(src: str, dst: str) -> None:
         os.replace(dst, trash)
     os.replace(src, dst)
     shutil.rmtree(trash, ignore_errors=True)
+
+
+def write_staged(df: DataFrame, dst: str) -> None:
+    """Replace directory ``dst`` with the rows of ``df``: write them to
+    ``<dst>.__stage__``, first removing what a cut earlier write left
+    there, then :func:`swap_in`."""
+    stage = dst + ".__stage__"
+    shutil.rmtree(stage, ignore_errors=True)
+    df.write.mode("overwrite").parquet(stage)
+    swap_in(stage, dst)
 
 
 def undo_cut_swap(dst: str) -> None:
@@ -261,8 +274,11 @@ class Warehouse:
 
     def _dir(self, table: str) -> str:
         """The table's directory. Every read, listing, write and rewrite
-        goes through here, so a swap cut between its two renames (the
-        table gone, ``<table>.__old__`` left) is rolled back first."""
+        goes through here, so first a commit that a crashed
+        :func:`replay_atomic` left pending is rolled forward, then a swap
+        cut between its two renames (the table gone, ``<table>.__old__``
+        left) is rolled back."""
+        recover_replay(self)
         d = os.path.join(self.root, table)
         undo_cut_swap(d)
         return d
@@ -327,10 +343,7 @@ class Warehouse:
     def rewrite(self, table: str, df: DataFrame) -> None:
         """Full-table rewrite via staging dir + atomic swap (upsert/delete
         on immutable parquet). The swap is the commit point."""
-        stage = self._dir(table) + ".__stage__"
-        shutil.rmtree(stage, ignore_errors=True)
-        df.write.mode("overwrite").parquet(stage)
-        swap_in(stage, self._dir(table))
+        write_staged(df, self._dir(table))
         self.tables_written.add(table)
         self.schemas[table] = df.schema
 
@@ -491,12 +504,9 @@ def replay(
     on_opaque: str | None = None,
 ) -> list[OpRecord]:
     """Replay an operation log into a parquet warehouse through a
-    :class:`WarehouseTarget`. First rolls forward a commit that a crashed
-    :func:`replay_atomic` left pending, so its stale stage cannot later land
-    over tables written here; creates the logged views last, because a view
+    :class:`WarehouseTarget`; creates the logged views last, because a view
     made mid-log reads files that a later rewrite deletes. Returns the
     records that reached the warehouse."""
-    recover_replay(warehouse)
     target = WarehouseTarget(warehouse)
     applied = replay_into_target(spark, log_path, target, on_opaque=on_opaque)
     warehouse.create_views(target.views)
@@ -556,9 +566,9 @@ def replay_atomic(
 
     A failure before (3) leaves the target byte-identical (the stale stage
     is discarded by the next run); a failure during (4) is completed by
-    the roll-forward in (1), which skips already-moved tables — so readers
-    either see the pre-replay state or the fully-replayed one, never a
-    prefix. Single-writer, like the reference's import. Returns the
+    the warehouse's next table access (``Warehouse._dir``) or by (1), both
+    skipping already-moved tables — so readers either see the pre-replay
+    state or the fully-replayed one, never a prefix. Single-writer, like the reference's import. Returns the
     records that reached the warehouse."""
     os.makedirs(warehouse.root, exist_ok=True)
     recover_replay(warehouse)

@@ -881,39 +881,21 @@ _ASSIGN_ORACLE = f"""
     """
 
 
-@query("assign_nearest_centroid", _ASSIGN_ORACLE)
+@query("assign_nearest_centroid_vectorized", _ASSIGN_ORACLE, changed_in=14)
+@query("assign_nearest_centroid", _ASSIGN_ORACLE, changed_in=14)
 def q_assign_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantizer assignment: every vector routed to its max-dot label
-    centroid (centroids from group_centroids, broadcast; one corpus
-    scan, scalar packed-argmax reduction). Runs the micro-unit scale
-    path: the fixture's label count grows with the corpus, so the exact
-    struct-min argmax would SortAggregate the corpus x k expansion (the
-    sf10 audit straggler); the packed BIGINT max streams it through
-    HashAggregate. Micro-ties -> smallest label, dot at the 1e-6
-    resolution the PQ family already scores at; the oracle mirrors the
-    micro-unit ordering directly. With group_centroids this is one
-    Lloyd/k-means iteration expressed declaratively (the kmeans queries
-    keep the exact-double path — their k is a fixed design parameter)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = similarity.group_centroids(emb, group_col="label", vec_col="embedding")
-    return similarity.assign_nearest_centroid(
-        emb, cents, id_col="vec_id", vec_col="embedding", group_col="label",
-        micro_units=True,
-    )
-
-
-@query("assign_nearest_centroid_vectorized", _ASSIGN_ORACLE)
-def q_assign_nearest_centroid_vectorized(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PRODUCTION BLAS twin of assign_nearest_centroid (VERDICT r10 #3):
-    the bounded centroid frame collects once into a (k, dim) numpy
-    matrix and ONE matmul per Arrow batch scores all k centroids, with
-    the micro-unit argmax inside the kernel — no corpus x k row
-    expansion, no join, no aggregate, ZERO shuffle (the packed-argmax
-    exact path streams a 400M-row expansion through HashAggregate at
-    sf10; this path never materializes it). Same oracle as the exact
-    path: identical micro-unit ordering, tie -> smallest label."""
+    centroid (centroids from group_centroids). The bounded centroid frame
+    collects once into a (k, dim) numpy matrix and ONE matmul per Arrow
+    batch scores all k centroids, with the micro-unit argmax inside the
+    kernel — no corpus x k row expansion, no join, no aggregate, zero
+    shuffle (the fixture's label count grows with the corpus, so an
+    expansion would be corpus x |labels| rows). Micro-ties -> smallest
+    label, dot at the 1e-6 resolution the PQ family scores at; the
+    oracle mirrors the micro-unit ordering directly. With
+    group_centroids this is one Lloyd/k-means iteration (the kmeans
+    queries keep the exact-double path — their k is a fixed design
+    parameter). Both names run this one path."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = similarity.group_centroids(emb, group_col="label", vec_col="embedding")
     return similarity.assign_nearest_centroid_vectorized(

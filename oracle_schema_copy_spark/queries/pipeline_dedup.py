@@ -594,9 +594,9 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_components",
-    f"""
+# Recursive-CTE transitive closure over the 3-gram Jaccard pair graph,
+# shared by both component names.
+_COMPONENTS_ORACLE = f"""
     WITH RECURSIVE
     pairs AS ({_SQL_JACCARD_PAIRS_CAPPED}),
     edges AS (
@@ -612,51 +612,22 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM reach JOIN edges e ON reach.r = e.src)
     SELECT id AS doc_id, min(r) AS component
     FROM reach GROUP BY id
-    """,
-)
+    """
+
+
+@query("dedup_components_star", _COMPONENTS_ORACLE, changed_in=14)
+@query("dedup_components", _COMPONENTS_ORACLE, changed_in=14)
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components over the 3-gram Jaccard
     pair graph (component = min reachable doc id — the canonical survivor
-    of each duplicate group). Spark side is iterative min-label
-    propagation with lineage checkpoints; the oracle is a recursive-CTE
-    transitive closure — two very different algorithms that must agree
-    exactly."""
+    of each duplicate group). Spark side is large-star/small-star
+    contraction with lineage checkpoints (O(log n) rounds); the oracle is
+    a recursive-CTE transitive closure — two very different algorithms
+    that must agree exactly. Both names run this one path."""
     pairs = dedup.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.2
     )
     return dedup.near_dup_components(pairs)
-
-
-@query(
-    "dedup_components_star",
-    f"""
-    WITH RECURSIVE
-    pairs AS ({_SQL_JACCARD_PAIRS_CAPPED}),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b AS src, id_a AS dst FROM pairs),
-    reach AS (
-        SELECT src AS id, src AS r FROM edges
-        UNION
-        SELECT src AS id, dst AS r FROM edges
-        UNION
-        SELECT reach.id, e.dst AS r
-        FROM reach JOIN edges e ON reach.r = e.src)
-    SELECT id AS doc_id, min(r) AS component
-    FROM reach GROUP BY id
-    """,
-)
-def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering via alternating large-star/small-star — the
-    O(log n)-round scale path for dedup_components (min-label propagation
-    needs O(diameter) rounds). Same pair graph, same oracle, third
-    independent algorithm (recursive CTE vs propagation vs star
-    contraction) — all three must agree exactly."""
-    pairs = dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.2
-    )
-    return dedup.near_dup_components_star(pairs)
 
 
 def _banded_lsh_sql(bands: int = 8, max_bucket: int = 1000) -> str:

@@ -384,6 +384,7 @@ def _sql_subspace_dot(vec: str, cv: str, sub: int = 8) -> str:
                    ORDER BY score_micro DESC, neighbor_id) AS BIGINT) AS rank
         FROM scored) WHERE rank <= 5
     """,
+    changed_in=14,
 )
 def q_similarity_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jegou et al. 2011): the corpus is
@@ -437,19 +438,18 @@ def q_similarity_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(511 - ((max(packed) % 512 + 512) % 512) AS BIGINT) AS code
     FROM esc GROUP BY vec_id, subspace
     """,
+    changed_in=14,
 )
 def q_pq_codes_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION BLAS twin of the PQ encode step (the other dense-dot
-    hot spot beside quantizer assignment): codebooks collect once into
+    """The PQ encode step on its own: codebooks collect once into
     per-subspace (sub x codes) matrices and one numpy matmul per Arrow
     batch encodes every subspace slice, micro-unit argmax in-kernel with
-    the packed ordering's smallest-code tie-break. The oracle is the
-    exact path's own packed-max CTE chain — a vectorized code that
-    disagrees with the sequential micro-unit encode on ANY (vector,
-    subspace) diverges."""
+    the smallest-code tie-break. The oracle is the packed-max CTE chain
+    of the SQL twins — a code that disagrees with the sequential
+    micro-unit encode on ANY (vector, subspace) diverges."""
     emb = load_table(spark, sf_dir, "embeddings")
     cbv = similarity.pq_codebooks(emb, group_col="label", vec_col="embedding")
-    return similarity.pq_encode_vectorized(emb, cbv)
+    return similarity.pq_encode(emb, cbv)
 
 
 # Full IVF-PQ CTE chain (routing + codebooks + codes + LUT + ADC
@@ -506,6 +506,7 @@ _IVFPQ_CTES = f"""{_IVF_NPROBE_CTES},
                    ORDER BY score_micro DESC, neighbor_id) AS BIGINT) AS rank
         FROM pscored) WHERE rank <= 5
     """,
+    changed_in=14,
 )
 def q_similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-5 — the production billion-vector index layout (FAISS
@@ -560,6 +561,7 @@ _IVFPQ_SHORTLIST = 50
                    ORDER BY score DESC, neighbor_id) AS BIGINT) AS rank
         FROM rescored) WHERE rank <= 5
     """,
+    changed_in=14,
 )
 def q_similarity_topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage IVF-PQ: ADC shortlist (50 per query, codes only) +
@@ -616,6 +618,7 @@ def q_similarity_topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFram
       ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
     GROUP BY b.query_id
     """,
+    changed_in=14,
 )
 def q_ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the composed IVF-PQ path against the exact brute-force

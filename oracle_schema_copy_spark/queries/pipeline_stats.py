@@ -636,6 +636,7 @@ def q_sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT component, doc_id AS kept_doc, CAST(nm AS BIGINT) AS n_members
     FROM ranked WHERE rn = 1
     """,
+    changed_in=14,
 )
 def q_dedup_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup endgame: near-dup clusters (connected components over the
@@ -739,6 +740,7 @@ def q_embedding_int8_quantize_error(spark: SparkSession, sf_dir: str) -> DataFra
            round(CAST(sum(is_dup) AS DOUBLE) / count(*), 6) AS dup_rate
     FROM marked GROUP BY source
     """,
+    changed_in=14,
 )
 def q_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplication rate per crawl source — the curation metric that
@@ -795,6 +797,7 @@ def q_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 'train' ELSE 'test' END AS split
     FROM lab
     """,
+    changed_in=14,
 )
 def q_split_by_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware train/test split: hash-split on the NEAR-DUP CLUSTER
@@ -808,8 +811,8 @@ def q_split_by_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment and the split label of every document.
 
     Scale: pair generation is the df-capped posting-list path, components
-    are the gated min-label propagation (shallow boilerplate clusters),
-    and the split itself is per-row hash arithmetic — no new shuffles
+    are the gated large-star/small-star contraction, and the split
+    itself is per-row hash arithmetic — no new shuffles
     beyond the already-gated pieces."""
     docs = load_table(spark, sf_dir, "documents")
     from oracle_schema_copy_spark.operators.sampling import hash_bucket

@@ -529,7 +529,7 @@ def q_mor_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT * FROM upd
     """,
-    changed_in=11,
+    changed_in=14,
 )
 def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read COMPACTION is invisible to readers: the same
@@ -577,7 +577,7 @@ def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
-    changed_in=13,
+    changed_in=14,
 )
 def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2+S10 operation-log round trip: export insert+upsert+delete ops to a
@@ -614,7 +614,7 @@ def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
-    changed_in=13,
+    changed_in=14,
 )
 def q_oplog_atomic_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The transactional twin of oplog_roundtrip_orders: the same
@@ -651,7 +651,7 @@ def q_oplog_atomic_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n.n_name AS nation_name, r.r_name AS region_name
     FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
     """,
-    changed_in=13,
+    changed_in=14,
 )
 def q_export_view_opaque_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 other-object export: a VIEW definition plus trigger/sequence
@@ -689,7 +689,7 @@ def q_export_view_opaque_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.table(view_name)
 
 
-@query("export_all_roundtrip_nation", "SELECT * FROM nation", changed_in=13)
+@query("export_all_roundtrip_nation", "SELECT * FROM nation", changed_in=14)
 def q_export_all_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 exportAll pipeline: DDL → data in topo order → constraints after
     data; replayed into a fresh warehouse, returning the imported nation."""
@@ -911,7 +911,7 @@ def _copy_verify_oracle() -> str:
     """
 
 
-@query("copy_verify_end_to_end", _copy_verify_oracle(), changed_in=13)
+@query("copy_verify_end_to_end", _copy_verify_oracle(), changed_in=14)
 def q_copy_verify_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's mission as one gated row: COPY a table through the
     full operation-log pipeline (export -> manifest+parquet log -> replay
@@ -1034,7 +1034,7 @@ def q_dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 2, 'delete', 'orders', 0,
            (SELECT CAST(count(*) AS BIGINT) FROM orders WHERE o_orderkey % 500 = 0)
     """,
-    changed_in=10,
+    changed_in=14,
 )
 def q_oplog_history_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 Python Data Source (SPARK-44076) surface: the operation

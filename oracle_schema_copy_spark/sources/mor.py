@@ -35,13 +35,13 @@ mutation log — a window over log rows only, never over base. The base
 table contributes one broadcast anti-join against the mutated keys;
 base file scans stay pruned/pushed-down because read() is plain
 DataFrame composition over parquet scans. ``compact()`` folds the log
-into a new base via the oplog warehouse's staged-directory swap
-(``oplog.swap_in``), bounding read amplification; ``stats()`` reports
+into a new base via the oplog warehouse's staged write
+(``oplog.write_staged``), bounding read amplification; ``stats()`` reports
 the log size that triggers it. A compaction cut between the swap's two
 renames leaves ``base`` missing and the log in place; ``read``,
 ``compact`` and ``write_base`` roll that back first
 (``oplog.undo_cut_swap``), so the table reads its pre-compaction rows and
-a retried compaction succeeds.
+a retried compaction replaces the cut one's stage.
 """
 
 from __future__ import annotations
@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.operators.walk import _keyed_join, key_frame
-from oracle_schema_copy_spark.plans.oplog import swap_in, undo_cut_swap
+from oracle_schema_copy_spark.plans.oplog import undo_cut_swap, write_staged
 
 
 class MergeOnReadTable:
@@ -188,8 +188,6 @@ class MergeOnReadTable:
         """Fold the mutation log into a fresh base (staged swap: write to
         a staging dir, swap in, drop the log) — the read-amplification
         bound. Readers opened after the swap see identical rows."""
-        staged = f"{self.path}/base_staged_{uuid.uuid4().hex[:8]}"
-        self.read().write.mode("overwrite").parquet(staged)
-        swap_in(staged, self._base())
+        write_staged(self.read(), self._base())
         for kind in ("deletes", "updates"):
             shutil.rmtree(f"{self.path}/{kind}", ignore_errors=True)

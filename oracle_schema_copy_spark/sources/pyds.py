@@ -17,17 +17,17 @@ Implementation notes (the Python Data Source API, SPARK-44076):
   O(files), not O(rows), at any payload size;
 - the manifest is only readable after the writer's atomic close-rename,
   so a half-written log reads as "no such log", never as a partial
-  history.
+  history; it is parsed by ``oplog.read_manifest``, the one reader of the
+  log format.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-MANIFEST = "manifest.jsonl"
+from oracle_schema_copy_spark.plans.oplog import OpRecord, read_manifest
 
 _SCHEMA = (
     "seq bigint, kind string, table_name string, payload_dir string, "
@@ -36,7 +36,7 @@ _SCHEMA = (
 
 
 class _OpPartition(InputPartition):
-    def __init__(self, base: str, record: dict):
+    def __init__(self, base: str, record: OpRecord):
         self.base = base
         self.record = record
 
@@ -49,26 +49,18 @@ class OplogHistoryReader(DataSourceReader):
         self.base = path
 
     def partitions(self):
-        manifest = os.path.join(self.base, MANIFEST)
-        with open(manifest, encoding="utf-8") as fh:
-            return [
-                _OpPartition(self.base, json.loads(line))
-                for line in fh
-                if line.strip()
-            ]
+        return [_OpPartition(self.base, rec) for rec in read_manifest(self.base)]
 
     def read(self, partition: _OpPartition):
         import pyarrow.parquet as pq
 
         r = partition.record
-        params = r.get("params") or {}
-        n_statements = len(params["statements"]) if "statements" in params else 0
+        n_statements = len(r.params.get("statements", ()))
         n_files = 0
         n_rows = 0
         n_bytes = 0
-        payload = r.get("payload")
-        if payload:
-            pdir = os.path.join(partition.base, payload)
+        if r.payload:
+            pdir = os.path.join(partition.base, r.payload)
             for name in sorted(os.listdir(pdir)):
                 if not name.endswith(".parquet"):
                     continue
@@ -76,16 +68,7 @@ class OplogHistoryReader(DataSourceReader):
                 n_files += 1
                 n_rows += pq.ParquetFile(fpath).metadata.num_rows
                 n_bytes += os.path.getsize(fpath)
-        yield (
-            r["seq"],
-            r["kind"],
-            r.get("table"),
-            payload,
-            n_statements,
-            n_files,
-            n_rows,
-            n_bytes,
-        )
+        yield (r.seq, r.kind, r.table, r.payload, n_statements, n_files, n_rows, n_bytes)
 
 
 class OplogHistoryDataSource(DataSource):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from oracle_schema_copy_spark.operators.dedup import near_dup_components
@@ -15,7 +17,7 @@ def _components(spark, pairs):
 
 
 def test_chain_converges_to_min(spark):
-    # 1-2-3-4-5 chain: all collapse to 1 (needs multiple propagation rounds)
+    # 1-2-3-4-5 chain: all collapse to 1 (needs several contraction rounds)
     got = _components(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
 
@@ -32,28 +34,41 @@ def test_merge_through_shared_node(spark):
 
 
 def test_unconverged_raises_instead_of_silent_split(spark):
-    """A chain longer than max_iter rounds must fail loudly — returning
-    partial labels would split one dup cluster into several survivors."""
+    """A chain longer than max_iter rounds can contract must fail loudly —
+    returning partial labels would split one dup cluster into several
+    survivors."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], ["id_a", "id_b"]
     )
+    # this chain contracts in 3 rounds and needs a 4th to see it stable
     with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_components(chain, max_iter=2)
+        near_dup_components(chain, max_iter=3)
     # the same chain converges with enough rounds
     ok = {r.doc_id: r.component for r in near_dup_components(chain).collect()}
     assert set(ok.values()) == {1}
 
 
-# ---------------------------------------------------------------------------
-# large-star/small-star variant
-# ---------------------------------------------------------------------------
+def _union_find(pairs):
+    """Reference components: a pure-Python union-find whose root is
+    always the smallest id, i.e. the min-label propagation fixed point."""
+    parent = {}
 
-from oracle_schema_copy_spark.operators.dedup import near_dup_components_star
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
 
 
-def _components_star(spark, pairs, **kw):
-    df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    return {r.doc_id: r.component for r in near_dup_components_star(df, **kw).collect()}
+def _random_graph(seed, n_nodes, n_edges):
+    rng = random.Random(seed)
+    return [tuple(sorted(rng.sample(range(n_nodes), 2))) for _ in range(n_edges)]
 
 
 @pytest.mark.parametrize(
@@ -63,23 +78,26 @@ def _components_star(spark, pairs, **kw):
         [(10, 11), (10, 12), (10, 13), (20, 21), (30, 31)],
         [(1, 5), (1, 6), (2, 7), (2, 8), (6, 7)],
         [(5, 1), (9, 5), (2, 9), (7, 3)],  # reversed-order edges
+        _random_graph(1, 40, 30),  # many small components
+        _random_graph(2, 60, 45),
+        _random_graph(3, 25, 40),  # one giant component
+        [(i, i + 1) for i in range(1, 33)],  # 33-node chain
     ],
 )
 def test_star_agrees_with_label_propagation(spark, pairs):
-    df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    lp = {r.doc_id: r.component for r in near_dup_components(df).collect()}
-    assert _components_star(spark, pairs) == lp
+    """Star contraction ends where min-label propagation would: every
+    node labelled with the smallest id of its component (computed here
+    by union-find)."""
+    assert _components(spark, pairs) == _union_find(pairs)
 
 
 def test_star_handles_long_chain_in_log_rounds(spark):
-    """A 33-node chain: label propagation needs ~31 rounds (raises under a
-    6-round budget); star contraction converges within 6 — the O(log n)
-    vs O(diameter) difference this variant exists for."""
+    """A 33-node chain: min-label propagation would need ~31 rounds; star
+    contraction converges within 6 — the O(log n) vs O(diameter)
+    difference this algorithm is kept for."""
     chain = [(i, i + 1) for i in range(1, 33)]
     df = spark.createDataFrame(chain, ["id_a", "id_b"])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_components(df, max_iter=6)
-    got = _components_star(spark, chain, max_iter=6)
+    got = {r.doc_id: r.component for r in near_dup_components(df, max_iter=6).collect()}
     assert got == {i: 1 for i in range(1, 34)}
 
 

@@ -177,6 +177,26 @@ def test_bench_one_looks_names_up_in_the_whole_registry(monkeypatch):
         bench._run_one("no_such_query", "/fixture", 1, 1)
 
 
+def test_plan_audit_flags_unlisted_crosses_and_stale_allowlist_entries():
+    """The audit fails an unlisted cross join and an allowlisted name
+    whose plan no longer crosses anything; a listed cross and an
+    unlisted plain plan pass."""
+    from tools import plan_audit
+
+    def plan(bnlj=0, cartesian=0):
+        return {"bhj": 1, "smj": 0, "bnlj": bnlj, "cartesian": cartesian,
+                "codegen": 3, "pushed": [], "schemas": []}
+
+    listed = "similarity_topk_bruteforce"
+    assert listed in plan_audit.INTENTIONAL_CROSS
+    assert "tpch_q1" not in plan_audit.INTENTIONAL_CROSS
+    assert plan_audit.verdict(listed, plan(bnlj=1)) is None
+    assert plan_audit.verdict(listed, plan()) == "stale"
+    assert plan_audit.verdict("tpch_q1", plan()) is None
+    assert plan_audit.verdict("tpch_q1", plan(bnlj=1)) == "cross"
+    assert plan_audit.verdict("tpch_q1", plan(cartesian=2)) == "cross"
+
+
 def test_ab_rejects_bad_arguments():
     with pytest.raises(SystemExit):
         ab.main(["stage", "a", "b", "q1", "1"])  # stage needs a fixture

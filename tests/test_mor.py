@@ -84,7 +84,8 @@ def test_compaction_preserves_rows_and_clears_log(spark, table):
 def test_compaction_cut_between_renames_rolls_back(spark, table, monkeypatch):
     """A compaction cut between its swap's two renames leaves ``base``
     missing; the next read returns the pre-compaction rows (the log is
-    still there) and a retried compaction succeeds."""
+    still there) and a retried compaction succeeds, leaving no stage or
+    old base behind."""
     table.delete_keys(spark.createDataFrame([(4,)], "k long"))
     table.upsert(spark.createDataFrame([(2, "B")], "k long, v string"))
     before = _rows(table.read())
@@ -106,7 +107,8 @@ def test_compaction_cut_between_renames_rolls_back(spark, table, monkeypatch):
     table.compact()
     assert table.stats() == {"n_delete_batches": 0, "n_update_batches": 0}
     assert _rows(table.read()) == before
-    assert not os.path.isdir(os.path.join(table.path, "base.__old__"))
+    # the retry replaced the cut compaction's stage: nothing else is left
+    assert sorted(os.listdir(table.path)) == ["base"]
 
 
 def test_delete_batch_schema_enforced(spark, table):

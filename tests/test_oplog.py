@@ -217,6 +217,58 @@ def test_atomic_replay_rolls_forward_after_commit_marker(spark, sf_dir, tmp_path
     _sh.rmtree(str(tmp_path / "wh"), ignore_errors=True)
 
 
+def _cut_second_commit_swap(spark, sf_dir, root: str, monkeypatch) -> None:
+    """A two-table ``replay_atomic`` (nation 5 -> 25 rows, region 2 -> 5)
+    cut inside its commit: nation is swapped in, region's swap raises, so
+    the commit marker and region's stage stay behind."""
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    wh = oplog.Warehouse(spark, root)
+    wh.write("nation", nation.filter(F.col("n_nationkey") < 5))
+    wh.write("region", region.filter(F.col("r_regionkey") < 2))
+    log = root + "_log"
+    with oplog.OperationLogWriter(log) as lg:
+        lg.insert("nation", nation)
+        lg.insert("region", region)
+    real_swap, calls = oplog.swap_in, []
+
+    def cut_second_swap(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("crash inside the commit")
+        real_swap(src, dst)
+
+    monkeypatch.setattr(oplog, "swap_in", cut_second_swap)
+    with pytest.raises(OSError, match="inside the commit"):
+        oplog.replay_atomic(spark, log, wh)
+    monkeypatch.undo()
+    assert os.path.isfile(os.path.join(root, oplog.COMMIT_MARKER))
+
+
+def test_crashed_atomic_commit_rolls_forward_on_next_access(spark, sf_dir, tmp_path, monkeypatch):
+    """A commit cut between its table moves is finished by the next
+    warehouse access, not only by the next replay: a reader never sees
+    the prefix (new nation beside old region), and a delete made before
+    any replay is not overwritten later by the stale stage."""
+    seen = str(tmp_path / "seen")
+    _cut_second_commit_swap(spark, sf_dir, seen, monkeypatch)
+    fresh = oplog.Warehouse(spark, seen)
+    counts = (fresh.read("nation").count(), fresh.read("region").count())
+
+    mutated = str(tmp_path / "mutated")
+    _cut_second_commit_swap(spark, sf_dir, mutated, monkeypatch)
+    target = oplog.WarehouseTarget(oplog.Warehouse(spark, mutated))
+    target.delete("region", "r_regionkey", spark.createDataFrame([(0,)], "r_regionkey long"))
+    other = str(tmp_path / "other_log")
+    with oplog.OperationLogWriter(other) as lg:
+        lg.insert("other", spark.createDataFrame([(1,)], "x long"))
+    oplog.replay(spark, other, target.wh)
+    keys = sorted(r.r_regionkey for r in target.wh.read("region").collect())
+
+    assert (counts, keys) == ((25, 5), [1, 2, 3, 4])
+    assert not os.path.exists(os.path.join(mutated, oplog.COMMIT_MARKER))
+
+
 def test_replay_composite_and_legacy_delete_records(spark, sf_dir, tmp_path):
     """Composite-key delete ops round-trip through write/replay; a legacy
     single-``key_column`` manifest record (pre-composite format) still

@@ -90,58 +90,6 @@ def test_repetition_ratio(spark):
     assert got[3] == 0.0
 
 
-def test_assign_nearest_centroid_vectorized_parity(spark, sf_dir):
-    """The BLAS mapInArrow path (one numpy matmul per Arrow batch, argmax
-    in-kernel) must agree with the exact micro-unit packed-argmax path:
-    identical assignment for every vector, dot within one micro-unit
-    (numpy's pairwise matmul differs from the sequential dot in the last
-    ulp, which can land a score in the adjacent micro bucket)."""
-    from oracle_schema_copy_spark.operators.similarity import (
-        assign_nearest_centroid,
-        assign_nearest_centroid_vectorized,
-        group_centroids,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = group_centroids(emb, group_col="label")
-    exact = {
-        r.vec_id: (r.assigned, r.dot)
-        for r in assign_nearest_centroid(emb, cents, micro_units=True).collect()
-    }
-    fast = {
-        r.vec_id: (r.assigned, r.dot)
-        for r in assign_nearest_centroid_vectorized(emb, cents).collect()
-    }
-    assert set(exact) == set(fast) and exact
-    for vid, (a, d) in exact.items():
-        af, df_ = fast[vid]
-        assert af == a, (vid, af, a)
-        assert abs(df_ - d) <= 1.0000001e-06, (vid, df_, d)
-
-
-def test_pq_encode_vectorized_parity(spark, sf_dir):
-    """The BLAS PQ encode must emit the IDENTICAL (vec_id, subspace,
-    code) set as the exact packed-argmax encode — codes are discrete, so
-    unlike the assignment dot there is no tolerance: any micro-boundary
-    disagreement shows up as a differing code."""
-    from oracle_schema_copy_spark.operators.similarity import (
-        pq_codebooks,
-        pq_encode,
-        pq_encode_vectorized,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cbs = pq_codebooks(emb, group_col="label", vec_col="embedding")
-    exact = {
-        (r.vec_id, r.subspace): r.code for r in pq_encode(emb, cbs).collect()
-    }
-    fast = {
-        (r.vec_id, r.subspace): r.code
-        for r in pq_encode_vectorized(emb, cbs).collect()
-    }
-    assert exact and fast == exact
-
-
 def test_group_centroids(spark):
     from oracle_schema_copy_spark.operators.similarity import group_centroids
 

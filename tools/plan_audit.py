@@ -4,11 +4,14 @@ Prints, per query: broadcast vs sort-merge join counts, whole-stage
 codegen span count, and every parquet scan's PushedFilters + ReadSchema
 (for HUMAN inspection of pruning/pushdown — the tool cannot know which
 columns/filters a query *should* push, so it reports rather than judges
-those). The one hard check: fail on a cartesian or broadcast-nested-loop
-join that is not an allowlisted intentional cross-score.
+those). The hard checks (:func:`verdict`): fail on a cartesian or
+broadcast-nested-loop join that is not an allowlisted intentional
+cross-score, and on an allowlisted query whose plan crosses nothing (a
+stale entry).
 
 Usage: python tools/plan_audit.py [sf_dir] [q1,q2,...]
-Defaults: sf0.01, all headline queries. Exit code 1 if any red flag.
+Defaults: sf0.01, all headline queries. Exit code 1 if any red flag or
+stale entry.
 """
 
 from __future__ import annotations
@@ -74,9 +77,7 @@ INTENTIONAL_CROSS = {
     "sample_mix_by_source",
     "corpus_mixture_rates",
     "text_tfidf_top_terms",
-    "assign_nearest_centroid",
-    "dedup_semantic_clusters",  # same broadcast codebook scoring as assign_nearest_centroid
-    "kmeans_two_iterations",  # same broadcast codebook scoring, once per iteration
+    "dedup_semantic_clusters",  # broadcast codebook scoring (similarity.assign_nearest_centroid)
     "sketch_hll_merge_contract",  # 1x1 global-sketch frame x 1x1 merged-sketch frame
     "sketch_kll_quantile_contract",  # 1x1 exact-band frame x 1x1 merged-sketch frame
     "sketch_theta_setops_contract",  # 1x1 sketch frames crossed into one contract row
@@ -89,7 +90,6 @@ INTENTIONAL_CROSS = {
     "ivfpq_recall_contract",  # brute-force baseline side of the recall measurement
     "similarity_topk_ivfpq",  # queries x codebook LUT broadcast (bounded: 20 x 8 x cells)
     "similarity_topk_ivfpq_rerank",  # same LUT broadcast feeding the ADC shortlist
-    "similarity_topk_pq_adc",  # same LUT broadcast, pure-ADC path
     "corpus_unimax_budgets",  # 1x1 budget frame and 1x1 water-level frame broadcast into |languages| rows
     "embedding_covariance_matrix",  # 1x1 stats row (n + 64 sums) broadcast into the 2,080-row Gram triangle
     "corpus_temperature_budgets",  # 1x1 sqrt-total frame and 1x1 budget frame broadcast into |languages| rows
@@ -101,6 +101,16 @@ INTENTIONAL_CROSS = {
     "sample_doremi_mixture",  # the DoReMi 1-row stat frames + 1x1 budget frame broadcast into |domains| quotas
     "curriculum_interleave_order",  # 1x1 source-count frame broadcast into the slot arithmetic
 }
+
+
+def verdict(name: str, a: dict) -> str | None:
+    """``"cross"`` for a nested-loop or cartesian join outside
+    INTENTIONAL_CROSS, ``"stale"`` for an INTENTIONAL_CROSS name whose
+    plan crosses nothing, else None."""
+    crosses = bool(a["bnlj"] or a["cartesian"])
+    if crosses != (name in INTENTIONAL_CROSS):
+        return "cross" if crosses else "stale"
+    return None
 
 
 def main() -> int:
@@ -140,11 +150,14 @@ def main() -> int:
             print(f"   scan: {s[:150]}")
         for p in a["pushed"]:
             print(f"   pushed: {p[:150]}")
-        if (a["bnlj"] or a["cartesian"]) and name not in INTENTIONAL_CROSS:
+        v = verdict(name, a)
+        if v == "cross":
             print("   !! RED FLAG: nested-loop/cartesian join in plan")
-            flags += 1
-        elif a["bnlj"] or a["cartesian"]:
+        elif v == "stale":
+            print("   !! STALE: allowlisted in INTENTIONAL_CROSS, but the plan crosses nothing")
+        elif name in INTENTIONAL_CROSS:
             print("   (intentional broadcast cross-score)")
+        flags += v is not None
     return 1 if flags else 0
 
 
