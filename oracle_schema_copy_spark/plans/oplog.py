@@ -61,12 +61,13 @@ Data operations are chunked at ``ROWS_PER_OP`` rows per payload file
 (the reference flushes every 10k rows, ``AbstractLoadRowsCallback.java:28``),
 implemented with ``maxRecordsPerFile`` rather than driver-side buffering.
 
-Every directory swap — ``Warehouse.rewrite``, the atomic replay's commit
-and ``mor.MergeOnReadTable.compact`` — goes through :func:`swap_in`; the
-two full rewrites stage their files with :func:`write_staged`. A
-crash between its two renames leaves a warehouse table (or a
-merge-on-read base) absent; the warehouse and the merge-on-read table roll
-that back (:func:`undo_cut_swap`) before they next touch it, so a read sees
+Every directory swap — ``Warehouse.rewrite``, the atomic replay's commit,
+``mor.MergeOnReadTable.compact`` and the streaming upsert sink
+(``streaming.ops.stream_upsert_to_parquet``) — goes through
+:func:`swap_in`; the three full rewrites stage their files with
+:func:`write_staged`. A crash between its two renames leaves the table
+(or a merge-on-read base) absent; each owner rolls that back
+(:func:`undo_cut_swap`) before it next touches the table, so a read sees
 the old rows and a retried mutation succeeds.
 """
 

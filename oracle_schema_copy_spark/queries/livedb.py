@@ -72,7 +72,7 @@ _INS_OFFSET = 100_000_000
     )
     SELECT * FROM upserted WHERE o_orderkey % 7 <> 3
     """,
-    changed_in=10,
+    changed_in=15,
 )
 def q_jdbc_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1+K3+K4+K5+K6 live: DDL-create ORDERS in embedded Derby, bulk-insert
@@ -130,7 +130,7 @@ def q_jdbc_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM nation)
     SELECT * FROM up WHERE n_nationkey % 7 <> 6
     """,
-    changed_in=10,
+    changed_in=15,
 )
 def q_oplog_import_into_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2→K4/K5/K6 composed LIVE: the reference's import flow
@@ -194,7 +194,7 @@ def q_oplog_import_into_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey FROM orders
         WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0))
     """,
-    changed_in=12,
+    changed_in=15,
 )
 def q_jdbc_copy_tree_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2+K1 live: the flagship FK-subgraph walk copied INTO embedded Derby
@@ -259,7 +259,7 @@ def q_jdbc_copy_tree_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 6 <> 5
     """,
-    changed_in=10,
+    changed_in=15,
 )
 def q_stream_cdc_apply_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming CDC apply into a LIVE database: a typed
@@ -379,7 +379,7 @@ def q_stream_cdc_apply_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0)
     GROUP BY o_orderstatus
     """,
-    changed_in=10,
+    changed_in=15,
 )
 def q_jdbc_walk_pushed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2/G2 live, source side: the reference's actual deployment walks a
@@ -449,7 +449,7 @@ _PROBE_MATRIX_BUDGET = 10_000
            nk AS n_orders, CAST(0.0 AS DOUBLE) AS total_price
     FROM n
     """,
-    changed_in=11,
+    changed_in=15,
 )
 def q_jdbc_walk_probe_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The keyed-read strategy MATRIX live (VERDICT r10 #7): the same

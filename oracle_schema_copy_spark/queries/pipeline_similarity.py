@@ -384,7 +384,7 @@ def _sql_subspace_dot(vec: str, cv: str, sub: int = 8) -> str:
                    ORDER BY score_micro DESC, neighbor_id) AS BIGINT) AS rank
         FROM scored) WHERE rank <= 5
     """,
-    changed_in=14,
+    changed_in=15,
 )
 def q_similarity_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jegou et al. 2011): the corpus is
@@ -506,7 +506,7 @@ _IVFPQ_CTES = f"""{_IVF_NPROBE_CTES},
                    ORDER BY score_micro DESC, neighbor_id) AS BIGINT) AS rank
         FROM pscored) WHERE rank <= 5
     """,
-    changed_in=14,
+    changed_in=15,
 )
 def q_similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-5 — the production billion-vector index layout (FAISS
@@ -561,7 +561,7 @@ _IVFPQ_SHORTLIST = 50
                    ORDER BY score DESC, neighbor_id) AS BIGINT) AS rank
         FROM rescored) WHERE rank <= 5
     """,
-    changed_in=14,
+    changed_in=15,
 )
 def q_similarity_topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage IVF-PQ: ADC shortlist (50 per query, codes only) +
@@ -618,7 +618,7 @@ def q_similarity_topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFram
       ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
     GROUP BY b.query_id
     """,
-    changed_in=14,
+    changed_in=15,
 )
 def q_ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the composed IVF-PQ path against the exact brute-force

@@ -1,13 +1,16 @@
-"""Streaming queries over ``events``: event-time windowed aggregations and
-a custom stateful operator.
+"""Streaming queries over ``events``: event-time windowed aggregations,
+the watermark late-data policy, stream-stream and stream-static joins,
+streaming dedup, sketches, a custom stateful operator and a CDC upsert
+sink.
 
-Each windowed aggregation is one shared transformation
-(``streaming/ops.py``) applied to BOTH the batch table (what the DuckDB
-oracle checks below) and a genuine file-source stream (pytest asserts the
-drained stream matches the batch result — see tests/test_streaming.py).
-Two entries here (`*_live`) run the real Structured Streaming path inside
-``queries()`` itself, drained with availableNow, so the driver's gate also
-executes streaming code.
+Each transformation is one shared function (``streaming/ops.py``)
+applied to BOTH the batch table and a genuine file-source stream (pytest
+asserts the drained stream matches the batch result — see
+tests/test_streaming.py). The ``*_live`` entries run the real Structured
+Streaming path inside ``queries()`` itself, drained with availableNow, so
+the oracle gate also executes streaming code. The four
+``stream_stream_*join_live`` names are the four join types of the one
+``ops.view_click_join``.
 
 Window-start oracles use epoch arithmetic (``floor(epoch(ts)/N)*N``) rather
 than DuckDB ``time_bucket`` so the alignment rule is explicitly the same
@@ -96,6 +99,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH c AS (SELECT max(ts) - INTERVAL 1 HOUR AS cutoff FROM events)
     SELECT e.* FROM events e, c WHERE e.ts >= c.cutoff
     """,
+    changed_in=15,
 )
 def q_stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark late-data policy as a batch contract: rows with event time
@@ -194,14 +198,15 @@ def q_stream_sliding_window_live(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.user_id = v.user_id
      AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 1 HOUR
     """,
+    changed_in=15,
 )
 def q_stream_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL stream-stream inner join: views x clicks per user within a
-    1-hour horizon, watermarks on both sides bounding the buffered state,
-    drained with availableNow. The oracle is the equivalent batch range
-    join."""
+    """REAL stream-stream inner join (``ops.view_click_join``, ``inner``):
+    views x clicks per user within a 1-hour horizon, watermarks on both
+    sides bounding the buffered state, drained with availableNow. The
+    oracle is the equivalent batch range join."""
     return ops.run_stream_to_df(
-        ops.view_click_join(ops.events_stream(spark, sf_dir)),
+        ops.view_click_join(ops.events_stream(spark, sf_dir), "inner"),
         output_mode="append",
     )
 
@@ -229,19 +234,21 @@ def q_stream_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN b
     WHERE c.click_id IS NOT NULL OR v.view_ts < b.emit_before
     """,
+    changed_in=15,
 )
 def q_stream_stream_left_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL stream-stream LEFT OUTER join: views left-joined to clicks
-    within a 1-hour horizon. The semantically loaded part is the NULL
-    side — a streaming engine can only declare "no click arrived" once
-    the event-time watermark clears the view's whole match window, and
-    the global watermark is the MIN across both sides' watermark nodes
-    (each sees only its filtered side). The oracle mirrors exactly that
-    eligibility predicate: inner matches plus unmatched views older than
-    least(max view_ts, max click_ts) - delay - horizon; views younger
-    than the cutoff die buffered when the availableNow drain ends."""
+    """REAL stream-stream LEFT OUTER join (``ops.view_click_join``,
+    ``left``): views left-joined to clicks within a 1-hour horizon. The
+    semantically loaded part is the NULL side — a streaming engine can
+    only declare "no click arrived" once the event-time watermark clears
+    the view's whole match window, and the global watermark is the MIN
+    across both sides' watermark nodes (each sees only its filtered
+    side). The oracle mirrors exactly that eligibility predicate: inner
+    matches plus unmatched views older than least(max view_ts, max
+    click_ts) - delay - horizon; views younger than the cutoff die
+    buffered when the availableNow drain ends."""
     return ops.run_stream_to_df(
-        ops.view_click_left_join(ops.events_stream(spark, sf_dir)),
+        ops.view_click_join(ops.events_stream(spark, sf_dir), "left"),
         output_mode="append",
     )
 
@@ -272,9 +279,11 @@ def q_stream_stream_left_join_live(spark: SparkSession, sf_dir: str) -> DataFram
        OR (c.click_id IS NULL AND v.view_ts < b.wm - INTERVAL 1 HOUR)
        OR (v.view_id IS NULL AND c.click_ts < b.wm)
     """,
+    changed_in=15,
 )
 def q_stream_stream_full_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL stream-stream FULL OUTER join: the two NULL sides carry
+    """REAL stream-stream FULL OUTER join (``ops.view_click_join``,
+    ``full``): the two NULL sides carry
     DIFFERENT watermark eligibility rules, both pinned by synthetic
     boundary pytests — an unmatched view needs its whole match window
     cleared (view_ts < wm - horizon: a future click could still match
@@ -283,7 +292,7 @@ def q_stream_stream_full_join_live(spark: SparkSession, sf_dir: str) -> DataFram
     the min-of-sides watermark. The oracle applies exactly both
     predicates; user_id coalesces across sides."""
     return ops.run_stream_to_df(
-        ops.view_click_full_join(ops.events_stream(spark, sf_dir)),
+        ops.view_click_join(ops.events_stream(spark, sf_dir), "full"),
         output_mode="append",
     )
 
@@ -311,18 +320,19 @@ def q_stream_stream_full_join_live(spark: SparkSession, sf_dir: str) -> DataFram
     CROSS JOIN b
     WHERE v.view_id IS NOT NULL OR c.click_ts < b.wm
     """,
+    changed_in=15,
 )
 def q_stream_stream_right_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL stream-stream RIGHT OUTER join: clicks right-joined to views
-    within a 1-hour horizon — completes the outer-join matrix (inner,
-    LEFT, FULL are gated). The NULL side carries the click-side
+    """REAL stream-stream RIGHT OUTER join (``ops.view_click_join``,
+    ``right``): clicks right-joined to views within a 1-hour horizon —
+    completes the outer-join matrix. The NULL side carries the click-side
     eligibility rule already pinned in the FULL join's boundary pytests:
     an unmatched click is emitted once the min-of-sides watermark is
     STRICTLY past it (a click exactly AT the watermark stays buffered);
     the watermark stalls (nothing emitted) when either side is empty.
     The oracle mirrors exactly that predicate."""
     return ops.run_stream_to_df(
-        ops.view_click_right_join(ops.events_stream(spark, sf_dir)),
+        ops.view_click_join(ops.events_stream(spark, sf_dir), "right"),
         output_mode="append",
     )
 
@@ -467,17 +477,24 @@ def q_stream_stateful_live(spark: SparkSession, sf_dir: str) -> DataFrame:
            c.c_mktsegment, c.c_acctbal
     FROM events e JOIN customer c ON c.c_custkey = e.user_id
     """,
+    changed_in=15,
 )
 def q_stream_static_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL stream-static join: the live event stream enriched per
-    micro-batch against the broadcast customer dimension (stateless — no
-    watermark or join state), drained with availableNow. Oracle is the
+    micro-batch against the broadcast customer dimension, drained with
+    availableNow. Stateless — no watermark, no buffered state; the
+    dimension is re-resolved per micro-batch, so a slowly-changing dim is
+    picked up on its next trigger, and the broadcast keeps every
+    micro-batch shuffle-free on the stream side. Oracle is the
     equivalent batch join."""
-    dim = load_table(spark, sf_dir, "customer")
-    return ops.run_stream_to_df(
-        ops.static_enrich(ops.events_stream(spark, sf_dir), dim),
-        output_mode="append",
+    dim = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment", "c_acctbal"
     )
+    e = ops.events_stream(spark, sf_dir)
+    joined = e.join(F.broadcast(dim), e["user_id"] == dim["c_custkey"]).select(
+        "event_id", "user_id", "event_type", "value", "c_mktsegment", "c_acctbal"
+    )
+    return ops.run_stream_to_df(joined, output_mode="append")
 
 
 @query(
@@ -569,7 +586,7 @@ def q_stream_cms_sketch_live(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 6) AS total_value
     FROM events GROUP BY user_id
     """,
-    changed_in=11,
+    changed_in=15,
 )
 def q_stream_cdc_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL end-to-end streaming CDC pipeline: the event stream is staged
@@ -581,7 +598,8 @@ def q_stream_cdc_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     update path (existing keys overwritten, new keys inserted), not just
     first-batch insert. The gated result is the serving table itself,
     which must equal the batch groupBy twin — the exactly-once contract
-    a downstream consumer of the serving table actually relies on. On a
+    a downstream consumer of the serving table actually relies on. Each
+    batch replaces the serving table by a staged write and swap. On a
     table format with native MERGE the sink body becomes one MERGE INTO;
     wiring and gate are unchanged. The serving table is localCheckpointed
     into the session before the scratch dir is removed."""

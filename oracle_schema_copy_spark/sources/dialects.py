@@ -37,8 +37,9 @@ the boundary, and types staged strings with ``column_type`` (Spark's own
 DerbyDialect would create CLOB, which has no equality — it breaks MERGE ON
 and keyed DELETE); all hand DDL/DML stays unquoted, so both sides agree on
 uppercase. Reads fold back to the engine's lowercase schema
-(``derby.fold_names``). ``jdbc_mutations.JdbcTarget`` applies the rule,
-once, for the dialect its URL names (:func:`url_dialect`).
+(``derby.fold_names``). ``jdbc_mutations.JdbcTarget`` folds the names
+and ``jdbc.write_table`` types the staged strings, each once, for the
+dialect the URL names (:func:`url_dialect`).
 """
 
 from __future__ import annotations

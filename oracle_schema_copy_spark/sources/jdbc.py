@@ -5,9 +5,9 @@ Reference analogs: connection factory (``Main.java:46-58``,
 batched INSERT (``CopyUtils.java:805-834``), and the Gradle prod-URL guard
 (``GradleUtils.groovy:42-51``).
 
-No database ships in this environment, so this module is exercised by
-unit tests on its config/SQL-generation logic only; the Spark calls are
-the standard ``spark.read/write.jdbc`` surface.
+The Spark calls are the standard ``spark.read/write.jdbc`` surface;
+tests drive them live against embedded Derby (``sources/derby.py``) and
+unit-test the config/SQL generation.
 
 Scale notes baked into the defaults:
 - reads partition on a numeric column (``partitionColumn/lowerBound/
@@ -27,6 +27,9 @@ from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from oracle_schema_copy_spark.sources.dialects import url_dialect
 
 WRITE_BATCH = 10_000  # rows per JDBC batch insert
 WRITE_CONNECTIONS = 16  # cap on one write's concurrent connections
@@ -229,7 +232,6 @@ def read_table_keyed_staged(
     keys_df: DataFrame,
     *,
     allow_production: bool = False,
-    write_options: dict[str, str] | None = None,
 ) -> DataFrame:
     """Keyed scan for frontiers ABOVE the inline budget (VERDICT r10 #7):
     the key DataFrame stages into the database with a parallel batched
@@ -241,13 +243,8 @@ def read_table_keyed_staged(
     staging table can be dropped before returning — the result frame has
     no remaining dependency on the database, mirroring the livedb
     read-back convention. Size is bounded by the probe result itself
-    (the same rows the pushed path would ship).
-
-    ``write_options`` mirrors ``jdbc_delete``'s passthrough (r11
-    ADVICE): a STRING key column stages as CLOB under Derby's default
-    overwrite type mapping, and the staging index + equality join then
-    fail (CLOB has no equality) — pass
-    ``{"createTableColumnTypes": f"{key_column} VARCHAR(n)"}``."""
+    (the same rows the pushed path would ship). The staging table is
+    dropped even when its index or the probe fails."""
     staging = staging_name(table, "probe")
     write_table(
         keys_df.toDF(key_column).distinct(),
@@ -255,11 +252,10 @@ def read_table_keyed_staged(
         staging,
         mode="overwrite",
         allow_production=allow_production,
-        write_options=write_options,
     )
     executor = jvm_statement_executor(spark, conn)
-    executor([staging_index_sql(staging, [key_column])])
     try:
+        executor([staging_index_sql(staging, [key_column])])
         probe = (
             f"(SELECT t.* FROM {table} t JOIN {staging} s "
             f"ON t.{key_column} = s.{key_column}) w"
@@ -282,7 +278,6 @@ def read_table_keyed_auto(
     max_inline_keys: int = 100_000,
     keys_per_probe: int = 1000,
     allow_production: bool = False,
-    write_options: dict[str, str] | None = None,
 ) -> tuple[DataFrame, str]:
     """The keyed-read strategy matrix as one entry point, switching on the
     frontier size: frontiers up to ``max_inline_keys`` collect
@@ -299,7 +294,6 @@ def read_table_keyed_auto(
             read_table_keyed_staged(
                 spark, conn, table, key_column, distinct,
                 allow_production=allow_production,
-                write_options=write_options,
             ),
             "staged",
         )
@@ -356,23 +350,32 @@ def write_table(
     *,
     mode: str = "append",
     allow_production: bool = False,
-    write_options: dict[str, str] | None = None,
 ) -> None:
     """Batched JDBC write (K1/K3), ``WRITE_BATCH`` rows per batch. Caps
     write parallelism at ``WRITE_CONNECTIONS`` so a wide cluster doesn't
     open thousands of connections against the database.
-    ``write_options`` carries per-write, table-specific options — e.g.
-    ``createTableColumnTypes`` so overwrite-mode staging tables get
-    comparable VARCHAR strings instead of a dialect's CLOB default."""
+
+    A table this write creates (every overwrite-mode staging table) gets
+    the URL dialect's string type for its string columns when that
+    dialect folds identifiers (``dialects`` module doc): Spark's own
+    Derby mapping would create CLOB, which has no equality, so a staged
+    string key could be neither indexed nor joined on."""
     prod_check(conn.url, allow_production=allow_production)
     # coalesce never increases partition count, so this caps concurrent
     # connections without the plan->RDD conversion a getNumPartitions()
     # probe would force, and without a shuffle
     df = df.coalesce(WRITE_CONNECTIONS)
+    d = url_dialect(conn.url)
+    strings = [
+        f"{f.name} {d.column_type(f.dataType)}"
+        for f in df.schema.fields
+        if isinstance(f.dataType, T.StringType)
+    ] if d is not None and d.fold_upper else []
+    types = {"createTableColumnTypes": ", ".join(strings)} if strings else {}
     (
         df.write.format("jdbc")
         .options(**conn.spark_options())
-        .options(**(write_options or {}))
+        .options(**types)
         .option("dbtable", table)
         .option("batchsize", str(WRITE_BATCH))
         .mode(mode)

@@ -34,7 +34,6 @@ from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from oracle_schema_copy_spark.operators.walk import key_cols, key_frame
 from oracle_schema_copy_spark.sources.dialects import get_dialect, url_dialect
@@ -122,7 +121,6 @@ def _staged(
     *,
     executor: StatementExecutor,
     allow_production: bool,
-    write_options: dict[str, str] | None,
 ) -> list[str]:
     """Bulk-write ``df`` to the ``staging`` table (``write_table``'s
     production guard runs first), then index its key, run the one set
@@ -135,7 +133,6 @@ def _staged(
         staging,
         mode="overwrite",
         allow_production=allow_production,
-        write_options=write_options,
     )
     statements = [
         staging_index_sql(staging, key_columns),
@@ -154,7 +151,6 @@ def jdbc_upsert(
     *,
     executor: StatementExecutor,
     allow_production: bool = False,
-    write_options: dict[str, str] | None = None,
 ) -> list[str]:
     """Staged set-oriented upsert: stage ``df``, MERGE once in the merge
     style of the URL's dialect (ANSI when it names none), drop staging.
@@ -165,7 +161,7 @@ def jdbc_upsert(
     merge = merge_sql(table, staging, df.columns, keys, dialect=dialect.name if dialect else "ansi")
     return _staged(
         df, conn, staging, keys, merge,
-        executor=executor, allow_production=allow_production, write_options=write_options,
+        executor=executor, allow_production=allow_production,
     )
 
 
@@ -177,21 +173,19 @@ def jdbc_delete(
     *,
     executor: StatementExecutor,
     allow_production: bool = False,
-    write_options: dict[str, str] | None = None,
 ) -> list[str]:
     """Staged keyed delete, single-column or composite: stage the distinct
     keys, delete with one ``EXISTS`` statement, drop staging. ``keys``
     pairs with ``key_columns`` by ``walk.key_frame``. No count and no
-    collect: the key set never reaches the driver. A string key column
-    needs a comparable staged type on databases whose default is a CLOB
-    (``write_options={"createTableColumnTypes": "K VARCHAR(1024)"}``;
-    ``JdbcTarget`` passes it). Returns the executed statements."""
+    collect: the key set never reaches the driver; a string key stages
+    with a comparable type (``jdbc.write_table``). Returns the executed
+    statements."""
     cols = key_cols(key_columns)
     staging = staging_name(table, "delete")
     return _staged(
         key_frame(keys, cols).distinct(), conn, staging, cols,
         delete_using_staging_sql(table, staging, cols),
-        executor=executor, allow_production=allow_production, write_options=write_options,
+        executor=executor, allow_production=allow_production,
     )
 
 
@@ -211,8 +205,8 @@ class JdbcTarget:
     and runs one MERGE; delete stages the distinct keys and runs one
     EXISTS delete; SQL lists execute in order on one connection, in one
     transaction. The dialect the URL names (``dialects.url_dialect``)
-    decides the identifier case at the boundary, the staged string types
-    and the merge style. ``executor`` is injectable for tests; by default
+    decides the identifier case at the boundary and the merge style;
+    ``jdbc.write_table`` types the staged strings for the same dialect. ``executor`` is injectable for tests; by default
     statements run through the Spark JVM's java.sql.DriverManager.
     """
 
@@ -229,30 +223,22 @@ class JdbcTarget:
 
     def _boundary(
         self, table: str, df: DataFrame, columns: str | Sequence[str] = ()
-    ) -> tuple[str, DataFrame, list[str], dict[str, str] | None]:
-        """``(table, df, columns, write_options)`` for one write, under the
-        URL dialect's identifier rule (``dialects`` module doc)."""
+    ) -> tuple[str, DataFrame, list[str]]:
+        """``(table, df, columns)`` for one write, under the URL dialect's
+        identifier rule (``dialects`` module doc)."""
         cols = key_cols(columns)
         d = url_dialect(self.conn.url)
         if d is None or not d.fold_upper:
-            return table, df, cols, None
+            return table, df, cols
         df = df.toDF(*[c.upper() for c in df.columns])
-        staged = ", ".join(
-            f"{f.name} {d.column_type(f.dataType)}"
-            for f in df.schema.fields
-            if isinstance(f.dataType, T.StringType)
-        )
-        opts = {"createTableColumnTypes": staged} if staged else {}
-        return table.upper(), df, [c.upper() for c in cols], opts
+        return table.upper(), df, [c.upper() for c in cols]
 
     def insert(self, table: str, df: DataFrame) -> None:
-        table, df, _, opts = self._boundary(table, df)
-        write_table(
-            df, self.conn, table, allow_production=self.allow_production, write_options=opts
-        )
+        table, df, _ = self._boundary(table, df)
+        write_table(df, self.conn, table, allow_production=self.allow_production)
 
     def upsert(self, table: str, df: DataFrame, key) -> None:
-        table, df, keys, opts = self._boundary(table, df, key)
+        table, df, keys = self._boundary(table, df, key)
         jdbc_upsert(
             df,
             self.conn,
@@ -260,11 +246,10 @@ class JdbcTarget:
             keys,
             executor=self._executor(),
             allow_production=self.allow_production,
-            write_options=opts,
         )
 
     def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
-        table, keys, cols, opts = self._boundary(table, keys, key_columns)
+        table, keys, cols = self._boundary(table, keys, key_columns)
         jdbc_delete(
             keys,
             self.conn,
@@ -272,7 +257,6 @@ class JdbcTarget:
             cols,
             executor=self._executor(),
             allow_production=self.allow_production,
-            write_options=opts,
         )
 
     def execute_sql(self, statements: list[str]) -> None:

@@ -1,10 +1,15 @@
 """Streaming operators over the ``events`` fixture.
 
-Design: each windowed aggregation is a pure ``DataFrame -> DataFrame``
-function, so the SAME code path serves (a) the batch table — checked
-against a DuckDB oracle by the driver — and (b) a real file-source stream
-drained with ``trigger(availableNow=True)`` into a memory sink — checked by
-pytest to match the batch result row-for-row.
+Design: each operator is a pure ``DataFrame -> DataFrame`` function, so
+the SAME code path serves (a) the batch table — checked against a DuckDB
+oracle — and (b) a real file-source stream drained with
+``trigger(availableNow=True)`` into a memory sink — checked by pytest to
+match the batch result row-for-row. Where an append drain emits only what
+the final watermark has closed (finalized sessions, outer-join NULL rows,
+the late-data cutoff), the batch twin filters against
+:func:`final_watermark`, the one rule for that watermark. The windows,
+gap, horizon and delay are module constants: the SQL oracles hard-code
+the same values.
 
 Scale notes: event-time windowed aggregation shuffles on (window, keys);
 state size is bounded by the watermark (windows older than
@@ -26,10 +31,13 @@ once protobuf is present.
 
 from __future__ import annotations
 
+import operator
+import os
 import uuid
+from functools import reduce
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -39,14 +47,22 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from oracle_schema_copy_spark.operators.mutate import merge_upsert
+from oracle_schema_copy_spark.plans import oplog
 from oracle_schema_copy_spark.sources.tables import load_table, normalize_events_ts
 
-WATERMARK_DELAY = "1 hour"
+WATERMARK_DELAY = "1 hour"  # every watermark here: max event time - this
+JOIN_HORIZON = "1 hour"  # a click matches a view at most this long after it
+TUMBLE = "1 day"
+SLIDE_LENGTH, SLIDE_STEP = "1 day", "12 hours"  # each event lands in 2 windows
+SESSION_GAP = "4 hours"
+# Stateful queries create one state store per shuffle partition; a bounded
+# drain at the 200 default would pay 200 store commits per micro-batch for
+# grams of state.
+MAX_STATE_PARTITIONS = 16
 
 
-def events_stream(
-    spark: SparkSession, sf_dir: str, *, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet.
 
     The streaming file source lists a *directory*; the fixture is a single
@@ -55,8 +71,7 @@ def events_stream(
     symlinks to leak. Schema comes from the batch reader (streams cannot
     infer), and ``ts`` gets the same normalization as ``load_table``
     (nanos-as-long or micros-NTZ → session-TZ TIMESTAMP; watermarks reject
-    NTZ). ``max_files_per_trigger`` throttles micro-batch size — a SOURCE
-    option, which is why it lives here and not on any sink.
+    NTZ).
     """
     # Set the conf here rather than relying on a previous load_table call
     # having set it — otherwise the stream schema is order-dependent
@@ -66,28 +81,23 @@ def events_stream(
     reader = spark.readStream.schema(raw.schema).option(
         "pathGlobFilter", "events.parquet"
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return normalize_events_ts(reader.parquet(sf_dir))
 
 
-def run_stream_to_df(
-    stream_df: DataFrame, output_mode: str = "complete", max_state_partitions: int = 16
-) -> DataFrame:
+def run_stream_to_df(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drain a streaming DataFrame with availableNow into a memory sink and
     return the result as a batch DataFrame (used by tests and the
     driver-gate queries; the driver never sees an unterminated stream).
 
-    Stateful queries create one state store per shuffle partition; for a
-    bounded drain we cap that (a session at e.g. the 200 default would pay
-    200 store commits per micro-batch for grams of state). The conf is
-    restored after the stream starts — it is captured at query start.
+    The shuffle partitions are capped at ``MAX_STATE_PARTITIONS`` for the
+    drain's state stores. The conf is restored after the stream starts —
+    it is captured at query start.
     """
     spark = stream_df.sparkSession
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    capped = old.isdigit() and int(old) > max_state_partitions
+    capped = old.isdigit() and int(old) > MAX_STATE_PARTITIONS
     if capped:
-        spark.conf.set("spark.sql.shuffle.partitions", str(max_state_partitions))
+        spark.conf.set("spark.sql.shuffle.partitions", str(MAX_STATE_PARTITIONS))
     try:
         name = f"oscs_sink_{uuid.uuid4().hex[:8]}"
         q = (
@@ -110,7 +120,7 @@ def stream_to_parquet(stream_df: DataFrame, path: str, checkpoint: str) -> None:
     the durable counterpart of the memory sink used by tests: at scale the
     same call runs continuously (drop availableNow) and downstream batch
     jobs read the directory incrementally. Rate limiting is a source
-    concern — pass ``max_files_per_trigger`` to ``events_stream``."""
+    option (``maxFilesPerTrigger`` on the reader), not a sink one."""
     (
         stream_df.writeStream.format("parquet")
         .option("path", path)
@@ -122,13 +132,34 @@ def stream_to_parquet(stream_df: DataFrame, path: str, checkpoint: str) -> None:
     )
 
 
+def final_watermark(df: DataFrame, *sides: Column) -> DataFrame:
+    """The watermark an availableNow drain of ``df`` ends with, as a
+    one-row frame with column ``__wm``.
+
+    Each watermark node sees only its own rows — ``sides`` holds one
+    predicate per node; none means one node over every row — and the
+    global watermark is the MIN over the nodes of ``max(ts) -
+    WATERMARK_DELAY``, advanced by the drain's closing no-data
+    micro-batch (measured via StreamingQueryProgress.eventTime). A node
+    that saw no row never advances, so the global watermark stalls: the
+    result is NULL then, not the other nodes' minimum (``least`` would
+    skip the NULL), and every comparison against it filters."""
+    maxes = [F.max(F.when(side, F.col("ts"))) for side in sides] or [F.max("ts")]
+    stalled = reduce(operator.or_, [m.isNull() for m in maxes])
+    low = F.least(*maxes) if len(maxes) > 1 else maxes[0]
+    return df.agg(
+        F.when(~stalled, low - F.expr(f"INTERVAL {WATERMARK_DELAY}")).alias("__wm")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Windowed aggregations (batch/stream polymorphic)
 # ---------------------------------------------------------------------------
 
 
-def tumbling_agg(df: DataFrame, duration: str = "1 day") -> DataFrame:
-    """Tumbling event-time windows per event_type: count + value sum.
+def tumbling_agg(df: DataFrame) -> DataFrame:
+    """Tumbling ``TUMBLE`` event-time windows per event_type: count +
+    value sum.
 
     The sum runs in integer MICRO-UNITS (round(value * 1e6) summed as
     BIGINT, divided back once) — order-independent exact arithmetic, the
@@ -137,7 +168,7 @@ def tumbling_agg(df: DataFrame, duration: str = "1 day") -> DataFrame:
     doubles (first seen at the sf10 fixture, 10M events)."""
     w = df.withWatermark("ts", WATERMARK_DELAY) if df.isStreaming else df
     return (
-        w.groupBy(F.window("ts", duration).alias("w"), "event_type")
+        w.groupBy(F.window("ts", TUMBLE).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             (
@@ -150,8 +181,8 @@ def tumbling_agg(df: DataFrame, duration: str = "1 day") -> DataFrame:
     )
 
 
-def sliding_agg(df: DataFrame, duration: str = "1 day", slide: str = "12 hours") -> DataFrame:
-    """Sliding windows (each event lands in duration/slide windows).
+def sliding_agg(df: DataFrame) -> DataFrame:
+    """Sliding windows, ``SLIDE_LENGTH`` long every ``SLIDE_STEP``.
 
     The mean is computed from an integer micro-unit sum (one exact
     BIGINT sum, two divisions in a fixed order) — same drift rationale
@@ -164,7 +195,7 @@ def sliding_agg(df: DataFrame, duration: str = "1 day", slide: str = "12 hours")
     regime."""
     w = df.withWatermark("ts", WATERMARK_DELAY) if df.isStreaming else df
     return (
-        w.groupBy(F.window("ts", duration, slide).alias("w"))
+        w.groupBy(F.window("ts", SLIDE_LENGTH, SLIDE_STEP).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             (
@@ -178,13 +209,13 @@ def sliding_agg(df: DataFrame, duration: str = "1 day", slide: str = "12 hours")
     )
 
 
-def session_agg(df: DataFrame, gap: str = "4 hours") -> DataFrame:
+def session_agg(df: DataFrame) -> DataFrame:
     """Per-user session windows with a merge gap: adjacent events closer
-    than ``gap`` coalesce into one session (start = first event, end =
-    last event + gap — Spark ``session_window`` semantics)."""
+    than ``SESSION_GAP`` coalesce into one session (start = first event,
+    end = last event + gap — Spark ``session_window`` semantics)."""
     w = df.withWatermark("ts", WATERMARK_DELAY) if df.isStreaming else df
     return (
-        w.groupBy(F.session_window("ts", gap).alias("s"), "user_id")
+        w.groupBy(F.session_window("ts", SESSION_GAP).alias("s"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("total_value"),
@@ -199,48 +230,65 @@ def session_agg(df: DataFrame, gap: str = "4 hours") -> DataFrame:
     )
 
 
-def session_agg_finalized(df: DataFrame, gap: str = "4 hours") -> DataFrame:
+def session_agg_finalized(df: DataFrame) -> DataFrame:
     """Batch twin of the APPEND-mode streaming session drain: an append
     sink only emits sessions the final watermark has FINALIZED —
     empirically (synthetic boundary probe in tests/test_streaming.py)
     Spark emits a session iff ``session_end <= watermark`` (the equality
-    case IS emitted), with the final watermark ``max(ts) - delay``
-    advanced by availableNow's closing no-data micro-batch. Sessions
-    still open at drain end die with the state — the same honest
-    eligibility contract as view_click_left_join."""
-    s = session_agg(df, gap)
-    bound = df.agg(
-        (F.max("ts") - F.expr(f"INTERVAL {WATERMARK_DELAY}")).alias("__wm")
-    )
+    case IS emitted). Sessions still open at drain end die with the
+    state — the same eligibility contract as the outer
+    :func:`view_click_join`."""
     return (
-        s.join(F.broadcast(bound))
+        session_agg(df)
+        .join(F.broadcast(final_watermark(df)))
         .where(F.col("session_end") <= F.col("__wm"))
         .drop("__wm")
     )
 
 
-def with_late_rows_dropped(df: DataFrame, delay: str = WATERMARK_DELAY) -> DataFrame:
+def with_late_rows_dropped(df: DataFrame) -> DataFrame:
     """Batch twin of the watermark late-data policy: drop rows with event
-    time older than max(event time) - delay. In streaming this is what
-    ``withWatermark`` does continuously; expressing it in batch gives the
-    oracle-checkable contract for the same cutoff rule."""
-    cutoff = df.select(
-        (F.max("ts") - F.expr(f"INTERVAL {delay}")).alias("cutoff")
+    time older than the final watermark, max(event time) -
+    ``WATERMARK_DELAY``. In streaming this is what ``withWatermark`` does
+    continuously; expressing it in batch gives the oracle-checkable
+    contract for the same cutoff rule."""
+    return (
+        df.join(F.broadcast(final_watermark(df)))
+        .where(F.col("ts") >= F.col("__wm"))
+        .drop("__wm")
     )
-    return df.join(F.broadcast(cutoff)).where(F.col("ts") >= F.col("cutoff")).drop("cutoff")
 
 
-def view_click_join(df: DataFrame, horizon: str = "1 hour") -> DataFrame:
-    """Stream-stream inner join: each 'view' matched to that user's 'click'
-    events within ``horizon`` after it.
+def view_click_join(df: DataFrame, how: str) -> DataFrame:
+    """Stream-stream join of each 'view' to that user's 'click' events
+    within ``JOIN_HORIZON`` after it; ``how`` is ``inner``, ``left``,
+    ``right`` or ``full``.
 
     Both sides carry watermarks and the join has an event-time range
-    constraint, so Spark bounds the buffered state to the horizon + delay
-    on each side — the canonical stream-stream join shape. The same
-    transformation runs in batch (watermarks are no-ops there), which is
-    what the SQL oracle checks.
-    """
-    streaming = df.isStreaming
+    condition, so Spark bounds the buffered state to horizon + delay on
+    each side. The same transformation runs in batch, where watermarks
+    are no-ops, and that is what the SQL oracle checks.
+
+    An outer join can declare "no partner arrived" only once the
+    watermark has passed the row's whole match window; rows still open
+    when an availableNow drain ends die with the state. The batch twin
+    keeps exactly the rows the drain emits (the boundary cases are
+    pinned by synthetic tests in tests/test_streaming.py), against the
+    final watermark ``wm`` of the two watermark nodes
+    (:func:`final_watermark`):
+
+    - every matched (view, click) pair;
+    - an unmatched view once ``view_ts < wm - horizon`` (a later click
+      could still match it until then);
+    - an unmatched click once ``click_ts < wm``, strictly (clicks match
+      only views at or before them; a click exactly at ``wm`` stays
+      buffered).
+
+    A left join has no unmatched clicks and a right join no unmatched
+    views, so the one predicate serves every outer type. ``user_id``
+    coalesces across the sides, so unmatched clicks keep their key."""
+    if how not in ("inner", "left", "right", "full"):
+        raise ValueError(f"view_click_join: unknown join type {how!r}")
     v = df.filter(F.col("event_type") == "view").select(
         "user_id",
         F.col("event_id").alias("view_id"),
@@ -251,147 +299,28 @@ def view_click_join(df: DataFrame, horizon: str = "1 hour") -> DataFrame:
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
     )
-    if streaming:
+    if df.isStreaming:
         v = v.withWatermark("view_ts", WATERMARK_DELAY)
         c = c.withWatermark("click_ts", WATERMARK_DELAY)
+    horizon = F.expr(f"INTERVAL {JOIN_HORIZON}")
     joined = v.join(
         c,
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("click_ts") >= F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}")),
+        & (F.col("click_ts") <= F.col("view_ts") + horizon),
+        how,
     )
-    return joined.select("user_id", "view_id", "view_ts", "click_id", "click_ts")
-
-
-def view_click_left_join(df: DataFrame, horizon: str = "1 hour") -> DataFrame:
-    """Stream-stream LEFT OUTER join — the semantically loaded variant of
-    :func:`view_click_join`: a view with no click inside ``horizon``
-    must still be emitted (with NULL click columns), but a streaming
-    engine can only declare "no click arrived" once the event-time
-    watermark has passed the view's entire match window. Spark therefore
-    emits the NULL row for a view only when
-    ``view_ts + horizon < final_watermark``. The global watermark is the
-    MIN across the query's watermark nodes, and each node only ever sees
-    its own filtered side — so the final watermark is
-    ``least(max(view_ts), max(click_ts)) - delay`` (advanced by the
-    closing no-data micro-batch of an availableNow drain; measured
-    empirically via StreamingQueryProgress.eventTime.watermark). Views
-    newer than that stay buffered and are dropped with the state when
-    the drain ends. The batch twin (and SQL oracle) mirror exactly that
-    eligibility predicate — the honest contract of watermarked outer
-    joins, same spirit as stream_watermark_late_drop."""
-    streaming = df.isStreaming
-    v = df.filter(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    c = df.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    cond = (
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    if streaming:
-        v = v.withWatermark("view_ts", WATERMARK_DELAY)
-        c = c.withWatermark("click_ts", WATERMARK_DELAY)
-        joined = v.join(c, cond, "leftOuter")
-    else:
-        # batch twin: inner matches, plus unmatched views whose whole
-        # match window is below the final watermark the stream ends with.
-        # The watermark node on each side sees only its filtered rows, so
-        # the global (min) watermark keys off the EARLIER of the two
-        # per-side max event times.
-        # least() SKIPS NULLs, but a side with zero rows means that side's
-        # watermark node never advances and the stream emits NO unmatched
-        # rows — so the bound must be NULL (comparisons then filter all
-        # NULL-side rows), not the other side's max.
-        max_v = F.max(F.when(F.col("event_type") == "view", F.col("ts")))
-        max_c = F.max(F.when(F.col("event_type") == "click", F.col("ts")))
-        bound = df.agg(
-            F.when(
-                max_v.isNotNull() & max_c.isNotNull(),
-                F.least(max_v, max_c)
-                - F.expr(f"INTERVAL {WATERMARK_DELAY}")
-                - F.expr(f"INTERVAL {horizon}"),
-            ).alias("emit_before")
+    if how != "inner" and not df.isStreaming:
+        wm = final_watermark(
+            df, F.col("event_type") == "view", F.col("event_type") == "click"
         )
         joined = (
-            v.join(c, cond, "leftOuter")
-            .join(F.broadcast(bound))
-            .where(
-                F.col("click_id").isNotNull()
-                | (F.col("view_ts") < F.col("emit_before"))
-            )
-            .drop("emit_before")
-        )
-    return joined.select("user_id", "view_id", "view_ts", "click_id", "click_ts")
-
-
-def view_click_full_join(df: DataFrame, horizon: str = "1 hour") -> DataFrame:
-    """Stream-stream FULL OUTER join — both NULL sides carry watermark
-    eligibility, and they differ (probed with synthetic boundary cases,
-    tests/test_streaming.py):
-
-    - an unmatched VIEW needs its whole match window cleared:
-      ``view_ts < wm - horizon`` (a future click could still match it
-      until then) — same rule as :func:`view_click_left_join`;
-    - an unmatched CLICK only needs the watermark itself to pass it:
-      ``click_ts < wm`` STRICTLY (clicks match only views at-or-before
-      them, and views older than the watermark can no longer arrive; a
-      click exactly AT the watermark stays buffered).
-
-    ``wm = least(max view_ts, max click_ts) - delay`` (the global
-    watermark is the min across both sides' watermark nodes). The batch
-    twin and SQL oracle mirror both predicates; ``user_id`` is coalesced
-    across sides so unmatched clicks keep their key."""
-    streaming = df.isStreaming
-    v = df.filter(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    c = df.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    cond = (
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    if streaming:
-        v = v.withWatermark("view_ts", WATERMARK_DELAY)
-        c = c.withWatermark("click_ts", WATERMARK_DELAY)
-        joined = v.join(c, cond, "fullOuter")
-    else:
-        # same NULL-stalled-watermark rule as view_click_left_join: an
-        # empty side pins the global watermark, so the bound is NULL
-        # (all unmatched rows filtered) rather than the other side's max.
-        max_v = F.max(F.when(F.col("event_type") == "view", F.col("ts")))
-        max_c = F.max(F.when(F.col("event_type") == "click", F.col("ts")))
-        bound = df.agg(
-            F.when(
-                max_v.isNotNull() & max_c.isNotNull(),
-                F.least(max_v, max_c) - F.expr(f"INTERVAL {WATERMARK_DELAY}"),
-            ).alias("__wm")
-        )
-        joined = (
-            v.join(c, cond, "fullOuter")
-            .join(F.broadcast(bound))
+            joined.join(F.broadcast(wm))
             .where(
                 (F.col("view_id").isNotNull() & F.col("click_id").isNotNull())
                 | (
                     F.col("click_id").isNull()
-                    & (
-                        F.col("view_ts")
-                        < F.col("__wm") - F.expr(f"INTERVAL {horizon}")
-                    )
+                    & (F.col("view_ts") < F.col("__wm") - horizon)
                 )
                 | (F.col("view_id").isNull() & (F.col("click_ts") < F.col("__wm")))
             )
@@ -404,63 +333,6 @@ def view_click_full_join(df: DataFrame, horizon: str = "1 hour") -> DataFrame:
         "click_id",
         "click_ts",
     )
-
-
-def view_click_right_join(df: DataFrame, horizon: str = "1 hour") -> DataFrame:
-    """Stream-stream RIGHT OUTER join — completes the outer-join matrix
-    next to :func:`view_click_left_join` / :func:`view_click_full_join`.
-    All (view, click) matches inside ``horizon``, plus every unmatched
-    CLICK. The NULL-side eligibility is exactly the click-side rule
-    already pinned in the FULL join's boundary pytests: an unmatched
-    click is emitted once the watermark is STRICTLY past it
-    (``click_ts < wm`` — clicks match only views at-or-before them, and
-    views older than the watermark can no longer arrive; a click exactly
-    AT the watermark stays buffered). ``wm = least(max view_ts,
-    max click_ts) - delay``, NULL (stalled — nothing emitted) when
-    either side is empty. The batch twin and SQL oracle mirror the
-    predicate; ``user_id`` comes from the click side so unmatched clicks
-    keep their key."""
-    streaming = df.isStreaming
-    v = df.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user_id"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    c = df.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    cond = (
-        (F.col("v_user_id") == F.col("user_id"))
-        & (F.col("click_ts") >= F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    if streaming:
-        v = v.withWatermark("view_ts", WATERMARK_DELAY)
-        c = c.withWatermark("click_ts", WATERMARK_DELAY)
-        joined = v.join(c, cond, "rightOuter")
-    else:
-        # batch twin: inner matches, plus unmatched clicks strictly below
-        # the (NULL-stalled) min-of-sides final watermark.
-        max_v = F.max(F.when(F.col("event_type") == "view", F.col("ts")))
-        max_c = F.max(F.when(F.col("event_type") == "click", F.col("ts")))
-        bound = df.agg(
-            F.when(
-                max_v.isNotNull() & max_c.isNotNull(),
-                F.least(max_v, max_c) - F.expr(f"INTERVAL {WATERMARK_DELAY}"),
-            ).alias("__wm")
-        )
-        joined = (
-            v.join(c, cond, "rightOuter")
-            .join(F.broadcast(bound))
-            .where(
-                F.col("view_id").isNotNull()
-                | (F.col("click_ts") < F.col("__wm"))
-            )
-            .drop("__wm")
-        )
-    return joined.select("user_id", "view_id", "view_ts", "click_id", "click_ts")
 
 
 def daily_key_dedup(df: DataFrame) -> DataFrame:
@@ -487,18 +359,16 @@ def daily_key_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def daily_key_dedup_watermarked(
-    df: DataFrame, delay: str = WATERMARK_DELAY
-) -> DataFrame:
+def daily_key_dedup_watermarked(df: DataFrame) -> DataFrame:
     """BOUNDED-STATE streaming deduplication via
     ``dropDuplicatesWithinWatermark``: first (user_id, event_type, day)
     occurrence wins, and a key's dedup state is EVICTED once the
-    event-time watermark passes its event time + ``delay`` — the
-    production swap for :func:`daily_key_dedup`, whose state grows
+    event-time watermark passes its event time + ``WATERMARK_DELAY`` —
+    the production swap for :func:`daily_key_dedup`, whose state grows
     without bound on an endless stream.
 
     The contract this trades away: duplicates separated by MORE than
-    ``delay`` of event time across micro-batches may be re-emitted (the
+    the delay of event time across micro-batches may be re-emitted (the
     first copy's state has been evicted by the time the second arrives).
     Within one micro-batch the dedup is exact regardless of spacing —
     state eviction happens at batch boundaries — so a single-batch
@@ -517,7 +387,7 @@ def daily_key_dedup_watermarked(
         F.date_trunc("day", F.col("ts")).cast("date").alias("w_day"),
     )
     if keyed.isStreaming:
-        keyed = keyed.withWatermark("ts", delay)
+        keyed = keyed.withWatermark("ts", WATERMARK_DELAY)
         deduped = keyed.dropDuplicatesWithinWatermark(
             ["user_id", "event_type", "w_day"]
         )
@@ -531,34 +401,32 @@ def stream_upsert_to_parquet(
 ) -> None:
     """foreachBatch CDC-style sink: MERGE each micro-batch into a parquet
     serving table by key (update-mode emissions overwrite their key's row;
-    new keys insert). The plain-parquet merge materializes the merged
-    frame (localCheckpoint) before overwriting the directory it read —
-    the same staged-swap discipline plans/oplog.py uses. On a table
-    format with native MERGE (Delta/Iceberg) the body becomes one MERGE
-    INTO; the foreachBatch wiring is identical.
+    new keys insert). Each batch writes the merged table with
+    ``oplog.write_staged`` — stage, then swap — so the read of the old
+    table finishes before its directory is replaced, and a batch cut
+    between the swap's two renames is rolled back
+    (``oplog.undo_cut_swap``) when the resumed stream next runs a batch;
+    the checkpoint then replays the cut batch. On a table format with
+    native MERGE (Delta/Iceberg) the body becomes one MERGE INTO; the
+    foreachBatch wiring is identical.
     """
-    from oracle_schema_copy_spark.operators.mutate import merge_upsert
 
     def _apply(batch_df: DataFrame, _batch_id: int) -> None:
+        oplog.undo_cut_swap(path)
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         # update-mode aggregates emit one row per key per batch; the
         # defensive dedup guards composed sources so MERGE's unique-key
         # contract holds
         latest = batch_df.dropDuplicates(keys)
         # probe existence explicitly — a bare try/except around the read
-        # would treat ANY failure (schema drift, corrupt dir, FS hiccup)
-        # as "first batch" and silently replace the whole table with one
+        # would treat ANY failure (schema drift, corrupt dir) as "first
+        # batch" and silently replace the whole table with one
         # micro-batch; real errors must propagate and fail the stream
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jvm_path):
-            target = spark.read.parquet(path)
-            merged = merge_upsert(target, latest, keys, check_unique=False)
-        else:  # first batch: no table yet
-            merged = latest
-        merged.localCheckpoint().write.mode("overwrite").parquet(path)
+        if os.path.isdir(path):
+            target = batch_df.sparkSession.read.parquet(path)
+            latest = merge_upsert(target, latest, keys, check_unique=False)
+        oplog.write_staged(latest, path)
 
     (
         stream_df.writeStream.foreachBatch(_apply)
@@ -626,27 +494,3 @@ def batch_user_totals(df: DataFrame) -> DataFrame:
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
-
-def static_enrich(
-    stream_df: DataFrame,
-    dim: DataFrame,
-    *,
-    key: str = "user_id",
-    dim_key: str = "c_custkey",
-    dim_cols: tuple[str, ...] = ("c_mktsegment", "c_acctbal"),
-) -> DataFrame:
-    """Stream-static inner join: each micro-batch of the event stream is
-    enriched against a BATCH dimension table — stateless (no watermark,
-    no buffered state), the dimension is re-resolved per micro-batch so a
-    slowly-changing dim is picked up on its next trigger. The explicit
-    broadcast keeps every micro-batch shuffle-free on the stream side —
-    the plan you want when the enriched stream is 100 TB/day and the dim
-    is thousands of rows."""
-    from pyspark.sql import functions as F
-
-    return stream_df.join(
-        F.broadcast(dim.select(dim_key, *dim_cols)),
-        stream_df[key] == dim[dim_key],
-    ).select(
-        "event_id", key, "event_type", "value", *dim_cols
-    )

@@ -352,8 +352,8 @@ def test_stream_left_join_eligibility_matches_pandas(spark):
             expect.add((r.user_id, r.event_id, None))
     got = {
         (r["user_id"], r["view_id"], r["click_id"])
-        for r in ops.view_click_left_join(
-            ops.load_events(spark, SF_DIR)
+        for r in ops.view_click_join(
+            ops.load_events(spark, SF_DIR), "left"
         ).collect()
     }
     assert got == expect

@@ -310,6 +310,34 @@ def test_read_table_keyed_pushed_probe(spark, tgt):
     assert [f.name for f in empty.schema.fields] == ["K", "V", "P"]
 
 
+def test_read_table_keyed_staged_string_key(spark, tgt):
+    """A STRING key stages as a comparable VARCHAR, not Derby's CLOB
+    default (which can be neither indexed nor joined on): the staged
+    probe and the auto chooser forced onto it return the keyed rows, and
+    the staging table is dropped."""
+    from oracle_schema_copy_spark.sources.jdbc import (
+        read_table_keyed_auto,
+        read_table_keyed_staged,
+    )
+
+    df = spark.createDataFrame(
+        [Row(k=f"key-{i}", v=i) for i in range(20)]
+    )
+    tgt.create_table("t", df.schema, primary_key=["k"])
+    tgt.insert("t", df)
+    keys = spark.createDataFrame([Row(k="key-3"), Row(k="key-17"), Row(k="nope")])
+
+    staged = read_table_keyed_staged(spark, tgt.conn, "T", "K", keys)
+    assert sorted(r["V"] for r in staged.collect()) == [3, 17]
+    rows, path = read_table_keyed_auto(
+        spark, tgt.conn, "T", "K", keys, max_inline_keys=0
+    )
+    assert path == "staged"
+    assert sorted(r["V"] for r in rows.collect()) == [3, 17]
+    with pytest.raises(Exception, match="does not exist"):
+        read_query(spark, tgt.conn, "SELECT * FROM T_OSCS_PROBE_STG").collect()
+
+
 def test_engine_db_target_over_derby_url(spark, tmp_path, sf_dir):
     """Engine.create_db_target over a plain ``jdbc:derby:`` URL applies the
     same identifier-case convention as DerbyTarget: copy, the staged-MERGE

@@ -238,3 +238,13 @@ def test_seed_frame_broadcasts_before_its_cache_exists(spark):
         assert [r.o_orderkey for r in keys.collect()] == [3, 1, 2]
     finally:
         keys.unpersist()
+
+
+@pytest.mark.parametrize("name", ["similarity_topk_pq_adc", "similarity_topk_ivfpq"])
+def test_pq_codebook_aggregates_once(plans, name):
+    """A PQ composition collects the codebook once and hands the rows to
+    both the encoder and the lookup table: the plan it returns holds no
+    codebook aggregation (``pq_codebooks``' collect_list of subspace
+    positions), which would recompute the corpus-wide centroid pass a
+    second time. IVF routing's own centroid assembly may remain."""
+    assert "collect_list(struct(spos" not in plans(name)

@@ -4,11 +4,9 @@ the same transformation; stateful operator accumulates across batches."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.streaming import ops
@@ -52,58 +50,46 @@ def test_stream_session_append_emits_finalized_sessions(spark):
     pd.testing.assert_frame_equal(_sorted_pdf(live), expected)
 
 
-def test_stateful_totals_accumulate_across_batches(spark):
+def _two_file_stream(spark, events, stage: str):
+    """``events`` as a file-source stream of two files, even event ids
+    then odd ones, read one file per micro-batch."""
+    flat = os.path.join(stage, "flat")
+    os.makedirs(flat)
+    for i, pred in enumerate((F.col("event_id") % 2 == 0, F.col("event_id") % 2 == 1)):
+        part = os.path.join(stage, f"part{i}")
+        events.where(pred).coalesce(1).write.parquet(part)
+        (f,) = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        os.rename(os.path.join(part, f), os.path.join(flat, f"{i}.parquet"))
+    return (
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(flat)
+    )
+
+
+def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
     """Split events into two files, force one file per micro-batch: the
     applyInPandasWithState totals must end at the full-data counts (state
     carried between batches), and intermediate emissions must be <= final."""
     events = ops.load_events(spark, SF)
-    stage = os.path.join(tempfile.gettempdir(), f"oscs-split-{uuid.uuid4().hex[:8]}")
-    try:
-        (
-            events.where(F.col("event_id") % 2 == 0)
-            .coalesce(1)
-            .write.parquet(os.path.join(stage, "a"))
+    sdf = _two_file_stream(spark, events, str(tmp_path))
+    sink = ops.run_stream_to_df(
+        ops.stateful_user_totals_stream(sdf), output_mode="update"
+    )
+    # update-mode memory sink accumulates one emission per (user, batch);
+    # the running maximum per user is the final state
+    got = (
+        sink.groupBy("user_id")
+        .agg(
+            F.max("n_events").alias("n_events"),
+            F.max("total_value").alias("total_value"),
         )
-        (
-            events.where(F.col("event_id") % 2 == 1)
-            .coalesce(1)
-            .write.parquet(os.path.join(stage, "b"))
-        )
-        flat = os.path.join(stage, "flat")
-        os.makedirs(flat)
-        n = 0
-        for sub in ("a", "b"):
-            for f in os.listdir(os.path.join(stage, sub)):
-                if f.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(stage, sub, f), os.path.join(flat, f"{n}.parquet")
-                    )
-                    n += 1
-        assert n == 2
-        sdf = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(flat)
-        )
-        sink = ops.run_stream_to_df(
-            ops.stateful_user_totals_stream(sdf), output_mode="update"
-        )
-        # update-mode memory sink accumulates one emission per (user, batch);
-        # the running maximum per user is the final state
-        got = (
-            sink.groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("total_value").alias("total_value"),
-            )
-        )
-        expected = ops.batch_user_totals(events)
-        pd.testing.assert_frame_equal(_sorted_pdf(got), _sorted_pdf(expected))
-        # state really carried across batches: 2 emissions per user
-        per_user = sink.groupBy("user_id").count()
-        assert per_user.where(F.col("count") != 2).count() == 0
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    )
+    expected = ops.batch_user_totals(events)
+    pd.testing.assert_frame_equal(_sorted_pdf(got), _sorted_pdf(expected))
+    # state really carried across batches: 2 emissions per user
+    per_user = sink.groupBy("user_id").count()
+    assert per_user.where(F.col("count") != 2).count() == 0
 
 
 def test_stream_to_parquet_sink_roundtrip(spark, sf_dir, tmp_path):
@@ -122,27 +108,44 @@ def test_stream_to_parquet_sink_roundtrip(spark, sf_dir, tmp_path):
     assert got.join(batch, ["event_id", "user_id", "value"]).count() == batch.count()
 
 
-def test_stream_stream_join_matches_batch(spark):
-    batch = ops.view_click_join(ops.load_events(spark, SF))
+@pytest.mark.parametrize("how", ["inner", "left", "full", "right"])
+def test_stream_stream_join_matches_batch(spark, how):
+    """Every join type of the one stream-stream join: the drained stream
+    equals the batch twin, including which unmatched rows get NULL
+    partners (only those the final min-of-sides watermark has closed)
+    and which die buffered. Each NULL side the type emits is
+    non-degenerate, and so are the matches."""
+    batch = ops.view_click_join(ops.load_events(spark, SF), how)
     live = ops.run_stream_to_df(
-        ops.view_click_join(ops.events_stream(spark, SF)), output_mode="append"
-    )
-    pd.testing.assert_frame_equal(_sorted_pdf(live), _sorted_pdf(batch))
-
-
-def test_stream_stream_left_join_matches_batch(spark):
-    """Left-outer stream-stream join: the drained stream must equal the
-    batch twin, including which unmatched views get NULL rows (only those
-    whose whole match window is below the final min-of-sides watermark)
-    and which die buffered."""
-    batch = ops.view_click_left_join(ops.load_events(spark, SF))
-    live = ops.run_stream_to_df(
-        ops.view_click_left_join(ops.events_stream(spark, SF)), output_mode="append"
+        ops.view_click_join(ops.events_stream(spark, SF), how), output_mode="append"
     )
     bp, lp = _sorted_pdf(batch), _sorted_pdf(live)
-    assert bp["click_id"].isna().sum() > 0  # the NULL side is non-degenerate
-    assert bp["click_id"].notna().sum() > 0
+    assert (bp["view_id"].notna() & bp["click_id"].notna()).sum() > 0
+    if how in ("left", "full"):
+        assert bp["click_id"].isna().sum() > 0
+    if how in ("right", "full"):
+        assert bp["view_id"].isna().sum() > 0
     pd.testing.assert_frame_equal(lp, bp)
+
+
+def test_final_watermark_rule(spark):
+    """One node: max(ts) - delay. Several nodes: the minimum of their
+    watermarks. A node that saw no row stalls the drain: NULL, not the
+    other node's watermark."""
+    import datetime
+
+    T0 = datetime.datetime(2024, 1, 1)
+    H = datetime.timedelta(hours=1)
+    df = spark.createDataFrame(
+        [("view", T0 + 10 * H), ("view", T0 + 2 * H), ("click", T0 + 5 * H)],
+        "event_type STRING, ts TIMESTAMP",
+    )
+    view, click = F.col("event_type") == "view", F.col("event_type") == "click"
+    assert ops.final_watermark(df).collect()[0]["__wm"] == T0 + 9 * H
+    assert ops.final_watermark(df, view, click).collect()[0]["__wm"] == T0 + 4 * H
+    error = F.col("event_type") == "error"
+    assert ops.final_watermark(df, view, error).collect()[0]["__wm"] is None
+    assert ops.final_watermark(df.where(error)).collect()[0]["__wm"] is None
 
 
 def test_stream_dedup_matches_batch_distinct(spark):
@@ -153,47 +156,67 @@ def test_stream_dedup_matches_batch_distinct(spark):
     pd.testing.assert_frame_equal(_sorted_pdf(live), _sorted_pdf(batch))
 
 
-def test_foreachbatch_upsert_serving_table(spark):
+def test_foreachbatch_upsert_serving_table(spark, tmp_path):
     """Two micro-batches of stateful running totals merged into a parquet
     serving table by user_id: the final table must equal the batch totals
     (each batch's emission OVERWRITES that user's row — upsert, not
     append)."""
     events = ops.load_events(spark, SF)
-    stage = os.path.join(tempfile.gettempdir(), f"oscs-fb-{uuid.uuid4().hex[:8]}")
-    try:
-        for i, pred in enumerate(
-            (F.col("event_id") % 2 == 0, F.col("event_id") % 2 == 1)
-        ):
-            events.where(pred).coalesce(1).write.parquet(
-                os.path.join(stage, f"part{i}")
-            )
-        flat = os.path.join(stage, "flat")
-        os.makedirs(flat)
-        n = 0
-        for sub in ("part0", "part1"):
-            for f in os.listdir(os.path.join(stage, sub)):
-                if f.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(stage, sub, f), os.path.join(flat, f"{n}.parquet")
-                    )
-                    n += 1
-        sdf = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(flat)
-        )
-        serving = os.path.join(stage, "serving")
+    sdf = _two_file_stream(spark, events, str(tmp_path))
+    serving = str(tmp_path / "serving")
+    ops.stream_upsert_to_parquet(
+        ops.stateful_user_totals_stream(sdf),
+        serving,
+        ["user_id"],
+        str(tmp_path / "ckpt"),
+    )
+    got = _sorted_pdf(spark.read.parquet(serving))
+    expected = _sorted_pdf(ops.batch_user_totals(events))
+    pd.testing.assert_frame_equal(got, expected)
+
+
+def test_upsert_sink_resumes_after_cut_swap(spark, tmp_path, monkeypatch):
+    """Batch 2's swap of the serving table is cut between its two renames
+    (the table gone, its old directory left aside), failing the stream.
+    The resumed stream rolls the swap back, replays batch 2 from the
+    checkpoint, and ends with the serving table equal to the batch
+    totals."""
+    from oracle_schema_copy_spark.plans import oplog
+
+    events = ops.load_events(spark, SF)
+    serving, ckpt = str(tmp_path / "serving"), str(tmp_path / "ckpt")
+    swap_in, swaps = oplog.swap_in, []
+
+    def cut_second_swap(src: str, dst: str) -> None:
+        swaps.append(dst)
+        if len(swaps) < 2:
+            return swap_in(src, dst)
+        os.replace(dst, dst + ".__old__")
+        raise RuntimeError("cut between the swap's renames")
+
+    monkeypatch.setattr(oplog, "swap_in", cut_second_swap)
+    with pytest.raises(Exception, match="cut between the swap's renames"):
         ops.stream_upsert_to_parquet(
-            ops.stateful_user_totals_stream(sdf),
+            ops.stateful_user_totals_stream(_two_file_stream(spark, events, str(tmp_path))),
             serving,
             ["user_id"],
-            os.path.join(stage, "ckpt"),
+            ckpt,
         )
-        got = _sorted_pdf(spark.read.parquet(serving))
-        expected = _sorted_pdf(ops.batch_user_totals(events))
-        pd.testing.assert_frame_equal(got, expected)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    assert swaps == [serving, serving]
+    assert not os.path.isdir(serving) and os.path.isdir(serving + ".__old__")
+    monkeypatch.setattr(oplog, "swap_in", swap_in)
+    resumed = (
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "flat"))
+    )
+    ops.stream_upsert_to_parquet(
+        ops.stateful_user_totals_stream(resumed), serving, ["user_id"], ckpt
+    )
+    got = _sorted_pdf(spark.read.parquet(serving))
+    expected = _sorted_pdf(ops.batch_user_totals(events))
+    pd.testing.assert_frame_equal(got, expected)
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "flat", "part0", "part1", "serving"]
 
 
 def test_stream_checkpoint_resume_is_exactly_once(spark, tmp_path):
@@ -261,19 +284,6 @@ def test_stream_session_boundary_equality_is_emitted(spark, tmp_path):
     assert list(out["user_id"]) == [1]
 
 
-def test_stream_stream_full_join_matches_batch(spark):
-    """Full-outer stream-stream join: drained stream == batch twin, with
-    both NULL sides non-degenerate."""
-    batch = ops.view_click_full_join(ops.load_events(spark, SF))
-    live = ops.run_stream_to_df(
-        ops.view_click_full_join(ops.events_stream(spark, SF)), output_mode="append"
-    )
-    bp, lp = _sorted_pdf(batch), _sorted_pdf(live)
-    assert bp["view_id"].isna().sum() > 0
-    assert bp["click_id"].isna().sum() > 0
-    pd.testing.assert_frame_equal(lp, bp)
-
-
 def test_full_join_click_side_boundary(spark, tmp_path):
     """Pin the click-side NULL eligibility the full-outer twin encodes:
     an unmatched click strictly BELOW the watermark is emitted, one
@@ -298,9 +308,9 @@ def test_full_join_click_side_boundary(spark, tmp_path):
     df.coalesce(1).write.parquet(src)
     sdf = spark.readStream.schema(df.schema).parquet(src)
     live = ops.run_stream_to_df(
-        ops.view_click_full_join(sdf), output_mode="append"
+        ops.view_click_join(sdf, "full"), output_mode="append"
     ).toPandas()
-    batch = ops.view_click_full_join(df).toPandas()
+    batch = ops.view_click_join(df, "full").toPandas()
     got_clicks = sorted(live[live.view_id.isna()]["click_id"].astype(int))
     assert got_clicks == [202]
     assert sorted(batch[batch.view_id.isna()]["click_id"].astype(int)) == [202]
@@ -331,9 +341,9 @@ def test_left_join_view_side_boundary(spark, tmp_path):
     df.coalesce(1).write.parquet(src)
     sdf = spark.readStream.schema(df.schema).parquet(src)
     live = ops.run_stream_to_df(
-        ops.view_click_left_join(sdf), output_mode="append"
+        ops.view_click_join(sdf, "left"), output_mode="append"
     ).toPandas()
-    batch = ops.view_click_left_join(df).toPandas()
+    batch = ops.view_click_join(df, "left").toPandas()
     assert sorted(live[live.click_id.isna()]["view_id"].astype(int)) == [102]
     assert sorted(batch[batch.click_id.isna()]["view_id"].astype(int)) == [102]
 
@@ -361,25 +371,12 @@ def test_right_join_click_side_boundary(spark, tmp_path):
     df.coalesce(1).write.parquet(src)
     sdf = spark.readStream.schema(df.schema).parquet(src)
     live = ops.run_stream_to_df(
-        ops.view_click_right_join(sdf), output_mode="append"
+        ops.view_click_join(sdf, "right"), output_mode="append"
     ).toPandas()
-    batch = ops.view_click_right_join(df).toPandas()
+    batch = ops.view_click_join(df, "right").toPandas()
     assert sorted(live[live.view_id.isna()]["click_id"].astype(int)) == [202]
     assert sorted(batch[batch.view_id.isna()]["click_id"].astype(int)) == [202]
     assert sorted(live[live.view_id.notna()]["click_id"].astype(int)) == [200]
-
-
-def test_stream_right_join_matches_batch(spark):
-    """Right-outer stream-stream join: drained stream == batch twin, with
-    the NULL side non-degenerate."""
-    batch = ops.view_click_right_join(ops.load_events(spark, SF))
-    live = ops.run_stream_to_df(
-        ops.view_click_right_join(ops.events_stream(spark, SF)),
-        output_mode="append",
-    )
-    bp, lp = _sorted_pdf(batch), _sorted_pdf(live)
-    assert bp["view_id"].isna().sum() > 0
-    pd.testing.assert_frame_equal(lp, bp)
 
 
 def test_outer_join_stalled_watermark_on_empty_side(spark, tmp_path):
@@ -398,9 +395,14 @@ def test_outer_join_stalled_watermark_on_empty_side(spark, tmp_path):
     src = str(tmp_path / "ev")
     df.coalesce(1).write.parquet(src)
     sdf = spark.readStream.schema(df.schema).parquet(src)
-    for fn in (ops.view_click_left_join, ops.view_click_full_join):
-        assert fn(df).count() == 0, fn.__name__
-        assert ops.run_stream_to_df(fn(sdf), output_mode="append").count() == 0
+    for how in ("left", "full"):
+        assert ops.view_click_join(df, how).count() == 0, how
+        assert (
+            ops.run_stream_to_df(
+                ops.view_click_join(sdf, how), output_mode="append"
+            ).count()
+            == 0
+        )
     # right join with zero VIEWS: same stall, mirrored
     rows_c = [("click", 1, 200, T0), ("click", 2, 201, T0 + 10 * H)]
     dfc = spark.createDataFrame(
@@ -409,10 +411,10 @@ def test_outer_join_stalled_watermark_on_empty_side(spark, tmp_path):
     srcc = str(tmp_path / "evc")
     dfc.coalesce(1).write.parquet(srcc)
     sdfc = spark.readStream.schema(dfc.schema).parquet(srcc)
-    assert ops.view_click_right_join(dfc).count() == 0
+    assert ops.view_click_join(dfc, "right").count() == 0
     assert (
         ops.run_stream_to_df(
-            ops.view_click_right_join(sdfc), output_mode="append"
+            ops.view_click_join(sdfc, "right"), output_mode="append"
         ).count()
         == 0
     )
