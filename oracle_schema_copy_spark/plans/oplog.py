@@ -42,33 +42,33 @@ falls back to the Spark write; bytes are never copied in Python, so every
 written byte stays visible in Spark's output metrics. An adopted
 warehouse file SHARES ITS INODE with the log's payload: nothing may open a
 warehouse or payload parquet file for writing in place. Every mutation
-here writes new files and swaps or unlinks old ones, which leaves the
+here writes new files and renames or unlinks old ones, which leaves the
 other name intact — so upserting, deleting or dropping an imported table
 never changes the log, and the log replays again to the same rows.
 
 Transactionality (SURVEY §3.2): the reference imports inside one JDBC
-transaction. ``replay`` (the warehouse entry point) is per-table staged
-writes + atomic renames, idempotent to re-run after failure;
-``replay_atomic`` stages the WHOLE replay into a shadow warehouse and
-commits via one marker rename + roll-forward, so a crashed import is never
-observable as a partially-applied warehouse (CopyUtils.java:367). A
-:class:`Warehouse` rolls a pending commit forward before it touches any
-table, so no reader sees a cut commit's prefix and no later mutation is
-overwritten by its stale stage. Both create views last, over the final
+transaction (``CopyUtils.java:353-375``, commit at ``:367``). Here every
+operation that replaces a table directory commits the same way, through
+its :class:`Warehouse`: ``Warehouse.rewrite`` (a warehouse upsert or
+delete), ``replay_atomic``, ``mor.MergeOnReadTable.compact`` and the
+streaming upsert sink (``streaming.ops.stream_upsert_to_parquet``). Each
+one stages its new table directories under ``<root>/.stage``, then commits
+with ONE ``os.replace`` of a journal, ``<root>/.commit.json``, that names
+the staged tables and the tables the commit removes. The roll-forward
+(:func:`_apply_commit`) moves each staged directory over its live one,
+removes the retired ones, then deletes the stage and the journal; every
+step can be repeated. A cut before the journal's rename leaves every table
+as it was (the next commit empties the stale stage); a cut after it is
+finished by the warehouse's next table access. So a reader sees each
+table's old or new rows, never a mix, and a multi-table commit never as a
+prefix. ``replay`` (the plain warehouse entry point) commits each record
+on its own and is idempotent to re-run from seq 0; ``replay_atomic``
+commits the whole log at once. Both create views last, over the final
 tables.
 
 Data operations are chunked at ``ROWS_PER_OP`` rows per payload file
 (the reference flushes every 10k rows, ``AbstractLoadRowsCallback.java:28``),
 implemented with ``maxRecordsPerFile`` rather than driver-side buffering.
-
-Every directory swap — ``Warehouse.rewrite``, the atomic replay's commit,
-``mor.MergeOnReadTable.compact`` and the streaming upsert sink
-(``streaming.ops.stream_upsert_to_parquet``) — goes through
-:func:`swap_in`; the three full rewrites stage their files with
-:func:`write_staged`. A crash between its two renames leaves the table
-(or a merge-on-read base) absent; each owner rolls that back
-(:func:`undo_cut_swap`) before it next touches the table, so a read sees
-the old rows and a retried mutation succeeds.
 """
 
 from __future__ import annotations
@@ -91,40 +91,9 @@ MANIFEST = "manifest.jsonl"
 ROWS_PER_OP = 10_000  # rows per payload file
 # os.link failures that mean "no hard link here": replay writes instead
 LINK_FALLBACK = {errno.EXDEV, errno.EPERM, errno.ENOTSUP, errno.EMLINK}
-
-
-def swap_in(src: str, dst: str) -> None:
-    """Replace directory ``dst`` with the staged directory ``src``: move
-    the old one aside, rename the staged one in (the commit point), then
-    delete the old one. ``dst`` is absent between the two renames (see
-    :func:`undo_cut_swap`), but a reader never sees old and new files
-    mixed."""
-    trash = dst + ".__old__"
-    shutil.rmtree(trash, ignore_errors=True)
-    if os.path.isdir(dst):
-        os.replace(dst, trash)
-    os.replace(src, dst)
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def write_staged(df: DataFrame, dst: str) -> None:
-    """Replace directory ``dst`` with the rows of ``df``: write them to
-    ``<dst>.__stage__``, first removing what a cut earlier write left
-    there, then :func:`swap_in`."""
-    stage = dst + ".__stage__"
-    shutil.rmtree(stage, ignore_errors=True)
-    df.write.mode("overwrite").parquet(stage)
-    swap_in(stage, dst)
-
-
-def undo_cut_swap(dst: str) -> None:
-    """Roll back a :func:`swap_in` cut between its two renames: ``dst`` is
-    missing and ``dst.__old__`` still holds the last committed directory,
-    so rename it back. The staged directory never reached the commit
-    point; the next rewrite replaces it."""
-    trash = dst + ".__old__"
-    if not os.path.isdir(dst) and os.path.isdir(trash):
-        os.replace(trash, dst)
+# a warehouse's commit entries: dot-entries of its root, never tables
+STAGE_DIRNAME = ".stage"
+JOURNAL = ".commit.json"
 
 
 @dataclass
@@ -256,8 +225,11 @@ def read_manifest(path: str) -> Iterator[OpRecord]:
 @dataclass
 class Warehouse:
     """A directory of parquet tables — the replay target for file-based
-    imports (the ExecuteTarget analog for our storage). Mutations are
-    staged-write + atomic swap; reads always see a complete table.
+    imports (the ExecuteTarget analog for our storage). A table is the
+    plain parquet directory ``<root>/<table>``; a commit replaces whole
+    table directories at once (:meth:`replace`, the module docstring), so
+    reads always see a complete table. The stage and the journal are
+    dot-entries of the root, never tables.
 
     A replayed insert adopts the payload's files by hard link
     (:meth:`adopt`), so a table file may share its inode with an oplog
@@ -274,15 +246,13 @@ class Warehouse:
     schemas: dict[str, StructType] = field(default_factory=dict)
 
     def _dir(self, table: str) -> str:
-        """The table's directory. Every read, listing, write and rewrite
-        goes through here, so first a commit that a crashed
-        :func:`replay_atomic` left pending is rolled forward, then a swap
-        cut between its two renames (the table gone, ``<table>.__old__``
-        left) is rolled back."""
-        recover_replay(self)
-        d = os.path.join(self.root, table)
-        undo_cut_swap(d)
-        return d
+        """The table's directory. Every read, listing, write and commit
+        goes through here, so a commit whose journal is pending is rolled
+        forward (:func:`_apply_commit`) before anything looks at a table or
+        empties the stage."""
+        if os.path.isfile(os.path.join(self.root, JOURNAL)):
+            _apply_commit(self)
+        return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
         return os.path.isdir(self._dir(table))
@@ -342,18 +312,46 @@ class Warehouse:
         return True
 
     def rewrite(self, table: str, df: DataFrame) -> None:
-        """Full-table rewrite via staging dir + atomic swap (upsert/delete
-        on immutable parquet). The swap is the commit point."""
-        write_staged(df, self._dir(table))
-        self.tables_written.add(table)
-        self.schemas[table] = df.schema
+        """Full-table rewrite (upsert/delete on immutable parquet): one
+        :meth:`replace` of ``table`` with the rows of ``df``."""
+        self.replace({table: df})
+
+    def replace(self, tables: dict[str, DataFrame | None]) -> None:
+        """Replace every named table with its frame's rows, or remove it
+        where the frame is None, in ONE commit: write the frames under the
+        emptied stage, then :meth:`_commit`. A frame may read the tables it
+        replaces; the live directories move only after every write."""
+        frames = {t: df for t, df in tables.items() if df is not None}
+        stage = self._stage()
+        for t, df in frames.items():
+            df.write.parquet(os.path.join(stage, t))
+        self._commit(list(frames), [t for t in tables if t not in frames])
+        self.schemas.update({t: df.schema for t, df in frames.items()})
+
+    def _stage(self) -> str:
+        """The stage directory, emptied of what a cut commit left before
+        its journal; a pending journal is rolled forward first
+        (:meth:`_dir`), because it names directories in the stage."""
+        stage = self._dir(STAGE_DIRNAME)
+        shutil.rmtree(stage, ignore_errors=True)
+        os.makedirs(stage)
+        return stage
+
+    def _commit(self, staged: list[str], retired: list[str]) -> None:
+        """COMMIT POINT: one ``os.replace`` of a journal naming the
+        ``staged`` tables (directories in the stage) and the ``retired``
+        ones, then the roll-forward (:func:`_apply_commit`)."""
+        fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, STAGE_DIRNAME), prefix=".journal")
+        with os.fdopen(fd, "w") as f:
+            json.dump({"staged": staged, "retired": retired}, f)
+        os.replace(tmp, os.path.join(self.root, JOURNAL))
+        _apply_commit(self)
 
     def drop(self, table: str) -> None:
-        d = self._dir(table)
-        shutil.rmtree(d, ignore_errors=True)
-        # a swap cut after its second rename leaves the table's previous
-        # files here; they must not come back as the dropped table
-        shutil.rmtree(d + ".__old__", ignore_errors=True)
+        """Remove the table's directory and forget its schema. A commit
+        never leaves a table's old files beside it (they wait in the stage
+        until the roll-forward ends), so nothing of it can come back."""
+        shutil.rmtree(self._dir(table), ignore_errors=True)
         self.schemas.pop(table, None)
 
     def create_views(self, views: dict[str, str]) -> None:
@@ -514,15 +512,11 @@ def replay(
     return applied
 
 
-STAGE_DIRNAME = ".replay_stage"
-COMMIT_MARKER = ".replay_commit.json"
-
-
 class _StagingWarehouse(Warehouse):
-    """Replay target whose WRITES all land under a staging root while
-    READS overlay stage-over-base — upsert/delete ops see prior staged
-    state (or the untouched base table), and the base warehouse is never
-    written until commit."""
+    """Replay target rooted at a warehouse's stage: WRITES land in the
+    stage while READS overlay stage-over-base — upsert/delete ops see prior
+    staged state (or the untouched base table), and the base warehouse is
+    never written until commit."""
 
     def __init__(self, spark: SparkSession, root: str, base: Warehouse):
         super().__init__(spark, root)
@@ -551,64 +545,56 @@ def replay_atomic(
 ) -> list[OpRecord]:
     """Whole-log transactional replay: the reference imports an entire
     schema inside ONE JDBC transaction (``CopyUtils.java:353-375``, commit
-    at ``:367``); plain ``replay`` substitutes per-table staged renames +
-    re-run idempotence, leaving a window where a crashed replay is
-    OBSERVABLE as a partially-applied warehouse (SURVEY §3.2's documented
-    delta). This closes it with a staging warehouse + commit marker:
+    at ``:367``); plain ``replay`` commits record by record, so a crashed
+    replay is OBSERVABLE as a partially-applied warehouse (SURVEY §3.2's
+    documented delta). This closes it with the warehouse's one commit
+    protocol (module docstring): :func:`replay` every operation into the
+    emptied stage through a :class:`_StagingWarehouse` — the target is
+    never written — then commit every table the replay wrote with one
+    journal, then create the logged views over the committed tables.
 
-    1. Roll forward a previous crashed commit (marker present → finish it).
-    2. :func:`replay` every operation into ``<root>/.replay_stage`` —
-       reads overlay stage-over-target, the target is never written.
-    3. COMMIT POINT: one atomic rename of a marker file listing the staged
-       tables into the warehouse root.
-    4. Roll forward: move each staged table over its live counterpart,
-       then drop marker + stage; then create the logged views over the
-       committed tables.
-
-    A failure before (3) leaves the target byte-identical (the stale stage
-    is discarded by the next run); a failure during (4) is completed by
-    the warehouse's next table access (``Warehouse._dir``) or by (1), both
-    skipping already-moved tables — so readers either see the pre-replay
-    state or the fully-replayed one, never a prefix. Single-writer, like the reference's import. Returns the
-    records that reached the warehouse."""
-    os.makedirs(warehouse.root, exist_ok=True)
-    recover_replay(warehouse)
-    stage_root = os.path.join(warehouse.root, STAGE_DIRNAME)
-    shutil.rmtree(stage_root, ignore_errors=True)
-    stage = _StagingWarehouse(spark, stage_root, warehouse)
+    A failure before the journal's rename leaves the target byte-identical
+    (the next commit empties the stale stage); a failure after it is
+    finished by the warehouse's next table access — so readers see either
+    the pre-replay state or the fully-replayed one, never a prefix.
+    Single-writer, like the reference's import. Returns the records that
+    reached the warehouse."""
+    stage = _StagingWarehouse(spark, warehouse._stage(), warehouse)
     applied = replay(spark, log_path, stage)
-    fd, tmp = tempfile.mkstemp(dir=warehouse.root, suffix=".marker.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"tables": sorted(stage.tables_written)}, f)
-    os.replace(tmp, os.path.join(warehouse.root, COMMIT_MARKER))  # COMMIT POINT
-    _apply_commit(warehouse)
+    warehouse._commit(sorted(stage.tables_written), [])
     warehouse.create_views(stage.views)
     return applied
 
 
-def recover_replay(warehouse: Warehouse) -> bool:
-    """Roll forward a committed-but-unapplied replay (crash between commit
-    marker and table moves). Returns True if there was one. Idempotent."""
-    if os.path.isfile(os.path.join(warehouse.root, COMMIT_MARKER)):
-        _apply_commit(warehouse)
-        return True
-    return False
-
-
 def _apply_commit(warehouse: Warehouse) -> None:
+    """The roll-forward of a pending journal, the one recovery rule, run
+    by its :class:`Warehouse` (``_commit`` and ``_dir``). A live table is
+    moved into ``<stage>/.old`` before its staged directory is renamed
+    in, and a retired one is moved there too; a staged table already
+    renamed in is skipped. Every step can be repeated, so a roll-forward
+    cut anywhere is finished by the next one. The stage goes before the
+    journal, so a pending journal is the only thing a cut can leave."""
     root = warehouse.root
-    with open(os.path.join(root, COMMIT_MARKER)) as f:
-        tables = json.load(f)["tables"]
-    stage_root = os.path.join(root, STAGE_DIRNAME)
-    for t in tables:
-        src = os.path.join(stage_root, t)
-        if not os.path.isdir(src):
-            continue  # already moved by a previous (crashed) roll-forward
-        swap_in(src, os.path.join(root, t))
+    with open(os.path.join(root, JOURNAL)) as f:
+        journal = json.load(f)
+    stage = os.path.join(root, STAGE_DIRNAME)
+    old = os.path.join(stage, ".old")
+    os.makedirs(old, exist_ok=True)
+    for t in journal["retired"]:
+        if os.path.isdir(os.path.join(root, t)):
+            os.replace(os.path.join(root, t), os.path.join(old, t))
+        warehouse.tables_written.discard(t)
+        warehouse.schemas.pop(t, None)
+    for t in journal["staged"]:
+        src, dst = os.path.join(stage, t), os.path.join(root, t)
+        if os.path.isdir(src):
+            if os.path.isdir(dst):
+                os.replace(dst, os.path.join(old, t))
+            os.replace(src, dst)
         warehouse.tables_written.add(t)
         warehouse.schemas.pop(t, None)  # the staged files replaced the table
-    os.remove(os.path.join(root, COMMIT_MARKER))
-    shutil.rmtree(stage_root, ignore_errors=True)
+    shutil.rmtree(stage)
+    os.remove(os.path.join(root, JOURNAL))
 
 
 def export_all(

@@ -452,7 +452,7 @@ def q_partition_pruned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT * FROM upd
     """,
-    changed_in=11,
+    changed_in=16,
 )
 def q_mor_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read SEQUENCED mutation log (sources/mor.py): base orders
@@ -487,7 +487,7 @@ def q_mor_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mor_time_travel_orders",
     "SELECT * FROM orders WHERE o_orderkey % 13 <> 0",
-    changed_in=11,
+    changed_in=16,
 )
 def q_mor_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-travel read of the sequenced merge-on-read log: same table
@@ -529,13 +529,14 @@ def q_mor_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT * FROM upd
     """,
-    changed_in=14,
+    changed_in=16,
 )
 def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read COMPACTION is invisible to readers: the same
     sequenced mutations as mor_read_orders (delete %13 at seq=1, upsert %7
-    at seq=2) are folded into a fresh base via compact()'s staged
-    directory swap, the emptied log is asserted, and the post-compaction
+    at seq=2) are folded into a fresh base by compact(), which replaces
+    the base and retires the log in one warehouse commit; the emptied log
+    is asserted, and the post-compaction
     read must match the SAME oracle as the merge-on-read path — one gated
     row proving fold-then-scan == merge-on-read. After compaction the plan
     is a single pruned parquet scan (no anti-join, no log window): this is
@@ -577,7 +578,7 @@ def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
-    changed_in=14,
+    changed_in=16,
 )
 def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2+S10 operation-log round trip: export insert+upsert+delete ops to a
@@ -614,12 +615,12 @@ def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
-    changed_in=14,
+    changed_in=16,
 )
 def q_oplog_atomic_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The transactional twin of oplog_roundtrip_orders: the same
     insert+upsert+delete log replayed through ``replay_atomic`` — staged
-    warehouse, single commit-marker rename, roll-forward recovery — the
+    warehouse, one journal rename, roll-forward recovery — the
     reference's one-JDBC-transaction import semantics
     (``CopyUtils.java:353-375``, commit at ``:367``) on immutable storage.
     Same oracle as the plain replay: transactionality must not change the

@@ -586,7 +586,7 @@ def q_stream_cms_sketch_live(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 6) AS total_value
     FROM events GROUP BY user_id
     """,
-    changed_in=15,
+    changed_in=16,
 )
 def q_stream_cdc_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL end-to-end streaming CDC pipeline: the event stream is staged
@@ -599,7 +599,7 @@ def q_stream_cdc_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-batch insert. The gated result is the serving table itself,
     which must equal the batch groupBy twin — the exactly-once contract
     a downstream consumer of the serving table actually relies on. Each
-    batch replaces the serving table by a staged write and swap. On a
+    batch commits the serving table through its warehouse's journal. On a
     table format with native MERGE the sink body becomes one MERGE INTO;
     wiring and gate are unchanged. The serving table is localCheckpointed
     into the session before the scratch dir is removed."""

@@ -34,20 +34,22 @@ wins per key is one argmax over (key, __seq) on the union of the (small)
 mutation log — a window over log rows only, never over base. The base
 table contributes one broadcast anti-join against the mutated keys;
 base file scans stay pruned/pushed-down because read() is plain
-DataFrame composition over parquet scans. ``compact()`` folds the log
-into a new base via the oplog warehouse's staged write
-(``oplog.write_staged``), bounding read amplification; ``stats()`` reports
-the log size that triggers it. A compaction cut between the swap's two
-renames leaves ``base`` missing and the log in place; ``read``,
-``compact`` and ``write_base`` roll that back first
-(``oplog.undo_cut_swap``), so the table reads its pre-compaction rows and
-a retried compaction replaces the cut one's stage.
+DataFrame composition over parquet scans.
+
+The table root is an ``oplog.Warehouse`` whose tables are ``base``,
+``deletes`` and ``updates``, so it commits the way every mutable parquet
+table here does (``oplog``'s module docstring). ``compact()`` folds the log
+into a new base, bounding read amplification, and replaces ``base`` and
+retires both logs in ONE warehouse commit (``Warehouse.replace``): a cut
+compaction reads as the old base with its whole log or the new base with
+none, never as a base beside part of its log, which would bring back a key
+that a later delete hid. ``stats()`` reports the log size that triggers
+compaction.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 from collections.abc import Sequence
 
@@ -55,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark.operators.walk import _keyed_join, key_frame
-from oracle_schema_copy_spark.plans.oplog import undo_cut_swap, write_staged
+from oracle_schema_copy_spark.plans.oplog import Warehouse
 
 
 class MergeOnReadTable:
@@ -63,17 +65,12 @@ class MergeOnReadTable:
         self.spark = spark
         self.path = path
         self.key_columns = list(key_columns)
+        self.wh = Warehouse(spark, path)
 
     # -- write side ---------------------------------------------------------
 
-    def _base(self) -> str:
-        """The base directory, with a cut compaction swap rolled back."""
-        base = f"{self.path}/base"
-        undo_cut_swap(base)
-        return base
-
     def write_base(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self._base())
+        self.wh.write("base", df)
 
     def _next_seq(self) -> int:
         """Next table-wide sequence number: 1 + max over BOTH log kinds.
@@ -109,9 +106,9 @@ class MergeOnReadTable:
     # -- read side ----------------------------------------------------------
 
     def _log(self, kind: str) -> list[str]:
-        d = f"{self.path}/{kind}"
-        if not os.path.isdir(d):
+        if not self.wh.exists(kind):
             return []
+        d = f"{self.path}/{kind}"
         return sorted(
             f"{d}/{b}" for b in os.listdir(d) if b.startswith("b_")
         )
@@ -126,7 +123,7 @@ class MergeOnReadTable:
         reproducing the table exactly as it stood after that batch —
         free on this layout, since the log is append-only and sequenced
         (the Delta/Iceberg snapshot-isolation read re-expressed)."""
-        base = self.spark.read.parquet(self._base())
+        base = self.wh.read("base")
         del_dirs = self._log("deletes")
         upd_dirs = self._log("updates")
         if as_of_seq is not None:
@@ -185,9 +182,7 @@ class MergeOnReadTable:
         }
 
     def compact(self) -> None:
-        """Fold the mutation log into a fresh base (staged swap: write to
-        a staging dir, swap in, drop the log) — the read-amplification
-        bound. Readers opened after the swap see identical rows."""
-        write_staged(self.read(), self._base())
-        for kind in ("deletes", "updates"):
-            shutil.rmtree(f"{self.path}/{kind}", ignore_errors=True)
+        """Fold the mutation log into a fresh base and retire the log in
+        one warehouse commit — the read-amplification bound. Readers
+        opened after the commit see identical rows."""
+        self.wh.replace({"base": self.read(), "deletes": None, "updates": None})

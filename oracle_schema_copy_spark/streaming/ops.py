@@ -401,18 +401,21 @@ def stream_upsert_to_parquet(
 ) -> None:
     """foreachBatch CDC-style sink: MERGE each micro-batch into a parquet
     serving table by key (update-mode emissions overwrite their key's row;
-    new keys insert). Each batch writes the merged table with
-    ``oplog.write_staged`` — stage, then swap — so the read of the old
-    table finishes before its directory is replaced, and a batch cut
-    between the swap's two renames is rolled back
-    (``oplog.undo_cut_swap``) when the resumed stream next runs a batch;
-    the checkpoint then replays the cut batch. On a table format with
-    native MERGE (Delta/Iceberg) the body becomes one MERGE INTO; the
-    foreachBatch wiring is identical.
+    new keys insert). The serving table is table ``basename(path)`` of an
+    ``oplog.Warehouse`` rooted at the path's parent, and each batch commits
+    the merged table with ``Warehouse.rewrite``: the read of the old table
+    finishes before its directory is replaced, a batch cut before its
+    commit leaves the old table, and one cut after it is rolled forward
+    when the resumed stream next runs a batch; the checkpoint then replays
+    the cut batch. The warehouse remembers the schema it wrote, so a
+    batch after the first reads the table without a schema-inference job.
+    On a table format with native MERGE (Delta/Iceberg) the body becomes
+    one MERGE INTO; the foreachBatch wiring is identical.
     """
+    root, table = os.path.split(os.path.abspath(path))
+    wh = oplog.Warehouse(stream_df.sparkSession, root)
 
     def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        oplog.undo_cut_swap(path)
         if batch_df.isEmpty():
             return
         # update-mode aggregates emit one row per key per batch; the
@@ -423,10 +426,9 @@ def stream_upsert_to_parquet(
         # would treat ANY failure (schema drift, corrupt dir) as "first
         # batch" and silently replace the whole table with one
         # micro-batch; real errors must propagate and fail the stream
-        if os.path.isdir(path):
-            target = batch_df.sparkSession.read.parquet(path)
-            latest = merge_upsert(target, latest, keys, check_unique=False)
-        oplog.write_staged(latest, path)
+        if wh.exists(table):
+            latest = merge_upsert(wh.read(table), latest, keys, check_unique=False)
+        wh.rewrite(table, latest)
 
     (
         stream_df.writeStream.foreachBatch(_apply)

@@ -23,6 +23,9 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     s = get_spark("oscs-tests", cpus=8)
     s.conf.set("spark.sql.shuffle.partitions", "8")
+    # a self-join written with Column references must fail here, not
+    # resolve by Spark's auto-resolution (the engine joins by name)
+    s.conf.set("spark.sql.selfJoinAutoResolveAmbiguity", "false")
     yield s
     s.stop()
 
@@ -38,35 +41,43 @@ def reader_jobs(spark):
     the Spark jobs it started, and how many of those were submitted by
     ``DataFrameReader.parquet`` — schema inference (or file listing),
     which a read with a known schema never starts. Read from the status
-    store."""
+    store. The jobs are found by a job tag, which a streaming query's
+    micro-batch thread inherits from the thread that starts it (a job
+    group does not survive there: the query sets its own). A stream's jobs
+    all carry the query's call site, so a reader job is also known by its
+    RDD chain: Spark's parallel schema merge and file listing are one
+    ``parallelize`` → ``mapPartitions`` stage."""
     import uuid
 
     sc = spark.sparkContext
 
     def run(fn) -> tuple[int, int]:
-        group = f"reader-probe-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "reader probe")
+        tag = f"reader-probe-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
         try:
             fn()
         finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+            sc.removeJobTag(tag)
         jsc = sc._jsc.sc()  # noqa: SLF001
         jsc.listenerBus().waitUntilEmpty(30_000)
         store = jsc.statusStore()
         tracker = sc.statusTracker()
-        jobs = tracker.getJobIdsForGroup(group)
+        jobs = list(jsc.statusTracker().getJobIdsForTag(tag))
 
-        def details(stage: int) -> str:
+        def parquet_reader(stage: int) -> bool:
             try:
-                return store.lastStageAttempt(stage).details()
+                if "DataFrameReader.parquet" in store.lastStageAttempt(stage).details():
+                    return True
+                scopes = store.operationGraphForStage(stage).rootCluster().childClusters()
             except Exception:  # noqa: BLE001 — a skipped stage has no attempt
-                return ""
+                return False
+            return [scopes.apply(i).name() for i in range(scopes.size())] == [
+                "parallelize",
+                "mapPartitions",
+            ]
 
         reader = sum(
-            1
-            for j in jobs
-            if any("DataFrameReader.parquet" in details(s) for s in tracker.getJobInfo(j).stageIds)
+            1 for j in jobs if any(parquet_reader(s) for s in tracker.getJobInfo(j).stageIds)
         )
         return len(jobs), reader
 

@@ -57,9 +57,9 @@ def test_execute_script_copy_tree(spark, sf_dir, tmp_path):
 
     rc = main(["--sf-dir", sf_dir, "import", str(log), str(wh)])
     assert rc == 0
-    from oracle_schema_copy_spark.plans.oplog import Warehouse
+    from oracle_schema_copy_spark.plans.oplog import JOURNAL, STAGE_DIRNAME, Warehouse
 
     assert Warehouse(spark, str(wh)).read("customer").count() == 2
-    # the import is atomic and committed: no stage or commit marker left
-    assert not (wh / ".replay_stage").exists()
-    assert not (wh / ".replay_commit.json").exists()
+    # the import is atomic and committed: no stage or journal left
+    assert not (wh / STAGE_DIRNAME).exists()
+    assert not (wh / JOURNAL).exists()

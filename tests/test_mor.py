@@ -3,8 +3,6 @@ hand-built frames, multi-batch last-wins, compaction equivalence."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,36 +77,6 @@ def test_compaction_preserves_rows_and_clears_log(spark, table):
     table.compact()
     assert table.stats() == {"n_delete_batches": 0, "n_update_batches": 0}
     assert _rows(table.read()) == before == [(1, "a"), (2, "B"), (3, "c")]
-
-
-def test_compaction_cut_between_renames_rolls_back(spark, table, monkeypatch):
-    """A compaction cut between its swap's two renames leaves ``base``
-    missing; the next read returns the pre-compaction rows (the log is
-    still there) and a retried compaction succeeds, leaving no stage or
-    old base behind."""
-    table.delete_keys(spark.createDataFrame([(4,)], "k long"))
-    table.upsert(spark.createDataFrame([(2, "B")], "k long, v string"))
-    before = _rows(table.read())
-    real_replace, calls = os.replace, []
-
-    def cut_after_first_rename(src, dst):
-        calls.append(dst)
-        if len(calls) == 2:
-            raise OSError("crash between the two renames")
-        real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", cut_after_first_rename)
-    with pytest.raises(OSError, match="between the two renames"):
-        table.compact()
-    monkeypatch.undo()
-    assert not os.path.isdir(os.path.join(table.path, "base"))
-
-    assert _rows(table.read()) == before == [(1, "a"), (2, "B"), (3, "c")]
-    table.compact()
-    assert table.stats() == {"n_delete_batches": 0, "n_update_batches": 0}
-    assert _rows(table.read()) == before
-    # the retry replaced the cut compaction's stage: nothing else is left
-    assert sorted(os.listdir(table.path)) == ["base"]
 
 
 def test_delete_batch_schema_enforced(spark, table):

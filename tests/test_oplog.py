@@ -103,8 +103,7 @@ def test_rewrite_is_atomic_swap(spark, sf_dir, scratch):
     wh.write("nation", nation)
     wh.rewrite("nation", nation.filter(F.col("n_nationkey") >= 5))
     assert wh.read("nation").count() == 20
-    assert not os.path.exists(os.path.join(wh.root, "nation.__stage__"))
-    assert not os.path.exists(os.path.join(wh.root, "nation.__old__"))
+    assert sorted(os.listdir(wh.root)) == ["nation"]  # no stage, journal or trash
 
 
 def test_manifest_json_schema(spark, sf_dir, scratch):
@@ -164,7 +163,7 @@ def test_atomic_replay_crash_leaves_target_untouched(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="unknown operation kind"):
         oplog.replay_atomic(spark, log, wh)
     assert wh.read("nation").count() == 5  # untouched
-    assert not os.path.exists(os.path.join(wh.root, oplog.COMMIT_MARKER))
+    assert not os.path.exists(os.path.join(wh.root, oplog.JOURNAL))
 
     # and the SAME warehouse then accepts a clean atomic replay
     log2 = str(tmp_path / "log2")
@@ -175,8 +174,8 @@ def test_atomic_replay_crash_leaves_target_untouched(spark, sf_dir, tmp_path):
 
 
 def test_atomic_replay_rolls_forward_after_commit_marker(spark, sf_dir, tmp_path):
-    """A crash BETWEEN the commit-marker rename and the table moves is
-    completed by the next replay/recover (roll-forward), not undone."""
+    """A crash BETWEEN the journal's rename and the table moves is
+    completed by the next warehouse access (roll-forward), not undone."""
     import shutil as _sh
 
     from oracle_schema_copy_spark.sources.tables import load_table
@@ -185,88 +184,33 @@ def test_atomic_replay_rolls_forward_after_commit_marker(spark, sf_dir, tmp_path
     wh = oplog.Warehouse(spark, str(tmp_path / "wh"))
     wh.write("nation", nation.filter(F.col("n_nationkey") < 5))
 
-    # hand-craft the post-commit pre-apply state: staged table + marker
+    # hand-craft the post-commit pre-apply state: staged table + journal
     stage = os.path.join(wh.root, oplog.STAGE_DIRNAME)
-    nation.write.parquet(os.path.join(stage, "nation"))
-    with open(os.path.join(wh.root, oplog.COMMIT_MARKER), "w") as f:
-        json.dump({"tables": ["nation"]}, f)
 
-    assert oplog.recover_replay(wh) is True
-    assert wh.read("nation").count() == 25  # the committed state, applied
-    assert not os.path.exists(os.path.join(wh.root, oplog.COMMIT_MARKER))
-    assert not os.path.isdir(stage)
-    assert oplog.recover_replay(wh) is False  # idempotent; nothing pending
+    def pending_commit():
+        nation.write.mode("overwrite").parquet(os.path.join(stage, "nation"))
+        with open(os.path.join(wh.root, oplog.JOURNAL), "w") as f:
+            json.dump({"staged": ["nation"], "retired": []}, f)
+
+    pending_commit()
+    assert oplog.Warehouse(spark, wh.root).read("nation").count() == 25  # applied
+    assert sorted(os.listdir(wh.root)) == ["nation"]  # no journal, no stage
 
     # a plain replay rolls a pending commit forward first: the stale stage
     # lands BEFORE the log's newer nation, and no later replay sees it
-    nation.write.mode("overwrite").parquet(os.path.join(stage, "nation"))
-    with open(os.path.join(wh.root, oplog.COMMIT_MARKER), "w") as f:
-        json.dump({"tables": ["nation"]}, f)
+    pending_commit()
     log = str(tmp_path / "log")
     with oplog.OperationLogWriter(log) as lg:
         lg.insert("nation", nation.filter(F.col("n_nationkey") < 10))
     oplog.replay(spark, log, wh)
     assert wh.read("nation").count() == 10
-    assert not os.path.exists(os.path.join(wh.root, oplog.COMMIT_MARKER))
-    assert not os.path.isdir(stage)
+    assert sorted(os.listdir(wh.root)) == ["nation"]
     region_log = str(tmp_path / "region_log")
     with oplog.OperationLogWriter(region_log) as lg:
         lg.insert("region", load_table(spark, sf_dir, "region"))
     oplog.replay_atomic(spark, region_log, wh)
     assert wh.read("nation").count() == 10  # the stale stage never resurfaces
     _sh.rmtree(str(tmp_path / "wh"), ignore_errors=True)
-
-
-def _cut_second_commit_swap(spark, sf_dir, root: str, monkeypatch) -> None:
-    """A two-table ``replay_atomic`` (nation 5 -> 25 rows, region 2 -> 5)
-    cut inside its commit: nation is swapped in, region's swap raises, so
-    the commit marker and region's stage stay behind."""
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    wh = oplog.Warehouse(spark, root)
-    wh.write("nation", nation.filter(F.col("n_nationkey") < 5))
-    wh.write("region", region.filter(F.col("r_regionkey") < 2))
-    log = root + "_log"
-    with oplog.OperationLogWriter(log) as lg:
-        lg.insert("nation", nation)
-        lg.insert("region", region)
-    real_swap, calls = oplog.swap_in, []
-
-    def cut_second_swap(src, dst):
-        calls.append(dst)
-        if len(calls) == 2:
-            raise OSError("crash inside the commit")
-        real_swap(src, dst)
-
-    monkeypatch.setattr(oplog, "swap_in", cut_second_swap)
-    with pytest.raises(OSError, match="inside the commit"):
-        oplog.replay_atomic(spark, log, wh)
-    monkeypatch.undo()
-    assert os.path.isfile(os.path.join(root, oplog.COMMIT_MARKER))
-
-
-def test_crashed_atomic_commit_rolls_forward_on_next_access(spark, sf_dir, tmp_path, monkeypatch):
-    """A commit cut between its table moves is finished by the next
-    warehouse access, not only by the next replay: a reader never sees
-    the prefix (new nation beside old region), and a delete made before
-    any replay is not overwritten later by the stale stage."""
-    seen = str(tmp_path / "seen")
-    _cut_second_commit_swap(spark, sf_dir, seen, monkeypatch)
-    fresh = oplog.Warehouse(spark, seen)
-    counts = (fresh.read("nation").count(), fresh.read("region").count())
-
-    mutated = str(tmp_path / "mutated")
-    _cut_second_commit_swap(spark, sf_dir, mutated, monkeypatch)
-    target = oplog.WarehouseTarget(oplog.Warehouse(spark, mutated))
-    target.delete("region", "r_regionkey", spark.createDataFrame([(0,)], "r_regionkey long"))
-    other = str(tmp_path / "other_log")
-    with oplog.OperationLogWriter(other) as lg:
-        lg.insert("other", spark.createDataFrame([(1,)], "x long"))
-    oplog.replay(spark, other, target.wh)
-    keys = sorted(r.r_regionkey for r in target.wh.read("region").collect())
-
-    assert (counts, keys) == ((25, 5), [1, 2, 3, 4])
-    assert not os.path.exists(os.path.join(mutated, oplog.COMMIT_MARKER))
 
 
 def test_replay_composite_and_legacy_delete_records(spark, sf_dir, tmp_path):
@@ -427,35 +371,6 @@ def test_replay_reads_payloads_with_the_logged_schema(spark, sf_dir, tmp_path, r
     assert sorted(map(tuple, old.collect())) == sorted(map(tuple, got.collect()))
 
 
-def test_swap_cut_between_renames_rolls_back(spark, sf_dir, scratch, monkeypatch):
-    """A crash between swap_in's two renames inside a warehouse delete
-    leaves only ``nation.__old__`` and ``nation.__stage__``; the next read
-    returns the old rows and a retried delete succeeds."""
-    target = oplog.WarehouseTarget(oplog.Warehouse(spark, os.path.join(scratch, "wh_cut")))
-    nation = load_table(spark, sf_dir, "nation")
-    target.insert("nation", nation)
-    keys = nation.filter(F.col("n_nationkey") < 5).select("n_nationkey")
-    real_replace, calls = os.replace, []
-
-    def cut_after_first_rename(src, dst):
-        calls.append(dst)
-        if len(calls) == 2:
-            raise OSError("crash between the two renames")
-        real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", cut_after_first_rename)
-    with pytest.raises(OSError, match="between the two renames"):
-        target.delete("nation", "n_nationkey", keys)
-    monkeypatch.undo()
-    root = target.wh.root
-    assert sorted(os.listdir(root)) == ["nation.__old__", "nation.__stage__"]
-
-    assert target.wh.read("nation").count() == 25
-    target.delete("nation", "n_nationkey", keys)
-    assert sorted(r.n_nationkey for r in target.wh.read("nation").collect()) == list(range(5, 25))
-    assert sorted(os.listdir(root)) == ["nation"]
-
-
 def _rows(df) -> list[tuple]:
     return sorted(map(tuple, df.collect()))
 
@@ -611,7 +526,7 @@ def test_atomic_import_cut_mid_adoption(spark, sf_dir, tmp_path, monkeypatch):
         oplog.replay_atomic(spark, log, wh)
     monkeypatch.undo()
     assert _hashes(wh.root, skip=oplog.STAGE_DIRNAME) == before
-    assert not os.path.exists(os.path.join(wh.root, oplog.COMMIT_MARKER))
+    assert not os.path.exists(os.path.join(wh.root, oplog.JOURNAL))
 
     oplog.replay_atomic(spark, log, wh)
     assert sorted(os.listdir(wh.root)) == ["nation", "orders"]

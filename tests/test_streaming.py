@@ -156,67 +156,25 @@ def test_stream_dedup_matches_batch_distinct(spark):
     pd.testing.assert_frame_equal(_sorted_pdf(live), _sorted_pdf(batch))
 
 
-def test_foreachbatch_upsert_serving_table(spark, tmp_path):
+def test_foreachbatch_upsert_serving_table(spark, tmp_path, reader_jobs):
     """Two micro-batches of stateful running totals merged into a parquet
     serving table by user_id: the final table must equal the batch totals
     (each batch's emission OVERWRITES that user's row — upsert, not
-    append)."""
+    append). The serving table is a warehouse table, so the second batch
+    reads it with the schema the warehouse remembers: the stream starts no
+    schema-inference job."""
     events = ops.load_events(spark, SF)
     sdf = _two_file_stream(spark, events, str(tmp_path))
     serving = str(tmp_path / "serving")
-    ops.stream_upsert_to_parquet(
-        ops.stateful_user_totals_stream(sdf),
-        serving,
-        ["user_id"],
-        str(tmp_path / "ckpt"),
-    )
-    got = _sorted_pdf(spark.read.parquet(serving))
-    expected = _sorted_pdf(ops.batch_user_totals(events))
-    pd.testing.assert_frame_equal(got, expected)
-
-
-def test_upsert_sink_resumes_after_cut_swap(spark, tmp_path, monkeypatch):
-    """Batch 2's swap of the serving table is cut between its two renames
-    (the table gone, its old directory left aside), failing the stream.
-    The resumed stream rolls the swap back, replays batch 2 from the
-    checkpoint, and ends with the serving table equal to the batch
-    totals."""
-    from oracle_schema_copy_spark.plans import oplog
-
-    events = ops.load_events(spark, SF)
-    serving, ckpt = str(tmp_path / "serving"), str(tmp_path / "ckpt")
-    swap_in, swaps = oplog.swap_in, []
-
-    def cut_second_swap(src: str, dst: str) -> None:
-        swaps.append(dst)
-        if len(swaps) < 2:
-            return swap_in(src, dst)
-        os.replace(dst, dst + ".__old__")
-        raise RuntimeError("cut between the swap's renames")
-
-    monkeypatch.setattr(oplog, "swap_in", cut_second_swap)
-    with pytest.raises(Exception, match="cut between the swap's renames"):
-        ops.stream_upsert_to_parquet(
-            ops.stateful_user_totals_stream(_two_file_stream(spark, events, str(tmp_path))),
-            serving,
-            ["user_id"],
-            ckpt,
+    _, reader = reader_jobs(
+        lambda: ops.stream_upsert_to_parquet(
+            ops.stateful_user_totals_stream(sdf), serving, ["user_id"], str(tmp_path / "ckpt")
         )
-    assert swaps == [serving, serving]
-    assert not os.path.isdir(serving) and os.path.isdir(serving + ".__old__")
-    monkeypatch.setattr(oplog, "swap_in", swap_in)
-    resumed = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "flat"))
     )
-    ops.stream_upsert_to_parquet(
-        ops.stateful_user_totals_stream(resumed), serving, ["user_id"], ckpt
-    )
+    assert reader == 0
     got = _sorted_pdf(spark.read.parquet(serving))
     expected = _sorted_pdf(ops.batch_user_totals(events))
     pd.testing.assert_frame_equal(got, expected)
-    assert sorted(os.listdir(tmp_path)) == ["ckpt", "flat", "part0", "part1", "serving"]
 
 
 def test_stream_checkpoint_resume_is_exactly_once(spark, tmp_path):
