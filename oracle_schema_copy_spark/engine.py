@@ -73,12 +73,16 @@ class Engine:
 
     # -- sources -------------------------------------------------------------
 
+    def _path(self, name: str) -> str:
+        sf_dir, fname = self.catalog.paths[name.lower()].rsplit("/", 1)
+        return f"{sf_dir}/{fname.removesuffix('.parquet')}.parquet"
+
     def table(self, name: str) -> DataFrame:
         """The catalog table as a DataFrame. Its parquet schema is inferred
         on the first call only; later calls read with the remembered one."""
-        sf_dir, fname = self.catalog.paths[name.lower()].rsplit("/", 1)
+        path = self._path(name)
+        sf_dir, fname = path.rsplit("/", 1)
         stem = fname.removesuffix(".parquet")
-        path = f"{sf_dir}/{stem}.parquet"
         if path in self._schemas:
             return self.spark.read.schema(self._schemas[path]).parquet(path)
         df = load_table(self.spark, sf_dir, stem)
@@ -150,10 +154,23 @@ class Engine:
         target.upsert(table, df if df is not None else self.table(table), pk)
 
     def export_schema(self, tables: list[str], log_path: str) -> None:
-        """exportAll: DDL → data (topo order) → constraints after data."""
+        """exportAll: DDL → data (topo order) → constraints after data.
+
+        A table that :meth:`table` reads bare — its schema is remembered,
+        i.e. every catalog table but ``events``, whose timestamps are
+        converted after the read — is exported without a Spark job: the
+        log hard-links its parquet files into the payload
+        (``oplog.link_parquet``; a partitioned directory, or a filesystem
+        that cannot link, is written instead). The log then shares those
+        files' inodes with the source, and a warehouse import shares them
+        once more, so the source's files must never be written in place
+        (``pq.write_table`` over one, ``open(path, "wb")``, a truncate):
+        replay refuses such a payload. Replacing the source by new files —
+        a Spark overwrite, a rename — leaves the log's rows as exported."""
         tabs = self.tables(tables)
         order = [t for t in self.catalog.topo_order(tables)]
-        oplog.export_all(tabs, log_path, topo_order=order)
+        sources = {t: p for t in tables if (p := self._path(t)) in self._schemas}
+        oplog.export_all(tabs, log_path, topo_order=order, sources=sources)
 
     def import_schema(
         self, log_path: str, warehouse_root: str, *, atomic: bool = False

@@ -66,9 +66,26 @@ on its own and is idempotent to re-run from seq 0; ``replay_atomic``
 commits the whole log at once. Both create views last, over the final
 tables.
 
-Data operations are chunked at ``ROWS_PER_OP`` rows per payload file
-(the reference flushes every 10k rows, ``AbstractLoadRowsCallback.java:28``),
-implemented with ``maxRecordsPerFile`` rather than driver-side buffering.
+Zero-copy export: an insert whose frame reads a parquet source bare
+(``Engine.export_schema``'s catalog tables, ``export_all(sources=)``) is
+logged by hard-linking the source's files into its payload directory
+(:func:`link_parquet`, the same helper ``Warehouse.adopt`` uses), so no
+Spark job runs and no byte is written. A partitioned source directory, or a
+link refused with a ``LINK_FALLBACK`` errno, is written with Spark instead.
+The payload then SHARES ITS INODES with the user's source. A source replaced
+by new files (a Spark overwrite) leaves the log intact; one written in place
+changes the log, so the insert record keeps each linked file's ``[size,
+mtime_ns]`` (``params["linked"]``) and replay raises, naming the table and
+the file, when they differ. A record without them (a written payload, an
+older log) replays as before.
+
+Written data operations are chunked at ``ROWS_PER_OP`` rows per payload
+file (the reference flushes every 10k rows,
+``AbstractLoadRowsCallback.java:28``), implemented with ``maxRecordsPerFile``
+rather than driver-side buffering. A linked payload keeps its source's file
+layout instead — one file may hold every row — and nothing depends on the
+bound: replay reads each payload through Spark's file splits, whose size does
+not follow the file count.
 """
 
 from __future__ import annotations
@@ -89,7 +106,7 @@ from oracle_schema_copy_spark.operators.walk import key_cols, key_frame
 
 MANIFEST = "manifest.jsonl"
 ROWS_PER_OP = 10_000  # rows per payload file
-# os.link failures that mean "no hard link here": replay writes instead
+# os.link failures that mean "no hard link here": the rows are written instead
 LINK_FALLBACK = {errno.EXDEV, errno.EPERM, errno.ENOTSUP, errno.EMLINK}
 # a warehouse's commit entries: dot-entries of its root, never tables
 STAGE_DIRNAME = ".stage"
@@ -161,10 +178,17 @@ class OperationLogWriter:
             )
         )
 
-    def insert(self, table: str, df: DataFrame) -> str:
+    def insert(self, table: str, df: DataFrame, source: str | None = None) -> str:
         """Bulk-load rows into ``table`` on replay (K3 / ExecuteTableLoad).
-        Returns the payload directory."""
-        return self._data_op("insert", table, df, {})
+        Returns the payload directory.
+
+        ``source`` is the parquet path ``df`` reads bare (no conversion
+        after the read): its files are then hard-linked into the payload
+        (:func:`link_parquet`) and each link's ``[size, mtime_ns]`` is
+        recorded under ``params["linked"]``, so replay can refuse a payload
+        that was written in place since. Where they cannot be linked, the
+        rows are written as for any frame."""
+        return self._data_op("insert", table, df, {}, source)
 
     def upsert(self, table: str, df: DataFrame, key_columns: list[str] | str) -> None:
         """Merge rows into ``table`` by key on replay (K4 / ExecuteTableUpdate)."""
@@ -179,11 +203,20 @@ class OperationLogWriter:
 
     # -- plumbing ------------------------------------------------------------
 
-    def _data_op(self, kind: str, table: str, df: DataFrame, params: dict) -> str:
+    def _data_op(
+        self, kind: str, table: str, df: DataFrame, params: dict, source: str | None = None
+    ) -> str:
         seq = len(self._records)
         rel = f"payloads/op_{seq:05d}"
         path = os.path.join(self.path, rel)
-        df.write.option("maxRecordsPerFile", ROWS_PER_OP).mode("overwrite").parquet(path)
+        linked = None
+        if source is not None:
+            shutil.rmtree(path, ignore_errors=True)  # what the write's overwrite mode does
+            linked = link_parquet(source, path)
+        if linked is None:
+            df.write.option("maxRecordsPerFile", ROWS_PER_OP).mode("overwrite").parquet(path)
+        else:
+            params = {**params, "linked": {n: _stamp(os.path.join(path, n)) for n in linked}}
         params = {**params, "schema": df.schema.jsonValue()}
         self._append(OpRecord(seq=seq, kind=kind, table=table, params=params, payload=rel))
         return path
@@ -220,6 +253,72 @@ def read_manifest(path: str) -> Iterator[OpRecord]:
         for line in f:
             d = json.loads(line)
             yield OpRecord(d["seq"], d["kind"], d["table"], d["params"], d["payload"])
+
+
+def link_parquet(src: str, dst_dir: str, prefix: str = "") -> list[str] | None:
+    """Hard-link the parquet data of ``src`` into ``dst_dir`` without
+    reading or writing a byte: ``src`` is one file, or a flat directory
+    whose ``*.parquet`` files are taken (entries starting with ``_`` or
+    ``.`` skipped). Each file lands as ``<prefix><name>`` beside its linked
+    Hadoop ``.crc`` sidecar. Returns the names made in ``dst_dir``.
+
+    Returns None, having made nothing, when the files cannot be linked
+    with their layout: a directory holding anything else that Spark would
+    read (subdirectories such as hive partitions, a data file not named
+    ``*.parquet``), or an ``os.link`` errno in ``LINK_FALLBACK``; the
+    caller then writes the rows with Spark. Any other error propagates
+    after the same clean-up (the links made, and ``dst_dir`` if this call
+    created it)."""
+    if os.path.isdir(src):
+        folder = src
+        entries = [e for e in os.scandir(src) if e.name[0] not in "._"]
+        if any(e.is_dir() or not e.name.endswith(".parquet") for e in entries):
+            return None
+        names = sorted(e.name for e in entries)
+    else:
+        folder, name = os.path.split(src)
+        names = [name]
+    created = not os.path.isdir(dst_dir)
+    os.makedirs(dst_dir, exist_ok=True)
+    made: list[str] = []
+    try:
+        for name in names:
+            links = [(name, prefix + name)]
+            if os.path.isfile(os.path.join(folder, f".{name}.crc")):
+                links.append((f".{name}.crc", f".{prefix}{name}.crc"))
+            for s, d in links:
+                os.link(os.path.join(folder, s), os.path.join(dst_dir, d))
+                made.append(d)
+    except OSError as e:
+        for f in made:
+            os.remove(os.path.join(dst_dir, f))
+        if created:
+            os.rmdir(dst_dir)
+        if e.errno in LINK_FALLBACK:
+            return None
+        raise
+    return made
+
+
+def _stamp(path: str) -> list[int]:
+    st = os.stat(path)
+    return [st.st_size, st.st_mtime_ns]
+
+
+def _check_linked(rec: OpRecord, payload: str) -> None:
+    """Raise when a linked payload file no longer has the ``[size,
+    mtime_ns]`` recorded at export (``params["linked"]``): it shares its
+    inode with the export's source, which was written in place since, so
+    its rows are no longer the exported ones. A written payload records
+    nothing and passes."""
+    for name, stamp in rec.params.get("linked", {}).items():
+        path = os.path.join(payload, name)
+        if _stamp(path) != stamp:
+            raise ValueError(
+                f"table {rec.table!r}: payload file {path} of operation {rec.seq} "
+                f"changed since export (size, mtime_ns {stamp} -> {_stamp(path)}); "
+                "its source was written in place"
+            )
 
 
 @dataclass
@@ -278,34 +377,17 @@ class Warehouse:
 
     def adopt(self, table: str, payload_dir: str, tag: str, schema: StructType) -> bool:
         """Add the parquet files of ``payload_dir`` to ``table`` by hard
-        link, each under ``<tag>-<name>`` beside its linked ``.crc``
-        sidecar, without reading or writing a byte. Returns False, having
-        removed the links this call made, when the filesystem cannot link
-        them (``LINK_FALLBACK``); the caller then writes the rows. Any other
-        error (a name already taken, too) propagates after the same
-        clean-up. ``schema`` becomes the table's read schema only when this
-        call created the table."""
-        names = sorted(f for f in os.listdir(payload_dir) if f.endswith(".parquet"))
+        link (:func:`link_parquet`), each under ``<tag>-<name>`` beside its
+        linked ``.crc`` sidecar, without reading or writing a byte. Returns
+        False, having removed what this call made, when the filesystem
+        cannot link them; the caller then writes the rows. Any other error
+        (a name already taken, too) propagates after the same clean-up.
+        ``schema`` becomes the table's read schema only when this call
+        created the table."""
         d = self._dir(table)
         created = not os.path.isdir(d)
-        os.makedirs(d, exist_ok=True)
-        made: list[str] = []
-        try:
-            for name in names:
-                links = [(name, f"{tag}-{name}")]
-                if os.path.isfile(os.path.join(payload_dir, f".{name}.crc")):
-                    links.append((f".{name}.crc", f".{tag}-{name}.crc"))
-                for src, dst in links:
-                    os.link(os.path.join(payload_dir, src), os.path.join(d, dst))
-                    made.append(dst)
-        except OSError as e:
-            for f in made:
-                os.remove(os.path.join(d, f))
-            if created:
-                os.rmdir(d)
-            if e.errno in LINK_FALLBACK:
-                return False
-            raise
+        if link_parquet(payload_dir, d, f"{tag}-") is None:
+            return False
         self.tables_written.add(table)
         if created:
             self.schemas[table] = schema
@@ -463,6 +545,7 @@ def replay_into_target(
             logged = rec.params.get("schema")
             schema = StructType.fromJson(logged) if logged is not None else None
             payload = os.path.join(log_path, rec.payload)
+            _check_linked(rec, payload)
             df = read_parquet(spark, payload, schema)
         if rec.kind == "ddl":
             continue  # tables come from payload schemas at their first insert
@@ -605,19 +688,24 @@ def export_all(
     constraint_sql: list[str] | None = None,
     views: dict[str, str] | None = None,
     other_object_sql: list[str] | None = None,
+    sources: dict[str, str] | None = None,
 ) -> None:
     """Full export pipeline (E1 / ``exportAll`` ``CopyUtils.java:966-1010``):
     table DDL → row data (in FK-safe topo order) → constraints AFTER data
     (the reference's load-order trick, §3.1.d) → views → other objects
     (triggers/sequences/packages) as opaque SQL a JDBC target may execute.
+    ``sources`` names the parquet path a table's frame reads bare; that
+    table's payload links the path's files (:meth:`OperationLogWriter.insert`),
+    every other frame is written with Spark.
     """
     from oracle_schema_copy_spark.plans.ddl import export_schema_ddl
 
     order = topo_order or sorted(tables)
+    sources = sources or {}
     with OperationLogWriter(log_path) as log:
         log.ddl([ddl for _, ddl in export_schema_ddl({t: tables[t] for t in order})])
         for t in order:
-            log.insert(t, tables[t])
+            log.insert(t, tables[t], sources.get(t))
         if constraint_sql:
             log.ddl(constraint_sql, opaque=True)
         for name, query in (views or {}).items():

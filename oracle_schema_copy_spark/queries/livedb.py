@@ -130,7 +130,7 @@ def q_jdbc_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM nation)
     SELECT * FROM up WHERE n_nationkey % 7 <> 6
     """,
-    changed_in=15,
+    changed_in=17,
 )
 def q_oplog_import_into_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2→K4/K5/K6 composed LIVE: the reference's import flow

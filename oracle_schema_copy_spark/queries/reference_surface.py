@@ -578,7 +578,7 @@ def q_mor_compaction_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
-    changed_in=16,
+    changed_in=17,
 )
 def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2+S10 operation-log round trip: export insert+upsert+delete ops to a
@@ -615,7 +615,7 @@ def q_oplog_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM upserted WHERE o_orderkey % 13 <> 0
     """,
-    changed_in=16,
+    changed_in=17,
 )
 def q_oplog_atomic_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The transactional twin of oplog_roundtrip_orders: the same
@@ -652,7 +652,7 @@ def q_oplog_atomic_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n.n_name AS nation_name, r.r_name AS region_name
     FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
     """,
-    changed_in=14,
+    changed_in=17,
 )
 def q_export_view_opaque_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 other-object export: a VIEW definition plus trigger/sequence
@@ -690,7 +690,7 @@ def q_export_view_opaque_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.table(view_name)
 
 
-@query("export_all_roundtrip_nation", "SELECT * FROM nation", changed_in=14)
+@query("export_all_roundtrip_nation", "SELECT * FROM nation", changed_in=17)
 def q_export_all_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 exportAll pipeline: DDL → data in topo order → constraints after
     data; replayed into a fresh warehouse, returning the imported nation."""
@@ -912,7 +912,7 @@ def _copy_verify_oracle() -> str:
     """
 
 
-@query("copy_verify_end_to_end", _copy_verify_oracle(), changed_in=14)
+@query("copy_verify_end_to_end", _copy_verify_oracle(), changed_in=17)
 def q_copy_verify_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's mission as one gated row: COPY a table through the
     full operation-log pipeline (export -> manifest+parquet log -> replay

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -33,6 +34,39 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def _link_counts() -> dict[str, int]:
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_nlink
+        for root in (SF_DIR, SF_DIR_MED)
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+@pytest.fixture(scope="session", autouse=True)
+def fixture_links_unchanged():
+    """The read-only fixture gains no hard link: an export links its
+    source files into the log (``oplog.link_parquet``), so a test that
+    exported straight from the fixture would leave links to it behind.
+    Export from ``src_dir`` instead."""
+    before = _link_counts()
+    yield
+    after = _link_counts()
+    changed = {p: (before.get(p), n) for p, n in after.items() if before.get(p) != n}
+    assert not changed, f"fixture link counts changed (before, after): {changed}"
+
+
+@pytest.fixture
+def src_dir(tmp_path) -> str:
+    """A writable copy of the sf0.001 fixture, for tests that export
+    catalog tables (the log links their files) or rewrite a source."""
+    d = tmp_path / "src"
+    d.mkdir()
+    for f in os.listdir(SF_DIR):
+        shutil.copyfile(os.path.join(SF_DIR, f), d / f)
+    return str(d)
 
 
 @pytest.fixture

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from oracle_schema_copy_spark import catalog as cat
 from oracle_schema_copy_spark.engine import Engine
+from oracle_schema_copy_spark.plans import oplog
 from oracle_schema_copy_spark.sources import jdbc
 
 
@@ -100,12 +101,57 @@ def test_copy_and_update_verbs(engine, tmp_path):
     assert wh_target.wh.read("nation").filter(F.col("n_name") != F.upper(F.col("n_name"))).count() == 0
 
 
-def test_export_import_schema_end_to_end(engine, spark, tmp_path):
+def test_export_import_schema_end_to_end(spark, src_dir, tmp_path):
+    engine = Engine(spark, cat.tpch_catalog(src_dir))
     log_path = str(tmp_path / "log")
     engine.export_schema(["region", "nation"], log_path)
     wh = engine.import_schema(log_path, str(tmp_path / "wh"))
     assert wh.read("region").count() == 5
     assert wh.read("nation").count() == 25
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def test_export_links_catalog_tables_without_a_spark_job(spark, src_dir, tmp_path, reader_jobs):
+    """export_schema links each bare catalog table's parquet file into its
+    payload (same inode, no Spark job once the schemas are known), records
+    the link's size and mtime, and a warehouse replay reproduces the rows."""
+    engine = Engine(spark, cat.tpch_catalog(src_dir))
+    tpch = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]
+    want = {t: _rows(engine.table(t)) for t in tpch}
+    log = str(tmp_path / "log")
+    jobs, _ = reader_jobs(lambda: engine.export_schema(tpch, log))
+    assert jobs == 0
+    inserts = [r for r in oplog.read_manifest(log) if r.kind == "insert"]
+    assert sorted(r.table for r in inserts) == sorted(tpch)
+    for rec in inserts:
+        payload = os.path.join(log, rec.payload)
+        src = os.path.join(src_dir, f"{rec.table}.parquet")
+        name = f"{rec.table}.parquet"
+        assert os.listdir(payload) == [name]
+        assert os.stat(os.path.join(payload, name)).st_ino == os.stat(src).st_ino
+        st = os.stat(src)
+        assert rec.params["linked"] == {name: [st.st_size, st.st_mtime_ns]}
+    wh = engine.import_schema(log, str(tmp_path / "wh"))
+    assert {t: _rows(wh.read(t)) for t in tpch} == want
+
+
+def test_export_writes_the_converted_events_table(spark, src_dir, tmp_path):
+    """events is converted after its read, so its payload is written by
+    Spark: no file of it shares the source's inode."""
+    engine = Engine(spark, cat.tpch_catalog(src_dir))
+    log = str(tmp_path / "log")
+    engine.export_schema(["events"], log)
+    (rec,) = [r for r in oplog.read_manifest(log) if r.kind == "insert"]
+    assert "linked" not in rec.params
+    src = os.stat(os.path.join(src_dir, "events.parquet"))
+    payload = os.path.join(log, rec.payload)
+    assert src.st_nlink == 1
+    assert all(os.stat(os.path.join(payload, f)).st_ino != src.st_ino for f in os.listdir(payload))
+    wh = engine.import_schema(log, str(tmp_path / "wh"))
+    assert _rows(wh.read("events")) == _rows(engine.table("events"))
 
 
 def test_prod_guard():

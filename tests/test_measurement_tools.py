@@ -1,7 +1,8 @@
 """The measurement path: bench.py's per-query failure handling, the
-tools/ab.py A/B driver, and an import check over every measurement
-script. No JVM starts here — child processes are faked through
-``subprocess.run``."""
+tools/ab.py A/B driver, the plan audit, and an import check over every
+measurement script. Child processes are faked through
+``subprocess.run``; only the plan audit's execution reader uses the
+session's Spark."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import sys
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
@@ -195,6 +197,24 @@ def test_plan_audit_flags_unlisted_crosses_and_stale_allowlist_entries():
     assert plan_audit.verdict("tpch_q1", plan()) is None
     assert plan_audit.verdict("tpch_q1", plan(bnlj=1)) == "cross"
     assert plan_audit.verdict("tpch_q1", plan(cartesian=2)) == "cross"
+
+
+def test_plan_audit_flags_a_cross_join_inside_a_checkpointed_round(spark):
+    """A cross join that only a localCheckpoint round runs is invisible in
+    the final frame's plan, and flagged by the audit of every execution."""
+    from tools import plan_audit
+
+    def build():
+        points = spark.range(30).withColumnRenamed("id", "p")
+        centers = spark.range(3).withColumnRenamed("id", "c")
+        scored = points.crossJoin(centers).withColumn("d", (F.col("p") - F.col("c")) ** 2)
+        return scored.localCheckpoint().groupBy("p").agg(F.min("d").alias("d"))
+
+    plans = plan_audit.executed_plans(spark, build)
+    assert len(plans) == 2  # the checkpointed round, then the noop write
+    assert plan_audit.verdict("tpch_q1", plan_audit.audit(plans[-1])) is None
+    assert plan_audit.verdict("tpch_q1", plan_audit.audit("\n".join(plans))) == "cross"
+    assert "kmeans_two_iterations" in plan_audit.INTENTIONAL_CROSS
 
 
 def test_ab_rejects_bad_arguments():

@@ -4,10 +4,14 @@ import errno
 import hashlib
 import json
 import os
+import re
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from oracle_schema_copy_spark import catalog as cat
+from oracle_schema_copy_spark.engine import Engine
 from oracle_schema_copy_spark.plans import oplog
 from oracle_schema_copy_spark.sources.tables import load_table
 
@@ -532,3 +536,107 @@ def test_atomic_import_cut_mid_adoption(spark, sf_dir, tmp_path, monkeypatch):
     assert sorted(os.listdir(wh.root)) == ["nation", "orders"]
     assert _rows(wh.read("orders")) == _rows(orders)
     assert _rows(wh.read("nation")) == _rows(nation)
+
+
+def _spark_written_orders(spark, sf_dir, src_dir: str) -> str:
+    """Replace the copied orders file by a Spark-written directory of three
+    part files (each with its .crc sidecar, plus _SUCCESS)."""
+    path = os.path.join(src_dir, "orders.parquet")
+    os.remove(path)
+    load_table(spark, sf_dir, "orders").repartition(3).write.parquet(path)
+    return path
+
+
+def _inserts(log: str) -> dict[str, oplog.OpRecord]:
+    return {r.table: r for r in oplog.read_manifest(log) if r.kind == "insert"}
+
+
+def test_export_links_every_part_file_of_a_spark_written_source(spark, sf_dir, src_dir, tmp_path):
+    """A flat source directory is linked file by file: every part file and
+    its .crc sidecar share their inodes with the payload's, _SUCCESS is
+    left out, and replay reads the exported rows."""
+    src = _spark_written_orders(spark, sf_dir, src_dir)
+    engine = Engine(spark, cat.tpch_catalog(src_dir))
+    want = _rows(engine.table("orders"))
+    log = str(tmp_path / "log")
+    engine.export_schema(["orders"], log)
+    rec = _inserts(log)["orders"]
+    payload = os.path.join(log, rec.payload)
+    parts = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    assert len(parts) == 3
+    linked = sorted(parts + [f".{p}.crc" for p in parts])
+    assert sorted(os.listdir(payload)) == sorted(rec.params["linked"]) == linked
+    assert all(os.path.samefile(os.path.join(src, f), os.path.join(payload, f)) for f in linked)
+    wh = engine.import_schema(log, str(tmp_path / "wh"))
+    assert _rows(wh.read("orders")) == want
+
+
+def test_export_of_a_partitioned_source_is_written(spark, sf_dir, src_dir, tmp_path):
+    """A source directory with subdirectories (hive partitions) keeps the
+    Spark write: a link cannot keep the partition columns."""
+    path = os.path.join(src_dir, "nation.parquet")
+    os.remove(path)
+    load_table(spark, sf_dir, "nation").write.partitionBy("n_regionkey").parquet(path)
+    engine = Engine(spark, cat.tpch_catalog(src_dir))
+    want = _rows(engine.table("nation"))
+    log = str(tmp_path / "log")
+    engine.export_schema(["nation"], log)
+    assert "linked" not in _inserts(log)["nation"].params
+    wh = engine.import_schema(log, str(tmp_path / "wh"))
+    assert _rows(wh.read("nation")) == want
+
+
+def test_export_falls_back_to_the_spark_write(spark, sf_dir, src_dir, tmp_path, monkeypatch):
+    """A link refused with EXDEV half-way through a table's files makes the
+    export write that table with Spark: identical rows, no link left on any
+    source file; the table after it is still linked."""
+    src = _spark_written_orders(spark, sf_dir, src_dir)
+    engine = Engine(spark, cat.tpch_catalog(src_dir))
+    tables = ["nation", "orders"]
+    want = {t: _rows(engine.table(t)) for t in tables}
+    log = str(tmp_path / "log")
+    _cut_link(monkeypatch, 3, OSError(errno.EXDEV, "Invalid cross-device link"))  # orders' 2nd file
+    engine.export_schema(tables, log)
+    monkeypatch.undo()
+    recs = _inserts(log)
+    assert "linked" not in recs["orders"].params
+    assert all(os.stat(os.path.join(src, f)).st_nlink == 1 for f in os.listdir(src))
+    payload = os.path.join(log, recs["orders"].payload)
+    assert all(os.stat(os.path.join(payload, f)).st_nlink == 1 for f in os.listdir(payload))
+    assert list(recs["nation"].params["linked"]) == ["nation.parquet"]
+    wh = engine.import_schema(log, str(tmp_path / "wh"))
+    assert {t: _rows(wh.read(t)) for t in tables} == want
+
+
+def test_linked_export_survives_a_spark_overwrite_of_its_source(spark, sf_dir, src_dir, tmp_path):
+    """A Spark overwrite replaces the source by new files, so the exported
+    log keeps the inodes it linked and replays the exported rows."""
+    engine = Engine(spark, cat.tpch_catalog(src_dir))
+    want = _rows(engine.table("nation"))
+    log = str(tmp_path / "log")
+    engine.export_schema(["nation"], log)
+    src = os.path.join(src_dir, "nation.parquet")
+    load_table(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 5).write.mode(
+        "overwrite"
+    ).parquet(src)
+    assert spark.read.parquet(src).count() == 5
+    wh = engine.import_schema(log, str(tmp_path / "wh"))
+    assert _rows(wh.read("nation")) == want
+
+
+def test_replay_refuses_a_linked_payload_written_in_place(spark, src_dir, tmp_path):
+    """Writing the source file in place (pq.write_table over it) changes the
+    inode the log shares: replay raises, naming the table and the file,
+    before it reads or adopts that payload."""
+    engine = Engine(spark, cat.tpch_catalog(src_dir))
+    log = str(tmp_path / "log")
+    engine.export_schema(["region", "nation"], log)
+    src = os.path.join(src_dir, "nation.parquet")
+    ino = os.stat(src).st_ino
+    pq.write_table(pq.read_table(src).slice(0, 5), src)
+    assert os.stat(src).st_ino == ino
+    wh = oplog.Warehouse(spark, str(tmp_path / "wh"))
+    payload_file = os.path.join(log, _inserts(log)["nation"].payload, "nation.parquet")
+    with pytest.raises(ValueError, match=f"'nation'.*{re.escape(payload_file)}"):
+        oplog.replay(spark, log, wh)
+    assert not wh.exists("nation")

@@ -1,27 +1,57 @@
 """Physical-plan audit for the headline queries.
 
-Prints, per query: broadcast vs sort-merge join counts, whole-stage
-codegen span count, and every parquet scan's PushedFilters + ReadSchema
-(for HUMAN inspection of pruning/pushdown — the tool cannot know which
+Judges every SQL execution a query starts, not only its final frame's
+plan: the frame is built and run into a ``noop`` sink, and the plans of
+all executions started meanwhile are read from the SQL status store
+(:func:`executed_plans`). A loop that materializes each round with
+``localCheckpoint`` runs its rounds while the frame is built, and the
+final plan then shows only the checkpoint's scan; the rounds' own plans
+are among the executions.
+
+Prints, per query: the execution count, broadcast vs sort-merge join
+counts, whole-stage codegen span count, and every parquet scan's
+PushedFilters + ReadSchema, summed over the executions (for HUMAN
+inspection of pruning/pushdown — the tool cannot know which
 columns/filters a query *should* push, so it reports rather than judges
 those). The hard checks (:func:`verdict`): fail on a cartesian or
-broadcast-nested-loop join that is not an allowlisted intentional
-cross-score, and on an allowlisted query whose plan crosses nothing (a
-stale entry).
+broadcast-nested-loop join in any execution that is not an allowlisted
+intentional cross-score, and on an allowlisted query none of whose
+executions crosses anything (a stale entry).
 
-Usage: python tools/plan_audit.py [sf_dir] [q1,q2,...]
-Defaults: sf0.01, all headline queries. Exit code 1 if any red flag or
-stale entry.
+Usage: python tools/plan_audit.py [sf_dir] [q1,q2,...] [dump_dir]
+Defaults: sf0.01, all headline queries. With ``dump_dir``, every
+execution's formatted plan is also written to ``<dump_dir>/<query>.txt``
+(evidence for a plan-shape claim). Exit code 1 if any red flag or stale
+entry.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def executed_plans(spark, build) -> list[str]:
+    """Run ``build()``'s frame into a ``noop`` sink; return the formatted
+    physical plan of every SQL execution started by the build and the run,
+    in order (the status store's ``executionsList``). Execution ids rise by
+    one per execution, so the new ones are the store's newest, however many
+    old ones it has trimmed since."""
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
+
+    def last_id() -> int:
+        bus.waitUntilEmpty(60_000)
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    first = last_id()
+    build().write.format("noop").mode("overwrite").save()
+    k = last_id() - first
+    execs = store.executionsList(store.executionsCount() - k, k)
+    return [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
 
 
 def audit(plan: str) -> dict:
@@ -100,13 +130,15 @@ INTENTIONAL_CROSS = {
     "sq8_recall_contract",  # brute-force baseline side of the recall measurement + the same broadcast code scoring
     "sample_doremi_mixture",  # the DoReMi 1-row stat frames + 1x1 budget frame broadcast into |domains| quotas
     "curriculum_interleave_order",  # 1x1 source-count frame broadcast into the slot arithmetic
+    "kmeans_two_iterations",  # each localCheckpoint round crosses the points with the k centroids
 }
 
 
 def verdict(name: str, a: dict) -> str | None:
     """``"cross"`` for a nested-loop or cartesian join outside
     INTENTIONAL_CROSS, ``"stale"`` for an INTENTIONAL_CROSS name whose
-    plan crosses nothing, else None."""
+    executed plans cross nothing, else None. ``a`` is the :func:`audit` of
+    the query's executed plans, joined."""
     crosses = bool(a["bnlj"] or a["cartesian"])
     if crosses != (name in INTENTIONAL_CROSS):
         return "cross" if crosses else "stale"
@@ -119,6 +151,7 @@ def main() -> int:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
+    dump_dir = sys.argv[3] if len(sys.argv) > 3 else None
     spark = get_spark(cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     # AQE hides the static plan (explain shows AdaptiveSparkPlan
@@ -134,16 +167,19 @@ def main() -> int:
     if unknown:
         print(f"unknown query names: {unknown}")
         return 1
+    if dump_dir:
+        os.makedirs(dump_dir, exist_ok=True)
     for name, fn in pool.items():
         if only and name not in only:
             continue
-        df = fn(spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        a = audit(buf.getvalue())
+        plans = executed_plans(spark, lambda: fn(spark, sf_dir))
+        if dump_dir:
+            with open(os.path.join(dump_dir, f"{name}.txt"), "w") as f:
+                for i, p in enumerate(plans, 1):
+                    f.write(f"== execution {i} of {len(plans)} ==\n{p}\n")
+        a = audit("\n".join(plans))
         print(
-            f"== {name}: BHJ={a['bhj']} SMJ={a['smj']} "
+            f"== {name}: executions={len(plans)} BHJ={a['bhj']} SMJ={a['smj']} "
             f"codegen_spans={a['codegen']}"
         )
         for s in a["schemas"]:
@@ -152,9 +188,9 @@ def main() -> int:
             print(f"   pushed: {p[:150]}")
         v = verdict(name, a)
         if v == "cross":
-            print("   !! RED FLAG: nested-loop/cartesian join in plan")
+            print("   !! RED FLAG: nested-loop/cartesian join in an executed plan")
         elif v == "stale":
-            print("   !! STALE: allowlisted in INTENTIONAL_CROSS, but the plan crosses nothing")
+            print("   !! STALE: allowlisted in INTENTIONAL_CROSS, but no executed plan crosses")
         elif name in INTENTIONAL_CROSS:
             print("   (intentional broadcast cross-score)")
         flags += v is not None
