@@ -96,6 +96,8 @@ def tables_from_paths(paths: list[str]) -> set[str]:
 
 def root_table_of_paths(paths: list[str]) -> str:
     """The walk's seed table: the parent of the first declared path."""
+    if not paths:
+        raise ValueError("empty path list: a walk needs at least one PARENT->CHILD.FK_COL path")
     m = LINK_PATTERN.fullmatch(paths[0].strip())
     if not m:
         raise ValueError(f"bad path spec: {paths[0]!r}")

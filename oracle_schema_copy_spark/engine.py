@@ -15,9 +15,10 @@ reads each source's parquet schema once (a bare ``spark.read.parquet``
 starts a schema-inference job on every call), ``copy_tree`` checks the
 copy on what landed in the target with one count action after the
 writes (``walk.copy_selections`` with the target's ``insert`` as its
-sink; one exchange per counted side), seed ids become a broadcast frame
-with no Spark ``distinct`` (``walk.seed_frame``), and both ``copy_tree``
-and ``delete_tree`` release what the walk cached before they return.
+sink; one exchange per checked table), seed ids become an uncached
+broadcast frame (``walk.seed_frame``), ``delete_tree`` hands each target
+a selection's own ``(on, probe)`` — a leaf goes by its FK against the
+parent's keys — and both verbs release what the walk cached.
 """
 
 from __future__ import annotations
@@ -135,12 +136,9 @@ class Engine:
         sels = walk.walk_linked(self.spark, tabs, self.catalog, paths, root_ids)
         try:
             for sel in reversed(sels):
-                # full composite key list — the leading column alone would
-                # over-delete any partial selection of a composite-PK table.
-                # A selection that is not exact derives its key tuples
-                # lazily here (sinks need explicit keys; data-plane deletes
-                # never do).
-                target.delete(sel.table, list(sel.key_columns), sel.keys)
+                # an exact selection by its full (composite) key, a leaf
+                # by its FK: every target child of a deleted parent
+                target.delete(sel.table, list(sel.on), sel.probe)
         finally:
             walk.release(sels)
 

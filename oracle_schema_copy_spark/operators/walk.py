@@ -18,9 +18,9 @@ whose build side is the (bounded, cached) key-frontier DataFrame — Catalyst
 broadcasts it when small, shuffles when not, and AQE re-plans at runtime.
 No driver-side collect of data rows ever happens: the copy assertion is
 ONE action after the writes, which collects one row of counts per table
-and side, each side planned over a single exchange. Seed values are
-de-duplicated on the driver, so the root frontier costs no shuffle. The
-walk caches its roots and key frontiers; a verb that hands the
+over a single exchange each. Seed values are de-duplicated on the driver
+and never cached, so the root frontier costs no job. The walk caches a
+root DataFrame and its key frontiers; a verb that hands the
 selections to a sink releases them when it returns (:func:`release`), so
 a long-lived session holds no cache blocks between verbs.
 
@@ -40,8 +40,11 @@ Semantic deltas from the reference, on purpose (SURVEY.md §4 quirks):
   (parents of a later edge, or reached by several edges). Leaf tables —
   typically the widest fact tables — are selected by their FK column
   against the parent probe (a :class:`TableSelection` that is not
-  ``exact``), with explicit key tuples derived lazily only if a sink
-  asks; see ``walk_linked``.
+  ``exact``); see ``walk_linked``.
+- a leaf delete removes every target row whose FK holds a parent probe
+  key, not only the PK tuples the source holds: every target child of a
+  deleted parent goes, which an FK-enforcing target needs. A table
+  reached by several edges stays exact, deleted by its full key.
 
 One join rule: every join of a frame to a key frame — the keyed scan, the
 child probe, a selection's rows and delete, ``mutate.delete_by_keys``,
@@ -120,7 +123,7 @@ class TableSelection:
     (``probe``'s columns pair with ``on`` by :func:`key_frame`).
 
     ``exact`` says what the probe is. An exact selection's probe is the
-    table's own distinct (possibly composite) key tuples (``on`` is
+    table's own (possibly composite) key tuples (``on`` is
     ``key_columns``), and a copy must match every one of them. The walk
     builds one for the root and for every table it probes again or
     reaches by several edges. Otherwise the probe holds the parent keys of
@@ -130,12 +133,9 @@ class TableSelection:
     cached the full composite PK of every walked table, which made the
     widest leaf the walk's bottleneck for zero benefit).
 
-    ``keys`` is the distinct key tuples: the probe of an exact selection;
-    otherwise derived lazily from the selected rows of ``source`` (the
-    table's frame) for the sinks that need explicit key tuples
-    (JDBC/oplog/warehouse delete targets) and cached, so a sink that forces
-    it twice does not pay the walk twice (r4 VERDICT "what's wrong" #3).
-    Data-plane copies and deletes never force it. ``cached`` lists the
+    Every verb reads a selection as ``(on, probe)``: a copy semi-joins on
+    it, a delete anti-joins on it, and ``Engine.delete_tree`` hands it to
+    the target as the delete's key columns and keys. ``cached`` lists the
     frames the walk cached for this table; :func:`release` unpersists
     them."""
 
@@ -147,7 +147,6 @@ class TableSelection:
         *,
         on: str | Sequence[str] | None = None,
         exact: bool = True,
-        source: DataFrame | None = None,
         cached: Sequence[DataFrame] = (),
     ):
         self.table = table
@@ -157,17 +156,7 @@ class TableSelection:
             raise ValueError(f"an exact selection of {table} must match on its key columns")
         self.probe = probe
         self.exact = exact
-        self.source = source
         self.cached: list[DataFrame] = list(cached)
-        self._keys = key_frame(probe, self.key_columns) if exact else None
-
-    @property
-    def keys(self) -> DataFrame:
-        if self._keys is None:
-            rows = _keyed_join(self.source, self.on, self.probe, "left_semi")
-            self._keys = rows.select(*self.key_columns).distinct().cache()
-            self.cached.append(self._keys)
-        return self._keys
 
 
 def keyed_scan(
@@ -187,8 +176,8 @@ def find_linked_rows(
     parent_keys: DataFrame,
 ) -> DataFrame:
     """Child PKs whose FK column matches any parent key (S3): semi-join
-    probe. ``child_pk`` may be composite; the frontier is a key SET, so
-    its projection is de-duplicated (it is broadcast on the next hop)."""
+    probe. ``child_pk`` may be composite, or any projection, so the set
+    is de-duplicated (a walk frontier, a full PK, needs no distinct)."""
     rows = _keyed_join(child_df, child_column, parent_keys, "left_semi")
     return rows.select(*key_cols(child_pk)).distinct()
 
@@ -199,14 +188,15 @@ def seed_frame(
     """Build the root key frontier from driver-side seed values (bounded).
     For composite keys pass tuple values matching ``key_columns`` order.
     Duplicate values are dropped on the driver, first occurrence kept, so
-    the frontier costs no shuffle job.
+    the frontier costs no shuffle job; the walk does not cache it (that
+    would only add the job that fills the cache).
 
     The frame carries a broadcast hint, the one explicit hint of the walk:
     its rows already sit in driver memory, so the hint cannot make the
     driver hold more than it does. Without it the planner sizes the frame
-    from its RDD (``Long.MaxValue`` bytes, as for any ``createDataFrame``)
-    until its cache is materialized, so a write over a fresh seed cache
-    would plan a sort-merge join and shuffle the whole table."""
+    from its RDD (``Long.MaxValue`` bytes, as for any ``createDataFrame``),
+    so every join with it would plan a sort-merge join and shuffle the
+    whole table."""
     cols = key_cols(key_columns)
     vals = [tuple(v) if isinstance(v, (tuple, list)) else (v,) for v in values]
     return F.broadcast(spark.createDataFrame(list(dict.fromkeys(vals)), cols))
@@ -224,32 +214,34 @@ def walk_linked(
     Each declared edge is evaluated exactly once, in order (a bounded
     transitive closure over a user-declared DAG — not a fixpoint, matching
     the reference). Raises if an edge's parent table was never reached.
-    ``root_ids`` is seed values, or a DataFrame paired with the root's key
-    columns by :func:`key_frame`.
+    ``root_ids`` is seed values (an uncached :func:`seed_frame`), or a
+    DataFrame paired with the root's key columns by :func:`key_frame`,
+    de-duplicated and cached.
 
     Frontier materialization policy (the 100 TB-relevant decision): a
-    child's full-PK frontier is computed, de-duplicated and cached ONLY
-    when it will be probed again — the child parents a later edge — or
-    when several edges reach it (union semantics need a key-set form).
+    child's full-PK frontier is computed and cached ONLY when it will be
+    probed again — the child parents a later edge — or when several edges
+    reach it (union semantics need a key-set form). It is the PK
+    projection of the child's semi-join: no ``distinct``, a PK is unique.
     Every other child is a LEAF: its selection is the semi-join of its FK
-    column against the (cached, already-distinct) parent probe, so the
-    widest fact tables at the walk's edge never pay a distinct+cache of
-    their composite PK (the r3 regression: ~600k 2-column tuples cached
-    per walk at sf0.1, 3× the whole walk's runtime).
+    column against the parent probe, so the widest fact tables at the
+    walk's edge never pay a cache of their composite PK (the r3
+    regression: ~600k 2-column tuples cached per walk at sf0.1, 3× the
+    whole walk's runtime).
     """
     edges: list[FkEdge] = parse_paths(paths, _walk_pks(catalog))
     root_table = root_table_of_paths(paths)
     root_pk = _walk_pk_cols(catalog, root_table)
 
     if isinstance(root_ids, DataFrame):
-        roots = key_frame(root_ids, root_pk).distinct()
+        roots = key_frame(root_ids, root_pk).distinct().cache()
+        cached = [roots]
     else:
-        roots = seed_frame(spark, root_pk, root_ids)
-    roots = roots.cache()
+        roots, cached = seed_frame(spark, root_pk, root_ids), []
 
     parents_probed = {e.parent_table for e in edges}
     n_edges_in = Counter(e.child_table for e in edges)
-    sels = {root_table: TableSelection(root_table, root_pk, roots, cached=[roots])}
+    sels = {root_table: TableSelection(root_table, root_pk, roots, cached=cached)}
 
     for edge in edges:
         parent = sels.get(edge.parent_table)
@@ -265,7 +257,8 @@ def walk_linked(
         else:
             probe = parent.probe.select(edge.parent_column).distinct()
         if child in parents_probed or n_edges_in[child] > 1:
-            found = find_linked_rows(tables[child], edge.child_column, child_pk, probe)
+            found = _keyed_join(tables[child], edge.child_column, probe, "left_semi")
+            found = found.select(*child_pk)  # a PK projection: no distinct
             prev = sels.get(child)
             # union semantics (reference overwrites here — documented
             # delta); duplicates across edges are tolerated
@@ -274,35 +267,41 @@ def walk_linked(
             sels[child] = TableSelection(child, child_pk, frontier, cached=cached)
         else:
             # leaf: the rows are the FK semi-join, no PK frontier
-            sels[child] = TableSelection(
-                child, child_pk, probe, on=edge.child_column, exact=False, source=tables[child]
-            )
+            sels[child] = TableSelection(child, child_pk, probe, on=edge.child_column, exact=False)
     return list(sels.values())
 
 
-def _counted(df: DataFrame, cols: Sequence[str], table: str, side: str) -> DataFrame:
-    """One tagged row of ``df``'s counts over ONE exchange: ``n`` is the
-    distinct ``cols`` tuples with no NULL part (what ``count_distinct``
-    counts) and ``rows`` is ``count(*)``. The grouping is the one shuffle;
-    ``coalesce(1)`` merges its groups in one task, so the global aggregate
-    plans no second exchange. An empty frame still yields its row."""
-    groups = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__rows")).coalesce(1)
+def _counted(found: DataFrame, want: DataFrame, on: Sequence[str], table: str) -> DataFrame:
+    """One row of ``table``'s check counts over ONE exchange: ``found`` and
+    ``want`` (paired with ``on`` by :func:`key_frame`) are tagged and
+    unioned, the grouping by ``(tag, *on)`` is the shuffle, and
+    ``coalesce(1)`` merges its groups in one task for the global aggregate.
+    ``n_found`` / ``n_want`` count each side's distinct ``on`` tuples with
+    no NULL part (as ``count_distinct``), ``rows_found`` found's rows. An
+    empty side still yields the row: the aggregate is global, not by side."""
+    cols = list(on)
+    sides = found.select(F.lit(True).alias("__found"), *cols).unionByName(
+        key_frame(want, cols).select(F.lit(False).alias("__found"), *cols)
+    )
+    groups = sides.groupBy("__found", *cols).agg(F.count(F.lit(1)).alias("__rows")).coalesce(1)
     whole = F.lit(True)
     for c in cols:
         whole = whole & F.col(c).isNotNull()
+    is_found = F.col("__found")
     return groups.agg(
-        F.count(F.when(whole, 1)).alias("n"),
-        F.coalesce(F.sum("__rows"), F.lit(0)).alias("rows"),
-    ).select(F.lit(table).alias("table_name"), F.lit(side).alias("side"), "n", "rows")
+        F.count(F.when(is_found & whole, 1)).alias("n_found"),
+        F.coalesce(F.sum(F.when(is_found, F.col("__rows"))), F.lit(0)).alias("rows_found"),
+        F.count(F.when(~is_found & whole, 1)).alias("n_want"),
+    ).select(F.lit(table).alias("table_name"), "n_found", "rows_found", "n_want")
 
 
 def _collect_counts(parts: list[DataFrame]) -> dict:
-    """Run the tagged one-row aggregates as ONE action; keyed by
-    ``(table, side)``."""
+    """Run the per-table one-row aggregates as ONE action; keyed by
+    table."""
     checks = parts[0]
     for part in parts[1:]:
         checks = checks.unionByName(part)
-    return {(r.table_name, r.side): r for r in checks.collect()}
+    return {r.table_name: r for r in checks.collect()}
 
 
 def copy_selections(
@@ -326,12 +325,11 @@ def copy_selections(
     The check is ONE action, after the last write. Per table it counts a
     want side (the distinct probe tuples) and a found side (distinct
     ``on`` tuples and ``count(*)`` of the copied rows) with
-    :func:`_counted`, one exchange per side; the tagged one-row outputs
-    are unioned and collected together (AQE still submits one Spark job
-    per query stage) and reconciled driver-side. r13 note: unioning the
-    RAW key streams under a common ``array<string>`` encoding and
-    aggregating once was measured 2.2x SLOWER end-to-end at sf0.1 —
-    per-row string casts cost far more than the saved scheduling rounds.
+    :func:`_counted`, one exchange for both sides; the per-table rows are
+    unioned and collected together (AQE still submits one Spark job per
+    query stage) and reconciled driver-side. A table's two sides union
+    with no cast (r13 measured ALL tables' raw keys under one
+    ``array<string>`` encoding 2.2x slower at sf0.1: per-row casts).
 
     With ``insert`` (``Engine.copy_tree`` passes ``target.insert``) each
     selection is first handed to ``insert`` once, wrapped in an
@@ -363,20 +361,15 @@ def copy_selections(
             if got is not None:
                 landed[sel.table], handed[sel.table] = got, obs
     counts = _collect_counts([
-        part
-        for s in selections
-        for part in (
-            _counted(landed.get(s.table, out[s.table]), s.on, s.table, "found"),
-            _counted(key_frame(s.probe, s.on), s.on, s.table, "want"),
-        )
+        _counted(landed.get(s.table, out[s.table]), s.probe, s.on, s.table) for s in selections
     ])
 
     for sel in selections:
-        # direct indexing, not .get(..., 0): an empty frame still yields
-        # its row, so a MISSING row means the check action lost an
+        # direct indexing, not .get(..., 0): an empty side still yields
+        # its table's row, so a MISSING row means the check action lost an
         # aggregate — fail loudly (KeyError), never let 0 == 0 pass
-        n_found = counts[(sel.table, "found")].n
-        n_keys = counts[(sel.table, "want")].n
+        n_found = counts[sel.table].n_found
+        n_keys = counts[sel.table].n_want
         if sel.exact and n_found != n_keys:
             raise AssertionError(
                 f"selection copy of {sel.table} matched {n_found} of {n_keys} keys"
@@ -391,10 +384,10 @@ def copy_selections(
             n_handed = obs.get["rows"]
         except (Py4JJavaError, KeyError) as e:  # the plan lost its observation
             raise AssertionError(f"sink for {t} reported no handed-row count") from e
-        n_landed = counts[(t, "found")].rows
+        n_landed = counts[t].rows_found
         if n_handed != n_landed:
             raise AssertionError(f"sink for {t} was handed {n_handed} rows but {n_landed} landed")
-    return out, {t: counts[(t, "found")].rows for t in out}
+    return out, {t: counts[t].rows_found for t in out}
 
 
 def delete_selections(
@@ -440,8 +433,8 @@ def delete_tree(
 
 
 def release(selections: list[TableSelection]) -> None:
-    """Unpersist every frame the walk cached for ``selections`` — roots,
-    frontiers (superseded union inputs included) and derived leaf keys —
+    """Unpersist every frame the walk cached for ``selections`` — a root
+    DataFrame and the frontiers (superseded union inputs included) —
     dependents first. Verbs that hand their selections to a sink call this
     in a ``finally``; frames still built on the selections recompute
     instead of reading the caches."""

@@ -9,6 +9,7 @@ from oracle_schema_copy_spark import catalog as cat
 from oracle_schema_copy_spark.engine import Engine
 from oracle_schema_copy_spark.plans import oplog
 from oracle_schema_copy_spark.sources import jdbc
+from tests.oracle_check import duck_connection, mismatch
 
 
 @pytest.fixture
@@ -71,25 +72,76 @@ def test_delete_tree_child_first_on_warehouse(engine, spark, tmp_path):
     )
 
 
-def test_delete_tree_payload_carries_composite_key(engine, spark, tmp_path):
-    """Engine.delete_tree must hand targets the FULL composite key — the
-    leading column alone would over-delete partial selections (and wrote
-    duplicate keys into the payload before r4)."""
-    from oracle_schema_copy_spark.plans import oplog
-
+def _delete_tree_replayed(engine, spark, tmp_path, paths, seeds):
+    """delete_tree into a file target, replayed into a warehouse holding
+    full copies of the walked tables; returns the log's records and the
+    warehouse."""
+    tables = sorted(cat.tables_from_paths(paths))
+    wh_target = engine.create_warehouse_target(str(tmp_path / "wh"))
+    for t in tables:
+        wh_target.insert(t, engine.table(t))
     log_path = str(tmp_path / "log")
     target = engine.create_file_target(log_path)
-    engine.delete_tree(
-        target, ["CUSTOMER->ORDERS.O_CUSTKEY", "ORDERS->LINEITEM.L_ORDERKEY"], [1, 2]
-    )
+    engine.delete_tree(target, paths, seeds)
     target.close()
-    recs = list(oplog.read_manifest(log_path))
+    oplog.replay(spark, log_path, wh_target.wh)
+    return list(oplog.read_manifest(log_path)), log_path, wh_target.wh
+
+
+def _assert_survivors(sf_dir, wh, expected: dict[str, str]):
+    con = duck_connection(sf_dir)
+    for t, where in expected.items():
+        why = mismatch(wh.read(t).toPandas(), con.sql(f"SELECT * FROM {t} WHERE {where}").df())
+        assert why is None, f"{t}: {why}"
+
+
+def test_delete_tree_payload_carries_composite_key(engine, spark, sf_dir, tmp_path):
+    """A leaf delete record carries the leaf's FK column and the parent's
+    keys: it removes every lineitem of a deleted order. Replayed, it
+    leaves exactly the rows DuckDB keeps."""
+    paths = ["CUSTOMER->ORDERS.O_CUSTKEY", "ORDERS->LINEITEM.L_ORDERKEY"]
+    recs, log_path, wh = _delete_tree_replayed(engine, spark, tmp_path, paths, [1, 2])
     assert [r.table for r in recs] == ["lineitem", "orders", "customer"]  # child-first
     li = recs[0]
-    assert li.params["key_columns"] == ["l_orderkey", "l_linenumber"]
+    assert li.params["key_columns"] == ["l_orderkey"]
     payload = spark.read.parquet(os.path.join(log_path, li.payload))
-    assert set(payload.columns) == {"l_orderkey", "l_linenumber"}
-    assert payload.count() == payload.distinct().count() > 0
+    assert payload.columns == ["l_orderkey"] and payload.count() > 0
+    orders = "SELECT o_orderkey FROM orders WHERE o_custkey IN (1, 2)"
+    _assert_survivors(sf_dir, wh, {
+        "customer": "c_custkey NOT IN (1, 2)",
+        "orders": "o_custkey NOT IN (1, 2)",
+        "lineitem": f"l_orderkey NOT IN ({orders})",
+    })
+
+
+def test_delete_tree_union_reached_leaf_carries_full_key(engine, spark, sf_dir, tmp_path):
+    """lineitem reached by two edges is an exact selection: its delete
+    record carries the full composite key, and replay removes exactly the
+    (l_orderkey, l_linenumber) tuples of the reached rows."""
+    paths = ["NATION->CUSTOMER.C_NATIONKEY", "NATION->SUPPLIER.S_NATIONKEY",
+             "CUSTOMER->ORDERS.O_CUSTKEY", "ORDERS->LINEITEM.L_ORDERKEY",
+             "SUPPLIER->LINEITEM.L_SUPPKEY"]
+    recs, log_path, wh = _delete_tree_replayed(engine, spark, tmp_path, paths, [3])
+    assert recs[0].table == "lineitem"
+    assert recs[0].params["key_columns"] == ["l_orderkey", "l_linenumber"]
+    payload = spark.read.parquet(os.path.join(log_path, recs[0].payload))
+    assert payload.columns == ["l_orderkey", "l_linenumber"] and payload.count() > 0
+    custs = "SELECT c_custkey FROM customer WHERE c_nationkey = 3"
+    reached = (
+        "SELECT 1 FROM lineitem d WHERE d.l_orderkey = l.l_orderkey"
+        " AND d.l_linenumber = l.l_linenumber AND (d.l_suppkey IN"
+        " (SELECT s_suppkey FROM supplier WHERE s_nationkey = 3) OR d.l_orderkey IN"
+        f" (SELECT o_orderkey FROM orders WHERE o_custkey IN ({custs})))"
+    )
+    con = duck_connection(sf_dir)
+    want = con.sql(f"SELECT * FROM lineitem l WHERE NOT EXISTS ({reached})").df()
+    assert mismatch(wh.read("lineitem").toPandas(), want) is None
+    _assert_survivors(sf_dir, wh, {
+        "nation": "n_nationkey <> 3",
+        "supplier": "s_nationkey <> 3",
+        "customer": "c_nationkey <> 3",
+        "orders": f"o_custkey NOT IN ({custs})",
+    })
 
 
 def test_copy_and_update_verbs(engine, tmp_path):

@@ -217,6 +217,32 @@ def test_plan_audit_flags_a_cross_join_inside_a_checkpointed_round(spark):
     assert "kmeans_two_iterations" in plan_audit.INTENTIONAL_CROSS
 
 
+def test_ab_perfbench_alternates_arms_and_summarizes(monkeypatch, tmp_path, capsys):
+    """``ab.py perfbench`` runs ``perfbench/run.py --trace 0`` in each
+    arm's checkout on the pair's seed, A first on odd pairs, prints each
+    run's result line and ends with medians, quartiles and B's wins."""
+    calls: list = []
+
+    def fake(cmd, **kw):
+        calls.append((cmd, kw))
+        jobs = 74 if kw["cwd"].endswith("a") else 54
+        out = json.dumps({"correct": True, "attempted": 4, "failed": 0,
+                          "metrics": {"spark_jobs_per_cycle": {"value": jobs, "unit": "count"}}})
+        return subprocess.CompletedProcess(cmd, 0, stdout="{}\n" + out + "\n", stderr="")
+
+    monkeypatch.setattr(subprocess, "run", fake)
+    assert ab.main(["perfbench", str(tmp_path / "a"), str(tmp_path / "b"), "subgraph_extract", "3"]) == 0
+    assert [Path(kw["cwd"]).name for _, kw in calls] == ["a", "b", "b", "a", "a", "b"]
+    assert all(cmd[1:] == ["perfbench/run.py", "--workload", "subgraph_extract", "--seed",
+                           cmd[5], "--seconds", cmd[7], "--trace", "0"] for cmd, _ in calls)
+    assert [cmd[5] for cmd, _ in calls] == ["1", "1", "2", "2", "3", "3"]
+    *rows, last = _ab_rows(capsys)
+    assert [r["arm"] for r in rows] == ["A", "B", "B", "A", "A", "B"]
+    jobs = last["summary"]["spark_jobs_per_cycle"]
+    assert jobs["A"]["median"] == 74 and jobs["B"]["quartiles"] == [54, 54, 54]
+    assert jobs["b_wins"] == jobs["pairs"] == 3 and last["failed_runs"] == 0
+
+
 def test_ab_rejects_bad_arguments():
     with pytest.raises(SystemExit):
         ab.main(["stage", "a", "b", "q1", "1"])  # stage needs a fixture

@@ -207,37 +207,37 @@ def test_minhash_pair_exchanges_are_pinned(plans):
 
 
 def test_counted_side_plans_one_exchange(spark):
-    """One side of the copy check (``walk._counted``: distinct key tuples
-    and ``count(*)``) plans exactly one shuffle exchange: the grouping.
-    AQE starts one Spark job per query stage, so each further exchange
-    is one more job per table and side."""
+    """A table's whole copy check (``walk._counted``: both sides' distinct
+    key tuples and the found side's ``count(*)``) plans exactly one
+    shuffle exchange: the grouping of the tagged union. AQE starts one
+    Spark job per query stage, so each further exchange is one more job
+    per table."""
     from oracle_schema_copy_spark.operators.walk import _counted
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    want = li.filter("l_orderkey % 2 = 0").select("l_orderkey", "l_linenumber")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        _counted(li, ["l_orderkey", "l_linenumber"], "lineitem", "found").explain()
+        _counted(li, want, ["l_orderkey", "l_linenumber"], "lineitem").explain()
     nodes = [l.lstrip(" +-:") for l in buf.getvalue().splitlines()]
     assert sum(n.startswith("Exchange") for n in nodes) == 1
 
 
 def test_seed_frame_broadcasts_before_its_cache_exists(spark):
-    """Seed ids sit on the driver, so ``walk.seed_frame`` is broadcast: a
-    keyed scan over its not yet materialized cache plans a broadcast
-    semi-join. Sized from its RDD alone, the frame reads as
+    """Seed ids sit on the driver, so ``walk.seed_frame`` is broadcast and
+    the walk never caches it: a keyed scan over the bare frame plans a
+    broadcast semi-join. Sized from its RDD alone, the frame reads as
     ``Long.MaxValue`` bytes and the scan would shuffle the whole table."""
     from oracle_schema_copy_spark.operators import walk
 
-    keys = walk.seed_frame(spark, "o_orderkey", [3, 1, 3, 2]).cache()
-    try:
-        orders = spark.read.parquet(f"{SF}/orders.parquet")
-        plan = walk.keyed_scan(orders, "o_orderkey", keys)._jdf.queryExecution()
-        text = plan.executedPlan().toString()
-        assert "BroadcastHashJoin" in text and "SortMergeJoin" not in text
-        # duplicates dropped on the driver, first occurrence kept
-        assert [r.o_orderkey for r in keys.collect()] == [3, 1, 2]
-    finally:
-        keys.unpersist()
+    keys = walk.seed_frame(spark, "o_orderkey", [3, 1, 3, 2])
+    orders = spark.read.parquet(f"{SF}/orders.parquet")
+    plan = walk.keyed_scan(orders, "o_orderkey", keys)._jdf.queryExecution()
+    text = plan.executedPlan().toString()
+    assert "BroadcastHashJoin" in text and "SortMergeJoin" not in text
+    assert "InMemoryTableScan" not in text
+    # duplicates dropped on the driver, first occurrence kept
+    assert [r.o_orderkey for r in keys.collect()] == [3, 1, 2]
 
 
 @pytest.mark.parametrize("name", ["similarity_topk_pq_adc", "similarity_topk_ivfpq"])

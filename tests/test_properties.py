@@ -100,42 +100,55 @@ def test_normalize_and_shingles_match_python_reference(spark, texts):
 # ---------------------------------------------------------------------------
 # the copy check's one-exchange counts equal count_distinct / count(*):
 # a key tuple with a NULL part is not counted, duplicate tuples count once,
-# and an empty frame still yields its row
+# and an empty side (found, want or both) still yields the table's row
 # ---------------------------------------------------------------------------
 
 _KEY_PART = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
+_KEY_ROWS = st.lists(st.tuples(_KEY_PART, _KEY_PART), max_size=30)
 
 
-@given(st.lists(st.tuples(_KEY_PART, _KEY_PART), max_size=30))
-@example([])
-@example([(None, None), (None, 1), (1, None), (1, 1), (1, 1)])
+@given(_KEY_ROWS, _KEY_ROWS)
+@example([], [])
+@example([], [(1, 1), (None, 2)])  # an empty found side
+@example([(None, None), (None, 1), (1, None), (1, 1), (1, 1)], [])  # an empty want side
 @settings(max_examples=4, deadline=None)
-def test_counted_matches_count_distinct(spark, keys):
+def test_counted_matches_count_distinct(spark, found, want):
     from pyspark.sql import functions as F
 
     from oracle_schema_copy_spark.operators.walk import _counted
 
-    df = spark.createDataFrame(keys, "a int, b int")
+    found_df = spark.createDataFrame(found, "a int, b int")
+    # the want side pairs with the key columns by position, like a probe
+    want_df = spark.createDataFrame(want, "x int, y int")
     parts = []
     for cols in (["a"], ["a", "b"]):
-        side = ",".join(cols)
-        parts.append(_counted(df, cols, "t", side).withColumn("how", F.lit("counted")))
+        side, want_cols = ",".join(cols), ["x", "y"][: len(cols)]
         parts.append(
-            df.agg(
-                F.count_distinct(*cols).alias("n"), F.count(F.lit(1)).alias("rows")
-            ).select(F.lit("t").alias("table_name"), F.lit(side).alias("side"), "n", "rows",
-                     F.lit("reference").alias("how"))
+            _counted(found_df, want_df.select(*want_cols), cols, side)
+            .withColumn("how", F.lit("counted"))
+        )
+        ref = [
+            df.agg(F.count_distinct(*c).alias("n"), F.count(F.lit(1)).alias("rows"))
+            for df, c in ((found_df, cols), (want_df, want_cols))
+        ]
+        parts.append(
+            ref[0].crossJoin(ref[1].select(F.col("n").alias("n_want"))).select(
+                F.lit(side).alias("table_name"), F.col("n").alias("n_found"),
+                F.col("rows").alias("rows_found"), "n_want", F.lit("reference").alias("how"),
+            )
         )
     checks = parts[0]
     for part in parts[1:]:
         checks = checks.unionByName(part)
-    got = {(r.side, r.how): (r.n, r.rows) for r in checks.collect()}
-    py_n = {
-        "a": len({a for a, _ in keys if a is not None}),
-        "a,b": len({k for k in keys if None not in k}),
-    }
-    for side in ("a", "a,b"):
-        assert got[(side, "counted")] == got[(side, "reference")] == (py_n[side], len(keys))
+    got = {(r.table_name, r.how): (r.n_found, r.rows_found, r.n_want) for r in checks.collect()}
+    assert len(got) == 4  # every side's row is there, empty or not
+
+    def n(keys, width):
+        return len({k[:width] for k in keys if None not in k[:width]})
+
+    for width, side in ((1, "a"), (2, "a,b")):
+        py = (n(found, width), len(found), n(want, width))
+        assert got[(side, "counted")] == got[(side, "reference")] == py
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,8 @@ from oracle_schema_copy_spark.engine import Engine
 from oracle_schema_copy_spark.plans.oplog import Warehouse, WarehouseTarget
 
 PATHS = ["CUSTOMER->ORDERS.O_CUSTKEY", "ORDERS->LINEITEM.L_ORDERKEY"]
+MULTI = ["NATION->CUSTOMER.C_NATIONKEY", "NATION->SUPPLIER.S_NATIONKEY", *PATHS,
+         "SUPPLIER->LINEITEM.L_SUPPKEY"]
 
 
 @pytest.fixture
@@ -72,15 +74,13 @@ def test_same_seeds_twice_into_one_warehouse(engine, spark, tmp_path):
 def test_verbs_leave_no_cached_blocks(engine, spark, tmp_path):
     target = engine.create_warehouse_target(str(tmp_path / "wh"))
     file_target = engine.create_file_target(str(tmp_path / "log"))
-    multi = ["NATION->CUSTOMER.C_NATIONKEY", "NATION->SUPPLIER.S_NATIONKEY", *PATHS,
-             "SUPPLIER->LINEITEM.L_SUPPKEY"]
     before = cached_blocks(spark)
     engine.copy_tree(target, PATHS, [11, 12])
     assert cached_blocks(spark) == before
-    engine.copy_tree(file_target, multi, [3])  # a union frontier on lineitem
+    engine.copy_tree(file_target, MULTI, [3])  # a union frontier on lineitem
     file_target.close()
     assert cached_blocks(spark) == before
-    engine.delete_tree(target, PATHS, [11])  # derives and caches leaf keys
+    engine.delete_tree(target, PATHS, [11])
     assert cached_blocks(spark) == before
     dropping = DroppingTarget(Warehouse(spark, str(tmp_path / "wh2")), table="lineitem",
                               drop=F.col("l_linenumber") == 2)
@@ -133,3 +133,32 @@ def test_repeated_verbs_run_no_schema_job(engine, spark, tmp_path, reader_jobs):
     jobs, reader = reader_jobs(verbs)
     file_target.close()
     assert jobs > 0 and reader == 0
+
+
+def test_verb_job_counts(engine, spark, tmp_path, reader_jobs):
+    """The exact Spark jobs of each subgraph verb, once every source's
+    schema is known. A leaf copy: one broadcast of the seed frame and one
+    of the orders frontier, three writes with their read-backs and the
+    check (one stage per table, then the final one). A delete writes each
+    table once, anti-joined by its (on, probe): no key frame derived from
+    the source, no cached seed and no frontier distinct."""
+    target = engine.create_warehouse_target(str(tmp_path / "wh"))
+    warm = engine.create_file_target(str(tmp_path / "warm"))
+    engine.copy_tree(target, PATHS, [1, 2, 3])
+    engine.copy_tree(warm, MULTI, [2])
+    warm.close()
+    file_target = engine.create_file_target(str(tmp_path / "log"))
+    jobs = {
+        "leaf copy": reader_jobs(lambda: engine.copy_tree(target, PATHS, [4, 5]))[0],
+        "multi copy": reader_jobs(lambda: engine.copy_tree(file_target, MULTI, [3]))[0],
+        "delete": reader_jobs(lambda: engine.delete_tree(target, PATHS, [1]))[0],
+    }
+    file_target.close()
+    assert jobs == {"leaf copy": 12, "multi copy": 26, "delete": 8}
+
+
+@pytest.mark.parametrize("verb", ["copy_tree", "delete_tree"])
+def test_empty_path_list_is_refused(engine, tmp_path, verb):
+    target = engine.create_warehouse_target(str(tmp_path / "wh"))
+    with pytest.raises(ValueError, match="empty path list"):
+        getattr(engine, verb)(target, [], [1])

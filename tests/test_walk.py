@@ -21,7 +21,7 @@ def test_walk_reaches_all_tables(spark, ctx):
     c, tables = ctx
     sels = walk.walk_linked(spark, tables, c, PATHS, [1, 2, 3])
     assert [s.table for s in sels] == ["customer", "orders", "lineitem"]
-    n_orders = sels[1].keys.count()
+    n_orders = sels[1].probe.count()
     expected = (
         tables["orders"].filter(F.col("o_custkey").isin([1, 2, 3])).select("o_orderkey").distinct().count()
     )
@@ -39,7 +39,7 @@ def test_walk_errors_on_unreached_parent(spark, ctx):
 def test_walk_dedupes_seed_keys(spark, ctx):
     c, tables = ctx
     sels = walk.walk_linked(spark, tables, c, PATHS, [1, 1, 2, 2, 2])
-    assert sels[0].keys.count() == 2
+    assert sels[0].probe.count() == 2
 
 
 def test_walk_unions_when_child_reached_twice(spark, ctx, sf_dir):
@@ -54,7 +54,7 @@ def test_walk_unions_when_child_reached_twice(spark, ctx, sf_dir):
     sels = walk.walk_linked(spark, tables, c, paths, [1, 2])
     dedup = walk.walk_linked(spark, tables, c, PATHS, [1, 2])
     # frontiers tolerate duplicates (no per-edge dedup shuffle); compare SETS
-    assert sels[1].keys.distinct().count() == dedup[1].keys.distinct().count()
+    assert sels[1].probe.distinct().count() == dedup[1].probe.distinct().count()
 
 
 def test_copy_selections_counts_match(spark, ctx):
@@ -114,9 +114,9 @@ def test_walk_composite_parent_frontier(spark, ctx, sf_dir):
     sels = walk.walk_linked(spark, tables, _composite_catalog(sf_dir), PATHS, [1, 2, 3])
     orders_sel = sels[1]
     assert orders_sel.key_columns == ("o_orderkey", "o_custkey")
-    assert list(orders_sel.keys.columns) == ["o_orderkey", "o_custkey"]
+    assert list(orders_sel.probe.columns) == ["o_orderkey", "o_custkey"]
     expected_orders = tables["orders"].filter(F.col("o_custkey").isin([1, 2, 3])).count()
-    assert orders_sel.keys.count() == expected_orders
+    assert orders_sel.probe.count() == expected_orders
     li_sel = sels[2]
     assert not li_sel.exact and li_sel.on == ("l_orderkey",)
     expected_li = (
@@ -143,9 +143,9 @@ def test_walk_pairs_root_frame_by_name(spark, ctx, sf_dir):
     sels = walk.walk_linked(
         spark, tables, _composite_catalog(sf_dir), ["ORDERS->LINEITEM.L_ORDERKEY"], roots
     )
-    assert sels[0].keys.columns == ["o_orderkey", "o_custkey"]
+    assert sels[0].probe.columns == ["o_orderkey", "o_custkey"]
     want = {tuple(r) for r in roots.select("o_orderkey", "o_custkey").collect()}
-    assert {tuple(r) for r in sels[0].keys.collect()} == want and want
+    assert {tuple(r) for r in sels[0].probe.collect()} == want and want
 
 
 def test_walk_composite_seed_frame_copy(spark, ctx):
@@ -169,20 +169,30 @@ def test_walk_composite_seed_frame_copy(spark, ctx):
     assert frames["lineitem"].count() == rows["lineitem"] == len(seeds)
 
 
-def test_walk_leaf_selection_is_rows_with_lazy_keys(spark, ctx):
-    """Leaf tables (no later probe) are selected by their FK against the
-    parent probe, not by a materialized PK frontier; explicit key tuples
-    derive lazily and cover every selected row."""
+def test_walk_leaf_selection_is_its_fk_probe(spark, ctx):
+    """A leaf table (no later probe) is selected by its FK column against
+    the parent's probe itself: no PK frontier and no cache of its own. Seed
+    values are not cached either; the one cached frame is the orders
+    frontier, which a later edge probes."""
     c, tables = ctx
     sels = walk.walk_linked(spark, tables, c, PATHS, [1, 2, 3])
-    li_sel = sels[2]
-    assert li_sel.table == "lineitem" and not li_sel.exact
-    assert tuple(li_sel.keys.columns) == ("l_orderkey", "l_linenumber")
-    # lazy keys = distinct PK tuples of the selected rows (the fixture's
-    # composite "PK" repeats, so distinct < rows is expected)
-    rows = walk.copy_selections(tables, [li_sel])[0]["lineitem"]
-    expected = rows.select("l_orderkey", "l_linenumber").distinct().count()
-    assert li_sel.keys.count() == expected > 0
+    root, orders, li_sel = sels
+    try:
+        assert li_sel.table == "lineitem" and not li_sel.exact
+        assert li_sel.on == ("l_orderkey",) and li_sel.probe is orders.probe
+        assert root.cached == [] and li_sel.cached == [] and len(orders.cached) == 1
+        rows = walk.copy_selections(tables, [li_sel])[0]["lineitem"]
+        expected = tables["lineitem"].join(
+            tables["orders"].filter(F.col("o_custkey").isin([1, 2, 3])).select(
+                F.col("o_orderkey").alias("l_orderkey")
+            ),
+            "l_orderkey",
+            "left_semi",
+        )
+        assert sorted(map(tuple, rows.collect())) == sorted(map(tuple, expected.collect()))
+        assert rows.count() > 0
+    finally:
+        walk.release(sels)
 
 
 def test_composite_seed_missing_key_fails_assert(spark, ctx):
